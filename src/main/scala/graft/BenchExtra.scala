@@ -15,9 +15,10 @@ import org.apache.spark.sql.SparkSession
  *       GRAFT_PLAN_OUT — if set, write each query's explain("formatted")
  *       to $GRAFT_PLAN_OUT/<name>.txt (plan evidence for plans/r07/).
  *
- * Output: one line per rep, `EXTRA <name> rep=<r> sec=<t>`, plus a final
- * `EXTRA <name> min=<t>` per query. No JSON — the driver's artifact comes
- * from [[Bench]] alone.
+ * Output: one line per rep, `EXTRA <name> rep=<r> sec=<t>` (or
+ * `rep=<r> FAILED: <error>`), plus a final `EXTRA <name> min=<t>` per
+ * query over the reps that succeeded — `min=FAILED` when none did. No
+ * JSON — the driver's artifact comes from [[Bench]] alone.
  */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -87,21 +88,25 @@ object BenchExtra {
         } finally if (df != null)
           org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(df)
       }
-      val times = (1 to reps).map { r =>
+      // a rep that throws is reported and left out of the min
+      val times = (1 to reps).flatMap { r =>
         s.sparkContext.setJobDescription(s"extra:$name rep$r")
         val t0 = System.nanoTime()
         var df: org.apache.spark.sql.DataFrame = null
         try {
           df = fn(s, sfDir)
           df.write.format("noop").mode("overwrite").save()
-        } catch { case e: Throwable => println(s"EXTRA $name rep=$r FAILED: $e") }
-        finally if (df != null)
+          val dt = (System.nanoTime() - t0) / 1e9
+          println(f"EXTRA $name rep=$r sec=$dt%.3f")
+          Some(dt)
+        } catch { case e: Throwable =>
+          println(s"EXTRA $name rep=$r FAILED: $e")
+          None
+        } finally if (df != null)
           org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(df)
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"EXTRA $name rep=$r sec=$dt%.3f")
-        dt
       }
       if (times.nonEmpty) println(f"EXTRA $name min=${times.min}%.3f")
+      else if (reps > 0) println(s"EXTRA $name min=FAILED")
       if (sys.env.contains("GRAFT_JOBLOG")) {
         val infos = s.sparkContext.getRDDStorageInfo
         val mb = infos.map(i => i.memSize + i.diskSize).sum / 1e6

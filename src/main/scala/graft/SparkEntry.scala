@@ -26,6 +26,18 @@ import graft.sources.{Fixtures, PagesFromDocs}
  */
 object SparkEntry {
 
+  // planned-split count per session and (path, split-size confs):
+  // deciding the fan-out via df.rdd costs a physical planning pass, and
+  // most queries read the same table 2-5 times per invocation — the count
+  // is plan METADATA (file splits), not data, so caching it is safe (the
+  // fixture files are immutable for a session's lifetime). Sessions are
+  // held weakly, and the two confs that size splits are part of the key,
+  // so neither a recycled session nor a changed read conf returns a stale
+  // count.
+  private val scanSplits = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[(String, String, String), Int]]())
+
   /**
    * Read a fixture table, fanned out to the session's shuffle parallelism
    * when the scan itself plans fewer splits (guide §2.5, "input skew: one
@@ -41,24 +53,16 @@ object SparkEntry {
    * target tracks spark.sql.shuffle.partitions (SPARK_GRAFT_CPUS in the
    * mains), never a hard-coded core count.
    */
-  private def fan(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
-  // planned-split count per (session, path): deciding fan() via df.rdd
-  // costs a physical planning pass, and most queries read the same table
-  // 2-5 times per invocation — the count is plan METADATA (file splits),
-  // not data, so caching it is safe (the fixture files are immutable for
-  // a session's lifetime)
-  private val scanSplits = new java.util.concurrent.ConcurrentHashMap[(Int, String), Int]()
-
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val df = s.read.parquet(path)
     val target = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val parts = scanSplits.computeIfAbsent((System.identityHashCode(s), path),
-      _ => df.rdd.getNumPartitions)
+    val key = (path,
+      s.conf.getOption("spark.sql.files.maxPartitionBytes").getOrElse(""),
+      s.conf.getOption("spark.sql.files.openCostInBytes").getOrElse(""))
+    val parts = scanSplits
+      .computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap())
+      .computeIfAbsent(key, _ => df.rdd.getNumPartitions)
     if (parts < target) df.repartition(target) else df
   }
 
@@ -82,8 +86,29 @@ object SparkEntry {
       .getOrElse(System.getProperty("java.io.tmpdir"))
     val dir = java.nio.file.Paths.get(base, "graft-scratch")
     java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.createTempDirectory(dir, prefix).toString
+    val made = java.nio.file.Files.createTempDirectory(dir, prefix)
+    scratchCleanup
+    scratchDirs.add(made)
+    made.toString
   }
+
+  // every scratch directory this JVM created; deleted at JVM exit, never
+  // earlier — the returned DataFrames read those files lazily
+  private val scratchDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+
+  private lazy val scratchCleanup: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      scratchDirs.forEach { d =>
+        try {
+          val stream = java.nio.file.Files.walk(d)
+          try stream.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+            .forEach(p => java.nio.file.Files.deleteIfExists(p))
+          finally stream.close()
+        } catch { // best effort at exit; a directory may already be gone
+          case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+        }
+      }))
 
   /** Points derived from customer keys (mirrored in latSql/lonSql). */
   private def customerPoints(s: SparkSession, dir: String): DataFrame =

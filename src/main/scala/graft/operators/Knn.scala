@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -16,35 +16,43 @@ import graft.geo.CellIndex
  * bit-for-bit. Ties broken by ascending target key.
  *
  * Algorithm (all DataFrame ops; the driver loop only counts):
- *   round r: unresolved queries explode to their Chebyshev ring-r cells
- *   (CellRingExpr) and equi-join targets indexed at `res` — shuffle on the
- *   8-byte cell key only. Candidates accumulate across rounds (rings are
- *   disjoint → no duplicate pairs). A query resolves when it has ≥ k
+ *   round r: unresolved queries explode to their Chebyshev band cells
+ *   (bands [0,1], [2,4], [5,10], …) and equi-join targets indexed at
+ *   `res` — the 8-byte cell key is the only join key. Rings are disjoint
+ *   → no duplicate pairs across rounds. A query resolves when it has ≥ k
  *   candidates whose kth-best d² ≤ minDistSqBeyondDisk(p, res, r) — the
  *   property-tested bound guaranteeing nothing outside ring r can beat the
  *   current top-k (CellIndexSpec "kNN bound").
  *
- * Scale notes: for integral target keys the per-round ranking runs as a
- * [[TopKByScore]] ObjectHashAggregate — each map task ships at most k+1
- * (score, key) pairs per query into the exchange, so the exchange carries
- * O(open-queries) structs instead of every candidate row, and there is no
+ * One loop, per-path folds: for integral target keys every path runs
+ * through the shared [[ringExpand]] loop, which owns the target layer,
+ * the band schedule, the per-round checkpoint (its `Observation` counts
+ * the open set — the loop's only convergence signal) and the union of the
+ * finished rows. A path supplies only its per-query state columns, its
+ * round fold (open, candidates, r) → state + `__done`, and its emit
+ * projection:
+ *   - k = 1 ([[applyNearest]]): the declarative [[MaxScoreMinKey]] best
+ *     pair, merged with the carried best by a narrow join;
+ *   - 2 ≤ k ≤ [[TopKSlots.JitK]] at scale ([[applyDeclK]]): declarative
+ *     [[TopKSlots]] buffers, merged by explode-and-reaggregate;
+ *   - other k ([[applyAgg]]): the imperative [[TopKByScore]]
+ *     ObjectHashAggregate over carried + fresh + sentinel rows.
+ * Each ships at most k (score, key) pairs per query into the round's
+ * exchange — O(open-queries) state instead of every candidate row, and no
  * full-candidate sort (a `row_number` window sorted candidate-cells ×
  * target-density rows per round: measured 2× wall time and 0.49 N→4N
- * scaling on the bench fixture — the sort spilled; the aggregate path
- * doesn't). The same aggregate row carries the kth-distance + ring-bound
- * resolution test, so each round is ONE shuffle. Non-integral keys fall
- * back to the windowed form (same ordering contract). Rounds needed ≈
- * target density, typically 1-3 when `res` is sized so a ring-1 disk
- * holds ≳k targets. Accumulated state is capped at top-k per query per
+ * scaling on the bench fixture — the sort spilled; the aggregates don't).
+ * The same aggregate row carries the ring-bound resolution test, so each
+ * round is one checkpoint job. Non-integral keys fall back to the
+ * windowed form ([[applyWindowed]], same ordering contract), whose state
+ * is up to k rows per query and which keeps its own round body. Rounds
+ * needed ≈ target density, typically 1-3 when `res` is sized so a ring-1
+ * disk holds ≳k targets. Carried state is capped at top-k per query per
  * round (correct: dropped candidates can never re-enter the top-k).
  */
 object Knn {
 
-  /** Per-round loop timing to stderr when GRAFT_KNN_DEBUG is set —
-   * the driver loop's serial cost is the scaling-critical quantity. */
-  private val Debug = sys.env.contains("GRAFT_KNN_DEBUG")
-
-  /** Bench/debug override of the k-path routing (GRAFT_KNN_PATH =
+  /** Bench override of the k-path routing (GRAFT_KNN_PATH =
    * decl | agg | window): lets the scaling bench measure the declarative
    * and imperative aggregates on the SAME workload (the BASELINE.md
    * k = 3 comparison). Ignored when the requested path can't serve the
@@ -157,6 +165,150 @@ object Knn {
    * pass the ring bound, so the done-test needs no special case. */
   private val SentinelScore = Double.NegativeInfinity
 
+  /** Per-round state materialization: both forms materialize eagerly AND
+   * truncate lineage — the plan would otherwise grow by one join+agg per
+   * round and blow up the optimizer (observed: explainString OOM). */
+  private def checkpointer(reliable: Boolean): DataFrame => DataFrame =
+    df => if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
+
+  /**
+   * The target layer every path joins against — (key, __tlat, __tlon,
+   * __tcell) — persisted, plus the side to join: a compact layer is
+   * broadcast, so the per-round cell equi-join needs NO exchange on either
+   * side (the exploded ring-cell rows — the loop's biggest intermediate —
+   * never shuffle), cutting both shuffled bytes and two stage boundaries of
+   * driver-sync latency per round. Gated on measured size (rows × ~48 B)
+   * against the session's own broadcast threshold so a huge target table
+   * keeps the shuffle join. The caller unpersists the first frame.
+   */
+  private def targetLayer(
+      targets: DataFrame, key: Column, tLat: String, tLon: String, res: Int): (DataFrame, DataFrame) = {
+    val tgt0 = targets.select(key, col(tLat).as("__tlat"), col(tLon).as("__tlon"))
+      .withColumn("__tcell", cell_id(col("__tlat"), col("__tlon"), res))
+      .persist()
+    (tgt0, if (tgt0.count() * 48 <= broadcastBytesLimit(tgt0)) broadcast(tgt0) else tgt0)
+  }
+
+  /** Upper radius of the band after `lo`. Geometric radius growth: bands
+   * [0,1], [2,4], [5,10], [11,22], … — log(maxRings) driver rounds instead
+   * of one per ring. The first band is the full disk-1 (not the lone [0,0]
+   * cell): res is sized so a disk-1 holds ≳k targets (suggestRes), and a
+   * query near a cell corner can have its NN in a diagonal neighbour — so
+   * [0,0] almost never passes the edge-distance bound and just costs one
+   * extra global sync. */
+  private def bandEnd(lo: Int, maxRings: Int): Int =
+    if (lo == 0) math.min(1, maxRings) else math.min(lo * 2, maxRings)
+
+  /** The properly-shaped result of an empty query set. */
+  private def emptyResult(queries: DataFrame, qKey: String, targets: DataFrame, tKey: String): DataFrame =
+    queries.limit(0).select(col(qKey),
+      lit(null).cast(targets.schema(tKey).dataType).as(tKey), lit(0.0).as("dist_sq"), lit(0).as("rank"))
+
+  /**
+   * The ring-expansion loop shared by the integral-key paths. The open set
+   * is one row per unresolved query: (__qkey, __qlat, __qlon) plus the
+   * path's own `state` columns (its top-k-so-far). Each round the loop
+   * joins the open queries' band cells against the target layer into
+   * candidates (__qkey, __qlat, __qlon, __score = −d², __tk64), and
+   * `fold(open, candidates, r)` ranks them into one row per open query
+   * carrying the updated state and `__done` (the ring-r bound test). The
+   * fold's frame is checkpointed; its open rows, minus `__done`, are the
+   * next round's open set. `emit` projects a round's rows to (__qkey,
+   * __tk64, dist_sq, rank).
+   */
+  private def ringExpand(
+      queries: DataFrame,
+      qKey: String, qLat: String, qLon: String,
+      targets: DataFrame,
+      tKey: String, tLat: String, tLon: String,
+      res: Int, reliableCheckpoint: Boolean)(
+      state: Seq[Column],
+      fold: (DataFrame, DataFrame, Int) => DataFrame,
+      emit: DataFrame => DataFrame): DataFrame = {
+    val ckpt = checkpointer(reliableCheckpoint)
+    val maxRings = (1L << res).toInt // ring > grid size is impossible
+    val (tgt0, tgt) = targetLayer(targets, col(tKey).cast(LongType).as("__tk64"), tLat, tLon, res)
+
+    // score = −d² so the folds' (score desc, key asc) order is
+    // (dist asc, key asc) — the windowed path's ordering
+    val negD2 = {
+      val dx = col("__tlon") - col("__qlon")
+      val dy = col("__tlat") - col("__qlat")
+      (-(dx * dx + dy * dy)).as("__score")
+    }
+
+    // the query count, and each round's open count, ride the checkpoint
+    // jobs via observe() — a separate isEmpty action would add one more
+    // driver round-trip to the loop's serial path (every such sync is
+    // core-count-independent cost)
+    val obs0 = org.apache.spark.sql.Observation(s"__knn_init_${System.nanoTime()}")
+    var open: DataFrame = ckpt(queries.select(
+      Seq(col(qKey).as("__qkey"), col(qLat).as("__qlat"), col(qLon).as("__qlon")) ++ state: _*)
+      .observe(obs0, count(lit(1)).as("n")))
+    val initialOpen = open // released once round 0's frame owns the state
+    // per-round frames: each round's finished/tail rows stay LAZY
+    // projections over that round's checkpoint (one eager job per round
+    // instead of two; blocks total ≤ ~2×|queries| states since the open set
+    // shrinks geometrically). OWNERSHIP: the blocks back the returned
+    // DataFrame and are freed by the ContextCleaner when the result is
+    // garbage-collected — for deterministic release, materialize the result
+    // (write/checkpoint) and drop the reference. (An eager compaction here
+    // was measured at +15-20% wall time on the bench workload — writing+
+    // rereading k·|queries| rows — so the lazy form is deliberate.)
+    val rounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    var lo = 0
+    var openCount: Long =
+      if (obs0.get("n").asInstanceOf[Long] == 0L) 0L else Long.MaxValue
+    while (lo <= maxRings && openCount > 0) {
+      val r = bandEnd(lo, maxRings)
+      // NaN-coordinate rows would sort as the BEST score in TopKByScore
+      // (Double.compare total order) but WORST in the windowed fallback's
+      // sort, and a +Inf distance would collide with the sentinel —
+      // exclude every non-finite distance outright so all paths share
+      // one defined semantic: such candidates never rank
+      val cand = open
+        .select(col("__qkey"), col("__qlat"), col("__qlon"),
+          cell_disk_band(cell_id(col("__qlat"), col("__qlon"), res), lit(lo), lit(r)).as("__cell"))
+        .join(tgt, col("__cell") === col("__tcell"))
+        .select(col("__qkey"), col("__qlat"), col("__qlon"), negD2, col("__tk64"))
+        .where(!isnan(col("__score")) && col("__score") =!= lit(SentinelScore))
+      val obs = org.apache.spark.sql.Observation(s"__knn_open_${r}_${System.nanoTime()}")
+      val aggd = ckpt(fold(open, cand, r)
+        .observe(obs, count(when(!col("__done"), 1)).as("open")))
+      openCount = obs.get("open").asInstanceOf[Long]
+      // round 0's frame now owns the state; plain unpersist would be a
+      // no-op on the checkpointed query frame (RDD blocks, not cache entries)
+      if (rounds.isEmpty) org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(initialOpen)
+      rounds += aggd
+      open = aggd.where(!col("__done")).drop("__done")
+      lo = r + 1
+    }
+    tgt0.unpersist()
+    if (rounds.isEmpty) { // zero rounds ran: the query set was empty
+      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(initialOpen)
+      return emptyResult(queries, qKey, targets, tKey)
+    }
+    // every round's finished queries, plus whatever the final round left
+    // open (target table smaller than k, or grid exhausted — emit of the
+    // WHOLE last frame covers both its done and its open rows)
+    val result0 = (rounds.init.map(a => emit(a.where(col("__done"))))
+      :+ emit(rounds.last)).reduce(_.union(_))
+    result0.select(
+      col("__qkey").as(qKey), col("__tk64").cast(targets.schema(tKey).dataType).as(tKey),
+      col("dist_sq"), col("rank"))
+  }
+
+  /** Sorted k-slot buffer `__tk` (scores desc, keys) → one row per real
+   * slot. Slots are sorted, sentinels last → real ranks are 1..n by
+   * position (sentinel slots carry dist_sq = +∞ and are filtered). */
+  private def emitSlots(df: DataFrame): DataFrame =
+    df.select(col("__qkey"), col("__tk.scores").as("__ss"),
+        posexplode(col("__tk.keys")).as(Seq("__pos", "__tk64")))
+      .select(col("__qkey"), col("__tk64"),
+        (-element_at(col("__ss"), col("__pos") + 1)).as("dist_sq"),
+        (col("__pos") + 1).as("rank"))
+      .where(col("dist_sq") =!= lit(Double.PositiveInfinity))
+
   /**
    * k = 1 (nearest-neighbor join, the most common call) — the fully
    * codegen'd fast path. Per round the candidate stream aggregates
@@ -174,112 +326,39 @@ object Knn {
    * arithmetic), which also re-seeds queries whose band held no targets,
    * replacing the sentinel-union trick.
    */
-  private def applyNearest(
+  private[operators] def applyNearest(
       queries: DataFrame,
       qKey: String, qLat: String, qLon: String,
       targets: DataFrame,
       tKey: String, tLat: String, tLon: String,
-      res: Int, reliableCheckpoint: Boolean): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(eager = true) else df.localCheckpoint(true)
-    val keyType = targets.schema(tKey).dataType
-    val maxRings = (1L << res).toInt
-
-    val tEnter = System.nanoTime()
-    val tgt0 = targets.select(
-      col(tKey).cast(LongType).as("__tk64"), col(tLat).as("__tlat"), col(tLon).as("__tlon"))
-      .withColumn("__tcell", cell_id(col("__tlat"), col("__tlon"), res))
-      .persist()
-    // same compact-layer broadcast gate as applyAgg (see note there)
-    val tgt = if (tgt0.count() * 48 <= broadcastBytesLimit(tgt0)) broadcast(tgt0) else tgt0
-    if (Debug) System.err.println(
-      f"[knn] tgt ready ${(System.nanoTime() - tEnter) / 1e9}%.3fs")
-
-    val negD2 = {
-      val dx = col("__tlon") - col("__qlon")
-      val dy = col("__tlat") - col("__qlat")
-      (-(dx * dx + dy * dy)).as("__score")
-    }
-
-    // open carries the best-so-far candidate inline; sentinel = no real
-    // candidate yet (real scores are finite: NaN/±Inf filtered below)
-    val obs0 = org.apache.spark.sql.Observation(s"__knn_init_${System.nanoTime()}")
-    var open: DataFrame = ckpt(queries.select(
-      col(qKey).as("__qkey"), col(qLat).as("__qlat"), col(qLon).as("__qlon"))
-      .withColumn("__score", lit(SentinelScore))
-      .withColumn("__tk64", lit(Long.MinValue))
-      .observe(obs0, count(lit(1)).as("n")))
-    if (Debug) System.err.println(
-      f"[knn] setup tgt+ckpt=${(System.nanoTime() - tEnter) / 1e9}%.3fs")
-    val initialOpen = open
-    // per-round states: finished rows stay lazy projections over each
-    // round's checkpoint (same ownership note as applyAgg's aggds)
-    val rounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var lo = 0
-    var r = 0
-    var openCount: Long =
-      if (obs0.get("n").asInstanceOf[Long] == 0L) 0L else Long.MaxValue
-    val t0 = System.nanoTime()
-    while (lo <= maxRings && openCount > 0) {
-      r = if (lo == 0) math.min(1, maxRings) else math.min(lo * 2, maxRings)
-      val ringCells = open.select(
-        col("__qkey"), col("__qlat"), col("__qlon"),
-        cell_disk_band(cell_id(col("__qlat"), col("__qlon"), res), lit(lo), lit(r)).as("__cell"))
-      val cand = ringCells.join(tgt, col("__cell") === col("__tcell"))
-        .select(col("__qkey"), negD2, col("__tk64"))
-        .where(!isnan(col("__score")) && col("__score") =!= lit(Double.NegativeInfinity))
-      // ONE fused span up to the partial aggregate: no union, no sentinel
-      val roundBest = cand.groupBy("__qkey")
-        .agg(TopKByScore.best(col("__score"), col("__tk64")).as("__new"))
-      val newS = col("__new.best_score")
-      val newK = col("__new.best_key")
-      val bs2 = when(col("__new").isNull, col("__score"))
-        .when(newS > col("__score"), newS)
-        .otherwise(col("__score"))
-      val bk2 = when(col("__new").isNull, col("__tk64"))
-        .when(newS > col("__score"), newK)
-        .when(newS === col("__score"), least(col("__tk64"), newK))
-        .otherwise(col("__tk64"))
-      val obs = org.apache.spark.sql.Observation(s"__knn_open_${r}_${System.nanoTime()}")
-      if (Debug && sys.env.contains("GRAFT_KNN_EXPLAIN") && rounds.isEmpty) {
-        val dbg = roundBest
-        dbg.queryExecution.toRdd.count()
-        System.err.println("[knn] round-1 final plan:\n" +
-          dbg.queryExecution.executedPlan.toString.take(5000))
-      }
-      val aggd = ckpt(open
-        .join(roundBest, Seq("__qkey"), "left_outer")
-        .select(col("__qkey"), col("__qlat"), col("__qlon"),
-          bs2.as("__bs"), bk2.as("__bk"))
-        .withColumn("__done", col("__bs") =!= lit(SentinelScore) &&
-          -col("__bs") <= cell_disk_bound(col("__qlat"), col("__qlon"), res, lit(r)))
-        .observe(obs, count(when(!col("__done"), 1)).as("open")))
-      openCount = obs.get("open").asInstanceOf[Long]
-      if (Debug) System.err.println(
-        f"[knn] band [$lo,$r] open=$openCount t=${(System.nanoTime() - t0) / 1e9}%.3fs")
-      if (rounds.isEmpty) org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(initialOpen)
-      rounds += aggd
-      open = aggd.where(!col("__done"))
-        .select(col("__qkey"), col("__qlat"), col("__qlon"),
-          col("__bs").as("__score"), col("__bk").as("__tk64"))
-      lo = r + 1
-    }
-    tgt0.unpersist()
-    if (rounds.isEmpty) { // zero rounds ran: the query set was empty
-      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(initialOpen)
-      return queries.limit(0).select(col(qKey),
-        lit(null).cast(keyType).as(tKey), lit(0.0).as("dist_sq"), lit(0).as("rank"))
-    }
-    def emit(df: DataFrame): DataFrame =
-      df.select(col("__qkey"), col("__bk").as("__tk64"),
-        (-col("__bs")).as("dist_sq"), lit(1).as("rank"))
-        .where(col("dist_sq") =!= lit(Double.PositiveInfinity))
-    val result0 = (rounds.init.map(a => emit(a.where(col("__done"))))
-      :+ emit(rounds.last)).reduce(_.union(_))
-    result0.select(
-      col("__qkey").as(qKey), col("__tk64").cast(keyType).as(tKey),
-      col("dist_sq"), col("rank"))
-  }
+      res: Int, reliableCheckpoint: Boolean): DataFrame =
+    ringExpand(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, res, reliableCheckpoint)(
+      // open carries the best-so-far candidate inline; sentinel = no real
+      // candidate yet (real scores are finite: NaN/±Inf filtered)
+      state = Seq(lit(SentinelScore).as("__score"), lit(Long.MinValue).as("__tk64")),
+      fold = (open, cand, r) => {
+        // ONE fused span up to the partial aggregate: no union, no sentinel
+        val roundBest = cand.groupBy("__qkey")
+          .agg(TopKByScore.best(col("__score"), col("__tk64")).as("__new"))
+        val newS = col("__new.best_score")
+        val newK = col("__new.best_key")
+        val bs2 = when(col("__new").isNull, col("__score"))
+          .when(newS > col("__score"), newS)
+          .otherwise(col("__score"))
+        val bk2 = when(col("__new").isNull, col("__tk64"))
+          .when(newS > col("__score"), newK)
+          .when(newS === col("__score"), least(col("__tk64"), newK))
+          .otherwise(col("__tk64"))
+        open
+          .join(roundBest, Seq("__qkey"), "left_outer")
+          .select(col("__qkey"), col("__qlat"), col("__qlon"),
+            bs2.as("__score"), bk2.as("__tk64"))
+          .withColumn("__done", col("__score") =!= lit(SentinelScore) &&
+            -col("__score") <= cell_disk_bound(col("__qlat"), col("__qlon"), res, lit(r)))
+      },
+      emit = _.select(col("__qkey"), col("__tk64"),
+          (-col("__score")).as("dist_sq"), lit(1).as("rank"))
+        .where(col("dist_sq") =!= lit(Double.PositiveInfinity)))
 
   /**
    * General k (routed for 2 ≤ k ≤ [[TopKSlots.JitK]]; constructible to
@@ -314,124 +393,42 @@ object Knn {
       qKey: String, qLat: String, qLon: String,
       targets: DataFrame,
       tKey: String, tLat: String, tLon: String,
-      k: Int, res: Int, reliableCheckpoint: Boolean): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(eager = true) else df.localCheckpoint(true)
-    val keyType = targets.schema(tKey).dataType
-    val maxRings = (1L << res).toInt
-
-    val tEnter = System.nanoTime()
-    val tgt0 = targets.select(
-      col(tKey).cast(LongType).as("__tk64"), col(tLat).as("__tlat"), col(tLon).as("__tlon"))
-      .withColumn("__tcell", cell_id(col("__tlat"), col("__tlon"), res))
-      .persist()
-    // same compact-layer broadcast gate as applyAgg (see note there)
-    val tgt = if (tgt0.count() * 48 <= broadcastBytesLimit(tgt0)) broadcast(tgt0) else tgt0
-    if (Debug) System.err.println(
-      f"[knn] tgt ready ${(System.nanoTime() - tEnter) / 1e9}%.3fs")
-
-    val negD2 = {
-      val dx = col("__tlon") - col("__qlon")
-      val dy = col("__tlat") - col("__qlat")
-      (-(dx * dx + dy * dy)).as("__score")
-    }
-
-    // open carries the sorted top-k-so-far as a struct of two k-arrays
-    // (scores desc, keys); all-sentinel = no real candidates yet
-    val obs0 = org.apache.spark.sql.Observation(s"__knn_init_${System.nanoTime()}")
-    var open: DataFrame = ckpt(queries.select(
-      col(qKey).as("__qkey"), col(qLat).as("__qlat"), col(qLon).as("__qlon"),
-      struct(
+      k: Int, res: Int, reliableCheckpoint: Boolean): DataFrame =
+    ringExpand(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, res, reliableCheckpoint)(
+      // open carries the sorted top-k-so-far as a struct of two k-arrays
+      // (scores desc, keys); all-sentinel = no real candidates yet
+      state = Seq(struct(
         array(Seq.fill(k)(lit(TopKSlots.SentinelScore)): _*).as("scores"),
-        array(Seq.fill(k)(lit(TopKSlots.SentinelKey)): _*).as("keys")).as("__tk"))
-      .observe(obs0, count(lit(1)).as("n")))
-    if (Debug) System.err.println(
-      f"[knn] setup tgt+ckpt=${(System.nanoTime() - tEnter) / 1e9}%.3fs")
-    val initialOpen = open
-    // per-round states: finished rows stay lazy projections over each
-    // round's checkpoint (same ownership note as applyAgg's aggds)
-    val rounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var lo = 0
-    var r = 0
-    var openCount: Long =
-      if (obs0.get("n").asInstanceOf[Long] == 0L) 0L else Long.MaxValue
-    val t0 = System.nanoTime()
-    while (lo <= maxRings && openCount > 0) {
-      r = if (lo == 0) math.min(1, maxRings) else math.min(lo * 2, maxRings)
-      val ringCells = open.select(
-        col("__qkey"), col("__qlat"), col("__qlon"),
-        cell_disk_band(cell_id(col("__qlat"), col("__qlon"), res), lit(lo), lit(r)).as("__cell"))
-      // NaN distances (NaN coordinates) and ±∞ are excluded outright —
-      // the same defined semantic as every other k path: such candidates
-      // never rank (and −∞ would collide with the sentinel)
-      val cand = ringCells.join(tgt, col("__cell") === col("__tcell"))
-        .select(col("__qkey"), negD2, col("__tk64"))
-        .where(!isnan(col("__score")) && col("__score") =!= lit(TopKSlots.SentinelScore))
-      // ONE fused span up to the partial aggregate: no union, no sentinel
-      val roundK = cand.groupBy("__qkey")
-        .agg(TopKByScore.topKSlots(k)(col("__score"), col("__tk64")).as("__new"))
-      // narrow fold: explode carried + fresh buffers to ≤ 2k rows/query,
-      // re-aggregate; max() recovers the coordinates (unique per qkey,
-      // present exactly once — on the carried side)
-      def slotRows(df: DataFrame, buf: String, withCoords: Boolean): DataFrame =
-        df.select(
-          col("__qkey"),
-          (if (withCoords) col("__qlat") else lit(null).cast("double")).as("__qlat"),
-          (if (withCoords) col("__qlon") else lit(null).cast("double")).as("__qlon"),
-          explode(arrays_zip(
-            col(s"$buf.scores").as("s"), col(s"$buf.keys").as("t"))).as("__p"))
-          .select(col("__qkey"), col("__qlat"), col("__qlon"),
-            col("__p.s").as("__score"), col("__p.t").as("__tk64"))
-      val merged = slotRows(open, "__tk", withCoords = true)
-        .union(slotRows(roundK, "__new", withCoords = false))
-        .groupBy("__qkey")
-        .agg(
-          TopKByScore.topKSlots(k)(col("__score"), col("__tk64")).as("__tk"),
-          max(col("__qlat")).as("__qlat"), max(col("__qlon")).as("__qlon"))
-      val obs = org.apache.spark.sql.Observation(s"__knn_open_${r}_${System.nanoTime()}")
-      if (Debug && sys.env.contains("GRAFT_KNN_EXPLAIN") && rounds.isEmpty) {
-        val dbg = roundK
-        dbg.queryExecution.toRdd.count()
-        System.err.println("[knn] round-1 final plan:\n" +
-          dbg.queryExecution.executedPlan.toString.take(5000))
-      }
-      // done ⇔ buffer full (kth slot non-sentinel) and the kth distance
-      // beats the ring-r bound — nothing outside ring r can improve it
-      val kth = element_at(col("__tk.scores"), k)
-      val aggd = ckpt(merged
-        .withColumn("__done", kth =!= lit(TopKSlots.SentinelScore) &&
+        array(Seq.fill(k)(lit(TopKSlots.SentinelKey)): _*).as("keys")).as("__tk")),
+      fold = (open, cand, r) => {
+        // ONE fused span up to the partial aggregate: no union, no sentinel
+        val roundK = cand.groupBy("__qkey")
+          .agg(TopKByScore.topKSlots(k)(col("__score"), col("__tk64")).as("__new"))
+        // narrow fold: explode carried + fresh buffers to ≤ 2k rows/query,
+        // re-aggregate; max() recovers the coordinates (unique per qkey,
+        // present exactly once — on the carried side)
+        def slotRows(df: DataFrame, buf: String, withCoords: Boolean): DataFrame =
+          df.select(
+            col("__qkey"),
+            (if (withCoords) col("__qlat") else lit(null).cast("double")).as("__qlat"),
+            (if (withCoords) col("__qlon") else lit(null).cast("double")).as("__qlon"),
+            explode(arrays_zip(
+              col(s"$buf.scores").as("s"), col(s"$buf.keys").as("t"))).as("__p"))
+            .select(col("__qkey"), col("__qlat"), col("__qlon"),
+              col("__p.s").as("__score"), col("__p.t").as("__tk64"))
+        val merged = slotRows(open, "__tk", withCoords = true)
+          .union(slotRows(roundK, "__new", withCoords = false))
+          .groupBy("__qkey")
+          .agg(
+            TopKByScore.topKSlots(k)(col("__score"), col("__tk64")).as("__tk"),
+            max(col("__qlat")).as("__qlat"), max(col("__qlon")).as("__qlon"))
+        // done ⇔ buffer full (kth slot non-sentinel) and the kth distance
+        // beats the ring-r bound — nothing outside ring r can improve it
+        val kth = element_at(col("__tk.scores"), k)
+        merged.withColumn("__done", kth =!= lit(TopKSlots.SentinelScore) &&
           -kth <= cell_disk_bound(col("__qlat"), col("__qlon"), res, lit(r)))
-        .observe(obs, count(when(!col("__done"), 1)).as("open")))
-      openCount = obs.get("open").asInstanceOf[Long]
-      if (Debug) System.err.println(
-        f"[knn] band [$lo,$r] open=$openCount t=${(System.nanoTime() - t0) / 1e9}%.3fs")
-      if (rounds.isEmpty) org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(initialOpen)
-      rounds += aggd
-      open = aggd.where(!col("__done"))
-        .select(col("__qkey"), col("__qlat"), col("__qlon"), col("__tk"))
-      lo = r + 1
-    }
-    tgt0.unpersist()
-    if (rounds.isEmpty) { // zero rounds ran: the query set was empty
-      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(initialOpen)
-      return queries.limit(0).select(col(qKey),
-        lit(null).cast(keyType).as(tKey), lit(0.0).as("dist_sq"), lit(0).as("rank"))
-    }
-    // slots are sorted, sentinels last → real ranks are 1..n by position
-    // (sentinel slots carry dist_sq = +∞ and are filtered)
-    def emit(df: DataFrame): DataFrame =
-      df.select(col("__qkey"), col("__tk.scores").as("__ss"),
-          posexplode(col("__tk.keys")).as(Seq("__pos", "__tk64")))
-        .select(col("__qkey"), col("__tk64"),
-          (-element_at(col("__ss"), col("__pos") + 1)).as("dist_sq"),
-          (col("__pos") + 1).as("rank"))
-        .where(col("dist_sq") =!= lit(Double.PositiveInfinity))
-    val result0 = (rounds.init.map(a => emit(a.where(col("__done"))))
-      :+ emit(rounds.last)).reduce(_.union(_))
-    result0.select(
-      col("__qkey").as(qKey), col("__tk64").cast(keyType).as(tKey),
-      col("dist_sq"), col("rank"))
-  }
+      },
+      emit = emitSlots)
 
   /** Map-side partial top-k path (integral target keys). One shuffle per
    * round: the TopKByScore hash aggregate, whose output row also carries
@@ -443,177 +440,49 @@ object Knn {
       qKey: String, qLat: String, qLon: String,
       targets: DataFrame,
       tKey: String, tLat: String, tLon: String,
-      k: Int, res: Int, reliableCheckpoint: Boolean): DataFrame = {
-    val spark = queries.sparkSession
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(eager = true) else df.localCheckpoint(true)
-    val keyType = targets.schema(tKey).dataType
-    val maxRings = (1L << res).toInt
-
-    val tEnter = System.nanoTime()
-    val tgt0 = targets.select(
-      col(tKey).cast(LongType).as("__tk64"), col(tLat).as("__tlat"), col(tLon).as("__tlon"))
-      .withColumn("__tcell", cell_id(col("__tlat"), col("__tlon"), res))
-      .persist()
-    // broadcast a compact target layer: the per-round cell equi-join then
-    // needs NO exchange on either side (the exploded ring-cell rows — the
-    // loop's biggest intermediate — never shuffle), cutting both shuffled
-    // bytes and two stage boundaries of driver-sync latency per round.
-    // Gate on measured size (rows × ~48 B) against the session's own
-    // broadcast threshold so a huge target table keeps the shuffle join.
-    val tgt = if (tgt0.count() * 48 <= broadcastBytesLimit(tgt0)) broadcast(tgt0) else tgt0
-    if (Debug) System.err.println(
-      f"[knn] tgt ready ${(System.nanoTime() - tEnter) / 1e9}%.3fs")
-
-    // score = −d² so TopKByScore's (score desc, key asc) order is
-    // (dist asc, key asc) — the exact window ordering it replaces
-    val negD2 = {
-      val dx = col("__tlon") - col("__qlon")
-      val dy = col("__tlat") - col("__qlat")
-      (-(dx * dx + dy * dy)).as("__score")
-    }
-
-    // rank = position in the sorted buffer; sentinels (if any) sort last,
-    // so filtering them leaves real ranks 1..n_real intact
-    def explodeTk(df: DataFrame): DataFrame =
-      df.select(col("__qkey"), col("__tk.scores").as("__ss"),
-          posexplode(col("__tk.keys")).as(Seq("__pos", "__tk64")))
-        .select(col("__qkey"), col("__tk64"),
-          (-element_at(col("__ss"), col("__pos") + 1)).as("dist_sq"),
-          (col("__pos") + 1).as("rank"))
-        .where(col("dist_sq") =!= lit(Double.PositiveInfinity))
-
-    /** Per-round aggregate + resolution test (band radius `r`). */
-    def aggWithDone(all: DataFrame, r: Int): DataFrame =
-      all.groupBy("__qkey", "__qlat", "__qlon")
-        .agg(TopKByScore.topK(k)(col("__score"), col("__tk64")).as("__tk"))
-        .withColumn("__done",
-          col("__tk.n") === k &&
-            -element_at(col("__tk.scores"), col("__tk.n")) <=
-              cell_disk_bound(col("__qlat"), col("__qlon"), res, lit(r)))
-
-    /** Carried candidate state of still-open queries (≤ k rows each). */
-    def openState(stillOpen: DataFrame): DataFrame =
-      stillOpen
-        .select(col("__qkey"), col("__qlat"), col("__qlon"), col("__tk.scores").as("__ss"),
-          posexplode(col("__tk.keys")).as(Seq("__pos", "__tk64")))
-        .select(col("__qkey"), col("__qlat"), col("__qlon"),
-          element_at(col("__ss"), col("__pos") + 1).as("__score"), col("__tk64"))
-        .where(col("__score") =!= lit(SentinelScore))
-
-    // the query count rides the checkpoint job via observe() — a separate
-    // isEmpty action would add one more driver round-trip to the loop's
-    // serial path (every such sync is core-count-independent cost)
-    val obs0 = org.apache.spark.sql.Observation(s"__knn_init_${System.nanoTime()}")
-    var open: DataFrame = ckpt(queries.select(
-      col(qKey).as("__qkey"), col(qLat).as("__qlat"), col(qLon).as("__qlon"))
-      .observe(obs0, count(lit(1)).as("n")))
-    if (Debug) System.err.println(
-      f"[knn] setup tgt+ckpt=${(System.nanoTime() - tEnter) / 1e9}%.3fs")
-    val initialOpen = open // released once round 0's aggregate owns the state
-    var acc: DataFrame = null // exploded real candidates of open queries (≤k each)
-    // per-round aggregates: each round's finished/tail rows stay LAZY
-    // projections over that round's checkpointed aggregate (one eager job
-    // per round instead of two; blocks total ≤ ~2×|queries| k-slot structs
-    // since the open set shrinks geometrically). OWNERSHIP: the blocks
-    // back the returned DataFrame and are freed by the ContextCleaner when
-    // the result is garbage-collected — for deterministic release,
-    // materialize the result (write/checkpoint) and drop the reference.
-    // (An eager compaction here was measured at +15-20% wall time on the
-    // bench workload — writing+rereading k·|queries| rows — so the lazy
-    // form is deliberate.)
-    val aggds = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    // geometric radius growth: bands [0,1], [2,4], [5,10], [11,22], … —
-    // log(maxRings) driver rounds instead of one per ring. The first band
-    // is the full disk-1 (not the lone [0,0] cell): res is sized so a
-    // disk-1 holds ≳k targets (suggestRes), and a query near a cell corner
-    // can have its NN in a diagonal neighbour — so [0,0] almost never
-    // passes the edge-distance bound and just costs one extra global sync
-    var lo = 0
-    var r = 0
-    // open-set size rides each round's checkpoint job via observe() —
-    // the explicit per-round isEmpty action (one more driver round-trip
-    // in the loop's serial path) is only needed once, for round 0
-    var openCount: Long =
-      if (obs0.get("n").asInstanceOf[Long] == 0L) 0L else Long.MaxValue
-    val t0 = System.nanoTime()
-    while (lo <= maxRings && openCount > 0) {
-      r = if (lo == 0) math.min(1, maxRings) else math.min(lo * 2, maxRings)
-      val ringCells = open.select(
-        col("__qkey"), col("__qlat"), col("__qlon"),
-        cell_disk_band(cell_id(col("__qlat"), col("__qlon"), res), lit(lo), lit(r)).as("__cell"))
-      // NaN-coordinate rows would sort as the BEST score in TopKByScore
-      // (Double.compare total order) but WORST in the windowed fallback's
-      // sort, and a +Inf distance would collide with the sentinel —
-      // exclude every non-finite distance outright so both paths share
-      // one defined semantic: such candidates never rank
-      val cand = ringCells.join(tgt, col("__cell") === col("__tcell"))
-        .select(col("__qkey"), col("__qlat"), col("__qlon"), negD2, col("__tk64"))
-        .where(!isnan(col("__score")) && col("__score") =!= lit(Double.NegativeInfinity))
-      val seed = open.select(col("__qkey"), col("__qlat"), col("__qlon"),
-        lit(SentinelScore).as("__score"), lit(Long.MinValue).as("__tk64"))
-      val all = (if (acc == null) cand else acc.union(cand)).union(seed)
-      // the aggregate row carries everything the round needs: the top-k
-      // buffer, the kth distance, and the ring-bound done-test.
-      // localCheckpoint: materialize AND truncate lineage — the plan would
-      // otherwise grow by one join+agg per round and blow up the optimizer
-      // (observed: explainString OOM)
-      val obs = org.apache.spark.sql.Observation(s"__knn_open_${r}_${System.nanoTime()}")
-      if (Debug && sys.env.contains("GRAFT_KNN_EXPLAIN") && aggds.isEmpty) {
-        val dbg = aggWithDone(all, r)
-        dbg.queryExecution.toRdd.count()
-        System.err.println("[knn] round-1 final plan:\n" +
-          dbg.queryExecution.executedPlan.toString.take(5000))
-      }
-      val aggd = ckpt(aggWithDone(all, r)
-        .observe(obs, count(when(!col("__done"), 1)).as("open")))
-      openCount = obs.get("open").asInstanceOf[Long]
-      if (Debug) System.err.println(
-        f"[knn] band [$lo,$r] open=$openCount t=${(System.nanoTime() - t0) / 1e9}%.3fs")
-      // round 0's aggregate now owns the state; plain unpersist would be a
-      // no-op on the checkpointed query frame (RDD blocks, not cache entries)
-      if (aggds.isEmpty) org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(initialOpen)
-      aggds += aggd
-      val stillOpen = aggd.where(!col("__done"))
-      open = stillOpen.select("__qkey", "__qlat", "__qlon")
-      acc = openState(stillOpen)
-      lo = r + 1
-    }
-    tgt0.unpersist()
-    if (aggds.isEmpty) { // zero rounds ran: the query set was empty
-      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(initialOpen)
-      return queries.limit(0).select(col(qKey),
-        lit(null).cast(keyType).as(tKey), lit(0.0).as("dist_sq"), lit(0).as("rank"))
-    }
-    // every round's finished queries, plus whatever the final round left
-    // open (target table smaller than k, or grid exhausted — explodeTk of
-    // the WHOLE last aggregate covers both its done and its open rows)
-    val result0 = (aggds.init.map(a => explodeTk(a.where(col("__done"))))
-      :+ explodeTk(aggds.last)).reduce(_.union(_))
-    result0.select(
-      col("__qkey").as(qKey), col("__tk64").cast(keyType).as(tKey),
-      col("dist_sq"), col("rank"))
-  }
+      k: Int, res: Int, reliableCheckpoint: Boolean): DataFrame =
+    ringExpand(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, res, reliableCheckpoint)(
+      // round 0's open set carries no buffer; later rounds carry the
+      // aggregate's `__tk` of their still-open queries
+      state = Nil,
+      fold = (open, cand, r) => {
+        // carried candidate state of still-open queries (≤ k rows each)
+        val carried =
+          if (!open.columns.contains("__tk")) cand
+          else open
+            .select(col("__qkey"), col("__qlat"), col("__qlon"), col("__tk.scores").as("__ss"),
+              posexplode(col("__tk.keys")).as(Seq("__pos", "__tk64")))
+            .select(col("__qkey"), col("__qlat"), col("__qlon"),
+              element_at(col("__ss"), col("__pos") + 1).as("__score"), col("__tk64"))
+            .where(col("__score") =!= lit(SentinelScore))
+            .union(cand)
+        val seed = open.select(col("__qkey"), col("__qlat"), col("__qlon"),
+          lit(SentinelScore).as("__score"), lit(Long.MinValue).as("__tk64"))
+        // the aggregate row carries everything the round needs: the top-k
+        // buffer, the kth distance, and the ring-bound done-test
+        carried.union(seed)
+          .groupBy("__qkey", "__qlat", "__qlon")
+          .agg(TopKByScore.topK(k)(col("__score"), col("__tk64")).as("__tk"))
+          .withColumn("__done",
+            col("__tk.n") === k &&
+              -element_at(col("__tk.scores"), col("__tk.n")) <=
+                cell_disk_bound(col("__qlat"), col("__qlon"), res, lit(r)))
+      },
+      emit = emitSlots)
 
   /** Windowed fallback for non-integral target keys (TopKBuf carries long
-   * keys). Same ordering contract; shuffles every candidate row. */
-  private def applyWindowed(
+   * keys). Same ordering contract; shuffles every candidate row. Its state
+   * is up to k candidate rows per query rather than one row, so it keeps
+   * its own round body over the shared target layer and band schedule. */
+  private[operators] def applyWindowed(
       queries: DataFrame,
       qKey: String, qLat: String, qLon: String,
       targets: DataFrame,
       tKey: String, tLat: String, tLon: String,
       k: Int, res: Int, reliableCheckpoint: Boolean): DataFrame = {
-    // both forms materialize eagerly AND truncate lineage (see loop note)
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(eager = true) else df.localCheckpoint(true)
+    val ckpt = checkpointer(reliableCheckpoint)
     val maxRings = (1L << res).toInt // ring > grid size is impossible
-
-    val tgt0 = targets.select(
-      col(tKey).as("__tkey"), col(tLat).as("__tlat"), col(tLon).as("__tlon"))
-      .withColumn("__tcell", cell_id(col("__tlat"), col("__tlon"), res))
-      .persist()
-    // same compact-layer broadcast gate as applyAgg (see note there)
-    val tgt = if (tgt0.count() * 48 <= broadcastBytesLimit(tgt0)) broadcast(tgt0) else tgt0
+    val (tgt0, tgt) = targetLayer(targets, col(tKey).as("__tkey"), tLat, tLon, res)
 
     var unresolved = ckpt(queries.select(
       col(qKey).as("__qkey"), col(qLat).as("__qlat"), col(qLon).as("__qlon"))
@@ -628,33 +497,23 @@ object Knn {
 
     var acc: DataFrame = null // accumulated top-k candidates of unresolved queries
     // per-round finished rows stay LAZY projections over that round's
-    // checkpointed topk (matching applyAgg's aggds discipline) — the old
+    // checkpointed topk (matching ringExpand's rounds discipline) — the old
     // shape re-checkpointed out.union(finished) every round, rewriting
     // O(rounds × finished) rows for nothing. OWNERSHIP: every round's topk
-    // blocks back the returned DataFrame (see applyAgg's aggds note).
+    // blocks back the returned DataFrame (see ringExpand's rounds note).
     val finishedRounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    // geometric radius growth: bands [0,1], [2,4], [5,10], [11,22], … —
-    // log(maxRings) driver rounds instead of one per ring. The first band
-    // is the full disk-1 (not the lone [0,0] cell): res is sized so a
-    // disk-1 holds ≳k targets (suggestRes), and a query near a cell corner
-    // can have its NN in a diagonal neighbour — so [0,0] almost never
-    // passes the edge-distance bound and just costs one extra global sync
     var lo = 0
-    var r = 0 // band upper radius (inclusive), used in the bound
     while (lo <= maxRings && !unresolved.isEmpty) {
-      r = if (lo == 0) math.min(1, maxRings) else math.min(lo * 2, maxRings)
+      val r = bandEnd(lo, maxRings) // band upper radius (inclusive), used in the bound
       val ringCells = unresolved.select(
         col("__qkey"), col("__qlat"), col("__qlon"),
         cell_disk_band(col("__qcell"), lit(lo), lit(r)).as("__cell"))
       val cand = ringCells.join(tgt, col("__cell") === col("__tcell"))
         .select(col("__qkey"), col("__qlat"), col("__qlon"), col("__tkey"), d2)
-        .where(!isnan(col("dist_sq")) && // same exclusion as the agg path
+        .where(!isnan(col("dist_sq")) && // same exclusion as the aggregate paths
           col("dist_sq") =!= lit(Double.PositiveInfinity))
       val all = if (acc == null) cand else acc.union(cand)
       // keep only top-k per query (bounded state; disjoint rings → no dups)
-      // localCheckpoint: materialize AND truncate lineage — the plan would
-      // otherwise grow by one union+window per round and blow up the
-      // optimizer (observed: explainString OOM)
       val topk = ckpt(all
         .withColumn("rank", row_number().over(wTopK))
         .where(col("rank") <= k))
@@ -679,12 +538,11 @@ object Knn {
       lo = r + 1
     }
     tgt0.unpersist()
-    if (finishedRounds.isEmpty && acc == null) { // zero rounds: empty query set
-      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(unresolved)
-      return queries.limit(0).select(col(qKey),
-        lit(null).cast(targets.schema(tKey).dataType).as(tKey),
-        lit(0.0).as("dist_sq"), lit(0).as("rank"))
-    }
+    // the last open set backs nothing in the result (see the release note
+    // in the loop) — left to the ContextCleaner it would outlive the call
+    org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(unresolved)
+    if (finishedRounds.isEmpty && acc == null) // zero rounds: empty query set
+      return emptyResult(queries, qKey, targets, tKey)
     // queries never resolved (target table smaller than k, or grid
     // exhausted): emit what they have
     val tail =

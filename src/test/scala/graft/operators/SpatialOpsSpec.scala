@@ -273,6 +273,53 @@ class SpatialOpsSpec extends AnyFunSuite {
     assert(empty.columns.toSeq == Seq("qid", "tid", "dist_sq", "rank") && empty.count() == 0)
   }
 
+  test("kNN paths agree on edge inputs and leave no blocks after releasing the result") {
+    val sc = spark.sparkContext
+    val queries = Seq((1L, 0.0, 0.0), (2L, 40.0, 40.0), (3L, -60.0, 120.0))
+      .toDF("qid", "lat", "lon")
+    val twoTargets = Seq((10L, 1.0, 1.0), (11L, -50.0, 100.0)).toDF("tid", "tlat", "tlon")
+    val inputs = Seq(
+      "empty query set" -> (queries.limit(0), twoTargets),
+      "empty target set" -> (queries, twoTargets.limit(0)),
+      "fewer targets than k" -> (queries, twoTargets))
+    type Path = (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
+      org.apache.spark.sql.DataFrame
+    val k = 3 // more than the two targets
+    // nearest serves only k = 1; the others run at k = 3
+    val paths: Seq[(String, Path)] = Seq(
+      "nearest" -> ((q, t) => Knn.applyNearest(q, "qid", "lat", "lon", t, "tid", "tlat", "tlon",
+        res = 2, reliableCheckpoint = false)),
+      "decl" -> ((q, t) => Knn.applyDeclK(q, "qid", "lat", "lon", t, "tid", "tlat", "tlon",
+        k, res = 2, reliableCheckpoint = false)),
+      "agg" -> ((q, t) => Knn.applyAgg(q, "qid", "lat", "lon", t, "tid", "tlat", "tlon",
+        k, res = 2, reliableCheckpoint = false)),
+      "windowed" -> ((q, t) => Knn.applyWindowed(q, "qid", "lat", "lon", t, "tid", "tlat", "tlon",
+        k, res = 2, reliableCheckpoint = false)))
+    for ((input, (q, t)) <- inputs) {
+      val got = paths.map { case (name, path) =>
+        val before = sc.getRDDStorageInfo.map(_.id).toSet
+        val df = path(q, t)
+        assert(df.columns.toSeq == Seq("qid", "tid", "dist_sq", "rank"), s"$input/$name")
+        val rows = df.as[(Long, Long, Double, Int)].collect().toSet
+        org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(df)
+        val left = sc.getRDDStorageInfo.filterNot(i => before(i.id))
+        assert(left.isEmpty, s"$input/$name left blocks: ${left.mkString(", ")}")
+        name -> rows
+      }.toMap
+      val tgts = t.as[(Long, Double, Double)].collect()
+      val want = q.as[(Long, Double, Double)].collect().toSeq.flatMap { case (qid, lat, lon) =>
+        tgts.map { case (tid, tlat, tlon) =>
+          (tid, (tlon - lon) * (tlon - lon) + (tlat - lat) * (tlat - lat))
+        }.sortBy(p => (p._2, p._1)).take(k).zipWithIndex
+          .map { case ((tid, d), r) => (qid, tid, d, r + 1) }
+      }.toSet
+      assert(got("decl") == want, input)
+      assert(got("agg") == want, input)
+      assert(got("windowed") == want, input)
+      assert(got("nearest") == want.filter(_._4 == 1), input)
+    }
+  }
+
   test("vectorize round-trip: cell boxes contain exactly their raster counts") {
     val zoom = 3
     val raster = Tiler.raster(ptsDf, "lat", "lon", zoom)
