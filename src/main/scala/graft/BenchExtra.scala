@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
  * Output: one line per rep, `EXTRA <name> rep=<r> sec=<t>` (or
  * `rep=<r> FAILED: <error>`), plus a final `EXTRA <name> min=<t>` per
  * query over the reps that succeeded — `min=FAILED` when none did. No
- * JSON — the driver's artifact comes from [[Bench]] alone.
+ * JSON — the JSON artifact comes from [[Bench]] alone.
  */
 object BenchExtra {
   def main(args: Array[String]): Unit = {

@@ -497,8 +497,8 @@ object Knn {
 
     var acc: DataFrame = null // accumulated top-k candidates of unresolved queries
     // per-round finished rows stay LAZY projections over that round's
-    // checkpointed topk (matching ringExpand's rounds discipline) — the old
-    // shape re-checkpointed out.union(finished) every round, rewriting
+    // checkpointed topk (matching ringExpand's rounds discipline) —
+    // re-checkpointing out.union(finished) every round would rewrite
     // O(rounds × finished) rows for nothing. OWNERSHIP: every round's topk
     // blocks back the returned DataFrame (see ringExpand's rounds note).
     val finishedRounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
