@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Round-7 optimization harness (guide §1.4): time individual SparkEntry
  * queries in isolation with the SAME session config and consumption
@@ -17,8 +15,10 @@ import org.apache.spark.sql.SparkSession
  *
  * Output: one line per rep, `EXTRA <name> rep=<r> sec=<t>` (or
  * `rep=<r> FAILED: <error>`), plus a final `EXTRA <name> min=<t>` per
- * query over the reps that succeeded — `min=FAILED` when none did. No
- * JSON — the JSON artifact comes from [[Bench]] alone.
+ * query over the reps that succeeded — `min=FAILED` when none did — and
+ * `LEAK <name> rdds=<n> mb=<x>` when blocks the query created remain in
+ * storage after its results were released. No JSON — the JSON artifact
+ * comes from [[Bench]] alone.
  */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -29,17 +29,9 @@ object BenchExtra {
       if (args.isEmpty || args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(0).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
     val planOut = sys.env.get("GRAFT_PLAN_OUT")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "50000000")
-      .config("spark.local.dir", "/dev/shm/graft-bench")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = BenchSession(cpus, "graft-bench-extra", "WARN",
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.session.timeZone" -> "UTC")
     // GRAFT_CODEGEN_LOG=1: surface the codegen INFO lines that flag the
     // JVM's 8000-byte JIT huge-method cliff (CLAUDE.md gotcha)
     if (sys.env.contains("GRAFT_CODEGEN_LOG"))
@@ -76,6 +68,7 @@ object BenchExtra {
     }
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
+      val before = s.sparkContext.getRDDStorageInfo.map(_.id).toSet
       planOut.foreach { dir =>
         var df: org.apache.spark.sql.DataFrame = null
         try {
@@ -107,10 +100,10 @@ object BenchExtra {
       }
       if (times.nonEmpty) println(f"EXTRA $name min=${times.min}%.3f")
       else if (reps > 0) println(s"EXTRA $name min=FAILED")
-      if (sys.env.contains("GRAFT_JOBLOG")) {
-        val infos = s.sparkContext.getRDDStorageInfo
-        val mb = infos.map(i => i.memSize + i.diskSize).sum / 1e6
-        println(f"STORAGE after $name: ${infos.length} rdds ${mb}%.1f MB")
+      val left = s.sparkContext.getRDDStorageInfo.filterNot(i => before(i.id))
+      if (left.nonEmpty) {
+        val mb = left.map(i => i.memSize + i.diskSize).sum / 1e6
+        println(f"LEAK $name rdds=${left.length} mb=$mb%.3f")
       }
     }
     s.stop()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Child-JVM entry for the scaling measurements (forked by [[Bench]] so
@@ -19,28 +18,13 @@ import org.apache.spark.sql.functions._
 object BenchPipeline {
   def main(args: Array[String]): Unit = {
     val Array(cores, mode, pagesPath, polysPath) = args
-    val builder = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-pipeline-$cores")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the bench fixture is many small parquet files; with the 128 MB
-      // default they coalesce into ~4 input splits and the parse stage
-      // can't use the cores. At production scale files are 128 MB-1 GB
-      // and splits abound — these settings make the bench representative.
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "131072")
-      // per-query top-k aggregates blow past the 128-group default at
-      // which ObjectHashAggregate silently degrades to SORT-based
-      // aggregation, reintroducing the candidate sort the aggregate
-      // exists to avoid. Top-k buffers are ~100 B each, so millions of
-      // in-memory groups per partition are fine.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "50000000")
-      // shuffle/spill files on tmpfs: the sandbox's /tmp is a slow shared
-      // virtual disk whose bandwidth does not scale with cores (measured:
-      // it froze the 4c→16c ratio at ~2.4 on shuffle-heavy rounds); a real
-      // cluster executor writes shuffle to fast node-local NVMe
-      .config("spark.local.dir", "/dev/shm/graft-bench")
-      .config("spark.ui.enabled", "false")
+    // the bench fixture is many small parquet files; with the 128 MB
+    // default they coalesce into ~4 input splits and the parse stage
+    // can't use the cores. At production scale files are 128 MB-1 GB
+    // and splits abound — these settings make the bench representative.
+    val splits = Seq(
+      "spark.sql.files.maxPartitionBytes" -> "8m",
+      "spark.sql.files.openCostInBytes" -> "131072")
     // regime-specific tuning, each documented in SCALE.md/BASELINE.md:
     //  - kNN (aggregation/state-heavy iterative loop): 4× cores shuffle
     //    partitions shrink per-task live sets during aggregation (cheaper
@@ -49,15 +33,13 @@ object BenchPipeline {
     //    checkpoint-preserved partitioning lines up round over round.
     //  - spatial (map-heavy broadcast pipeline): the r2/r3-calibrated
     //    shape — partitions = cores, AQE coalescing on.
-    val spark = (if (mode == "knn")
-      builder
-        .config("spark.sql.shuffle.partitions", cores.toInt * 4)
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    else
-      builder.config("spark.sql.shuffle.partitions", cores.toInt)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val regime =
+      if (mode == "knn") Seq(
+        "spark.sql.shuffle.partitions" -> (cores.toInt * 4).toString,
+        "spark.sql.join.preferSortMergeJoin" -> "false",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+      else Seq("spark.sql.shuffle.partitions" -> cores)
+    val spark = BenchSession(cores.toInt, s"graft-pipeline-$cores", "ERROR", splits ++ regime: _*)
 
     def runKnn(): Long = {
       // nearest-neighbor join: 4M query points vs 30k targets at res 5

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -38,21 +38,11 @@ object SketchBench {
   def main(args: Array[String]): Unit = {
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
     val n = sys.env.getOrElse("SPARK_GRAFT_SKETCH_N", "100000000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-sketch-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      // the recipe setting (CLAUDE.md/SCALE.md): per-group top-k buffers
-      // are ~100 B, so groups-in-hash-map fallback must not flip the
-      // ObjectHashAggregate to sort-based mid-measurement. 64 groups here
-      // sit under even the 128 default — set it anyway so the number is
-      // measured under the documented production recipe.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "50000000")
-      .config("spark.local.dir", "/dev/shm/graft-bench")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the shared session raises the sort-fallback threshold: 64 groups here
+    // sit under even the 128 default, but the number is measured under the
+    // documented production recipe (CLAUDE.md/SCALE.md)
+    val spark = BenchSession(cores, s"graft-sketch-bench-$cores", "WARN",
+      "spark.sql.shuffle.partitions" -> cores.toString)
 
     // Group cardinality is THE regime knob (SPARK_GRAFT_SKETCH_GROUPS):
     // 64 ≈ per-event-type dashboards, where every path's aggregation

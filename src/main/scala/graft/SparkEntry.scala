@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
 import graft.functions._
 import graft.operators._
 import graft.sources.{Fixtures, PagesFromDocs}
@@ -422,7 +423,12 @@ object SparkEntry {
 
   // =========================================================================
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every query body runs in a [[Checkpoints.scope]]. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    queryBodies.map { case (name, q) =>
+      name -> ((s: SparkSession, d: String) => Checkpoints.scope(q(s, d))) }
+
+  private def queryBodies: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- relational core (SURVEY §2.1, §2.4-§2.7) ------------------------
     "q01_lang_histogram" -> ((s, d) =>
       tblRaw(s, d, "documents").groupBy("lang").agg(count(lit(1)).as("n"))),
@@ -1213,7 +1219,7 @@ object SparkEntry {
       // docs feeds FIVE branches (two capture variants, robots, delays,
       // sitemaps): materialize the fanned read once so each branch reads
       // the blocks instead of re-running the scan+fan exchange 5×
-      val docs = tbl(s, d, "documents").localCheckpoint(true)
+      val docs = Checkpoints.materialize(tbl(s, d, "documents"))
       val v = pmod(Sketches.portableHash52(col("source")), lit(3))
       // four path families so every robots rule fires; unique per doc so
       // revisit collapse merges only a page's own capture variants
@@ -1236,9 +1242,9 @@ object SparkEntry {
       // payload join-back), and re-evaluating the rejoin pipeline on both
       // sides measured 10.9 s vs 1.5 s checkpointed at sf0.1 — exactly
       // the storage boundary a real crawl pipeline has here anyway (the
-      // collapsed captures ARE a table). Blocks stay owned by the result.
-      val latest = Urls.latestCaptureRejoin(a.unionByName(b), "url", "ts", "content")
-        .localCheckpoint(true)
+      // collapsed captures ARE a table)
+      val latest = Checkpoints.materialize(
+        Urls.latestCaptureRejoin(a.unionByName(b), "url", "ts", "content"))
       // robots = the q109 gate rules merged with the q113 delay lines
       val robots = docs.select(col("source")).distinct()
         .withColumn("txt",

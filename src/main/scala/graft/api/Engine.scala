@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints.{materialize, scope}
 import graft.functions._
 import graft.operators._
 
@@ -132,7 +133,7 @@ object Engine {
    *
    * @return (host, loc_url, lastmod nullable)
    */
-  def sitemapUrls(sitemaps: DataFrame, hostCol: String, xmlCol: String): DataFrame = {
+  def sitemapUrls(sitemaps: DataFrame, hostCol: String, xmlCol: String): DataFrame = scope {
     val nodeCols = Seq("node_id", "parent_id", "depth", "kind", "name", "attrs",
       "start_byte", "end_byte", "start_row", "start_col", "end_row", "end_col",
       "path", "children_count")
@@ -141,9 +142,8 @@ object Engine {
     // it ONCE or the XML parse generator runs once per reference. Text
     // payloads are sliced out eagerly here so the checkpoint carries one
     // decoded string per text node instead of the full XML bytes per
-    // node row. OWNERSHIP: the returned frame rides these blocks
-    // (q57-convention); callers release after the last action.
-    val nd = sitemaps
+    // node row.
+    val nd = materialize(sitemaps
       .select(col(hostCol).as("host"), col(xmlCol).cast("binary").as("__xb"))
       .distinct()
       .withColumn("__rid", xxhash64(col("host"), col("__xb")))
@@ -152,8 +152,7 @@ object Engine {
       .select(col("host"), col("__rid"), col("node_id"), col("parent_id"),
         col("kind"), col("name"),
         when(col("kind") === "text", trim(utf8_decode_replace(
-          expr("substring(__xb, start_byte + 1, end_byte - start_byte)")))).as("__t"))
-      .localCheckpoint(true)
+          expr("substring(__xb, start_byte + 1, end_byte - start_byte)")))).as("__t")))
     // per <url> entry: its loc element id and (optional) lastmod id
     val entries = nd.where(col("kind") === "element" &&
         (col("name") === "loc" || col("name") === "lastmod"))
@@ -200,15 +199,13 @@ object Engine {
    *
    * @return (url, main_tag, start_byte, end_byte, content_len, anchor_len)
    */
-  def mainContent(pages: DataFrame): DataFrame = {
+  def mainContent(pages: DataFrame): DataFrame = scope {
     // the node table feeds three branches (text spans, anchors, block
     // candidates): materialize the slim projection once or the HTML parse
-    // generator runs per branch. OWNERSHIP: returned frame rides these
-    // blocks; callers release after the last action (q57-convention).
-    val nd = nodes(pages)
+    // generator runs per branch.
+    val nd = materialize(nodes(pages)
       .select(col("url"), col("kind"), col("name"),
-        col("start_byte"), col("end_byte"))
-      .localCheckpoint(true)
+        col("start_byte"), col("end_byte")))
     val texts0 = nd.where(col("kind") === "text")
       .select(col("url").as("turl"), col("start_byte").as("ts"), col("end_byte").as("te"))
     val anchors = nd.where(col("kind") === "element" && col("name") === "a")
@@ -329,12 +326,11 @@ object Engine {
   /** Range ANTI-join: drop nodes whose start falls inside any node of
    * `containerName` (the exclude_class_methods shape, P6/J4,
    * tools/analysis.py:287-305). */
-  def excludeWithin(nodeDf: DataFrame, containerName: String): DataFrame = {
+  def excludeWithin(nodeDf: DataFrame, containerName: String): DataFrame = scope {
     // both the container extraction and the anti-join's left side read
     // nodeDf: materialize it once or the upstream (typically a full HTML
-    // parse) runs per reference. OWNERSHIP: the returned frame rides the
-    // blocks; callers release after the last action (q57-convention).
-    val nd = nodeDf.localCheckpoint(true)
+    // parse) runs per reference.
+    val nd = materialize(nodeDf)
     val containers = nd.where(col("name") === containerName)
       .select(col("url").as("__curl"), col("start_byte").as("__cs"), col("end_byte").as("__ce"))
     nd.join(containers,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints.{materialize, scope}
 
 /**
  * Corpus-curation primitives: deterministic sampling / source mixing and
@@ -386,9 +387,7 @@ object Curation {
    * ships ≤ cap slot rows per (source, task); 7 is a stateless CASE.
    * Stage composition adds semi/anti equi-joins on the doc key only —
    * document text crosses the wire exactly where the underlying operator
-   * already shipped it. OWNERSHIP: like q57, the near-dup stage's
-   * component labels ride a localCheckpoint that [[Dedup.dropKeys]]
-   * releases internally; the returned frame owns no extra blocks.
+   * already shipped it.
    */
   def curate(
       docs: DataFrame,
@@ -398,7 +397,7 @@ object Curation {
       minTokens: Int, minStopPct: Int,
       bands: Int, rowsPerBand: Int, threshold: Double, nGram: Int,
       capPerSource: Int, capSalt: String,
-      splits: Seq[(String, Long)], splitSalt: String): DataFrame = {
+      splits: Seq[(String, Long)], splitSalt: String): DataFrame = scope {
     require(keepLangs.nonEmpty && minTokens >= 0 && minStopPct >= 0)
     // MATERIALIZED STAGE FRONTIERS: the final union's seven branches each
     // read their stage's survivor frame, and most frames are referenced
@@ -406,20 +405,10 @@ object Curation {
     // materialization every branch re-derives the whole upstream chain —
     // the exact double-evaluation shape q116's robots gate measured at
     // 10.9 s vs 1.5 s. Each frontier is the stage table a production
-    // pipeline would write to storage anyway; the ckpt() frames shrink
-    // monotonically. OWNERSHIP: the returned frame rides these blocks
-    // (the q57/q116 convention) — long-lived sessions release them via
-    // GraftBridge.releaseCheckpointBlocks after the last action.
-    // repartition before every frontier checkpoint: stage outputs are
-    // small, so AQE coalesces them to one partition and a checkpoint
-    // would freeze that — the heavy downstream passes (minhashLsh's
-    // tokenizer over s3, the gram explode over s4) would then run
-    // single-task (the q14 lesson). On a real cluster the frontier is a
-    // written table and the next stage re-plans its own parallelism;
-    // here the explicit REPARTITION_BY_NUM (never AQE-coalesced) plays
-    // that role. Target tracks the session's shuffle parallelism.
-    val fanN = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    def ckpt(df: DataFrame): DataFrame = df.repartition(fanN).localCheckpoint(true)
+    // pipeline would write to storage anyway; the frontier frames shrink
+    // monotonically. Every frontier is fanned out (fanOut): stage outputs
+    // are small, and the heavy downstream passes (minhashLsh's tokenizer
+    // over s3, the gram explode over s4) would otherwise run single-task.
 
     def drops(df: DataFrame, stage: String): DataFrame =
       df.select(col("__k"), col("__src"), lit(stage).as("stage"),
@@ -432,13 +421,13 @@ object Curation {
     // (stage semantics unchanged: quality drops are judged among
     // in-language docs only, which filters express directly)
     val sw = TextAnalysis.LangStopwords.flatMap(_._2).distinct
-    val q = ckpt(TextAnalysis.langIdWith(
+    val q = materialize(TextAnalysis.langIdWith(
         docs.select(col(key).as("__k"), col(text).as("__txt"),
           col(source).as("__src")), "__txt")
       .withColumn("__nt", size(split(col("__txt"), " ")).cast("long"))
       .withColumn("__sw",
         size(filter(split(lower(col("__txt")), " "), t => t.isInCollection(sw)))
-          .cast("long")))
+          .cast("long")), fanOut = true)
     val okLang = col("pred_lang").isInCollection(keepLangs)
     val okQ = col("__nt") >= minTokens &&
       col("__sw") * 100 >= col("__nt") * minStopPct
@@ -451,15 +440,16 @@ object Curation {
     // digest join materialized, survivors/drops are filters over it
     val dg = s2.withColumn("__dg", md5(col("__txt").cast("binary")))
     val keep3 = dg.groupBy("__dg").agg(min(col("__k")).as("__keep"))
-    val j3 = ckpt(dg.join(keep3, "__dg"))
-    val s3 = ckpt(j3.where(col("__k") === col("__keep")).drop("__dg", "__keep"))
+    val j3 = materialize(dg.join(keep3, "__dg"), fanOut = true)
+    val s3 = materialize(j3.where(col("__k") === col("__keep")).drop("__dg", "__keep"),
+      fanOut = true)
     val d3 = drops(j3.where(col("__k") =!= col("__keep")), "exact_dup")
 
     // 4. near-dup components among survivors: min-key canonical survives
     val pairs = Dedup.minhashLsh(s3, "__k", "__txt", bands, rowsPerBand, threshold)
     val drop4 = Dedup.dropKeys(pairs, "key_a", "key_b")
       .select(col("drop_key").as("__k"))
-    val s4 = ckpt(s3.join(drop4, Seq("__k"), "left_anti"))
+    val s4 = materialize(s3.join(drop4, Seq("__k"), "left_anti"), fanOut = true)
     val d4 = drops(s3.join(drop4, Seq("__k"), "left_semi"), "near_dup")
 
     // 5. benchmark decontamination (benchmark must carry the SAME text
@@ -467,14 +457,14 @@ object Curation {
     // hit5 feeds both the anti and the semi join — materialize it once or
     // the whole corpus-side gram explode+probe pipeline runs twice
     val bench = benchmark.select(col(text).as("__txt"))
-    val hit5 = decontaminate(s4, bench, "__k", "__txt", nGram)
-      .select(col("__k")).localCheckpoint(true)
-    val s5 = ckpt(s4.join(hit5, Seq("__k"), "left_anti"))
+    val hit5 = materialize(decontaminate(s4, bench, "__k", "__txt", nGram)
+      .select(col("__k")))
+    val s5 = materialize(s4.join(hit5, Seq("__k"), "left_anti"), fanOut = true)
     val d5 = drops(s4.join(hit5, Seq("__k"), "left_semi"), "contaminated")
 
     // 6. per-source cap — kept set feeds the split branch and the anti
     // join; materialize once (the slots aggregate otherwise runs twice)
-    val s6 = ckpt(capPerGroup(s5, "__src", "__k", capPerSource, capSalt))
+    val s6 = materialize(capPerGroup(s5, "__src", "__k", capPerSource, capSalt), fanOut = true)
     val d6 = drops(s5.join(s6.select("__k"), Seq("__k"), "left_anti"), "capped")
 
     // 7. leakage-safe split for the kept set

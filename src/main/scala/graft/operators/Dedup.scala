@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints.{materialize, persist, scope}
 
 /**
  * Deduplication operators for web-scale corpora (driver instructions:
@@ -47,88 +48,70 @@ object Dedup {
    *
    * @param pairs (keyA, keyB) undirected edges
    * @return (key, component) for every key appearing in a pair;
-   *         component = min key of the connected component.
-   *         OWNERSHIP: the result is localCheckpoint-persisted (its lineage
-   *         is truncated, so the blocks ARE the data) — the caller must
-   *         release it after the last action over it via
-   *         `GraftBridge.releaseCheckpointBlocks` (plain `.unpersist()` is
-   *         a NO-OP on a checkpointed frame: the blocks are RDD-level
-   *         persisted, not CacheManager entries), or the blocks live in
-   *         executor storage until a driver GC lets the ContextCleaner at
-   *         them ([[dropKeys]] does this: it materializes its own smaller
-   *         output, then releases the labels).
+   *         component = min key of the connected component; the
+   *         result is a checkpoint ([[graft.core.Checkpoints]])
    */
-  def components(pairs: DataFrame, keyA: String, keyB: String): DataFrame = {
-    val edges = pairs.select(col(keyA).as("src"), col(keyB).as("dst"))
+  def components(pairs: DataFrame, keyA: String, keyB: String): DataFrame = scope {
+    val edges = persist(pairs.select(col(keyA).as("src"), col(keyB).as("dst"))
       .union(pairs.select(col(keyB).as("src"), col(keyA).as("dst")))
-      .distinct()
-      .persist()
-    try {
-      var labels = edges.select(col("src").as("key")).distinct()
-        .withColumn("component", col("key"))
-        .localCheckpoint(true)
-      var changed = 1L
-      var round = 0
-      while (changed > 0) {
-        round += 1
-        // neighbour labels: for each key, the min label among its neighbours
-        val viaEdges = edges
-          .join(labels.withColumnRenamed("key", "dst"), "dst")
-          .groupBy(col("src").as("key"))
-          .agg(min(col("component")).as("__nbr"))
-        // pointer jump: my current label's current label. Round 1 skips
-        // it — labels are identity there (component == key), so the jump
-        // is provably a self-join returning each key's own label; one
-        // join per consumer saved (q57/q58/q119 all start here)
-        val withJump =
-          if (round == 1) labels.withColumn("__jmp", col("component"))
-          else {
-            val jump = labels
-              .join(labels.select(col("key").as("component"), col("component").as("__jmp")),
-                Seq("component"))
-              .select(col("key"), col("__jmp"))
-            labels.join(jump, Seq("key"), "left_outer")
-          }
-        // convergence check rides the SAME action that materializes the
-        // round (observe on the checkpoint job): the old label is already
-        // on the row being rewritten, so the former extra join-back +
-        // count() pass per round bought nothing
-        val obs = org.apache.spark.sql.Observation(s"cc_${round}_${System.nanoTime()}")
-        val next = withJump.join(viaEdges, Seq("key"), "left_outer")
-          .select(col("key"),
-            least(col("component"),
-              coalesce(col("__nbr"), col("component")),
-              coalesce(col("__jmp"), col("component"))).as("__new"),
-            col("component").as("__old"))
-          .observe(obs, sum(when(col("__new") =!= col("__old"), 1L).otherwise(0L)).as("chg"))
-          .select(col("key"), col("__new").as("component"))
-          .localCheckpoint(true)
-        changed = obs.get("chg") match {
-          case null => 0L // empty label set
-          case n => n.asInstanceOf[Long]
+      .distinct())
+    var labels = materialize(edges.select(col("src").as("key")).distinct()
+      .withColumn("component", col("key")))
+    var changed = 1L
+    var round = 0
+    while (changed > 0) {
+      round += 1
+      // neighbour labels: for each key, the min label among its neighbours
+      val viaEdges = edges
+        .join(labels.withColumnRenamed("key", "dst"), "dst")
+        .groupBy(col("src").as("key"))
+        .agg(min(col("component")).as("__nbr"))
+      // pointer jump: my current label's current label. Round 1 skips
+      // it — labels are identity there (component == key), so the jump
+      // is provably a self-join returning each key's own label; one
+      // join per consumer saved (q57/q58/q119 all start here)
+      val withJump =
+        if (round == 1) labels.withColumn("__jmp", col("component"))
+        else {
+          val jump = labels
+            .join(labels.select(col("key").as("component"), col("component").as("__jmp")),
+              Seq("component"))
+            .select(col("key"), col("__jmp"))
+          labels.join(jump, Seq("key"), "left_outer")
         }
-        // release the superseded round's checkpoint blocks NOW (nothing
-        // references them once the round is materialized); .unpersist()
-        // would be a no-op on a checkpointed frame
-        org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(labels)
-        labels = next
+      // convergence check rides the SAME action that materializes the
+      // round (observe on the checkpoint job): the old label is already
+      // on the row being rewritten, so the former extra join-back +
+      // count() pass per round bought nothing
+      val obs = org.apache.spark.sql.Observation(s"cc_${round}_${System.nanoTime()}")
+      val next = materialize(withJump.join(viaEdges, Seq("key"), "left_outer")
+        .select(col("key"),
+          least(col("component"),
+            coalesce(col("__nbr"), col("component")),
+            coalesce(col("__jmp"), col("component"))).as("__new"),
+          col("component").as("__old"))
+        .observe(obs, sum(when(col("__new") =!= col("__old"), 1L).otherwise(0L)).as("chg"))
+        .select(col("key"), col("__new").as("component")))
+      changed = obs.get("chg") match {
+        case null => 0L // empty label set
+        case n => n.asInstanceOf[Long]
       }
-      labels
-    } finally edges.unpersist()
+      // release the superseded round's checkpoint blocks NOW (nothing
+      // references them once the round is materialized)
+      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(labels)
+      labels = next
+    }
+    labels
   }
 
   /** Keep/drop decision from a pair list: one row per key that should be
    * DROPPED (its component has a smaller key — the canonical survivor).
    * Materializes its (drop-rows-only, smaller) output eagerly so the full
-   * labels checkpoint from [[components]] can be released immediately
-   * instead of living in executor storage for the session. */
-  def dropKeys(pairs: DataFrame, keyA: String, keyB: String): DataFrame = {
-    val labels = components(pairs, keyA, keyB)
-    val out = labels.where(col("key") =!= col("component"))
-      .select(col("key").as("drop_key"), col("component").as("keep_key"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(labels)
-    out
+   * labels checkpoint from [[components]] is released on return instead
+   * of living in executor storage for the session. */
+  def dropKeys(pairs: DataFrame, keyA: String, keyB: String): DataFrame = scope {
+    materialize(components(pairs, keyA, keyB).where(col("key") =!= col("component"))
+      .select(col("key").as("drop_key"), col("component").as("keep_key")))
   }
 
   /** MinHash signature matrix, long form: (key, h_idx, min_hash).
@@ -198,46 +181,35 @@ object Dedup {
    * verify join — the previous shape re-ran the tokenizer+shingler (the
    * dominant regex cost) three times. To give the persist a deterministic
    * release point the (small — pairs only) output is materialized eagerly
-   * via localCheckpoint before the shingle cache is dropped, so the
-   * returned frame owns no lineage into it. At 100 TB the persist spills
-   * shingle arrays to executor disk (MEMORY_AND_DISK) — still strictly
-   * cheaper than three full tokenize passes over the text.
+   * before the shingle cache is dropped, so the returned frame owns no
+   * lineage into it. At 100 TB the persist spills shingle arrays to
+   * executor disk (MEMORY_AND_DISK) — still strictly cheaper than three
+   * full tokenize passes over the text.
    */
   def minhashLsh(df: DataFrame, key: String, text: String,
-      bands: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
+      bands: Int, rowsPerBand: Int, threshold: Double): DataFrame = scope {
     val numHashes = bands * rowsPerBand
-    val sets = shingleSets(df, key, text).persist()
-    try {
-      // materialize the band keys ONCE: both sides of the candidate
-      // self-join read them, and without this the minhash aggregate +
-      // band groupBy over the (persisted) shingle sets ran twice. The
-      // repartition keeps the self-join parallel — AQE coalesces the
-      // small band aggregate to one partition and the checkpoint would
-      // freeze that (the q14 single-task-join lesson)
-      val bandKeys = bandKeysOf(minhashLongFromSets(sets, key, numHashes), key, rowsPerBand)
-        .repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-        .localCheckpoint(true)
-      val a = bandKeys.select(col(key).as("key_a"), col("band"), col("band_key"))
-      val b = bandKeys.select(col(key).as("key_b"), col("band"), col("band_key"))
-      val cand = a.join(b, Seq("band", "band_key"))
-        .where(col("key_a") < col("key_b"))
-        .select("key_a", "key_b").distinct()
-      // verify with exact Jaccard over the SAME cached shingle sets
-      val sa = sets.select(col(key).as("key_a"), col("sh").as("sh_a"))
-      val sb = sets.select(col(key).as("key_b"), col("sh").as("sh_b"))
-      val out = cand.join(sa, "key_a").join(sb, "key_b")
-        .withColumn("jaccard", round(
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))), 4))
-        .where(col("jaccard") >= threshold)
-        .select("key_a", "key_b", "jaccard")
-        .localCheckpoint(true)
-      // the pairs output is materialized above, so the band-key blocks
-      // are unreachable from the returned plan — release them here
-      // (a caller-side sweep could never find them)
-      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(bandKeys)
-      out
-    } finally sets.unpersist(false)
+    val sets = persist(shingleSets(df, key, text))
+    // materialize the band keys ONCE: both sides of the candidate
+    // self-join read them, and without this the minhash aggregate +
+    // band groupBy over the (persisted) shingle sets ran twice. Fanned
+    // out so the self-join stays parallel
+    val bandKeys = materialize(
+      bandKeysOf(minhashLongFromSets(sets, key, numHashes), key, rowsPerBand), fanOut = true)
+    val a = bandKeys.select(col(key).as("key_a"), col("band"), col("band_key"))
+    val b = bandKeys.select(col(key).as("key_b"), col("band"), col("band_key"))
+    val cand = a.join(b, Seq("band", "band_key"))
+      .where(col("key_a") < col("key_b"))
+      .select("key_a", "key_b").distinct()
+    // verify with exact Jaccard over the SAME cached shingle sets
+    val sa = sets.select(col(key).as("key_a"), col("sh").as("sh_a"))
+    val sb = sets.select(col(key).as("key_b"), col("sh").as("sh_b"))
+    materialize(cand.join(sa, "key_a").join(sb, "key_b")
+      .withColumn("jaccard", round(
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b"))), 4))
+      .where(col("jaccard") >= threshold)
+      .select("key_a", "key_b", "jaccard"))
   }
 
   /**
@@ -275,86 +247,79 @@ object Dedup {
    */
   def incrementalMinhash(newDocs: DataFrame, key: String, text: String,
       bands: Int, rowsPerBand: Int, minAgree: Int,
-      root: String, table: String, wave: Int): DataFrame = {
+      root: String, table: String, wave: Int): DataFrame = scope {
     import graft.snap.SnapshotCatalog
     val spark = newDocs.sparkSession
     val numHashes = bands * rowsPerBand
     require(minAgree >= 1 && minAgree <= numHashes,
       s"minAgree must be in [1, numHashes=$numHashes] (got $minAgree)")
-    val newSigs = minhashLong(newDocs, key, text, numHashes).persist()
-    try {
-      // fresh-table waves (the bootstrap) have NO corpus side: skip the
-      // prior read / anti-join / union entirely instead of planning them
-      // against an empty frame (the wave-0 plan halves). A rerun of an
-      // already-committed wave sees the manifest and takes the full path.
-      val prior = SnapshotCatalog.currentManifest(root, table)
-        .map(_ => SnapshotCatalog.read(spark, root, table))
-      // band keys are read by the candidate join AND the prior-side union:
-      // materialize them once (4 narrow rows per doc)
-      val nb = bandKeysOf(newSigs, key, rowsPerBand).localCheckpoint(true)
-      val nbAsPrior = nb.select(col(key).as("__pkey"), col("band"), col("band_key"))
-        .withColumn("__batch", lit(true))
-      // ONE band equi-join against the flagged union of both prior kinds
-      // (corpus rows + smaller-keyed batch rows) instead of two joins +
-      // union: the corpus branch excludes self-pairs (on a crash-and-rerun
-      // of a committed wave a doc's OWN signatures are in the table and
-      // would otherwise match it against itself), the batch branch keeps
-      // smaller keys only
-      val priorBand = prior.map(p =>
-        bandKeysOf(p, key, rowsPerBand)
-          .select(col(key).as("__pkey"), col("band"), col("band_key"))
-          .withColumn("__batch", lit(false))
-          .unionByName(nbAsPrior)).getOrElse(nbAsPrior)
-      val cand = nb.join(priorBand, Seq("band", "band_key"))
-        .where(when(col("__batch"), col("__pkey") < col(key))
-          .otherwise(col("__pkey") =!= col(key)))
-        .select(col(key), col("__pkey"))
-        .distinct()
-        .localCheckpoint(true) // read twice below (candKeys + the pair join)
-      // agreement count per candidate pair: equal min_hash at equal h_idx,
-      // priors drawn from the corpus table AND this batch's own signatures.
-      // The prior side is semi-join-pruned to CANDIDATE keys first (the
-      // distinct-candidate frame is band-match-sized → broadcasts), so the
-      // (__pkey, h_idx) shuffle below carries |candidates|·numHashes rows,
-      // not the whole corpus signature table
-      val ns = newSigs.select(col(key), col("h_idx"), col("min_hash").as("__nh"))
-      // On a crash-and-rerun of an already-committed wave the corpus table
-      // ALREADY holds this batch's survivors: keep exactly one signature
-      // copy per key (the batch's — byte-identical to the committed one,
-      // signatures are deterministic) by anti-joining the batch's keys out
-      // of the prior side. Without this the per-pair agreement count __m
-      // double-counts every hash match against a committed batch survivor,
-      // so a pair truly agreeing on only ceil(minAgree/2) hashes reads
-      // >= minAgree on the rerun — decisions would differ from the
-      // original run, breaking the exactly-once contract (proved
-      // rerun-identical in DedupSpec's "rerun near the agreement
-      // threshold" test). Both prunes are broadcast-sized: candidates are
-      // band-match-bounded, batch keys are one wave.
-      val candKeys = cand.select("__pkey").distinct()
-      val ps = prior.map(_
-          .join(broadcast(newSigs.select(col(key)).distinct()), Seq(key), "left_anti")
-          .unionByName(newSigs)).getOrElse(newSigs)
-        .select(col(key).as("__pkey"), col("h_idx"), col("min_hash").as("__ph"))
-        .join(broadcast(candKeys), Seq("__pkey"), "left_semi")
-      val dups = cand
-        .join(ns, Seq(key)).join(ps, Seq("__pkey", "h_idx"))
-        .where(col("__nh") === col("__ph"))
-        .groupBy(col(key), col("__pkey")).agg(count(lit(1)).as("__m"))
-        .where(col("__m") >= minAgree)
-        .groupBy(col(key)).agg(min(col("__pkey")).as("dup_of"))
-      val decisions = newDocs.select(col(key)).distinct()
-        .join(dups, Seq(key), "left")
-        .select(col(key), col("dup_of").isNotNull.as("is_dup"), col("dup_of"))
-        .localCheckpoint(true) // decisions are final before the commit below
-      val survivors = decisions.where(!col("is_dup")).select(col(key))
-      SnapshotCatalog.commitWave(spark,
-        newSigs.join(survivors, Seq(key), "left_semi"), wave, root, table)(identity)
-      // decisions are materialized above — the nb/cand scratch blocks are
-      // unreachable from the returned plan, so release them here
-      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(nb)
-      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(cand)
-      decisions
-    } finally newSigs.unpersist(false)
+    val newSigs = persist(minhashLong(newDocs, key, text, numHashes))
+    // fresh-table waves (the bootstrap) have NO corpus side: skip the
+    // prior read / anti-join / union entirely instead of planning them
+    // against an empty frame (the wave-0 plan halves). A rerun of an
+    // already-committed wave sees the manifest and takes the full path.
+    val prior = SnapshotCatalog.currentManifest(root, table)
+      .map(_ => SnapshotCatalog.read(spark, root, table))
+    // band keys are read by the candidate join AND the prior-side union:
+    // materialize them once (4 narrow rows per doc)
+    val nb = materialize(bandKeysOf(newSigs, key, rowsPerBand))
+    val nbAsPrior = nb.select(col(key).as("__pkey"), col("band"), col("band_key"))
+      .withColumn("__batch", lit(true))
+    // ONE band equi-join against the flagged union of both prior kinds
+    // (corpus rows + smaller-keyed batch rows) instead of two joins +
+    // union: the corpus branch excludes self-pairs (on a crash-and-rerun
+    // of a committed wave a doc's OWN signatures are in the table and
+    // would otherwise match it against itself), the batch branch keeps
+    // smaller keys only
+    val priorBand = prior.map(p =>
+      bandKeysOf(p, key, rowsPerBand)
+        .select(col(key).as("__pkey"), col("band"), col("band_key"))
+        .withColumn("__batch", lit(false))
+        .unionByName(nbAsPrior)).getOrElse(nbAsPrior)
+    val cand = materialize(nb.join(priorBand, Seq("band", "band_key"))
+      .where(when(col("__batch"), col("__pkey") < col(key))
+        .otherwise(col("__pkey") =!= col(key)))
+      .select(col(key), col("__pkey"))
+      .distinct()) // read twice below (candKeys + the pair join)
+    // agreement count per candidate pair: equal min_hash at equal h_idx,
+    // priors drawn from the corpus table AND this batch's own signatures.
+    // The prior side is semi-join-pruned to CANDIDATE keys first (the
+    // distinct-candidate frame is band-match-sized → broadcasts), so the
+    // (__pkey, h_idx) shuffle below carries |candidates|·numHashes rows,
+    // not the whole corpus signature table
+    val ns = newSigs.select(col(key), col("h_idx"), col("min_hash").as("__nh"))
+    // On a crash-and-rerun of an already-committed wave the corpus table
+    // ALREADY holds this batch's survivors: keep exactly one signature
+    // copy per key (the batch's — byte-identical to the committed one,
+    // signatures are deterministic) by anti-joining the batch's keys out
+    // of the prior side. Without this the per-pair agreement count __m
+    // double-counts every hash match against a committed batch survivor,
+    // so a pair truly agreeing on only ceil(minAgree/2) hashes reads
+    // >= minAgree on the rerun — decisions would differ from the
+    // original run, breaking the exactly-once contract (proved
+    // rerun-identical in DedupSpec's "rerun near the agreement
+    // threshold" test). Both prunes are broadcast-sized: candidates are
+    // band-match-bounded, batch keys are one wave.
+    val candKeys = cand.select("__pkey").distinct()
+    val ps = prior.map(_
+        .join(broadcast(newSigs.select(col(key)).distinct()), Seq(key), "left_anti")
+        .unionByName(newSigs)).getOrElse(newSigs)
+      .select(col(key).as("__pkey"), col("h_idx"), col("min_hash").as("__ph"))
+      .join(broadcast(candKeys), Seq("__pkey"), "left_semi")
+    val dups = cand
+      .join(ns, Seq(key)).join(ps, Seq("__pkey", "h_idx"))
+      .where(col("__nh") === col("__ph"))
+      .groupBy(col(key), col("__pkey")).agg(count(lit(1)).as("__m"))
+      .where(col("__m") >= minAgree)
+      .groupBy(col(key)).agg(min(col("__pkey")).as("dup_of"))
+    val decisions = materialize(newDocs.select(col(key)).distinct()
+      .join(dups, Seq(key), "left")
+      .select(col(key), col("dup_of").isNotNull.as("is_dup"), col("dup_of")))
+    // decisions are final before the commit below
+    val survivors = decisions.where(!col("is_dup")).select(col(key))
+    SnapshotCatalog.commitWave(spark,
+      newSigs.join(survivors, Seq(key), "left_semi"), wave, root, table)(identity)
+    decisions
   }
 
   /** 16-bit SimHash from md5-derived per-token bit votes; portable to SQL
@@ -392,7 +357,7 @@ object Dedup {
    * BroadcastNestedLoopJoin, O(N²) comparisons).
    */
   private def bandedPairs(sh: DataFrame, key: String,
-      totalBits: Int, maxHamming: Int): DataFrame = {
+      totalBits: Int, maxHamming: Int): DataFrame = scope {
     val nb = maxHamming + 1
     require(nb >= 1 && nb <= totalBits,
       s"maxHamming must be in [0, ${totalBits - 1}], got $maxHamming")
@@ -410,16 +375,9 @@ object Dedup {
     // aggregate (explode + md5 + 16/64 vote sums over every token) runs
     // TWICE — measured as the whole first stage duplicated in q14/q53
     // plans. Signatures are (key, long) rows — tiny at any corpus size
-    // relative to the text they summarize. The explicit repartition
-    // matters: AQE coalesces the small aggregate output to ONE partition
-    // and a checkpoint freezes that, so the candidate join + hamming
-    // filters downstream would run single-task (measured 1.27 s of the
-    // former 1.45 s q14 total in one task). OWNERSHIP: the returned
-    // frame rides these blocks (q57-convention); callers release via
-    // GraftBridge.releaseCheckpointBlocks after the last action.
-    val sigs = sh
-      .repartition(sh.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-      .localCheckpoint(true)
+    // relative to the text they summarize. Fanned out so the candidate
+    // join + hamming filters downstream do not run single-task
+    val sigs = materialize(sh, fanOut = true)
     val banded = sigs
       .select(col(key), col("simhash"), explode(array(bandCols: _*)).as("b"))
       .select(col(key), col("simhash"), col("b.band").as("band"), col("b.bv").as("bv"))
@@ -497,37 +455,33 @@ object Dedup {
    * for small corpora only; route anything bigger to [[minhashLsh]]
    * (SCALE.md: this operator is the exact-small-corpus path). */
   def ngramJaccard(df: DataFrame, key: String, text: String, threshold: Double,
-      maxDocFreq: Int = 128): DataFrame = {
+      maxDocFreq: Int = 128): DataFrame = scope {
     // the tokenized/shingled corpus is referenced THREE times (the pair
     // generation plus both sides of the size join-back) — persist it once
     // or the tokenizer+shingler (the dominant regex cost) runs 3×, the
     // same share-the-shingles shape minhashLsh uses. The (small) pair
     // output is materialized eagerly so the persist has a deterministic
-    // release point; callers release the output's blocks as usual.
-    val sets = df.withColumn("__ts", TextAnalysis.tokens(col(text)))
-      .select(col(key), TextAnalysis.shinglesOf(col("__ts")).as("sh"))
-      .persist()
-    try {
-      val sizes = sets.select(col(key), size(col("sh")).cast("long").as("n"))
-      val ex = sets.select(col(key), explode_outer(col("sh")).as("s"))
-        .where(col("s").isNotNull) // see minhashLong: avoids constraint-pushdown re-evaluation
-      val grouped = ex.groupBy("s").agg(sort_array(collect_list(col(key))).as("ks"))
-      val capped =
-        if (maxDocFreq == Int.MaxValue) grouped else grouped.where(size(col("ks")) <= maxDocFreq)
-      // all ordered pairs (ks(i), ks(j)) with i < j, emitted per shingle
-      val pairs = capped.select(explode(flatten(transform(col("ks"), (a, i) =>
-        transform(slice(col("ks"), i + 2, size(col("ks"))), b => struct(a.as("key_a"), b.as("key_b")))
-      ))).as("p")).select(col("p.key_a"), col("p.key_b"))
-      val inter = pairs.groupBy("key_a", "key_b").agg(count(lit(1)).as("inter"))
-      val na = sizes.select(col(key).as("key_a"), col("n").as("n_a"))
-      val nb = sizes.select(col(key).as("key_b"), col("n").as("n_b"))
-      inter.join(na, "key_a").join(nb, "key_b")
-        .withColumn("jaccard", round(
-          col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")), 4))
-        .where(col("jaccard") >= threshold)
-        .select("key_a", "key_b", "jaccard")
-        .localCheckpoint(true)
-    } finally sets.unpersist(false)
+    // release point.
+    val sets = persist(df.withColumn("__ts", TextAnalysis.tokens(col(text)))
+      .select(col(key), TextAnalysis.shinglesOf(col("__ts")).as("sh")))
+    val sizes = sets.select(col(key), size(col("sh")).cast("long").as("n"))
+    val ex = sets.select(col(key), explode_outer(col("sh")).as("s"))
+      .where(col("s").isNotNull) // see minhashLong: avoids constraint-pushdown re-evaluation
+    val grouped = ex.groupBy("s").agg(sort_array(collect_list(col(key))).as("ks"))
+    val capped =
+      if (maxDocFreq == Int.MaxValue) grouped else grouped.where(size(col("ks")) <= maxDocFreq)
+    // all ordered pairs (ks(i), ks(j)) with i < j, emitted per shingle
+    val pairs = capped.select(explode(flatten(transform(col("ks"), (a, i) =>
+      transform(slice(col("ks"), i + 2, size(col("ks"))), b => struct(a.as("key_a"), b.as("key_b")))
+    ))).as("p")).select(col("p.key_a"), col("p.key_b"))
+    val inter = pairs.groupBy("key_a", "key_b").agg(count(lit(1)).as("inter"))
+    val na = sizes.select(col(key).as("key_a"), col("n").as("n_a"))
+    val nb = sizes.select(col(key).as("key_b"), col("n").as("n_b"))
+    materialize(inter.join(na, "key_a").join(nb, "key_b")
+      .withColumn("jaccard", round(
+        col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")), 4))
+      .where(col("jaccard") >= threshold)
+      .select("key_a", "key_b", "jaccard"))
   }
 
   /**

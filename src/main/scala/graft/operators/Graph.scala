@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints.{materialize, scope}
 
 /**
  * Link-graph operators for web corpora. PageRank is THE host-quality
@@ -49,33 +50,18 @@ object Graph {
    *         ranks in fixed-point 2^scaleBits units, BIGINT-exact
    */
   def pageRank(edges: DataFrame, src: String, dst: String, iterations: Int,
-      scaleBits: Int = 40): DataFrame = {
+      scaleBits: Int = 40): DataFrame = scope {
     val (eWithDeg, nodes, base, r0) = prep(edges, src, dst, iterations, scaleBits)
     var rank = r0
-    var prevRound: DataFrame = null // only OUR per-round checkpoints release
-    for (_ <- 1 to iterations) {
-      val next = step(rank, eWithDeg, nodes, base).localCheckpoint(true)
+    for (i <- 1 to iterations) {
+      val next = materialize(step(rank, eWithDeg, nodes, base))
       // release round i−1's blocks (NOT the initial rank — that one
       // references the shared nodes checkpoint, which later rounds and
       // the final join still read)
-      if (prevRound != null)
-        org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(prevRound)
-      prevRound = next
+      if (i > 1) org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(rank)
       rank = next
     }
-    // after >= 1 materialized rounds the returned frame is the final
-    // round's checkpoint alone — eWithDeg/nodes are no longer reachable
-    // from it, so a caller-side sweep could never free them: release here.
-    // (iterations = 0 returns r0, which still DERIVES from nodes — leave
-    // both alive; they are leaves of the returned plan and the caller's
-    // sweep reaches them.)
-    if (iterations >= 1) {
-      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(eWithDeg)
-      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(nodes)
-    }
     rank.select(col("node"), col("rank"))
-    // the last round's blocks stay live — the caller owns the returned
-    // frame; release after the final action
   }
 
   /** Shared setup: distinct long edges carrying out-degree, the node set,
@@ -85,24 +71,17 @@ object Graph {
     require(iterations >= 0 && iterations <= 64, s"iterations in [0,64] (got $iterations)")
     require(scaleBits >= 10 && scaleBits <= 40, s"scaleBits in [10,40] (got $scaleBits)")
     val scale = 1L << scaleBits
-    val e = edges
+    val e = materialize(edges
       .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint(true) // reused every iteration: cut lineage once
+      .distinct()) // reused every iteration: cut lineage once
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // carry outdeg ON the edge rows so the per-iteration join count stays
     // at one (rank ⋈ edges); outdeg is itself derived from e, same key
-    val eWithDeg = e.join(outdeg, "src").localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
+    val eWithDeg = materialize(e.join(outdeg, "src"))
+    val nodes = materialize(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(true)
-    // eWithDeg and nodes are now eagerly materialized and nothing else
-    // derives from e — release its blocks here instead of stranding them
-    // for the session (a generic caller-side sweep cannot reach them: the
-    // returned frames' plans flattened e away behind their checkpoints)
-    org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(e)
+      .distinct())
     val n = nodes.count() // metadata-sized driver scalar (node count)
     require(n > 0, "pageRank needs at least one edge")
     val base = (scale * 15L / 100L) / n
@@ -149,7 +128,7 @@ object Graph {
    */
   def pageRankResumable(edges: DataFrame, src: String, dst: String,
       iterations: Int, root: String, table: String,
-      scaleBits: Int = 40): DataFrame = {
+      scaleBits: Int = 40): DataFrame = scope {
     import graft.snap.SnapshotCatalog
     val spark = edges.sparkSession
     val (eWithDeg, nodes, base, r0) = prep(edges, src, dst, iterations, scaleBits)
@@ -171,10 +150,7 @@ object Graph {
       }
     }
     // every wave is committed to STORAGE and readIter reads back from it,
-    // so the prep checkpoints are unreachable from the returned frame —
-    // release them here (unpersist is a no-op for never-materialized r0)
-    org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(eWithDeg)
-    org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(nodes)
+    // so the prep checkpoints are released on return
     readIter(iterations)
   }
 
@@ -213,14 +189,13 @@ object Graph {
    * @param edges directed (src, dst); duplicates collapse like [[pageRank]]
    * @return (node, hub, auth) for every node appearing in an edge
    */
-  def hits(edges: DataFrame, src: String, dst: String, iterations: Int): DataFrame = {
+  def hits(edges: DataFrame, src: String, dst: String, iterations: Int): DataFrame = scope {
     require(iterations >= 1 && iterations <= 3,
       s"hits iterations in [1,3] (got $iterations): see the overflow bound")
-    val e = edges
+    val e = materialize(edges
       .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint(true) // reused 2·iterations times: cut lineage once
+      .distinct()) // reused 2·iterations times: cut lineage once
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     var hub = nodes.select(col("node"), lit(1L).as("hub"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import graft.core.Checkpoints.{materialize, persist, scope}
 import graft.functions.{cell_disk_band, cell_disk_bound, cell_id}
 import graft.geo.CellIndex
 
@@ -165,28 +166,21 @@ object Knn {
    * pass the ring bound, so the done-test needs no special case. */
   private val SentinelScore = Double.NegativeInfinity
 
-  /** Per-round state materialization: both forms materialize eagerly AND
-   * truncate lineage — the plan would otherwise grow by one join+agg per
-   * round and blow up the optimizer (observed: explainString OOM). */
-  private def checkpointer(reliable: Boolean): DataFrame => DataFrame =
-    df => if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-
   /**
    * The target layer every path joins against — (key, __tlat, __tlon,
-   * __tcell) — persisted, plus the side to join: a compact layer is
+   * __tcell) — persisted in the caller's scope; a compact layer is
    * broadcast, so the per-round cell equi-join needs NO exchange on either
    * side (the exploded ring-cell rows — the loop's biggest intermediate —
    * never shuffle), cutting both shuffled bytes and two stage boundaries of
    * driver-sync latency per round. Gated on measured size (rows × ~48 B)
    * against the session's own broadcast threshold so a huge target table
-   * keeps the shuffle join. The caller unpersists the first frame.
+   * keeps the shuffle join.
    */
   private def targetLayer(
-      targets: DataFrame, key: Column, tLat: String, tLon: String, res: Int): (DataFrame, DataFrame) = {
-    val tgt0 = targets.select(key, col(tLat).as("__tlat"), col(tLon).as("__tlon"))
-      .withColumn("__tcell", cell_id(col("__tlat"), col("__tlon"), res))
-      .persist()
-    (tgt0, if (tgt0.count() * 48 <= broadcastBytesLimit(tgt0)) broadcast(tgt0) else tgt0)
+      targets: DataFrame, key: Column, tLat: String, tLon: String, res: Int): DataFrame = {
+    val tgt = persist(targets.select(key, col(tLat).as("__tlat"), col(tLon).as("__tlon"))
+      .withColumn("__tcell", cell_id(col("__tlat"), col("__tlon"), res)))
+    if (tgt.count() * 48 <= broadcastBytesLimit(tgt)) broadcast(tgt) else tgt
   }
 
   /** Upper radius of the band after `lo`. Geometric radius growth: bands
@@ -212,9 +206,10 @@ object Knn {
    * candidates (__qkey, __qlat, __qlon, __score = −d², __tk64), and
    * `fold(open, candidates, r)` ranks them into one row per open query
    * carrying the updated state and `__done` (the ring-r bound test). The
-   * fold's frame is checkpointed; its open rows, minus `__done`, are the
-   * next round's open set. `emit` projects a round's rows to (__qkey,
-   * __tk64, dist_sq, rank).
+   * fold's frame is checkpointed — the plan would otherwise grow by one
+   * join+agg per round and blow up the optimizer (observed: explainString
+   * OOM); its open rows, minus `__done`, are the next round's open set.
+   * `emit` projects a round's rows to (__qkey, __tk64, dist_sq, rank).
    */
   private def ringExpand(
       queries: DataFrame,
@@ -224,10 +219,9 @@ object Knn {
       res: Int, reliableCheckpoint: Boolean)(
       state: Seq[Column],
       fold: (DataFrame, DataFrame, Int) => DataFrame,
-      emit: DataFrame => DataFrame): DataFrame = {
-    val ckpt = checkpointer(reliableCheckpoint)
+      emit: DataFrame => DataFrame): DataFrame = scope {
     val maxRings = (1L << res).toInt // ring > grid size is impossible
-    val (tgt0, tgt) = targetLayer(targets, col(tKey).cast(LongType).as("__tk64"), tLat, tLon, res)
+    val tgt = targetLayer(targets, col(tKey).cast(LongType).as("__tk64"), tLat, tLon, res)
 
     // score = −d² so the folds' (score desc, key asc) order is
     // (dist asc, key asc) — the windowed path's ordering
@@ -242,19 +236,16 @@ object Knn {
     // driver round-trip to the loop's serial path (every such sync is
     // core-count-independent cost)
     val obs0 = org.apache.spark.sql.Observation(s"__knn_init_${System.nanoTime()}")
-    var open: DataFrame = ckpt(queries.select(
+    var open: DataFrame = materialize(queries.select(
       Seq(col(qKey).as("__qkey"), col(qLat).as("__qlat"), col(qLon).as("__qlon")) ++ state: _*)
-      .observe(obs0, count(lit(1)).as("n")))
-    val initialOpen = open // released once round 0's frame owns the state
+      .observe(obs0, count(lit(1)).as("n")), reliable = reliableCheckpoint)
     // per-round frames: each round's finished/tail rows stay LAZY
     // projections over that round's checkpoint (one eager job per round
     // instead of two; blocks total ≤ ~2×|queries| states since the open set
-    // shrinks geometrically). OWNERSHIP: the blocks back the returned
-    // DataFrame and are freed by the ContextCleaner when the result is
-    // garbage-collected — for deterministic release, materialize the result
-    // (write/checkpoint) and drop the reference. (An eager compaction here
-    // was measured at +15-20% wall time on the bench workload — writing+
-    // rereading k·|queries| rows — so the lazy form is deliberate.)
+    // shrinks geometrically). The blocks back the result (graft.core.Checkpoints).
+    // (An eager compaction here was measured at +15-20% wall time on the
+    // bench workload — writing+rereading k·|queries| rows — so the lazy
+    // form is deliberate.)
     val rounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var lo = 0
     var openCount: Long =
@@ -273,29 +264,26 @@ object Knn {
         .select(col("__qkey"), col("__qlat"), col("__qlon"), negD2, col("__tk64"))
         .where(!isnan(col("__score")) && col("__score") =!= lit(SentinelScore))
       val obs = org.apache.spark.sql.Observation(s"__knn_open_${r}_${System.nanoTime()}")
-      val aggd = ckpt(fold(open, cand, r)
-        .observe(obs, count(when(!col("__done"), 1)).as("open")))
+      val aggd = materialize(fold(open, cand, r)
+        .observe(obs, count(when(!col("__done"), 1)).as("open")), reliable = reliableCheckpoint)
       openCount = obs.get("open").asInstanceOf[Long]
-      // round 0's frame now owns the state; plain unpersist would be a
-      // no-op on the checkpointed query frame (RDD blocks, not cache entries)
-      if (rounds.isEmpty) org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(initialOpen)
+      // round 0's frame now owns the state: release the initial open set
+      if (rounds.isEmpty) org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(open)
       rounds += aggd
       open = aggd.where(!col("__done")).drop("__done")
       lo = r + 1
     }
-    tgt0.unpersist()
-    if (rounds.isEmpty) { // zero rounds ran: the query set was empty
-      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(initialOpen)
-      return emptyResult(queries, qKey, targets, tKey)
+    if (rounds.isEmpty) emptyResult(queries, qKey, targets, tKey) // the query set was empty
+    else {
+      // every round's finished queries, plus whatever the final round left
+      // open (target table smaller than k, or grid exhausted — emit of the
+      // WHOLE last frame covers both its done and its open rows)
+      val result0 = (rounds.init.map(a => emit(a.where(col("__done"))))
+        :+ emit(rounds.last)).reduce(_.union(_))
+      result0.select(
+        col("__qkey").as(qKey), col("__tk64").cast(targets.schema(tKey).dataType).as(tKey),
+        col("dist_sq"), col("rank"))
     }
-    // every round's finished queries, plus whatever the final round left
-    // open (target table smaller than k, or grid exhausted — emit of the
-    // WHOLE last frame covers both its done and its open rows)
-    val result0 = (rounds.init.map(a => emit(a.where(col("__done"))))
-      :+ emit(rounds.last)).reduce(_.union(_))
-    result0.select(
-      col("__qkey").as(qKey), col("__tk64").cast(targets.schema(tKey).dataType).as(tKey),
-      col("dist_sq"), col("rank"))
   }
 
   /** Sorted k-slot buffer `__tk` (scores desc, keys) → one row per real
@@ -479,14 +467,14 @@ object Knn {
       qKey: String, qLat: String, qLon: String,
       targets: DataFrame,
       tKey: String, tLat: String, tLon: String,
-      k: Int, res: Int, reliableCheckpoint: Boolean): DataFrame = {
-    val ckpt = checkpointer(reliableCheckpoint)
+      k: Int, res: Int, reliableCheckpoint: Boolean): DataFrame = scope {
     val maxRings = (1L << res).toInt // ring > grid size is impossible
-    val (tgt0, tgt) = targetLayer(targets, col(tKey).as("__tkey"), tLat, tLon, res)
+    val tgt = targetLayer(targets, col(tKey).as("__tkey"), tLat, tLon, res)
 
-    var unresolved = ckpt(queries.select(
+    var unresolved = materialize(queries.select(
       col(qKey).as("__qkey"), col(qLat).as("__qlat"), col(qLon).as("__qlon"))
-      .withColumn("__qcell", cell_id(col("__qlat"), col("__qlon"), res)))
+      .withColumn("__qcell", cell_id(col("__qlat"), col("__qlon"), res)),
+      reliable = reliableCheckpoint)
 
     val d2 = {
       val dx = col("__tlon") - col("__qlon")
@@ -499,8 +487,8 @@ object Knn {
     // per-round finished rows stay LAZY projections over that round's
     // checkpointed topk (matching ringExpand's rounds discipline) —
     // re-checkpointing out.union(finished) every round would rewrite
-    // O(rounds × finished) rows for nothing. OWNERSHIP: every round's topk
-    // blocks back the returned DataFrame (see ringExpand's rounds note).
+    // O(rounds × finished) rows for nothing. The blocks back the result
+    // (graft.core.Checkpoints).
     val finishedRounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var lo = 0
     while (lo <= maxRings && !unresolved.isEmpty) {
@@ -514,9 +502,9 @@ object Knn {
           col("dist_sq") =!= lit(Double.PositiveInfinity))
       val all = if (acc == null) cand else acc.union(cand)
       // keep only top-k per query (bounded state; disjoint rings → no dups)
-      val topk = ckpt(all
+      val topk = materialize(all
         .withColumn("rank", row_number().over(wTopK))
-        .where(col("rank") <= k))
+        .where(col("rank") <= k), reliable = reliableCheckpoint)
 
       // a query is done when it has k candidates and the kth beats the
       // ring-r bound (nothing beyond ring r can improve the top-k)
@@ -528,7 +516,8 @@ object Knn {
         .select("__qkey")
       finishedRounds += topk.join(doneKeys, "__qkey")
         .select(col("__qkey"), col("__tkey"), col("dist_sq"), col("rank"))
-      val stillOpen = ckpt(unresolved.join(doneKeys, Seq("__qkey"), "left_anti"))
+      val stillOpen = materialize(unresolved.join(doneKeys, Seq("__qkey"), "left_anti"),
+        reliable = reliableCheckpoint)
       // the superseded open set is referenced by nothing lazy (finished and
       // acc derive from topk; stillOpen is eager) — release its blocks now
       org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(unresolved)
@@ -537,23 +526,21 @@ object Knn {
         .select("__qkey", "__qlat", "__qlon", "__tkey", "dist_sq")
       lo = r + 1
     }
-    tgt0.unpersist()
-    // the last open set backs nothing in the result (see the release note
-    // in the loop) — left to the ContextCleaner it would outlive the call
-    org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(unresolved)
     if (finishedRounds.isEmpty && acc == null) // zero rounds: empty query set
-      return emptyResult(queries, qKey, targets, tKey)
-    // queries never resolved (target table smaller than k, or grid
-    // exhausted): emit what they have
-    val tail =
-      if (acc == null) Nil
-      else List(acc
-        .withColumn("rank", row_number().over(wTopK))
-        .select(col("__qkey"), col("__tkey"), col("dist_sq"), col("rank")))
-    val result0 = (finishedRounds.toList ++ tail).reduce(_.union(_))
-    result0
-      .withColumnRenamed("__qkey", qKey)
-      .withColumnRenamed("__tkey", tKey)
+      emptyResult(queries, qKey, targets, tKey)
+    else {
+      // queries never resolved (target table smaller than k, or grid
+      // exhausted): emit what they have
+      val tail =
+        if (acc == null) Nil
+        else List(acc
+          .withColumn("rank", row_number().over(wTopK))
+          .select(col("__qkey"), col("__tkey"), col("dist_sq"), col("rank")))
+      val result0 = (finishedRounds.toList ++ tail).reduce(_.union(_))
+      result0
+        .withColumnRenamed("__qkey", qKey)
+        .withColumnRenamed("__tkey", tKey)
+    }
   }
 
   /** Smallest resolution whose cells are coarse enough that an average

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /**
  * Similarity search over an embedding column (Array[Float]) — driver
@@ -330,18 +331,14 @@ object Similarity {
    * corpus (plan pinned in SimilaritySpec).
    */
   def semDedup(corpus: DataFrame, cKey: String, cVec: String,
-      kClusters: Int, iters: Int, tau: Double): DataFrame = {
+      kClusters: Int, iters: Int, tau: Double): DataFrame = Checkpoints.scope {
     val centroids = kmeansCentroids(corpus, cKey, cVec, kClusters, iters)
     // materialize the assignment ONCE: it is referenced three times (both
     // self-join sides + the final kept join), and the kClusters-way
     // distance projection over the whole corpus is the dominant linear
-    // cost — re-deriving it 3x tripled the operator. OWNERSHIP: like the
-    // dedup-components convention, the returned frame rides these blocks;
-    // release via GraftBridge.releaseCheckpointBlocks after the last
-    // action if the session is long-lived.
-    val a = assignToCentroids(
-      corpus.select(col(cKey).as("__k"), col(cVec).as("__v")), "__v", centroids)
-      .localCheckpoint(true)
+    // cost — re-deriving it 3x tripled the operator.
+    val a = Checkpoints.materialize(assignToCentroids(
+      corpus.select(col(cKey).as("__k"), col(cVec).as("__v")), "__v", centroids))
     val l = a.select(col("__cid"), col("__k").as("__lk"), col("__v").as("__lv"))
     val r = a.select(col("__cid"), col("__k").as("__rk"), col("__v").as("__rv"))
     // degenerate-vector guard: a zero embedding gives a zero-norm

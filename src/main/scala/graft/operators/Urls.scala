@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /**
  * URL canonicalization — the first dedup key of every web corpus (crawls
@@ -196,12 +197,11 @@ object Urls {
   /** [[robotsRules]] + [[robotsCrawlDelay]] over ONE parse of the robots
    * corpus: both consume the classified-line/group table, and a caller
    * needing both (the q116 front door) otherwise evaluates the explode +
-   * per-host window twice. The shared blocks frame is checkpointed;
-   * OWNERSHIP: both returned frames ride the blocks (q57-convention) —
-   * release after the last action over either. */
+   * per-host window twice. The shared blocks frame is checkpointed; both
+   * returned frames read it — release after the last action over either. */
   def robotsTables(robots: DataFrame, hostCol: String, textCol: String):
-      (DataFrame, DataFrame) = {
-    val blocks = robotsBlocks(robots, hostCol, textCol).localCheckpoint(true)
+      (DataFrame, DataFrame) = Checkpoints.scope {
+    val blocks = Checkpoints.materialize(robotsBlocks(robots, hostCol, textCol))
     (rulesFrom(blocks), delayFrom(blocks))
   }
 

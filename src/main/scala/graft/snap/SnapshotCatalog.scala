@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /**
  * Iceberg-style snapshot catalog, from scratch (no Iceberg runtime exists
@@ -219,16 +220,14 @@ object SnapshotCatalog {
    * @return (key, content_hash, change ∈ {'added','removed'}), distinct
    */
   def diffSnapshots(spark: SparkSession, root: String, table: String,
-      fromId: Long, toId: Long, keyCol: String, contentCol: String): DataFrame = {
+      fromId: Long, toId: Long, keyCol: String, contentCol: String): DataFrame = Checkpoints.scope {
     // each side is referenced TWICE (the added and removed anti-joins) —
     // materialize the narrow (key, hash) frames once or both scans +
     // distinct shuffles run twice (the documented double-reference trap).
-    // OWNERSHIP: the returned frame rides these blocks; release via
-    // GraftBridge.releaseCheckpointBlocks after the last action.
     def keyed(id: Long): DataFrame =
-      readAt(spark, root, table, id).select(col(keyCol).as("key"),
+      Checkpoints.materialize(readAt(spark, root, table, id).select(col(keyCol).as("key"),
         graft.operators.Sketches.portableHash52(col(contentCol)).as("content_hash"))
-        .distinct().localCheckpoint(true)
+        .distinct())
     val from = keyed(fromId)
     val to = keyed(toId)
     to.join(from, Seq("key", "content_hash"), "left_anti")
@@ -515,22 +514,20 @@ object SnapshotCatalog {
       waveCol: org.apache.spark.sql.Column,
       waves: Int,
       root: String,
-      table: String)(transform: DataFrame => DataFrame): Int = {
+      table: String)(transform: DataFrame => DataFrame): Int = Checkpoints.scope {
     var ran = 0
     // one materialization of the input feeds every wave's filter: the
     // former shape re-ran the full input scan (plus whatever upstream
     // plan produced it) once PER WAVE — waves× passes over the source.
     // MEMORY_AND_DISK spills rather than evicts at scale; for inputs too
     // large to spill once, [[resumableRunSinglePass]] is the one-scan
-    // shape. Unpersisted before return: every wave is durable in storage,
+    // shape. Unpersisted on return: every wave is durable in storage,
     // so nothing downstream references these blocks.
-    val cached = input.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      (0 until waves).foreach { w =>
-        val waveIn = cached.where(waveCol === w)
-        if (commitWave(spark, waveIn, w, root, table)(transform)) ran += 1
-      }
-    } finally cached.unpersist(false)
+    val cached = Checkpoints.persist(input)
+    (0 until waves).foreach { w =>
+      val waveIn = cached.where(waveCol === w)
+      if (commitWave(spark, waveIn, w, root, table)(transform)) ran += 1
+    }
     ran
   }
 
