@@ -32,12 +32,6 @@ object BenchExtra {
     val s = BenchSession(cpus, "graft-bench-extra", "WARN",
       "spark.sql.shuffle.partitions" -> cpus.toString,
       "spark.sql.session.timeZone" -> "UTC")
-    // GRAFT_CODEGEN_LOG=1: surface the codegen INFO lines that flag the
-    // JVM's 8000-byte JIT huge-method cliff (CLAUDE.md gotcha)
-    if (sys.env.contains("GRAFT_CODEGEN_LOG"))
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator",
-        org.apache.logging.log4j.Level.INFO)
     // GRAFT_JOBLOG=1: print every Spark job's wall time + description —
     // the guide-§1 empirical view (which job eats the query) without the UI
     if (sys.env.contains("GRAFT_JOBLOG")) {
@@ -68,7 +62,7 @@ object BenchExtra {
     }
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      val before = s.sparkContext.getRDDStorageInfo.map(_.id).toSet
+      val before = org.apache.spark.sql.GraftBridge.storedRddBytes(s.sparkContext).keySet
       planOut.foreach { dir =>
         var df: org.apache.spark.sql.DataFrame = null
         try {
@@ -100,11 +94,9 @@ object BenchExtra {
       }
       if (times.nonEmpty) println(f"EXTRA $name min=${times.min}%.3f")
       else if (reps > 0) println(s"EXTRA $name min=FAILED")
-      val left = s.sparkContext.getRDDStorageInfo.filterNot(i => before(i.id))
-      if (left.nonEmpty) {
-        val mb = left.map(i => i.memSize + i.diskSize).sum / 1e6
-        println(f"LEAK $name rdds=${left.length} mb=$mb%.3f")
-      }
+      val left = org.apache.spark.sql.GraftBridge.storedRddBytes(s.sparkContext) -- before
+      if (left.nonEmpty)
+        println(f"LEAK $name rdds=${left.size} mb=${left.values.sum / 1e6}%.3f")
     }
     s.stop()
   }

@@ -956,7 +956,7 @@ object SparkEntry {
 
     // domain balancing: ≤ 4 docs per source, deterministic md5-hash order;
     // cap 4 = TopKSlots.JitK → exercises the declarative partial-top-k
-    // slots path (k ≥ 5 routes to the window/imperative forms: JitK doc)
+    // slots path (k ≥ 5 routes to the imperative form: JitK doc)
     "q88_domain_cap" -> ((s, d) =>
       Curation.capPerGroup(tbl(s, d, "documents"), "source", "doc_id", 4, "cap-v1")
         .select("doc_id", "source")),

@@ -157,19 +157,17 @@ object Curation {
    * key — so reruns, retries, and other engines pick the identical
    * subset, and different salts draw independent subsets.
    *
-   * Scale shape: for `maxPerGroup` ≤ [[TopKSlots.JitK]] with an integral
-   * key, the kept set comes from the declarative partial top-k aggregate
-   * (score = −hash): every map task forwards at most `maxPerGroup` slots
-   * per group to the exchange, so a hot domain with 10^9 pages costs the
-   * shuffle only k rows per task — no single window partition ever sees
-   * the whole domain. The kept `(group, key)` set (≤ |groups|·k rows)
-   * then left-semi joins back. Larger caps (or non-integral keys) take
-   * the window path: row_number over (hash, key) within the group —
-   * correct, but the hot group's rows all meet in one partition.
+   * Scale shape: the kept `(group, key)` set (≤ |groups|·k rows) comes
+   * from [[TopK.ranked]] (score = −hash), then left-semi joins back. With
+   * an integral key that is a map-side partial top-k: every map task
+   * forwards at most `maxPerGroup` pairs per group to the exchange, so a
+   * hot domain with 10^9 pages costs the shuffle only k rows per task.
+   * Other keys rank in a row_number window — correct, but the hot
+   * group's rows all meet in one partition.
    *
-   * Precondition (slots path): `keyCol` is unique per row (it is the
-   * document identity); duplicate keys inside a group would survive the
-   * semi-join together and overshoot the cap.
+   * Precondition: `keyCol` is unique per row (it is the document
+   * identity); duplicate keys inside a group would survive the semi-join
+   * together and overshoot the cap.
    */
   def capPerGroup(
       df: DataFrame,
@@ -178,33 +176,13 @@ object Curation {
       maxPerGroup: Int,
       salt: String): DataFrame = {
     require(maxPerGroup >= 1, s"maxPerGroup must be >= 1 (got $maxPerGroup)")
-    import org.apache.spark.sql.types._
     val h = Sketches.portableHash52(concat(col(keyCol).cast("string"), lit(":" + salt)))
-    val keyType = df.schema(keyCol).dataType
-    val integralKey = keyType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    if (maxPerGroup <= TopKSlots.JitK && integralKey) { // JitK: see its doc
-      // hashes are < 2^52, so −hash is double-exact; top-k largest scores
-      // = k smallest hashes, slot order = (hash asc, key asc)
-      val kept = df.select(col(groupCol), h.cast("double").as("__h"), col(keyCol))
-        .groupBy(groupCol)
-        .agg(TopKByScore.topKSlots(maxPerGroup)(-col("__h"), col(keyCol).cast("long"))
-          .as("__tk"))
-        .select(col(groupCol), col("__tk.scores").as("__ss"),
-          posexplode(col("__tk.keys")).as(Seq("__pos", "__k")))
-        .where(element_at(col("__ss"), col("__pos") + 1) =!= lit(TopKSlots.SentinelScore))
-        .select(col(groupCol), col("__k").cast(keyType).as(keyCol))
-      df.join(kept, Seq(groupCol, keyCol), "left_semi")
-    } else {
-      df.withColumn("__cap_h", h)
-        .withColumn("__cap_rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(groupCol)
-            .orderBy(col("__cap_h"), col(keyCol))))
-        .where(col("__cap_rn") <= maxPerGroup)
-        .drop("__cap_h", "__cap_rn")
-    }
+    // hashes are < 2^52, so −hash is double-exact: the top-k largest
+    // scores are the k smallest hashes, ranked (hash asc, key asc)
+    val kept = TopK.ranked(df.select(col(groupCol), h.cast("double").as("__h"), col(keyCol)),
+        Seq(groupCol), -col("__h"), keyCol, maxPerGroup)
+      .select(groupCol, keyCol)
+    df.join(kept, Seq(groupCol, keyCol), "left_semi")
   }
 
   /**

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.LongType
 import graft.core.Checkpoints.{materialize, persist, scope}
 import graft.functions.{cell_disk_band, cell_disk_bound, cell_id}
 import graft.geo.CellIndex
@@ -110,10 +110,7 @@ object Knn {
       tKey: String, tLat: String, tLon: String,
       k: Int, res: Int, reliableCheckpoint: Boolean = false): DataFrame = {
     require(k >= 1)
-    val integralKey = targets.schema(tKey).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
+    val integralKey = TopK.integralKey(targets.schema(tKey).dataType)
     // General-k routing is SIZE-AWARE: applyDeclK's explode-and-reaggregate
     // state fold pays a per-round fixed cost (2k-slot buffer exprs through
     // an extra exchange) that dominates small jobs — measured 3.2 s decl vs
@@ -287,15 +284,10 @@ object Knn {
   }
 
   /** Sorted k-slot buffer `__tk` (scores desc, keys) → one row per real
-   * slot. Slots are sorted, sentinels last → real ranks are 1..n by
-   * position (sentinel slots carry dist_sq = +∞ and are filtered). */
+   * slot, rank = slot position (sentinel slots are dropped). */
   private def emitSlots(df: DataFrame): DataFrame =
-    df.select(col("__qkey"), col("__tk.scores").as("__ss"),
-        posexplode(col("__tk.keys")).as(Seq("__pos", "__tk64")))
-      .select(col("__qkey"), col("__tk64"),
-        (-element_at(col("__ss"), col("__pos") + 1)).as("dist_sq"),
-        (col("__pos") + 1).as("rank"))
-      .where(col("dist_sq") =!= lit(Double.PositiveInfinity))
+    TopK.explodeSlots(df, Seq("__qkey"), "__tk", "__tk64", "__score", dropSentinels = true)
+      .select(col("__qkey"), col("__tk64"), (-col("__score")).as("dist_sq"), col("rank"))
 
   /**
    * k = 1 (nearest-neighbor join, the most common call) — the fully
@@ -365,10 +357,10 @@ object Knn {
    * candidate volume — and a second [[TopKSlots]] aggregate merges them.
    * Every piece is a built-in codegen'd op. (The first cut folded via a
    * left-outer join whose projection merged the two sorted buffers with
-   * [[TopKSlots.mergeSlotColumns]]; each of the 2k output columns
-   * re-derived the full O(k²) struct-proxy least/greatest tree, and the
-   * projection measured ~4.5 µs/row — 18 s of a 24 s round — against
-   * ~1 s for the narrow re-aggregate.)
+   * the order-statistic formula of [[TopKSlots]]' merge; each of the 2k
+   * output columns re-derived the full O(k²) struct-proxy least/greatest
+   * tree, and the projection measured ~4.5 µs/row — 18 s of a 24 s round
+   * — against ~1 s for the narrow re-aggregate.)
    *
    * Sentinel slots explode as (−∞, Long.MaxValue) rows and are NO-OPS in
    * the update chain (a −∞ input either rejects against a full buffer or
@@ -437,12 +429,9 @@ object Knn {
         // carried candidate state of still-open queries (≤ k rows each)
         val carried =
           if (!open.columns.contains("__tk")) cand
-          else open
-            .select(col("__qkey"), col("__qlat"), col("__qlon"), col("__tk.scores").as("__ss"),
-              posexplode(col("__tk.keys")).as(Seq("__pos", "__tk64")))
-            .select(col("__qkey"), col("__qlat"), col("__qlon"),
-              element_at(col("__ss"), col("__pos") + 1).as("__score"), col("__tk64"))
-            .where(col("__score") =!= lit(SentinelScore))
+          else TopK.explodeSlots(open, Seq("__qkey", "__qlat", "__qlon"), "__tk",
+              "__tk64", "__score", dropSentinels = true)
+            .select("__qkey", "__qlat", "__qlon", "__score", "__tk64")
             .union(cand)
         val seed = open.select(col("__qkey"), col("__qlat"), col("__qlon"),
           lit(SentinelScore).as("__score"), lit(Long.MinValue).as("__tk64"))

@@ -28,9 +28,9 @@ import org.apache.spark.sql.functions._
  * everything is query-term-sized: tf and df aggregate the pruned rows
  * (both branches hang off the SAME (term, doc) exchange, which Spark's
  * ReuseExchange dedups), weights join back broadcast, and the final
- * ranking is the declarative [[TopKSlots]] partial top-k (≤ k rows per
- * query per map task reach the last exchange). No full-corpus posting
- * shuffle, no window over a hot term's full posting list.
+ * ranking is the [[TopK.ranked]] partial top-k (≤ k rows per query per
+ * map task reach the last exchange). No full-corpus posting shuffle, no
+ * window over a hot term's full posting list.
  *
  * [[buildIndex]] is the materialized form (postings + df as tables) for
  * amortizing many query batches over one corpus pass; its output is
@@ -145,14 +145,10 @@ object Retrieval {
       .agg(sum(col("tf") * col("w")).as("score"))
 
     if (k <= TopKSlots.MaxK) {
-      // Map-side partial top-k (both aggregate forms ship <= k rows per
-      // query per map task to the exchange — the scale shape the scaladoc
-      // promises): declarative TopKSlots while its generated update
-      // method still JIT-compiles (k <= JitK), the imperative TopKAggExpr
-      // for k = JitK+1..MaxK (same (score desc, key asc) contract;
-      // ObjectHashAggregate buffers, but never a full-candidate window
-      // shuffle). Integer scores round-trip exactly through the
-      // double-score channel ONLY below 2^53. The score bound is
+      // Map-side partial top-k through TopK.ranked (≤ k rows per query per
+      // map task reach the exchange, never a full-candidate window
+      // shuffle). Integer scores round-trip exactly through its double
+      // score channel ONLY below 2^53. The score bound is
       // sum_terms(tf · (N div df)) <= |query terms| · maxDoclen · N, which
       // a rare term in a long document CAN exceed at ~10^12 docs — above
       // 2^53 the double cast drops low bits and may reorder ties in the
@@ -165,22 +161,9 @@ object Retrieval {
           "searchTopK score %s >= 2^53 for query %s: not exactly representable " +
             "as double; use k > TopKSlots.MaxK (exact path) or scale weights",
           col("score"), col("query_id"))).cast("long"))
-      val agg =
-        if (k <= TopKSlots.JitK)
-          TopKByScore.topKSlots(k)(guarded.cast("double"), col("doc_id").cast("long"))
-        else
-          TopKByScore.topK(k)(guarded.cast("double"), col("doc_id").cast("long"))
-      scored.groupBy("query_id")
-        .agg(agg.as("__tk"))
-        .select(col("query_id"), col("__tk.scores").as("__ss"),
-          posexplode(col("__tk.keys")).as(Seq("__pos", "doc_id")))
-        // sentinel filter: only TopKSlots k-pads (scores here are >= 1,
-        // so a sentinel can never be a real score); topK arrays are
-        // exact-length and pass through untouched
-        .where(element_at(col("__ss"), col("__pos") + 1) =!= lit(TopKSlots.SentinelScore))
-        .select(col("query_id"), col("doc_id"),
-          element_at(col("__ss"), col("__pos") + 1).cast("long").as("score"),
-          (col("__pos") + 1).cast("long").as("rank"))
+      TopK.ranked(scored, Seq("query_id"), guarded.cast("double"), "doc_id", k)
+        .select(col("query_id"), col("doc_id"), col("score").cast("long").as("score"),
+          col("rank").cast("long").as("rank"))
     } else {
       scored.withColumn("rank",
           row_number().over(Window.partitionBy("query_id")

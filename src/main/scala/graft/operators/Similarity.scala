@@ -22,11 +22,11 @@ import graft.core.Checkpoints
  * so scores match bit-for-bit before the 4-dp rounding applied for
  * rank stability.
  *
- * Ranking is a map-side partial top-k ([[TopKByScore]]), NOT a
- * row_number window: the window shape shuffles every scored candidate
- * (corpus × |queries| rows at 100 TB); the aggregator ships ≤ k pairs per
- * query per map task. Row sets are identical (same (cos desc, key asc)
- * total order over 4-dp-rounded scores).
+ * Ranking is [[TopK.ranked]] over (cos desc, corpus key asc): for
+ * integral corpus keys a map-side partial top-k, NOT a row_number
+ * window — the window shape shuffles every scored candidate (corpus ×
+ * |queries| rows at 100 TB); the aggregate ships ≤ k pairs per query per
+ * map task. Output (qKey, cKey, cos, rank), rank 1..k.
  */
 object Similarity {
 
@@ -50,53 +50,6 @@ object Similarity {
     if (comparable) scored.where(col("__qk") =!= col("__ck")) else scored
   }
 
-  /** Shared ranking stage: (…, __qk, __ck, cos) → top-k per __qk by
-   * (cos desc, __ck asc), rank 1..k.
-   *
-   * Integral corpus keys take the map-side partial top-k aggregate (the
-   * scale path: ≤ k rows per query per map task reach the exchange; key
-   * round-trips through long losslessly and is cast back to its original
-   * type). For k ≤ [[TopKSlots.JitK]] that is the DECLARATIVE
-   * [[TopKSlots]] — its fixed-width buffer fuses the partial aggregation
-   * into the scoring codegen span (zero per-candidate allocation; the
-   * typed-imperative form pays an ObjectHashAggregate span-boundary row
-   * copy per candidate, the profiled kNN GC ceiling); larger k keeps the
-   * imperative [[TopKAggExpr]]. Non-integral keys (strings, etc.) keep
-   * the row_number window — same ordering semantics, full candidate
-   * shuffle, correct for every key type. */
-  private def rankTopK(scored: DataFrame, k: Int, qKey: String, cKey: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val keyType = scored.schema("__ck").dataType
-    val integral = keyType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    if (integral && k <= TopKSlots.JitK) { // not MaxK: k >= 5 interpreted
-      scored.groupBy("__qk")
-        .agg(TopKByScore.topKSlots(k)(col("cos"), col("__ck").cast("long")).as("__tk"))
-        .select(col("__qk"), col("__tk.scores").as("__ss"),
-          posexplode(col("__tk.keys")).as(Seq("__pos", "__ck")))
-        .select(col("__qk").as(qKey), col("__ck").cast(keyType).as(cKey),
-          element_at(col("__ss"), col("__pos") + 1).as("cos"),
-          (col("__pos") + 1).as("rank"))
-        .where(col("cos") =!= lit(TopKSlots.SentinelScore)) // drop k-padding
-    } else if (integral) {
-      scored.groupBy("__qk")
-        .agg(TopKByScore.topK(k)(col("cos"), col("__ck").cast("long")).as("__tk"))
-        .select(col("__qk"), col("__tk.scores").as("__ss"),
-          posexplode(col("__tk.keys")).as(Seq("__pos", "__ck")))
-        .select(col("__qk").as(qKey), col("__ck").cast(keyType).as(cKey),
-          element_at(col("__ss"), col("__pos") + 1).as("cos"),
-          (col("__pos") + 1).as("rank"))
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("__qk").orderBy(col("cos").desc, col("__ck"))
-      scored.withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k)
-        .select(col("__qk").as(qKey), col("__ck").as(cKey), col("cos"), col("rank"))
-    }
-  }
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
@@ -112,7 +65,7 @@ object Similarity {
     val c = corpus.select(col(cKey).as("__ck"), col(cVec).as("__cv"))
     val scored = notSelfPair(c.crossJoin(broadcast(q)))
       .withColumn("cos", round(cosine(col("__qv"), col("__cv")), 4))
-    rankTopK(scored, k, qKey, cKey)
+    TopK.ranked(scored, Seq("__qk"), col("cos"), "__ck", k).toDF(qKey, cKey, "cos", "rank")
   }
 
   /**
@@ -157,7 +110,7 @@ object Similarity {
     // no dedup needed: the probe set {b0} ∪ {b0^bit} is distinct values and
     // a candidate has ONE bucket, so each (query, candidate) matches at
     // most one probe row — a dropDuplicates here would only add a shuffle
-    rankTopK(scored, k, qKey, cKey)
+    TopK.ranked(scored, Seq("__qk"), col("cos"), "__ck", k).toDF(qKey, cKey, "cos", "rank")
   }
 
   /**
@@ -236,7 +189,7 @@ object Similarity {
       .withColumn("cos", round(cosine(col("__qv"), col("__cv")), 4))
     // nprobe centroid ids are distinct and a candidate is assigned to ONE
     // centroid → at most one match per (query, candidate); no dedup shuffle
-    rankTopK(scored, k, qKey, cKey)
+    TopK.ranked(scored, Seq("__qk"), col("cos"), "__ck", k).toDF(qKey, cKey, "cos", "rank")
   }
 
   /**
@@ -299,7 +252,7 @@ object Similarity {
     val scored = notSelfPair(c.crossJoin(broadcast(q)))
       .withColumn("cos", dot(col("__qv"), col("__cv")) /
         (sqrt(col("__qn")) * sqrt(col("__cn"))))
-    rankTopK(scored, k, qKey, cKey)
+    TopK.ranked(scored, Seq("__qk"), col("cos"), "__ck", k).toDF(qKey, cKey, "cos", "rank")
   }
 
   /**
@@ -369,6 +322,6 @@ object Similarity {
     val c = corpus.select(col(cKey).as("__ck"), col(cVec).as("__cv"), col(cPart).as("__p"))
     val scored = notSelfPair(q.join(c, "__p"))
       .withColumn("cos", round(cosine(col("__qv"), col("__cv")), 4))
-    rankTopK(scored, k, qKey, cKey)
+    TopK.ranked(scored, Seq("__qk"), col("cos"), "__ck", k).toDF(qKey, cKey, "cos", "rank")
   }
 }

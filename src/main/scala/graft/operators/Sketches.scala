@@ -28,9 +28,8 @@ import org.apache.spark.sql.functions._
  * Plan shape (both stages map-side partial, k-bounded exchange state):
  *  1. distinct (group, hash) — the narrow-row distinct shuffle Spark
  *     partial-aggregates automatically;
- *  2. groupBy(group) with [[TopKSlots]] on (score = −hash, key = hash):
- *     a declarative fixed-width aggregate that fuses into the codegen
- *     span, so the bottom-k of billions of hashes costs k doubles +
+ *  2. groupBy(group) with [[TopK.aggregate]] on (score = −hash,
+ *     key = hash): the bottom-k of billions of hashes costs k doubles +
  *     k longs per group in the exchange.
  *
  * Sketches are mergeable (union the slot arrays, re-take bottom-k), so
@@ -104,22 +103,13 @@ object Sketches {
     estimate(aggSlots(hashes, coarseGroupCols, k), k)
   }
 
-  /** Bottom-k of `__kmv_h` per group. k <= JitK rides the declarative
-   * TopKSlots (codegen-fused partials; beyond JitK the generated update
-   * method blows the JVM's JIT huge-method limit and runs interpreted —
-   * measured 6-10x slower, see TopKSlots.JitK); larger sketches ride the
-   * imperative TopKAggExpr — both emit `keys` sorted hash-ascending
-   * (score = -hash descending; 52-bit magnitudes round-trip a double
-   * exactly, so the negated score loses nothing). private[graft] so
-   * [[graft.SketchBench]] can time the two aggregate paths in isolation. */
-  private[graft] def aggSlots(hashes: DataFrame, groupCols: Seq[String], k: Int): DataFrame = {
-    val slots =
-      if (k <= TopKSlots.JitK) // not MaxK: k >= 5 runs interpreted (JitK doc)
-        TopKByScore.topKSlots(k)(negate(col("__kmv_h").cast("double")), col("__kmv_h"))
-      else
-        TopKByScore.topK(k)(negate(col("__kmv_h").cast("double")), col("__kmv_h"))
-    hashes.groupBy(groupCols.map(col): _*).agg(slots.as("__kmv"))
-  }
+  /** Bottom-k of `__kmv_h` per group as the [[TopK.aggregate]] struct
+   * (score = −hash descending, so `keys` come out hash-ascending; 52-bit
+   * magnitudes round-trip a double exactly, so the negated score loses
+   * nothing). */
+  private def aggSlots(hashes: DataFrame, groupCols: Seq[String], k: Int): DataFrame =
+    hashes.groupBy(groupCols.map(col): _*)
+      .agg(TopK.aggregate(k)(negate(col("__kmv_h").cast("double")), col("__kmv_h")).as("__kmv"))
 
   // ======== Bucket-minima distinct sketch (stochastic averaging) =========
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -385,15 +385,18 @@ object TopKSlots {
 
   /** Largest k whose GENERATED UPDATE METHOD stays under the JVM's
    * 8000-byte JIT huge-method limit (-XX:HugeMethodLimit, not tunable
-   * without -XX:-DontCompileHugeMethods): measured update-method
-   * bytecode 8742 B at k = 5 and 30023 B at k = 16 ("Generated method
-   * too long to be JIT compiled"), at which point the whole-stage span
+   * without -XX:-DontCompileHugeMethods): the partial-aggregate stage's
+   * largest method measures 6344 B at k = 4, 8179 B at k = 5 and
+   * 28481 B at k = 16 with a computed score (Spark 4.1.2; a plain score
+   * column reads 7979 B at k = 5, right at the edge). Past the limit
+   * ("Generated method too long to be JIT compiled") the whole-stage span
    * containing the aggregate runs INTERPRETED — measured 77 s (k = 8)
    * and 132 s (k = 16) vs 13 s imperative for the same 100M-row
-   * bottom-k build, a 6–10× cliff that erases the fusion win. Routing
-   * call sites (Knn, Sketches, Similarity, Curation, Retrieval) pick the
-   * declarative form only for k ≤ JitK; k = JitK+1..MaxK remains
-   * constructible for path-equality specs and forced-path debugging. */
+   * bottom-k build, a 6–10× cliff that erases the fusion win. [[TopK]]
+   * owns the routing (the declarative form only for k ≤ JitK); Knn's
+   * size-aware path router is the only other reader. k = JitK+1..MaxK
+   * remains constructible for path-equality specs and forced-path
+   * debugging; `TopKSlotsSpec` pins the limit. */
   val JitK: Int = 4
 
   /** Orderable proxy: ascending (order_key, key) == (score desc with NaN
@@ -434,15 +437,79 @@ object TopKSlots {
       (unproxyScore(best), GetStructField(best, 1, Some("t")))
     }
   }
+}
 
-  /** Column-level buffer merge (the kNN round fold: carried state ⊕ the
-   * round's aggregate, merged in a narrow post-agg projection). */
-  def mergeSlotColumns(k: Int, lS: Seq[Column], lK: Seq[Column],
-      rS: Seq[Column], rK: Seq[Column]): (Seq[Column], Seq[Column]) = {
-    import org.apache.spark.sql.GraftBridge.{column, expression}
-    val l = lS.zip(lK).map { case (s, kk) => (expression(s), expression(kk)) }
-    val r = rS.zip(rK).map { case (s, kk) => (expression(s), expression(kk)) }
-    val m = mergedSlots(k, l, r)
-    (m.map(p => column(p._1)), m.map(p => column(p._2)))
+/**
+ * The one owner of grouped top-k. Every ranked output the engine emits —
+ * ANN, keyword search, per-group caps, KMV sketches — follows one
+ * ordering contract, score descending, key ascending, and this object
+ * picks the aggregate that implements it:
+ *  - an integral key with k ≤ [[TopKSlots.JitK]]: the declarative
+ *    [[TopKSlots]], whose fixed-width buffer fuses the partial
+ *    aggregation into the scoring codegen span (zero per-candidate
+ *    allocation);
+ *  - an integral key with larger k: the imperative [[TopKAggExpr]]
+ *    (past JitK the slots' update method runs interpreted);
+ *  - any other key: a `row_number` window — the same order, but every
+ *    candidate row shuffles.
+ * Both aggregates ship at most k (score, key) pairs per group per map
+ * task into the exchange, so no window partition ever sees a hot group
+ * whole. Knn folds its own per-round buffers but shares [[integralKey]]
+ * and [[explodeSlots]].
+ *
+ * Caller contract: scores are DOUBLE and finite or NaN (NaN ranks
+ * first); −∞ is the aggregates' empty-slot sentinel.
+ */
+object TopK {
+  import org.apache.spark.sql.expressions.Window
+  import org.apache.spark.sql.functions._
+
+  /** Key types that round-trip losslessly through the aggregates' BIGINT
+   * key channel. */
+  def integralKey(t: DataType): Boolean = t match {
+    case LongType | IntegerType | ShortType | ByteType => true
+    case _ => false
+  }
+
+  /** The aggregate for a BIGINT `key` → struct(scores, keys), sorted
+   * (score desc, key asc). [[TopKSlots]] pads to k with (SentinelScore,
+   * SentinelKey); [[TopKAggExpr]] trims to the live length. */
+  def aggregate(k: Int)(score: Column, key: Column): Column =
+    if (k <= TopKSlots.JitK) TopKByScore.topKSlots(k)(score, key)
+    else TopKByScore.topK(k)(score, key)
+
+  /** One row per slot of the top-k struct column `buf`: the `carry`
+   * columns, then `key`, `score` and `rank` = slot + 1. `dropSentinels`
+   * removes slots holding [[TopKSlots.SentinelScore]]. */
+  def explodeSlots(df: DataFrame, carry: Seq[String], buf: String,
+      key: String, score: String, dropSentinels: Boolean): DataFrame = {
+    val slots = df.select(carry.map(col) :+ col(s"$buf.scores").as("__ss") :+
+      posexplode(col(s"$buf.keys")).as(Seq("__pos", key)): _*)
+    val s = element_at(col("__ss"), col("__pos") + 1)
+    (if (dropSentinels) slots.where(s =!= lit(TopKSlots.SentinelScore)) else slots)
+      .select(carry.map(col) :+ col(key) :+ s.as(score) :+ (col("__pos") + 1).as("rank"): _*)
+  }
+
+  /**
+   * Ranked top-k per group: `(groupCols…, key, score, rank)` with at most
+   * k rows per group, rank 1-based by (score desc, key asc). The key
+   * keeps its input type; `score` is a DOUBLE column expression.
+   */
+  def ranked(df: DataFrame, groupCols: Seq[String], score: Column, key: String,
+      k: Int): DataFrame = {
+    require(k >= 1, s"k must be >= 1 (got $k)")
+    val keyType = df.schema(key).dataType
+    // only TopKSlots pads: TopKAggExpr's arrays need no sentinel filter
+    if (integralKey(keyType))
+      explodeSlots(
+        df.groupBy(groupCols.map(col): _*)
+          .agg(aggregate(k)(score, col(key).cast(LongType)).as("__tk")),
+        groupCols, "__tk", key, "score", dropSentinels = k <= TopKSlots.JitK)
+        .withColumn(key, col(key).cast(keyType))
+    else
+      df.select(groupCols.map(col) :+ col(key) :+ score.as("score"): _*)
+        .withColumn("rank", row_number().over(Window.partitionBy(groupCols.map(col): _*)
+          .orderBy(col("score").desc, col(key))))
+        .where(col("rank") <= k)
   }
 }

@@ -13,6 +13,23 @@ object GraftBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /**
+   * Stored bytes per RDD id, over every RDD block the block manager
+   * master tracks — the reading a leak check diffs before and after a
+   * query. `SparkContext.getRDDStorageInfo` lists only RDDs still alive
+   * in the context's weak-valued map, so a stranded block drops out of it
+   * as soon as a driver GC collects its RDD; the master keeps listing the
+   * block until it is removed. `unpersist` updates the master's metadata
+   * synchronously, so a released RDD leaves this map at once.
+   */
+  def storedRddBytes(sc: org.apache.spark.SparkContext): Map[Int, Long] = {
+    val master = sc.env.blockManager.master
+    master.getMatchingBlockIds(_.isRDD, askStorageEndpoints = false)
+      .collect { case b: org.apache.spark.storage.RDDBlockId => b }
+      .groupMapReduce(_.rddId)(b => master.getBlockStatus(b, askStorageEndpoints = false)
+        .values.map(st => st.memSize + st.diskSize).sum)(_ + _)
+  }
+
+  /**
    * Deterministically release the RDD blocks backing a
    * `localCheckpoint`/`checkpoint`-ed Dataset. `df.unpersist()` is a
    * NO-OP for these — the blocks are RDD-level persisted, not

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
 
@@ -20,11 +20,11 @@ class QueryLeakSpec extends AnyFunSuite {
       "q119_curation_pipeline", "q107_incremental_dedup", "q124_snapshot_diff")) {
     test(s"$name leaves no blocks after its result is released") {
       val sc = spark.sparkContext
-      val before = sc.getRDDStorageInfo.map(_.id).toSet
+      val before = GraftBridge.storedRddBytes(sc).keySet
       val df = SparkEntry.queries(name)(spark, dir)
       df.write.format("noop").mode("overwrite").save()
-      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(df)
-      val left = sc.getRDDStorageInfo.filterNot(i => before(i.id))
+      GraftBridge.releaseCheckpointBlocks(df)
+      val left = GraftBridge.storedRddBytes(sc) -- before
       assert(left.isEmpty, s"left: ${left.mkString(", ")}")
       assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         .sharedState.cacheManager.isEmpty)

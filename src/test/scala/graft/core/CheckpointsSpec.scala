@@ -12,7 +12,8 @@ class CheckpointsSpec extends AnyFunSuite {
 
   private def frame(n: Int): DataFrame = spark.range(0, n, 1, 4).toDF("id")
 
-  private def stored: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+  private def stored: Set[Int] =
+    org.apache.spark.sql.GraftBridge.storedRddBytes(spark.sparkContext).keySet
 
   private def rddIds(df: DataFrame): Set[Int] =
     df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet

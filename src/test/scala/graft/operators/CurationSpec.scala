@@ -142,7 +142,7 @@ class CurationSpec extends AnyFunSuite {
       _.sortBy { case (k, _) => (h(k), k) }.take(cap).map(_._1)).toSet
   }
 
-  test("capPerGroup: slots path matches brute force and the window path") {
+  test("capPerGroup: slots path matches brute force and the imperative path") {
     val rows = (0L until 200L).map(k => k -> s"dom${k % 5}")
     val df = rows.toDF("doc_id", "source")
     val want = bruteCap(rows, cap = 4, salt = "s1")
@@ -150,11 +150,11 @@ class CurationSpec extends AnyFunSuite {
     val slots = Curation.capPerGroup(df, "source", "doc_id", 4, "s1")
       .select("doc_id").as[Long].collect().toSet
     assert(slots == want)
-    // force the window path with a cap above the slot limit, then compare
-    // restricted caps by re-running brute force
-    val windowed = Curation.capPerGroup(df, "source", "doc_id", TopKSlots.MaxK + 3, "s1")
+    // a cap past the slot limit takes the imperative TopKAggExpr; compare
+    // it with brute force at that cap
+    val imperative = Curation.capPerGroup(df, "source", "doc_id", TopKSlots.MaxK + 3, "s1")
       .select("doc_id").as[Long].collect().toSet
-    assert(windowed == bruteCap(rows, TopKSlots.MaxK + 3, "s1"))
+    assert(imperative == bruteCap(rows, TopKSlots.MaxK + 3, "s1"))
     // groups smaller than the cap survive whole
     val tiny = Seq(1L -> "a", 2L -> "a", 3L -> "b").toDF("doc_id", "source")
     assert(Curation.capPerGroup(tiny, "source", "doc_id", 8, "s1").count() == 3)

@@ -60,8 +60,9 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("declarative, imperative, and window ranking paths agree") {
-    // k = JitK -> declarative slots; JitK < k <= MaxK -> imperative
-    // TopKAggExpr; k > MaxK -> row_number window (the exact path)
+    // k <= MaxK ranks through TopK.ranked (k = JitK -> declarative slots,
+    // JitK < k <= MaxK -> imperative TopKAggExpr); k > MaxK -> searchTopK's
+    // own row_number window (the exact path)
     def run(k: Int) =
       Retrieval.searchTopK(docs.toDF("doc_id", "text"), "doc_id", "text",
           queries.toDF("query_id", "term"), k)

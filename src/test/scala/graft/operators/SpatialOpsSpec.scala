@@ -297,12 +297,12 @@ class SpatialOpsSpec extends AnyFunSuite {
         k, res = 2, reliableCheckpoint = false)))
     for ((input, (q, t)) <- inputs) {
       val got = paths.map { case (name, path) =>
-        val before = sc.getRDDStorageInfo.map(_.id).toSet
+        val before = org.apache.spark.sql.GraftBridge.storedRddBytes(sc).keySet
         val df = path(q, t)
         assert(df.columns.toSeq == Seq("qid", "tid", "dist_sq", "rank"), s"$input/$name")
         val rows = df.as[(Long, Long, Double, Int)].collect().toSet
         org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(df)
-        val left = sc.getRDDStorageInfo.filterNot(i => before(i.id))
+        val left = org.apache.spark.sql.GraftBridge.storedRddBytes(sc) -- before
         assert(left.isEmpty, s"$input/$name left blocks: ${left.mkString(", ")}")
         name -> rows
       }.toMap

@@ -12,7 +12,9 @@ import graft.functions.SparkTestSession
  * split the scheduler picks) and compare against sort-take under SQL
  * double ordering (NaN largest, −0.0 == 0.0). Also pins plan shape:
  * the aggregate must plan as HashAggregate (fixed-width declarative
- * buffer), not ObjectHashAggregate — that fusion IS the point.
+ * buffer), not ObjectHashAggregate — that fusion IS the point — and the
+ * JIT limit [[TopKSlots.JitK]] stands on. The same sort-take law covers
+ * every branch of the ranked owner [[TopK.ranked]].
  */
 class TopKSlotsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -107,5 +109,55 @@ class TopKSlotsSpec extends AnyFunSuite {
       .agg(TopKByScore.topKSlots(2)(col("s"), col("t")).as("tk"))
       .select(col("tk.scores"), col("tk.keys")).head()
     assert(r.getSeq[Double](0) == Seq(6.0, 5.0) && r.getSeq[Long](1) == Seq(12L, 10L))
+  }
+
+  test("TopK.ranked equals sort-take on all three branches") {
+    // long and int keys take the aggregates (slots to JitK, imperative
+    // past it); string keys take the window — one reference for all
+    val ks = Seq(1, TopKSlots.JitK, TopKSlots.JitK + 1, TopKSlots.MaxK + 3)
+    for (seed <- 0 until 4; k <- ks; keyType <- Seq("long", "int", "string")) {
+      // group 9 holds two rows: fewer than k for every k > 2
+      val rows = draw(seed, 1 + seed % 3) ++ Seq((9L, 0.5, 3L), (9L, Double.NaN, 4L))
+      def keyOf(t: Long): Any = keyType match {
+        case "long" => t
+        case "int" => t.toInt
+        case _ => f"k$t%02d" // zero-padded: string order = numeric order
+      }
+      val df = rows.toDF("g", "s", "t").repartition(1 + seed % 3)
+        .select(col("g"), col("s"),
+          (if (keyType == "string") format_string("k%02d", col("t")) else col("t").cast(keyType))
+            .as("key"))
+      val out = TopK.ranked(df, Seq("g"), col("s"), "key", k)
+      assert(out.columns.toSeq == Seq("g", "key", "score", "rank"))
+      assert(out.schema("key").dataType == df.schema("key").dataType)
+      val got = out.collect().groupBy(_.getLong(0)).map { case (g, rs) =>
+        g -> rs.sortBy(_.getInt(3)).map(r => (r.getDouble(2), r.get(1))).toSeq
+      }
+      val want = rows.groupBy(_._1).map { case (g, rs) =>
+        g -> sortTake(rs.map(x => (x._2, x._3)), k).map { case (sc, t) => (sc, keyOf(t)) }
+      }
+      val ctx = s"seed=$seed k=$k key=$keyType"
+      assert(got.keySet == want.keySet, ctx)
+      for ((g, w) <- want) {
+        assert(got(g).map(_._2) == w.map(_._2), s"$ctx g=$g")
+        assert(got(g).map(_._1).zip(w.map(_._1)).forall { case (a, b) =>
+          a == b || (a.isNaN && b.isNaN) }, s"$ctx g=$g")
+      }
+    }
+  }
+
+  test("JitK is the largest k whose TopKSlots partial-aggregate stage JIT-compiles") {
+    // the score is computed in the aggregate's input, as Retrieval's
+    // guarded score is (a score column projected earlier, as Similarity's
+    // cosine is, measures ~200 B less per k: 7979 B at k = 5)
+    def updateBytes(k: Int): Int = CodegenSize.maxMethodBytes(
+      spark.range(0, 1000, 1, 2)
+        .select((col("id") % 7).as("g"), (col("id") % 13).cast("double").as("s"), col("id").as("t"))
+        .groupBy("g").agg(TopKByScore.topKSlots(k)(round(col("s") / 3.0, 4), col("t"))),
+      "partial_topk_slots")
+    val atJitK = updateBytes(TopKSlots.JitK)
+    val past = updateBytes(TopKSlots.JitK + 1)
+    assert(atJitK <= CodegenSize.HugeMethodLimit, s"k = JitK: $atJitK B")
+    assert(past > CodegenSize.HugeMethodLimit, s"k = JitK + 1: $past B")
   }
 }
