@@ -166,10 +166,13 @@ object SnapshotCatalog {
   /** Time travel: read the table AS OF `snapshotId` (manifests are
    * immutable, so any historical snapshot stays readable — the
    * Iceberg-style property that makes resume + audit cheap). */
-  def readAt(spark: SparkSession, root: String, table: String, snapshotId: Long): DataFrame = {
+  def readAt(spark: SparkSession, root: String, table: String, snapshotId: Long): DataFrame =
+    readManifest(spark, root, manifestAt(root, table, snapshotId))
+
+  private def manifestAt(root: String, table: String, snapshotId: Long): Manifest = {
     val p = tableDir(root, table).resolve(s"manifest-$snapshotId.json")
     require(Files.exists(p), s"no snapshot $snapshotId for $table")
-    readManifest(spark, root, parse(new String(Files.readAllBytes(p))))
+    parse(new String(Files.readAllBytes(p)))
   }
 
   private def readManifest(spark: SparkSession, root: String, m: Manifest): DataFrame = {
@@ -206,11 +209,17 @@ object SnapshotCatalog {
    * preserves content, so a pre-vs-post-compaction diff is EMPTY — both
    * invariants pinned in SnapshotCatalogSpec.
    *
-   * Scale shape: each side is projected to (key, hash) AT THE SCAN
-   * (column pruning keeps payload bytes out of the read and the
-   * anti-join shuffles carry two 8-byte-ish columns per row — the same
-   * digest discipline as [[diffNew]]); re-join payloads by key from
-   * whichever snapshot you need them. The content hash is the PORTABLE
+   * One grouped symmetric difference: each side is projected to
+   * (key, hash, side ∈ {-1 from, +1 to}) AT THE SCAN (column pruning
+   * keeps payload bytes out of the read), the two are unioned, and a
+   * (key, hash) group present on one side only is a change — `added`
+   * when that side is `to`, `removed` when it is `from`. One exchange,
+   * no checkpoint, no distinct, no join; re-join payloads by key from
+   * whichever snapshot you need them. A NULL key or hash never matches
+   * the other side (the anti-join rule): such rows also group by their
+   * side, so a NULL-keyed row present in both snapshots is reported as
+   * both `added` and `removed`. A snapshot with no data dirs (an empty
+   * wave's commit) contributes no rows. The content hash is the PORTABLE
    * md5-52 ([[graft.operators.Sketches.portableHash52]]) so the q124
    * oracle replays the diff bit-for-bit — 52 bits means ~10^-9 pair
    * collision odds at a million changed rows per key-space, and a
@@ -220,21 +229,22 @@ object SnapshotCatalog {
    * @return (key, content_hash, change ∈ {'added','removed'}), distinct
    */
   def diffSnapshots(spark: SparkSession, root: String, table: String,
-      fromId: Long, toId: Long, keyCol: String, contentCol: String): DataFrame = Checkpoints.scope {
-    // each side is referenced TWICE (the added and removed anti-joins) —
-    // materialize the narrow (key, hash) frames once or both scans +
-    // distinct shuffles run twice (the documented double-reference trap).
-    def keyed(id: Long): DataFrame =
-      Checkpoints.materialize(readAt(spark, root, table, id).select(col(keyCol).as("key"),
-        graft.operators.Sketches.portableHash52(col(contentCol)).as("content_hash"))
-        .distinct())
-    val from = keyed(fromId)
-    val to = keyed(toId)
-    to.join(from, Seq("key", "content_hash"), "left_anti")
-      .withColumn("change", lit("added"))
-      .unionByName(
-        from.join(to, Seq("key", "content_hash"), "left_anti")
-          .withColumn("change", lit("removed")))
+      fromId: Long, toId: Long, keyCol: String, contentCol: String): DataFrame = {
+    val (key, hash, side) = (col("key"), col("content_hash"), col("__side"))
+    val sides = Seq(fromId -> -1, toId -> 1).map { case (id, s) => manifestAt(root, table, id) -> s }
+      .collect { case (m, s) if m.dataDirs.nonEmpty =>
+        readManifest(spark, root, m).select(col(keyCol).as("key"),
+          graft.operators.Sketches.portableHash52(col(contentCol)).as("content_hash"),
+          lit(s).as("__side"))
+    }
+    if (sides.isEmpty) // neither side has data, so no data file records a key type
+      spark.emptyDataFrame.select(lit(null).as("key"), lit(null).cast("long").as("content_hash"),
+        lit(null).cast("string").as("change"))
+    else sides.reduce(_ unionByName _)
+      .groupBy(key, hash, when(key.isNull || hash.isNull, side).as("__unmatched"))
+      .agg(min(side).as("__lo"), max(side).as("__hi"))
+      .where(col("__lo") === col("__hi"))
+      .select(key, hash, when(col("__hi") === 1, "added").otherwise("removed").as("change"))
   }
 
   /** All lineage rows visible from a manifest (read from its sidecars —
@@ -515,20 +525,20 @@ object SnapshotCatalog {
       waves: Int,
       root: String,
       table: String)(transform: DataFrame => DataFrame): Int = Checkpoints.scope {
-    var ran = 0
-    // one materialization of the input feeds every wave's filter: the
-    // former shape re-ran the full input scan (plus whatever upstream
-    // plan produced it) once PER WAVE — waves× passes over the source.
-    // MEMORY_AND_DISK spills rather than evicts at scale; for inputs too
-    // large to spill once, [[resumableRunSinglePass]] is the one-scan
-    // shape. Unpersisted on return: every wave is durable in storage,
-    // so nothing downstream references these blocks.
-    val cached = Checkpoints.persist(input)
-    (0 until waves).foreach { w =>
-      val waveIn = cached.where(waveCol === w)
-      if (commitWave(spark, waveIn, w, root, table)(transform)) ran += 1
+    require(!input.columns.contains("__wave"),
+      "resumableRunBy stores the wave bucket as __wave; the input must not have that column")
+    // one materialization of the input, with its wave bucket stored once,
+    // feeds every wave's filter: the input scan (plus whatever upstream
+    // plan produced it) and the wave expression run once per row, not
+    // once per row per wave. MEMORY_AND_DISK spills rather than evicts at
+    // scale; for inputs too large to spill once,
+    // [[resumableRunSinglePass]] is the one-scan shape. Unpersisted on
+    // return: every wave is durable in storage, so nothing downstream
+    // references these blocks.
+    val cached = Checkpoints.persist(input.withColumn("__wave", waveCol))
+    (0 until waves).count { w =>
+      commitWave(spark, cached.where(col("__wave") === w).drop("__wave"), w, root, table)(transform)
     }
-    ran
   }
 
   /**

@@ -148,6 +148,20 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"))
   }
 
+  test("q124 snapshot diff: one hash exchange, no checkpointed or cached scan") {
+    // the diff is one grouped symmetric difference; the former shape
+    // checkpointed each side's distinct set and ran two anti-joins
+    val df = graft.SparkEntry.queries("q124_snapshot_diff")(spark, "/root/testdata/sf0.001")
+    assert(df.collect().nonEmpty)
+    val plan = df.queryExecution.executedPlan.toString
+    val finalSection = plan.split("== Final Plan ==").last.split("== Initial Plan ==").head
+    assert("Exchange hashpartitioning".r.findAllIn(finalSection).size == 1, finalSection)
+    Seq("LogicalRDD", "Scan ExistingRDD", "InMemoryTableScan").foreach { node =>
+      assert(!plan.contains(node) && !df.queryExecution.optimizedPlan.toString.contains(node),
+        s"$node in the diff plan:\n$plan")
+    }
+  }
+
   test("scalar cell expressions stay inside whole-stage codegen") {
     val df = customer.select(graft.functions.cell_id(
       (col("c_custkey") % 180 - 90).cast("double"),

@@ -1,7 +1,7 @@
 package graft.snap
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
@@ -58,6 +58,134 @@ class SnapshotCatalogSpec extends AnyFunSuite {
     assert(postId != preId)
     assert(SnapshotCatalog.diffSnapshots(spark, root, "td",
       preId, postId, "url", "content").count() == 0)
+  }
+
+  /** The former diffSnapshots, kept as the reference: each side's
+   * distinct (key, hash) set, then one anti-join per direction (a NULL
+   * key or hash never matches). */
+  private def referenceDiff(root: String, table: String, fromId: Long, toId: Long,
+      keyCol: String, contentCol: String): DataFrame = {
+    def keyed(id: Long): DataFrame = SnapshotCatalog.readAt(spark, root, table, id)
+      .select(col(keyCol).as("key"),
+        graft.operators.Sketches.portableHash52(col(contentCol)).as("content_hash"))
+      .distinct()
+    val from = keyed(fromId)
+    val to = keyed(toId)
+    to.join(from, Seq("key", "content_hash"), "left_anti")
+      .withColumn("change", lit("added"))
+      .unionByName(
+        from.join(to, Seq("key", "content_hash"), "left_anti")
+          .withColumn("change", lit("removed")))
+  }
+
+  private def rowSet(df: DataFrame): Map[Row, Int] =
+    df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+
+  private def assertDiffMatchesReference(root: String, table: String, fromId: Long, toId: Long,
+      keyCol: String, contentCol: String): Map[Row, Int] = {
+    val got = rowSet(SnapshotCatalog.diffSnapshots(spark, root, table, fromId, toId, keyCol, contentCol))
+    val want = rowSet(referenceDiff(root, table, fromId, toId, keyCol, contentCol))
+    assert(got == want, s"diff($fromId, $toId) of $table")
+    assert(got.values.forall(_ == 1), s"diff($fromId, $toId) of $table repeats a row")
+    got
+  }
+
+  /** Commits each frame as snapshot i of `table`, reading only its own data dir. */
+  private def commitSnapshots(root: String, table: String, snaps: Seq[DataFrame]): Unit =
+    snaps.zipWithIndex.foreach { case (df, i) =>
+      val dir = s"data/snap-$i"
+      df.write.parquet(java.nio.file.Paths.get(root, table, dir).toString)
+      SnapshotCatalog.commitManifest(root, table, SnapshotCatalog.Manifest(
+        table, i.toLong, i - 1L, Seq(i), Seq(dir), Map(i -> 0L), Nil))
+    }
+
+  test("diffSnapshots matches the distinct + anti-join reference: NULLs, duplicates, changed content") {
+    val root = freshRoot()
+    val from = Seq[(Option[Long], Option[String])]((Some(1L), Some("a")), (Some(1L), Some("a")),
+      (Some(2L), Some("b")), (None, Some("c")), (Some(3L), None), (Some(4L), Some("x")), (None, None))
+    val to = Seq[(Option[Long], Option[String])]((Some(1L), Some("a")), (Some(2L), Some("B")),
+      (None, Some("c")), (Some(3L), None), (Some(5L), Some("y")), (Some(5L), Some("y")))
+    commitSnapshots(root, "tn", Seq(from.toDF("k", "content"), to.toDF("k", "content")))
+    val d = assertDiffMatchesReference(root, "tn", 0L, 1L, "k", "content")
+    def keys(change: String) = d.keys.toSeq.filter(_.getString(2) == change)
+      .map(r => Option(r.get(0))).sortBy(_.toString)
+    // a NULL key or hash never matches: (NULL, c) and (3, NULL) sit on both sides
+    assert(keys("added") == Seq(None, Some(2L), Some(3L), Some(5L)).sortBy(_.toString))
+    assert(keys("removed") == Seq(None, None, Some(2L), Some(3L), Some(4L)).sortBy(_.toString))
+    assertDiffMatchesReference(root, "tn", 1L, 0L, "k", "content")
+    assertDiffMatchesReference(root, "tn", 0L, 0L, "k", "content")
+
+    // seeded random pairs: rows kept, re-contented, dropped or new, with
+    // NULL keys and contents and duplicate rows on either side
+    (1 to 8).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def row(): (Option[Long], Option[String]) = (
+        if (rnd.nextDouble() < 0.15) None else Some(rnd.nextInt(8).toLong),
+        if (rnd.nextDouble() < 0.15) None else Some(Seq("a", "b", "c", "d")(rnd.nextInt(4))))
+      val a = Seq.fill(rnd.nextInt(25))(row())
+      val b = a.flatMap { r =>
+        rnd.nextInt(5) match {
+          case 0 => Nil
+          case 1 => Seq(r.copy(_2 = Some("z")))
+          case 2 => Seq(r, r)
+          case _ => Seq(r)
+        }
+      } ++ Seq.fill(rnd.nextInt(6))(row())
+      val table = s"tr$seed"
+      commitSnapshots(root, table, Seq(a.toDF("k", "content"), b.toDF("k", "content")))
+      assertDiffMatchesReference(root, table, 0L, 1L, "k", "content")
+      assertDiffMatchesReference(root, table, 1L, 0L, "k", "content")
+    }
+
+    // the wave chain: child -> parent is every new row as 'removed'; self diffs are empty
+    SnapshotCatalog.resumableRun(spark, input, "url", waves = 3, root, "tw")(
+      df => df.select(col("url"), col("v").cast("string").as("content")))
+    val cur = SnapshotCatalog.currentManifest(root, "tw").get
+    val back = assertDiffMatchesReference(root, "tw", cur.snapshotId, cur.parentId, "url", "content")
+    assert(back.size.toLong == cur.rowsPerWave(2) && back.keys.forall(_.getString(2) == "removed"))
+    assert(assertDiffMatchesReference(root, "tw", cur.snapshotId, cur.snapshotId, "url", "content")
+      .isEmpty)
+  }
+
+  test("diffSnapshots: a snapshot with no data dirs contributes no rows") {
+    val root = freshRoot()
+    // three keys that all fall in wave 1 of 2: the single pass commits
+    // wave 0 as a snapshot without a data dir
+    val keys = (0 until 64).map(i => s"k$i").toDF("url")
+      .where(pmod(xxhash64(col("url")), lit(2)) === 1).as[String].collect().take(3)
+    val rows = keys.map(k => (k, s"c$k")).toSeq.toDF("url", "content")
+    assert(SnapshotCatalog.resumableRunSinglePass(spark, rows, "url", waves = 2, root, "te")(
+      identity[DataFrame]) == 2)
+    assert(SnapshotCatalog.currentManifest(root, "te").get.dataDirs.size == 1)
+    def diff(from: Long, to: Long) =
+      SnapshotCatalog.diffSnapshots(spark, root, "te", from, to, "url", "content")
+        .collect().map(r => r.getString(0) -> r.getString(2)).toSet
+    assert(diff(0L, 1L) == keys.map(_ -> "added").toSet)
+    assert(diff(1L, 0L) == keys.map(_ -> "removed").toSet)
+    assert(diff(0L, 0L).isEmpty)
+  }
+
+  test("resumableRunBy stores the wave bucket once: transform sees the input's columns") {
+    val root = freshRoot()
+    val wave = pmod(conv(substring(md5(col("url")), 1, 8), 16, 10).cast("long"), lit(3))
+    var seen = Seq.empty[Seq[String]]
+    val ran = SnapshotCatalog.resumableRunBy(spark, input, wave, 3, root, "tb") { df =>
+      seen :+= df.columns.toSeq; df
+    }
+    assert(ran == 3)
+    assert(seen == Seq.fill(3)(input.columns.toSeq))
+    assert(SnapshotCatalog.read(spark, root, "tb").columns.toSeq == input.columns.toSeq)
+    // per-wave output rows and lineage input rows are the wave expression's split
+    val split = input.groupBy(wave.as("w")).count().collect()
+      .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    val m = SnapshotCatalog.currentManifest(root, "tb").get
+    assert(m.rowsPerWave == split)
+    assert(SnapshotCatalog.lineageRows(root, m).map(l => l.wave -> l.inputRows).distinct.toMap
+      == split)
+    // the bucket's column name is reserved
+    val e = intercept[IllegalArgumentException](SnapshotCatalog.resumableRunBy(spark,
+      input.withColumn("__wave", lit(0)), wave, 3, freshRoot(), "tb")(identity[DataFrame]))
+    assert(e.getMessage.contains("__wave"))
   }
 
   test("resume: a rerun skips completed waves; partial run completes to the same result") {
