@@ -36,16 +36,13 @@ object Tiler {
    */
   def raster(points: DataFrame, lat: String, lon: String, zoom: Int): DataFrame = {
     val rT = tileRes(zoom); val rP = payloadRes(zoom)
-    val pcell = col("__pcell")
-    // one projection (each withColumn re-analyzes the growing plan); the
-    // later items read __pcell as a lateral column alias, which plans
-    // exactly as a separate projection of the cell would
+    // one projection (a withColumn re-analyzes the plan); __pcell is a lateral alias
     points
       .select(cell_id(col(lat), col(lon), rP).as("__pcell"),
-        cell_parent(pcell, rT).as("tile_id"),
+        cell_parent(col("__pcell"), rT).as("tile_id"),
         // pixel coordinates within the tile: low SubGridBits of ix / iy
-        (shiftright(pcell, 29) % SubGridSize).cast("int").as("pix_x"),
-        (pcell % SubGridSize).cast("int").as("pix_y"))
+        (shiftright(col("__pcell"), 29) % SubGridSize).cast("int").as("pix_x"),
+        (col("__pcell") % SubGridSize).cast("int").as("pix_y"))
       .groupBy("tile_id", "pix_x", "pix_y")
       .agg(count(lit(1)).as("n"))
       .select(col("tile_id"), lit(zoom).as("zoom"), col("pix_x"), col("pix_y"), col("n"))

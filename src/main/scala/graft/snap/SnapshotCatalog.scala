@@ -209,17 +209,14 @@ object SnapshotCatalog {
    * preserves content, so a pre-vs-post-compaction diff is EMPTY — both
    * invariants pinned in SnapshotCatalogSpec.
    *
-   * One grouped symmetric difference: each side is projected to
-   * (key, hash, side ∈ {-1 from, +1 to}) AT THE SCAN (column pruning
-   * keeps payload bytes out of the read), the two are unioned, and a
-   * (key, hash) group present on one side only is a change — `added`
-   * when that side is `to`, `removed` when it is `from`. One exchange,
-   * no checkpoint, no distinct, no join; re-join payloads by key from
-   * whichever snapshot you need them. A NULL key or hash never matches
-   * the other side (the anti-join rule): such rows also group by their
-   * side, so a NULL-keyed row present in both snapshots is reported as
-   * both `added` and `removed`. A snapshot with no data dirs (an empty
-   * wave's commit) contributes no rows. The content hash is the PORTABLE
+   * One grouped symmetric difference: both sides are projected to
+   * (key, hash, side -1 from / +1 to) AT THE SCAN and unioned; a
+   * (key, hash) group seen on one side only is `added` (+1) or
+   * `removed` (-1) — one exchange, no checkpoint, distinct or join. A
+   * NULL key or hash also groups by side, so it never matches the other
+   * side (the anti-join rule). A snapshot with no data dirs contributes
+   * no rows. Re-join payloads by key from whichever snapshot you need
+   * them. The content hash is the PORTABLE
    * md5-52 ([[graft.operators.Sketches.portableHash52]]) so the q124
    * oracle replays the diff bit-for-bit — 52 bits means ~10^-9 pair
    * collision odds at a million changed rows per key-space, and a
@@ -236,10 +233,10 @@ object SnapshotCatalog {
         readManifest(spark, root, m).select(col(keyCol).as("key"),
           graft.operators.Sketches.portableHash52(col(contentCol)).as("content_hash"),
           lit(s).as("__side"))
-    }
-    if (sides.isEmpty) // neither side has data, so no data file records a key type
-      spark.emptyDataFrame.select(lit(null).as("key"), lit(null).cast("long").as("content_hash"),
-        lit(null).cast("string").as("change"))
+      }
+    if (sides.isEmpty) // no data file on either side records the key's type
+      spark.emptyDataFrame.select(lit(null).as("key"),
+        lit(null).cast("long").as("content_hash"), lit(null).cast("string").as("change"))
     else sides.reduce(_ unionByName _)
       .groupBy(key, hash, when(key.isNull || hash.isNull, side).as("__unmatched"))
       .agg(min(side).as("__lo"), max(side).as("__hi"))
@@ -527,14 +524,13 @@ object SnapshotCatalog {
       table: String)(transform: DataFrame => DataFrame): Int = Checkpoints.scope {
     require(!input.columns.contains("__wave"),
       "resumableRunBy stores the wave bucket as __wave; the input must not have that column")
-    // one materialization of the input, with its wave bucket stored once,
-    // feeds every wave's filter: the input scan (plus whatever upstream
-    // plan produced it) and the wave expression run once per row, not
-    // once per row per wave. MEMORY_AND_DISK spills rather than evicts at
-    // scale; for inputs too large to spill once,
-    // [[resumableRunSinglePass]] is the one-scan shape. Unpersisted on
-    // return: every wave is durable in storage, so nothing downstream
-    // references these blocks.
+    // one materialization of the input, its wave bucket stored once, feeds
+    // every wave's filter: the input scan (plus its upstream plan) and the
+    // wave expression run once per row, not once per row per wave.
+    // MEMORY_AND_DISK spills rather than evicts at scale; for inputs too
+    // large to spill once, [[resumableRunSinglePass]] is the one-scan
+    // shape. Unpersisted on return: every wave is durable in storage, so
+    // nothing downstream references these blocks.
     val cached = Checkpoints.persist(input.withColumn("__wave", waveCol))
     (0 until waves).count { w =>
       commitWave(spark, cached.where(col("__wave") === w).drop("__wave"), w, root, table)(transform)
