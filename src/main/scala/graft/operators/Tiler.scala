@@ -36,10 +36,12 @@ object Tiler {
    */
   def raster(points: DataFrame, lat: String, lon: String, zoom: Int): DataFrame = {
     val rT = tileRes(zoom); val rP = payloadRes(zoom)
-    // one projection (a withColumn re-analyzes the plan); __pcell is a lateral alias
+    // the cell in its own select, so the next one reads this __pcell and never
+    // an input column of that name; CollapseProject merges the two, and each
+    // select is one analysis where a withColumn per column would be one each
     points
-      .select(cell_id(col(lat), col(lon), rP).as("__pcell"),
-        cell_parent(col("__pcell"), rT).as("tile_id"),
+      .select(cell_id(col(lat), col(lon), rP).as("__pcell"))
+      .select(cell_parent(col("__pcell"), rT).as("tile_id"),
         // pixel coordinates within the tile: low SubGridBits of ix / iy
         (shiftright(col("__pcell"), 29) % SubGridSize).cast("int").as("pix_x"),
         (col("__pcell") % SubGridSize).cast("int").as("pix_y"))

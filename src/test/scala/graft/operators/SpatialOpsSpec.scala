@@ -359,6 +359,10 @@ class SpatialOpsSpec extends AnyFunSuite {
     assert(got == want)
     // total preserved
     assert(got.toSeq.map(_._4).sum == pts.length)
+    // an input column named like the internal cell column is not read in its place
+    assert(Tiler.raster(ptsDf.withColumn("__pcell", lit(0L)), "lat", "lon", zoom)
+      .select("tile_id", "pix_x", "pix_y", "n")
+      .as[(Long, Int, Int, Long)].collect().toSet == want)
   }
 
   test("pyramid: every rolled-up level equals the direct raster at that zoom") {

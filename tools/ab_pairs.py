@@ -1,19 +1,20 @@
 """Paired A/B runs of the repo benchmark, judged by the claim rule.
 
     python3 tools/ab_pairs.py --parent DIR --change DIR \\
-        --workload catalog --pairs 10 [--first-seed 201] [--seconds 10] \\
-        [--claim wall_s] [--out pairs.json]
+        --workload catalog --pairs 10 [--first-seed 201] [--out pairs.json]
 
 Each pair runs `python3 perfbench/run.py --workload W --seed S --seconds T
 --trace 0` once in each checkout with the same seed S (first-seed, +1, ...);
-even pairs run the parent first, odd pairs the change first. The metric
-names, their `better` direction and their bounds come from the change's
-BENCHMARK.json, which is only read. Per end-to-end metric it prints each
+even pairs run the parent first, odd pairs the change first. The run length
+T, the metric names, their `better` direction and their bounds come from
+the change's BENCHMARK.json, which is only read. Per end-to-end metric it prints each
 side's median and quartiles, the pairs the change won (ties count for
 neither side), whether the claim rule holds -- the change wins at least 9/10
 of the pairs and the medians differ, in the better direction, by more than
 the parent's interquartile range -- and whether the change's median stays
-within the metric's bound (a share of the parent's median).
+within the metric's bound (a share of the parent's median). When the
+parent's interquartile range is wider than the bound, the bound check reads
+`unresolved` unless every change run beats every parent run.
 """
 import argparse
 import json
@@ -50,15 +51,13 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=201)
-    ap.add_argument("--seconds", type=float)
-    ap.add_argument("--claim", help="end-to-end metric the change claims to improve")
     ap.add_argument("--out", help="write every run's result here as JSON")
     a = ap.parse_args()
 
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
     with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = a.seconds if a.seconds is not None else bench["run_seconds"]
+    seconds = bench["run_seconds"]
     metrics = {m["name"]: m for m in bench["end_to_end"]}
 
     runs = []
@@ -97,16 +96,18 @@ def main():
         (p1, pm, p3), (c1, cm, c3) = quartiles(p), quartiles(c)
         gap = sign * (pm - cm)  # > 0: the change's median is better
         claim = wins >= need and gap > p3 - p1
-        within = sign * (cm - pm) <= m["bound"] * pm
+        if p3 - p1 > m["bound"] * pm and not all(sign * (x - y) > 0 for x in p for y in c):
+            within = "unresolved (parent IQR wider than the bound)"
+        else:
+            within = "yes" if sign * (cm - pm) <= m["bound"] * pm else "NO"
         print(f"{a.workload} {name} ({m['unit']}, {m['better']} is better): "
               f"parent median {pm:.4g} [q1 {p1:.4g}, q3 {p3:.4g}]; "
               f"change median {cm:.4g} [q1 {c1:.4g}, q3 {c3:.4g}]; "
               f"median change {100 * (cm - pm) / pm:+.1f}%")
         print(f"  change won {wins}/{len(runs)} pairs; claim rule "
               f"({need}/{len(runs)} wins, gap {gap:.4g} > parent IQR {p3 - p1:.4g}): "
-              f"{'HOLDS' if claim else 'fails'}"
-              + (" <- claimed" if name == a.claim else ""))
-        print(f"  within bound {m['bound']:.0%} of the parent median: {'yes' if within else 'NO'}")
+              f"{'HOLDS' if claim else 'fails'}")
+        print(f"  within bound {m['bound']:.0%} of the parent median: {within}")
 
 
 if __name__ == "__main__":
