@@ -680,8 +680,7 @@ object SparkEntry {
     // closed form); removed is empty by construction
     "q124_snapshot_diff" -> ((s, d) => {
       val root = scratch(s, "graft_q124")
-      val wave = pmod(
-        conv(substring(md5(col("o_orderkey").cast("string")), 1, 8), 16, 10).cast("long"), lit(2))
+      val wave = pmod(md5_prefix(col("o_orderkey").cast("string"), 32), lit(2))
       graft.snap.SnapshotCatalog.resumableRunBy(s, tblRaw(s, d, "orders"), wave, 2, root, "ords") {
         df => df.select(col("o_orderkey"), col("o_custkey").cast("string").as("content"))
       }
@@ -1123,8 +1122,7 @@ object SparkEntry {
     // the manifest before flipping CURRENT)
     "q105_snapshot_compact" -> ((s, d) => {
       val root = scratch(s, "graft_q105")
-      val wave = pmod(
-        conv(substring(md5(col("o_orderkey").cast("string")), 1, 8), 16, 10).cast("long"), lit(4))
+      val wave = pmod(md5_prefix(col("o_orderkey").cast("string"), 32), lit(4))
       graft.snap.SnapshotCatalog.resumableRunBy(s, tblRaw(s, d, "orders"), wave, 4, root, "ords") {
         df => df.select(col("o_orderkey"), col("o_custkey"))
       }
@@ -1536,8 +1534,7 @@ object SparkEntry {
       // carried per PARTITION lineage row (duplicated within a wave) →
       // max, not sum; outputRows are per-partition → sum.
       val root = scratch(s, "graft_q43")
-      val wave = pmod(
-        conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10).cast("long"), lit(4))
+      val wave = pmod(md5_prefix(col("doc_id").cast("string"), 32), lit(4))
       graft.snap.SnapshotCatalog.resumableRunBy(s, tblRaw(s, d, "documents"), wave, 4, root, "docs") {
         df => df.select(col("doc_id"), length(col("text")).cast("long").as("len"))
       }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -260,6 +261,69 @@ case class Utf8ReplaceDecodeExpr(bin: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, b =>
       s"org.apache.spark.unsafe.types.UTF8String.fromString(graft.core.Utf8.decodeReplace($b))")
   override protected def withNewChildInternal(c: Expression) = copy(bin = c)
+}
+
+// ---------------------------------------------------------------------------
+// Scalar: md5 prefix (codegen'd — the portable hash of every wave, sketch
+// and sampler)
+// ---------------------------------------------------------------------------
+
+/** Top `bits` of md5(bytes) as a non-negative long — the value of
+ * `conv(substring(md5(v), 1, bits / 4), 16, 10)` without Spark's per-row
+ * `MessageDigest.getInstance`, hex string, substring and
+ * NumberConverter. One digest and output buffer per thread. */
+object Md5PrefixRt {
+  private final class State {
+    val md: java.security.MessageDigest = java.security.MessageDigest.getInstance("MD5")
+    val out = new Array[Byte](16)
+  }
+  private val state = ThreadLocal.withInitial[State](() => new State)
+
+  def ofBytes(b: Array[Byte], bits: Int): Long = top(b, 0, b.length, bits)
+
+  /** Hashes the string's UTF-8 bytes in place when they sit in a byte array. */
+  def ofUtf8(s: UTF8String, bits: Int): Long = s.getBaseObject match {
+    case a: Array[Byte] =>
+      top(a, (s.getBaseOffset - org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET).toInt,
+        s.numBytes, bits)
+    case _ => ofBytes(s.getBytes, bits)
+  }
+
+  private def top(b: Array[Byte], off: Int, len: Int, bits: Int): Long = {
+    val st = state.get()
+    st.md.update(b, off, len)
+    st.md.digest(st.out, 0, 16)
+    var v = 0L
+    var i = 0
+    while (i < 8) { v = (v << 8) | (st.out(i) & 0xffL); i += 1 }
+    v >>> (64 - bits)
+  }
+}
+
+/** md5 prefix of a STRING (its UTF-8 bytes, as Spark's `md5` hashes it)
+ * or BINARY column; any other input type fails analysis — a numeric
+ * column must be cast to string by the caller, never hashed as its
+ * 8-byte binary form. */
+case class Md5PrefixExpr(child: Expression, bits: Int) extends UnaryExpression {
+  override def prettyName: String = "md5_prefix"
+  override def dataType: DataType = LongType
+  override def nullIntolerant: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (bits < 1 || bits > 63)
+      TypeCheckResult.TypeCheckFailure(s"md5_prefix bits must be in [1, 63], got $bits")
+    else child.dataType match {
+      case _: StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure(
+        s"md5_prefix needs a STRING or BINARY input, got ${t.sql}")
+    }
+  private def kernel: String = if (child.dataType.isInstanceOf[StringType]) "ofUtf8" else "ofBytes"
+  override protected def nullSafeEval(v: Any): Any = v match {
+    case s: UTF8String => Md5PrefixRt.ofUtf8(s, bits)
+    case b: Array[Byte] => Md5PrefixRt.ofBytes(b, bits)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, v => s"graft.functions.Md5PrefixRt.$kernel($v, $bits)")
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
 // ---------------------------------------------------------------------------

@@ -39,6 +39,13 @@ package object functions {
     column(PointInPolygonIndexedExpr(
       expression(x), expression(y), expression(ring), expression(idx)))
 
+  /** Top `bits` (1-63) of md5 over a STRING column's UTF-8 bytes or a
+   * BINARY column, as a non-negative long: equal to
+   * `conv(substring(md5(v), 1, bits / 4), 16, 10).cast("long")` for
+   * bits = 4·n, NULL on NULL. Other input types fail analysis. */
+  def md5_prefix(value: Column, bits: Int): Column =
+    column(Md5PrefixExpr(expression(value), bits))
+
   /** BINARY html → BINARY extracted text (byte-identity kernel). */
   def extract_text_bytes(html: Column): Column =
     column(ExtractedTextExpr(expression(html)))

@@ -41,10 +41,12 @@ object Sketches {
   val HashBits: Int = 52
   private val Scale: Long = 1L << HashBits
 
-  /** Portable 52-bit value hash (identical in DuckDB:
-   * `CAST(('0x' || substr(md5(v), 1, 13)) AS BIGINT)`). */
-  def portableHash52(value: Column): Column =
-    conv(substring(md5(value), 1, 13), 16, 10).cast("long")
+  /** Portable 52-bit value hash of a STRING or BINARY column (identical
+   * in DuckDB: `CAST(('0x' || substr(md5(v), 1, 13)) AS BIGINT)`), built
+   * by the codegen'd md5-prefix kernel [[graft.functions.md5_prefix]]
+   * (`Md5PrefixExpr`): the top 52 bits of the digest, with no hex string,
+   * substring or `conv` per row. */
+  def portableHash52(value: Column): Column = graft.functions.md5_prefix(value, HashBits)
 
   /**
    * Per-group KMV distinct-count estimate of `valueCol` (a string

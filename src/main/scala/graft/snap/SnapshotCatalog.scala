@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Checkpoints
 
 /**
  * Iceberg-style snapshot catalog, from scratch (no Iceberg runtime exists
@@ -175,9 +174,21 @@ object SnapshotCatalog {
     parse(new String(Files.readAllBytes(p)))
   }
 
+  /** Reads a manifest's data dirs with the schema Spark wrote into the
+   * first data file's footer, so building the read launches no
+   * schema-inference job; files without that footer entry (written by
+   * another writer) fall back to inference. */
   private def readManifest(spark: SparkSession, root: String, m: Manifest): DataFrame = {
-    val dirs = m.dataDirs.map(d => tableDir(root, m.table).resolve(d).toString)
-    if (dirs.isEmpty) spark.emptyDataFrame else spark.read.parquet(dirs: _*)
+    val dirs = m.dataDirs.map(d => tableDir(root, m.table).resolve(d))
+    if (dirs.isEmpty) spark.emptyDataFrame
+    else {
+      val paths = dirs.map(_.toString)
+      val conf = spark.sessionState.newHadoopConf()
+      dirs.iterator.flatMap(parquetFiles).nextOption().flatMap(footerSchema(conf, _)) match {
+        case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+        case None => spark.read.parquet(paths: _*)
+      }
+    }
   }
 
   /**
@@ -352,14 +363,27 @@ object SnapshotCatalog {
   /** What [[compact]] did. */
   final case class CompactStats(dirsBefore: Int, filesBefore: Int, filesAfter: Int, rows: Long)
 
-  /** Row count of one parquet file from its footer — a driver-side
+  /** Applies `f` to one parquet file's footer reader — a driver-side
    * metadata read (no Spark job, no data pages). */
-  private def footerRows(conf: org.apache.hadoop.conf.Configuration, p: Path): Long = {
+  private def withFooter[A](conf: org.apache.hadoop.conf.Configuration, p: Path)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(p.toUri), conf))
-    try r.getRecordCount finally r.close()
+    try f(r) finally r.close()
   }
+
+  private def footerRows(conf: org.apache.hadoop.conf.Configuration, p: Path): Long =
+    withFooter(conf, p)(_.getRecordCount)
+
+  /** The Spark schema one parquet file's footer records under
+   * `org.apache.spark.sql.parquet.row.metadata`, if its writer was Spark. */
+  private def footerSchema(conf: org.apache.hadoop.conf.Configuration,
+      p: Path): Option[org.apache.spark.sql.types.StructType] =
+    withFooter(conf, p)(r => Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")))
+      .map(org.apache.spark.sql.types.DataType.fromJson)
+      .collect { case st: org.apache.spark.sql.types.StructType => st }
 
   /** Per-file (pid, rows) for a just-written data dir, zero-row files
    * skipped (lineage rows exist exactly for partitions that hold data —
@@ -514,28 +538,24 @@ object SnapshotCatalog {
   /** [[resumableRun]] with a caller-supplied wave expression (values must
    * be deterministic in row content and in [0, waves) — the same
    * retry-safety contract as the default xxhash64 bucketing; e.g. an
-   * md5-derived bucket when downstream tooling must recompute the split). */
+   * md5-derived bucket when downstream tooling must recompute the split).
+   *
+   * Each wave commits `input.where(waveCol === w)`: nothing is cached, so
+   * a parquet input is re-read once per wave but only in the columns
+   * `transform` uses (column pruning), and the wave expression runs in
+   * that scan's codegen stage. A caller whose input has an expensive
+   * upstream plan persists it first (and unpersists it after), or uses
+   * [[resumableRunSinglePass]], which scans the input once. */
   def resumableRunBy(
       spark: SparkSession,
       input: DataFrame,
       waveCol: org.apache.spark.sql.Column,
       waves: Int,
       root: String,
-      table: String)(transform: DataFrame => DataFrame): Int = Checkpoints.scope {
-    require(!input.columns.contains("__wave"),
-      "resumableRunBy stores the wave bucket as __wave; the input must not have that column")
-    // one materialization of the input, its wave bucket stored once, feeds
-    // every wave's filter: the input scan (plus its upstream plan) and the
-    // wave expression run once per row, not once per row per wave.
-    // MEMORY_AND_DISK spills rather than evicts at scale; for inputs too
-    // large to spill once, [[resumableRunSinglePass]] is the one-scan
-    // shape. Unpersisted on return: every wave is durable in storage, so
-    // nothing downstream references these blocks.
-    val cached = Checkpoints.persist(input.withColumn("__wave", waveCol))
+      table: String)(transform: DataFrame => DataFrame): Int =
     (0 until waves).count { w =>
-      commitWave(spark, cached.where(col("__wave") === w).drop("__wave"), w, root, table)(transform)
+      commitWave(spark, input.where(waveCol === w), w, root, table)(transform)
     }
-  }
 
   /**
    * Single-pass variant of [[resumableRun]] for ROW-LOCAL transforms: ONE

@@ -109,6 +109,73 @@ class SketchesSpec extends AnyFunSuite {
     assert(got == vals.map(refHash))
   }
 
+  /** Seeded random strings (ASCII and non-ASCII, 0-300 chars, so many
+   * span several 64-byte md5 blocks) plus "", NULL and fixed non-ASCII
+   * rows, each with arbitrary bytes as a binary column — written to
+   * parquet so the projection runs in a scan stage, not folded on the
+   * driver. */
+  private lazy val kernelInput: org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(20260)
+    val points = "abcXYZ019 -_:/?&éüßø€✓中文🙂".codePoints().toArray
+    def str(): String = {
+      val n = rnd.nextInt(300)
+      new String(Array.fill(n)(points(rnd.nextInt(points.length))), 0, n)
+    }
+    val rows = Seq[(Option[String], Option[Array[Byte]])](
+      (Some(""), Some(Array.emptyByteArray)), (None, None),
+      (Some("ünïcode ✓"), Some(Array[Byte](-1, 0, 127, -128))),
+      (Some("x" * 64), Some(Array.fill[Byte](64)(7))), (Some("y" * 65), Some(Array.fill[Byte](200)(-3)))) ++
+      (0 until 2000).map(_ => (Some(str()), Some(Array.fill(rnd.nextInt(150))(rnd.nextInt(256).toByte))))
+    val path = java.nio.file.Files.createTempDirectory("graft_md5").resolve("in").toString
+    rows.toDF("s", "b").write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  private def withConfs[A](confs: (String, String)*)(body: => A): A = {
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def assertKernelMatchesSpark(): Unit = {
+    for (hexChars <- Seq(8, 13); c <- Seq("s", "b")) {
+      val mismatches = kernelInput.select(
+          graft.functions.md5_prefix(col(c), hexChars * 4).as("got"),
+          conv(substring(md5(col(c)), 1, hexChars), 16, 10).cast("long").as("want"))
+        .where(not(col("got") <=> col("want"))).count()
+      assert(mismatches == 0, s"$mismatches mismatches at $hexChars hex chars over $c")
+    }
+    assert(kernelInput.where(graft.functions.md5_prefix(col("s"), 52).isNull).count() == 1)
+  }
+
+  test("md5_prefix equals Spark's md5 -> substring -> conv, codegen and interpreted") {
+    assertKernelMatchesSpark()
+    withConfs("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      assertKernelMatchesSpark()
+    }
+    // portableHash52 is the 52-bit kernel
+    val h = kernelInput.select(Sketches.portableHash52(col("s")).as("h"),
+      graft.functions.md5_prefix(col("s"), 52).as("k"))
+    assert(h.where(not(col("h") <=> col("k"))).count() == 0)
+  }
+
+  test("md5_prefix rejects numeric input instead of hashing its 8-byte binary form") {
+    val nums = spark.range(3).select(col("id"), col("id").cast("int").as("i"))
+    Seq("id", "i").foreach { c =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        nums.select(graft.functions.md5_prefix(col(c), 52)))
+      assert(e.getMessage.contains("md5_prefix"), e.getMessage)
+    }
+    // the caller's explicit string cast is the portable form
+    assert(nums.select(graft.functions.md5_prefix(col("id").cast("string"), 52)).as[Long]
+      .collect().toSeq == Seq(0L, 1L, 2L).map(i => refHash(i.toString)))
+  }
+
   // ----- bucket-minima distinct sketch -----
 
   /** Reference bucket-minima estimator on the driver (bit-for-bit the

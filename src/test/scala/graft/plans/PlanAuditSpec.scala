@@ -171,4 +171,13 @@ class PlanAuditSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains("Project")), plan)
   }
+
+  test("the md5-prefix kernel stays inside whole-stage codegen") {
+    val df = orders.select(
+      graft.operators.Sketches.portableHash52(col("o_orderkey").cast("string")).as("h"))
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.linesIterator.exists(l =>
+      l.contains("*(") && l.contains("Project") && l.contains("md5_prefix")), plan)
+  }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
+import graft.operators.JobCount
 
 class SnapshotCatalogSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -160,7 +161,7 @@ class SnapshotCatalogSpec extends AnyFunSuite {
     assert(diff(0L, 0L).isEmpty)
   }
 
-  test("resumableRunBy stores the wave bucket once: transform sees the input's columns") {
+  test("resumableRunBy filters the input per wave: transform sees the input's columns") {
     val root = freshRoot()
     val wave = pmod(conv(substring(md5(col("url")), 1, 8), 16, 10).cast("long"), lit(3))
     var seen = Seq.empty[Seq[String]]
@@ -177,10 +178,12 @@ class SnapshotCatalogSpec extends AnyFunSuite {
     assert(m.rowsPerWave == split)
     assert(SnapshotCatalog.lineageRows(root, m).map(l => l.wave -> l.inputRows).distinct.toMap
       == split)
-    // the bucket's column name is reserved
-    val e = intercept[IllegalArgumentException](SnapshotCatalog.resumableRunBy(spark,
-      input.withColumn("__wave", lit(0)), wave, 3, freshRoot(), "tb")(identity[DataFrame]))
-    assert(e.getMessage.contains("__wave"))
+    // an input column named __wave is ordinary data: it round-trips unchanged
+    val withWave = input.withColumn("__wave", col("v") + 100)
+    val rootW = freshRoot()
+    assert(SnapshotCatalog.resumableRunBy(spark, withWave, wave, 3, rootW, "tw")(
+      identity[DataFrame]) == 3)
+    assert(rowSet(SnapshotCatalog.read(spark, rootW, "tw")) == rowSet(withWave))
   }
 
   test("resume: a rerun skips completed waves; partial run completes to the same result") {
@@ -413,6 +416,59 @@ class SnapshotCatalogSpec extends AnyFunSuite {
     val stats = SnapshotCatalog.vacuum(root, "tvac", keepLast = 1)
     assert(stats.dataDirs == 4) // the four pre-compaction wave dirs
     assert(SnapshotCatalog.read(spark, root, "tvac").count() == 1000)
+  }
+
+  test("snapshot reads take the footer schema: inference's schema, no job to build") {
+    val root = freshRoot()
+    SnapshotCatalog.resumableRun(spark, input, "url", waves = 3, root, "ts")(
+      df => df.select(col("id"), col("url"), (col("v") * 1.5).as("d"), lit(1).as("one")))
+    // single pass: the data dirs are the __wave= partitions of one staging dir
+    SnapshotCatalog.resumableRunSinglePass(spark, input, "url", waves = 3, root, "tp")(
+      df => df.withColumn("out", col("v") * 2))
+    SnapshotCatalog.resumableRun(spark, input, "url", waves = 3, root, "tc")(identity[DataFrame])
+    SnapshotCatalog.compact(spark, root, "tc", targetFiles = 2)
+    def inferred(table: String, dirs: Seq[String]): DataFrame =
+      spark.read.parquet(dirs.map(d => java.nio.file.Paths.get(root, table, d).toString): _*)
+    for (table <- Seq("ts", "tp", "tc")) {
+      val m = SnapshotCatalog.currentManifest(root, table).get
+      val (cur, jobs) = JobCount(spark)(SnapshotCatalog.read(spark, root, table))
+      assert(jobs == 0, table)
+      assert(cur.schema == inferred(table, m.dataDirs).schema, table)
+      assert(rowSet(cur) == rowSet(inferred(table, m.dataDirs)), table)
+    }
+    val m = SnapshotCatalog.currentManifest(root, "ts").get
+    val (at0, atJobs) = JobCount(spark)(SnapshotCatalog.readAt(spark, root, "ts", 0L))
+    assert(atJobs == 0)
+    assert(at0.schema == inferred("ts", m.dataDirs.take(1)).schema)
+    val (d, diffJobs) = JobCount(spark)(SnapshotCatalog.diffSnapshots(spark, root, "ts",
+      m.parentId, m.snapshotId, "id", "url"))
+    assert(diffJobs == 0)
+    assert(d.count() == m.rowsPerWave(2))
+  }
+
+  test("a manifest whose files lack Spark's schema entry reads through inference") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val root = freshRoot()
+    val dir = java.nio.file.Paths.get(root, "tx", "data/snap-0")
+    Files.createDirectories(dir)
+    val file = new org.apache.hadoop.fs.Path(dir.resolve("part-0.parquet").toUri)
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 k; optional binary s (UTF8); }")
+    val w = ExampleParquetWriter.builder(file).withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    try (0 until 5).foreach(i => w.write(groups.newGroup().append("k", i.toLong).append("s", s"v$i")))
+    finally w.close()
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, spark.sessionState.newHadoopConf()))
+    try assert(!footer.getFooter.getFileMetaData.getKeyValueMetaData
+      .containsKey("org.apache.spark.sql.parquet.row.metadata"))
+    finally footer.close()
+    SnapshotCatalog.commitManifest(root, "tx", SnapshotCatalog.Manifest(
+      "tx", 0L, -1L, Seq(0), Seq("data/snap-0"), Map(0 -> 5L), Nil))
+    val back = SnapshotCatalog.read(spark, root, "tx")
+    assert(back.schema == spark.read.parquet(dir.toString).schema)
+    assert(back.as[(Long, String)].collect().sorted.toSeq == (0 until 5).map(i => (i.toLong, s"v$i")))
   }
 
   test("compact aborts with CURRENT untouched when rows would be lost") {
