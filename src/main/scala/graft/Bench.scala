@@ -177,12 +177,9 @@ object Bench {
     val knn3Env = Map(
       "SPARK_GRAFT_KNN_K" -> "3",
       "SPARK_GRAFT_KNN_WARM_N" -> "1000000",
-      "SPARK_GRAFT_TIMED_RUNS" -> "1",
-      // pin the declarative path: this regime MEASURES TopKSlots — the
-      // size-aware router would pick it here anyway (the 4M-row fixture
-      // estimates ~100 MB), but the gated measurement must not depend on
-      // a routing heuristic
-      "GRAFT_KNN_PATH" -> "decl")
+      // BenchPipeline runs k >= 2 through Knn.applyDeclK itself: this
+      // regime MEASURES TopKSlots, not a routing heuristic
+      "SPARK_GRAFT_TIMED_RUNS" -> "1")
     val knn3Rounds = (1 to 2).map { _ =>
       val a = measure(4, "knn", knn3Env)
       val b = math.min(measure(16, "knn", knn3Env), measure(16, "knn", knn3Env))

@@ -69,8 +69,13 @@ object BenchPipeline {
         col("id").as("tk"),
         ((pmod(col("id") * 104729, lit(16000)) - 8000).cast("double") / 100.0).as("tlat"),
         ((pmod(col("id") * 7919, lit(35000)) - 17500).cast("double") / 100.0).as("tlon"))
-      val result = graft.operators.Knn(q, "qk", "qlat", "qlon", t, "tk", "tlat", "tlon",
-        k = knnK, res = 5)
+      // k >= 2 measures the declarative TopKSlots fold directly (the
+      // scaling_knn3 regime), not whichever path the router would pick
+      val result =
+        if (knnK >= 2) graft.operators.Knn.applyDeclK(q, "qk", "qlat", "qlon",
+          t, "tk", "tlat", "tlon", knnK, res = 5, reliableCheckpoint = false)
+        else graft.operators.Knn(q, "qk", "qlat", "qlon", t, "tk", "tlat", "tlon",
+          k = knnK, res = 5)
       val n = result.count()
       // the result is backed by per-round checkpoint blocks; without an
       // explicit release they persist until a driver GC lets the
@@ -105,24 +110,25 @@ object BenchPipeline {
       n
     }
 
-    /** Isolated PIP-refinement probe on many-edge "coastline" rings — the
-     * E ≫ bands regime the y-banded edge index exists for (the bench
-     * fixture's 4-edge diamonds are the regime where it loses, as the
-     * Geometry scaladoc predicts). N deterministic probe points each test
-     * against one broadcast V-vertex ring; PIP_BANDS=0 runs the plain
-     * O(E) cast, >0 the indexed O(E/bands) one — decision-identical
-     * (GeometrySpec property), so the counts must agree between modes.
-     * Measured numbers live in BASELINE.md §edge-index. */
+    /** Isolated PIP-refinement probe on many-edge "coastline" rings. N
+     * deterministic probe points each test against one broadcast V-vertex
+     * ring through the one PIP kernel. PIP_BANDS picks the index the rings
+     * carry: unset or `auto` derives it from the ring (the index
+     * SpatialJoin attaches, `PipRt.edgeIndex`), 0 forces NULL (every edge
+     * scanned), n > 0 forces an n-band index. Decision-identical, so the
+     * counts must agree between modes. Measured numbers live in
+     * BASELINE.md §edge-index. */
     def runPip(): Long = {
       val pipN = sys.env.getOrElse("SPARK_GRAFT_PIP_N", "2000000").toLong
       val pipP = sys.env.getOrElse("SPARK_GRAFT_PIP_POLYS", "64").toInt
       val pipV = sys.env.getOrElse("SPARK_GRAFT_PIP_VERTS", "512").toInt
-      val bands = sys.env.getOrElse("SPARK_GRAFT_PIP_BANDS", "16").toInt
-      val polys0 = graft.sources.Fixtures.coastPolygonsDf(spark, pipP, pipV)
-      val polys =
-        if (bands > 0)
-          polys0.withColumn("__pidx", graft.functions.polygon_y_index(col("ring"), bands))
-        else polys0
+      val idx = sys.env.getOrElse("SPARK_GRAFT_PIP_BANDS", "auto") match {
+        case "auto" => graft.functions.edge_index(col("ring"))
+        case "0"    => lit(null).cast("array<double>")
+        case n      => graft.functions.polygon_y_index(col("ring"), n.toInt)
+      }
+      val polys = graft.sources.Fixtures.coastPolygonsDf(spark, pipP, pipV)
+        .withColumn("__pidx", idx)
       // probe points: per point, its polygon's first vertex + a spread
       // covering inside and outside (deterministic in the point id)
       val pts = spark.range(0L, pipN, 1L, cores.toInt * 4).select(
@@ -130,16 +136,12 @@ object BenchPipeline {
         pmod(col("id"), lit(pipP)).as("polygon_id"),
         ((pmod(col("id") * 7919, lit(400)) - 200).cast("double") / 50.0).as("__dx"),
         ((pmod(col("id") * 104729, lit(400)) - 200).cast("double") / 50.0).as("__dy"))
-      val cand = pts.join(broadcast(polys), "polygon_id")
+      pts.join(broadcast(polys), "polygon_id")
         .withColumn("__px", element_at(col("ring"), 1) + col("__dx"))
         .withColumn("__py", element_at(col("ring"), 2) + col("__dy"))
-      val hit =
-        if (bands > 0)
-          cand.where(graft.functions.point_in_polygon_indexed(
-            col("__px"), col("__py"), col("ring"), col("__pidx")))
-        else
-          cand.where(graft.functions.point_in_polygon(col("__px"), col("__py"), col("ring")))
-      hit.count()
+        .where(graft.functions.point_in_polygon_indexed(
+          col("__px"), col("__py"), col("ring"), col("__pidx")))
+        .count()
     }
 
     def run(): Long = mode match {

@@ -820,11 +820,12 @@ object SparkEntry {
         col("lat"), col("lon"), col("ring"), res = 6)
         .select("c_custkey", "n_nationkey")),
 
-    // same join refined through the y-banded edge interval index (the
-    // north rule's indexed ray cast) — must produce the identical row set
+    // q23 again: the edge index is the ring's own (none on these 4-edge
+    // diamonds), so this entry pins that the derived index leaves the
+    // row set exactly q23's
     "q76_spatial_join_indexed" -> ((s, d) =>
       SpatialJoin(customerPoints(s, d), nationPolygons(s, d),
-        col("lat"), col("lon"), col("ring"), res = 6, edgeIndexBands = 4)
+        col("lat"), col("lon"), col("ring"), res = 6)
         .select("c_custkey", "n_nationkey")),
 
     // cell-clustered LAYOUT round-trip: write the points range-partitioned

@@ -448,9 +448,8 @@ object Engine {
 
   def spatialJoin(points: DataFrame, polygons: DataFrame,
       latCol: String, lonCol: String, ringCol: String,
-      res: Int, saltBuckets: Int = 1, edgeIndexBands: Int = 0): DataFrame =
-    SpatialJoin(points, polygons, col(latCol), col(lonCol), col(ringCol), res,
-      saltBuckets, edgeIndexBands)
+      res: Int, saltBuckets: Int = 1): DataFrame =
+    SpatialJoin(points, polygons, col(latCol), col(lonCol), col(ringCol), res, saltBuckets)
 
   def knn(queries: DataFrame, qKey: String, qLat: String, qLon: String,
       targets: DataFrame, tKey: String, tLat: String, tLon: String,

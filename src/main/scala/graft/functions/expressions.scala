@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -103,35 +104,45 @@ case class DotProductExpr(a: Expression, b: Expression) extends BinaryExpression
     copy(a = l, b = r)
 }
 
-/** Exact point-in-polygon predicate (the post-equi-join refinement of the
- * two-phase spatial join, SURVEY §2.3 J5). Ring = ArrayType(DoubleType)
- * interleaved [x0,y0,x1,y1,…]. Codegen'd: one static call per row. */
-/** Runtime kernels reading Catalyst ArrayData DIRECTLY (no
- * `.toDoubleArray()` copy per candidate row — the copy is exactly the
- * per-row cost the index exists to remove on many-edge rings). Math is
- * the same crossing rule as [[graft.geo.Geometry.pointInPolygon]];
- * decision equality with the pure-array kernels is property-pinned in
- * GeometrySpec. */
+/** The engine's one point-in-polygon kernel, the exact refinement of the
+ * two-phase spatial join (SURVEY §2.3 J5). Same crossing rule as the
+ * reference [[graft.geo.Geometry.pointInPolygon]], but it reads the
+ * interleaved [x0,y0,x1,y1,…] ring and the ring's optional
+ * [[graft.geo.Geometry.yBandIndex]] straight from Catalyst ArrayData: no
+ * copy per candidate row. A NULL index scans every edge; an index scans
+ * only the CSR edge range of the query y's band. Decision equality with
+ * the reference is property-pinned in GeometrySpec and FuzzSafetySpec. */
 object PipRt {
   import org.apache.spark.sql.catalyst.util.ArrayData
-  def pointInRingIndexed(x: Double, y: Double,
-      ring: ArrayData, idx: ArrayData): Boolean = {
+
+  /** Edges per y-band of the index [[edgeIndex]] derives from a ring
+   * (settled by the `BenchPipeline pip` probe, BASELINE.md §edge-index). */
+  val EdgesPerBand = 16
+
+  def pointInRing(x: Double, y: Double, ring: ArrayData, idx: ArrayData): Boolean = {
     val n = ring.numElements() / 2
     if (n < 3) return false
-    val yMin = idx.getDouble(0); val yMax = idx.getDouble(1)
-    val bands = idx.getDouble(2).toInt
-    if (y < yMin || y > yMax) return false
-    val h = (yMax - yMin) / bands
-    val b =
-      if (h <= 0) 0
-      else math.min(bands - 1, math.max(0, ((y - yMin) / h).toInt))
-    val from = idx.getDouble(3 + b).toInt
-    val until = idx.getDouble(3 + b + 1).toInt
+    var from = 0
+    var until = n
+    var ids = -1 // offset of the edge-id list in idx; -1 = no index, scan edges 0 until n
+    if (idx != null) {
+      val yMin = idx.getDouble(0); val yMax = idx.getDouble(1)
+      if (y < yMin || y > yMax) return false
+      val bands = idx.getDouble(2).toInt
+      val h = (yMax - yMin) / bands
+      val b =
+        if (h <= 0) 0
+        else math.min(bands - 1, math.max(0, ((y - yMin) / h).toInt))
+      from = idx.getDouble(3 + b).toInt
+      until = idx.getDouble(3 + b + 1).toInt
+      ids = 3 + bands + 1
+    }
     var inside = false
     var e = from
     while (e < until) {
-      val i = idx.getDouble(3 + bands + 1 + e).toInt
-      val j = (i + n - 1) % n
+      // edge i joins vertex i and vertex i-1 (mod n)
+      val i = if (ids < 0) e else idx.getDouble(ids + e).toInt
+      val j = if (i == 0) n - 1 else i - 1
       val xi = ring.getDouble(2 * i); val yi = ring.getDouble(2 * i + 1)
       val xj = ring.getDouble(2 * j); val yj = ring.getDouble(2 * j + 1)
       if ((yi > y) != (yj > y)) {
@@ -142,28 +153,37 @@ object PipRt {
     }
     inside
   }
+
+  /** The index a ring of v vertices carries: `polygon_y_index(ring, v div
+   * E)` with E = [[EdgesPerBand]] when that makes at least two bands, NULL
+   * (scan every edge) below. SpatialJoin and SpatialJoinRule attach it
+   * once per polygon row, before the cover explode. */
+  def edgeIndex(ring: Expression): Expression = {
+    val bands = IntegralDivide(Cast(Size(ring), LongType), Literal(2L * EdgesPerBand))
+    CaseWhen(Seq(GreaterThanOrEqual(bands, Literal(2L)) ->
+      PolygonYIndexExpr(ring, Cast(bands, IntegerType))))
+  }
 }
 
 /** Y-banded edge interval index of a ring (see
  * [[graft.geo.Geometry.yBandIndex]] for the encoding and the exactness
  * argument) — built ONCE per polygon row (cold side), consumed per
- * candidate pair by [[PointInPolygonIndexedExpr]]. */
+ * candidate pair by [[PointInPolygonExpr]]. */
 case class PolygonYIndexExpr(ring: Expression, bands: Expression)
     extends BinaryExpression {
   override def left: Expression = ring
   override def right: Expression = bands
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullIntolerant: Boolean = true
+  override def prettyName: String = "polygon_y_index"
   // SQL-registered (functions.registerAll) → type-check at analysis, not
   // as a runtime ClassCastException on the first row
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (ring.dataType == ArrayType(DoubleType, containsNull = false) ||
-        ring.dataType == ArrayType(DoubleType, containsNull = true))
-      if (bands.dataType == IntegerType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (PointInPolygonExpr.isDoubleArray(ring.dataType))
+      if (bands.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
         s"polygon_y_index bands must be INT, got ${bands.dataType.sql}")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+    else TypeCheckResult.TypeCheckFailure(
       s"polygon_y_index ring must be ARRAY<DOUBLE>, got ${ring.dataType.sql}")
   override protected def nullSafeEval(rv: Any, bv: Any): Any =
     new GenericArrayData(Geometry.yBandIndex(
@@ -177,59 +197,63 @@ case class PolygonYIndexExpr(ring: Expression, bands: Expression)
     copy(ring = l, bands = r)
 }
 
-/** Indexed exact PIP refinement (north rule: "ray-casting with
- * interval-tree edge index") — codegen'd, reads ring AND index straight
- * from ArrayData (zero per-candidate copies; the plain
- * [[PointInPolygonExpr]] copies the ring per row, fine for small rings). */
-case class PointInPolygonIndexedExpr(
-    x: Expression, y: Expression, ring: Expression, idx: Expression)
+/** Exact PIP predicate `point_in_polygon(x, y, ring[, idx])`: one
+ * codegen'd [[PipRt.pointInRing]] call per row. `idx` is the ring's
+ * optional edge index; a NULL index scans every edge, so the result is
+ * NULL only when x, y or the ring is. */
+case class PointInPolygonExpr(
+    x: Expression, y: Expression, ring: Expression,
+    idx: Expression = PointInPolygonExpr.NoIndex)
     extends QuaternaryExpression {
   override def first: Expression = x
   override def second: Expression = y
   override def third: Expression = ring
   override def fourth: Expression = idx
   override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def isDoubleArray(t: DataType): Boolean = t match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
+  override def nullable: Boolean = x.nullable || y.nullable || ring.nullable
+  override def prettyName: String = "point_in_polygon"
+  override def checkInputDataTypes(): TypeCheckResult =
     if (x.dataType == DoubleType && y.dataType == DoubleType &&
-        isDoubleArray(ring.dataType) && isDoubleArray(idx.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      "point_in_polygon_indexed requires (DOUBLE x, DOUBLE y, ARRAY<DOUBLE> ring, " +
-        s"ARRAY<DOUBLE> idx), got (${x.dataType.sql}, ${y.dataType.sql}, " +
+        PointInPolygonExpr.isDoubleArray(ring.dataType) &&
+        PointInPolygonExpr.isDoubleArray(idx.dataType))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      "point_in_polygon requires (DOUBLE x, DOUBLE y, ARRAY<DOUBLE> ring[, " +
+        s"ARRAY<DOUBLE> idx]), got (${x.dataType.sql}, ${y.dataType.sql}, " +
         s"${ring.dataType.sql}, ${idx.dataType.sql})")
-  }
-  override protected def nullSafeEval(xv: Any, yv: Any, rv: Any, iv: Any): Any =
-    PipRt.pointInRingIndexed(xv.asInstanceOf[Double], yv.asInstanceOf[Double],
+  override def eval(input: InternalRow): Any = {
+    val xv = x.eval(input)
+    val yv = y.eval(input)
+    val rv = ring.eval(input)
+    if (xv == null || yv == null || rv == null) null
+    else PipRt.pointInRing(xv.asInstanceOf[Double], yv.asInstanceOf[Double],
       rv.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      iv.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (xv, yv, rv, iv) =>
-      s"graft.functions.PipRt.pointInRingIndexed($xv, $yv, $rv, $iv)")
+      idx.eval(input).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val Seq(xe, ye, re, ie) = children.map(_.genCode(ctx))
+    ev.copy(code = code"""
+      |${xe.code}
+      |${ye.code}
+      |${re.code}
+      |${ie.code}
+      |boolean ${ev.isNull} = ${xe.isNull} || ${ye.isNull} || ${re.isNull};
+      |boolean ${ev.value} = !${ev.isNull} && graft.functions.PipRt.pointInRing(
+      |  ${xe.value}, ${ye.value}, ${re.value},
+      |  ${ie.isNull} ? (org.apache.spark.sql.catalyst.util.ArrayData) null : ${ie.value});
+      |""".stripMargin)
+  }
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression) =
     copy(x = f, y = s, ring = t, idx = q)
 }
 
-case class PointInPolygonExpr(x: Expression, y: Expression, ring: Expression)
-    extends TernaryExpression {
-  override def first: Expression = x
-  override def second: Expression = y
-  override def third: Expression = ring
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(xv: Any, yv: Any, rv: Any): Any =
-    Geometry.pointInPolygon(xv.asInstanceOf[Double], yv.asInstanceOf[Double],
-      rv.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray())
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (xv, yv, rv) =>
-      s"graft.geo.Geometry.pointInPolygon($xv, $yv, $rv.toDoubleArray())")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
-    copy(x = f, y = s, ring = t)
+object PointInPolygonExpr {
+  val NoIndex: Expression = Literal(null, ArrayType(DoubleType, containsNull = false))
+  private[functions] def isDoubleArray(t: DataType): Boolean = t match {
+    case ArrayType(DoubleType, _) => true
+    case _ => false
+  }
 }
 
 // ---------------------------------------------------------------------------
@@ -436,24 +460,6 @@ object ExtractGeoEntitiesExpr {
     StructField("source", StringType, nullable = false),
     StructField("lat", DoubleType, nullable = false),
     StructField("lon", DoubleType, nullable = false)))
-}
-
-/** k-ring fan-out for kNN (SURVEY §2.11 "CellRing generator"). Emits the
- * Chebyshev ring at exactly radius k (k=0 → the cell itself). */
-case class CellRingExpr(cell: Expression, k: Expression)
-    extends BinaryExpression with Generator with CodegenFallback {
-  override def left: Expression = cell
-  override def right: Expression = k
-  override def elementSchema: StructType =
-    StructType(Seq(StructField("ring_cell", LongType, nullable = false)))
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val c = cell.eval(input)
-    val kv = k.eval(input)
-    if (c == null || kv == null) return Nil
-    CellIndex.ring(c.asInstanceOf[Long], kv.asInstanceOf[Int]).map(InternalRow(_))
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(cell = l, k = r)
 }
 
 /** Polygon → covering cells at `res` (the build side of the two-phase

@@ -34,10 +34,16 @@ package object functions {
   def polygon_y_index(ring: Column, bands: Int): Column =
     column(PolygonYIndexExpr(expression(ring), expression(lit(bands))))
 
-  /** Exact PIP via the edge index (north rule's indexed refinement). */
+  /** Exact PIP scanning only the query y's band of `idx` (a
+   * [[polygon_y_index]] of the ring; NULL scans every edge). */
   def point_in_polygon_indexed(x: Column, y: Column, ring: Column, idx: Column): Column =
-    column(PointInPolygonIndexedExpr(
+    column(PointInPolygonExpr(
       expression(x), expression(y), expression(ring), expression(idx)))
+
+  /** The edge index a ring carries ([[PipRt.edgeIndex]]): NULL for rings
+   * too small to split into two bands. */
+  private[graft] def edge_index(ring: Column): Column =
+    column(PipRt.edgeIndex(expression(ring)))
 
   /** Top `bits` (1-63) of md5 over a STRING column's UTF-8 bytes or a
    * BINARY column, as a non-negative long: equal to
@@ -71,9 +77,10 @@ package object functions {
   def extract_geo(html: Column): Column =
     column(ExtractGeoEntitiesExpr(expression(html)))
 
-  /** Generator: Chebyshev ring cells at radius k. */
+  /** Chebyshev ring cells at radius k, exploded one per row as
+   * `ring_cell` (the disk band [k, k], see [[cell_disk_band]]). */
   def cell_ring(cell: Column, k: Column): Column =
-    column(CellRingExpr(expression(cell), expression(k)))
+    cell_disk_band(cell, k, k).as("ring_cell")
 
   /** kNN ring-expansion termination bound (squared degrees). */
   def cell_disk_bound(lat: Column, lon: Column, res: Int, k: Column): Column =
@@ -104,14 +111,15 @@ package object functions {
     "cell_center_lon" -> (es => CellCenterLonExpr(es.head)),
     "point_in_polygon" -> (es => PointInPolygonExpr(es(0), es(1), es(2))),
     "polygon_y_index" -> (es => PolygonYIndexExpr(es(0), es(1))),
-    "point_in_polygon_indexed" -> (es => PointInPolygonIndexedExpr(es(0), es(1), es(2), es(3))),
+    "point_in_polygon_indexed" -> (es => PointInPolygonExpr(es(0), es(1), es(2), es(3))),
     "extract_text_bytes" -> (es => ExtractedTextExpr(es.head)),
     "extract_text" -> (es => Utf8ReplaceDecodeExpr(ExtractedTextExpr(es.head))),
     "utf8_decode_replace" -> (es => Utf8ReplaceDecodeExpr(es.head)),
     "parse_html_nodes" -> (es => ParseHtmlNodesExpr(es.head)),
     "extract_captures" -> (es => ExtractCapturesExpr(es(0), es(1))),
     "extract_geo" -> (es => ExtractGeoEntitiesExpr(es.head)),
-    "cell_ring" -> (es => CellRingExpr(es(0), es(1))),
+    "cell_ring" -> (es => org.apache.spark.sql.catalyst.expressions.Explode(
+      CellDiskBandExpr(es(0), es(1), es(1)))),
     "cell_cover" -> (es => CellCoverExpr(es(0), es(1))),
     "dot_product" -> (es => DotProductExpr(es(0), es(1))),
     // bloom probe for SQL callers (the builder aggregate stays on the

@@ -96,37 +96,6 @@ object Geometry {
     out
   }
 
-  /** Ray-casting PIP over [[yBandIndex]] — bit-identical decision to
-   * [[pointInPolygon]] (same crossing rule over the band's straddling
-   * edges; property-pinned in GeometrySpec). */
-  def pointInPolygonIndexed(x: Double, y: Double,
-      ring: Array[Double], idx: Array[Double]): Boolean = {
-    val n = ring.length / 2
-    if (n < 3) return false
-    val yMin = idx(0); val yMax = idx(1); val bands = idx(2).toInt
-    if (y < yMin || y > yMax) return false
-    val h = (yMax - yMin) / bands
-    val b =
-      if (h <= 0) 0
-      else math.min(bands - 1, math.max(0, ((y - yMin) / h).toInt))
-    val from = idx(3 + b).toInt
-    val until = idx(3 + b + 1).toInt
-    var inside = false
-    var e = from
-    while (e < until) {
-      val i = idx(3 + bands + 1 + e).toInt
-      val j = (i + n - 1) % n
-      val xi = ring(2 * i); val yi = ring(2 * i + 1)
-      val xj = ring(2 * j); val yj = ring(2 * j + 1)
-      if ((yi > y) != (yj > y)) {
-        val xCross = (xj - xi) * (y - yi) / (yj - yi) + xi
-        if (x < xCross) inside = !inside
-      }
-      e += 1
-    }
-    inside
-  }
-
   /** Bounding box (lonMin, latMin, lonMax, latMax). */
   def bbox(ring: Array[Double]): (Double, Double, Double, Double) = {
     var xmin = Double.MaxValue; var ymin = Double.MaxValue

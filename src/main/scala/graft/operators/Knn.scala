@@ -53,13 +53,6 @@ import graft.geo.CellIndex
  */
 object Knn {
 
-  /** Bench override of the k-path routing (GRAFT_KNN_PATH =
-   * decl | agg | window): lets the scaling bench measure the declarative
-   * and imperative aggregates on the SAME workload (the BASELINE.md
-   * k = 3 comparison). Ignored when the requested path can't serve the
-   * call (k/key-type constraints) — production callers never set it. */
-  private def forcedPath: Option[String] = sys.env.get("GRAFT_KNN_PATH")
-
   /** Combined input-size estimate below which general-k routes to the
    * imperative aggregate instead of the declarative slot fold (see the
    * routing note in [[apply]]). 64 MB of ESTIMATED input (compressed
@@ -127,22 +120,17 @@ object Knn {
       df.queryExecution.optimizedPlan.stats.sizeInBytes
     lazy val smallJob =
       estBytes(queries) + estBytes(targets) < BigInt(DeclRouteMinBytes)
-    val path = forcedPath match {
-      case Some("window") => "window"
-      case Some("agg") if integralKey => "agg"
-      case Some("decl") if integralKey && k >= 2 && k <= TopKSlots.MaxK => "decl"
-      case _ =>
-        if (!integralKey) "window"
-        else if (k == 1) "nearest"
-        // JitK, not MaxK: at k ≥ 5 TopKSlots' generated update method
-        // exceeds the JVM's 8000-byte JIT limit and the whole span runs
-        // interpreted — measured 6–10× slower than the imperative path
-        // (TopKSlots.JitK scaladoc) — so the decl fusion win only exists
-        // while the method JIT-compiles
-        else if (k > TopKSlots.JitK) "agg"
-        else if (smallJob) "agg"
-        else "decl"
-    }
+    val path =
+      if (!integralKey) "window"
+      else if (k == 1) "nearest"
+      // JitK, not MaxK: at k ≥ 5 TopKSlots' generated update method
+      // exceeds the JVM's 8000-byte JIT limit and the whole span runs
+      // interpreted — measured 6–10× slower than the imperative path
+      // (TopKSlots.JitK scaladoc) — so the decl fusion win only exists
+      // while the method JIT-compiles
+      else if (k > TopKSlots.JitK) "agg"
+      else if (smallJob) "agg"
+      else "decl"
     path match {
       case "nearest" =>
         applyNearest(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, res, reliableCheckpoint)
@@ -368,7 +356,7 @@ object Knn {
    * filtering or seeding is needed and queries with no candidates yet
    * survive every round via their own sentinel rows.
    */
-  private[operators] def applyDeclK(
+  private[graft] def applyDeclK(
       queries: DataFrame,
       qKey: String, qLat: String, qLon: String,
       targets: DataFrame,

@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{cell_cover, cell_id, point_in_polygon,
-  point_in_polygon_indexed, polygon_y_index}
+import graft.functions.{cell_cover, cell_id, edge_index, point_in_polygon_indexed}
 
 /**
  * Two-phase spatial join (the north rule's core operator; SURVEY §2.3 J5):
@@ -14,7 +13,11 @@ import graft.functions.{cell_cover, cell_id, point_in_polygon,
  *   ONLY on the 8-byte cell key.
  *
  *   phase 2 (refinement): exact ray-casting PIP on the surviving pairs
- *   (codegen'd PointInPolygonExpr).
+ *   (codegen'd PointInPolygonExpr). Each polygon row carries its ring's
+ *   own y-banded edge index (`PipRt.edgeIndex`, built once per polygon
+ *   before the cover explode): a many-edge ring (coastline) refines in
+ *   ~16 edges per candidate instead of all of them, a small one carries
+ *   NULL and scans every edge. Decision-identical either way.
  *
  * Correctness: a point lies in exactly one cell at `res`, and the cover is
  * a superset of all cells containing interior points (GeometrySpec), so
@@ -47,14 +50,6 @@ object SpatialJoin {
    * @param polygons any DataFrame with `ringCol`: array<double> [x,y,…]
    * @param res      blocking-cell resolution
    * @param saltBuckets >1 enables salting for hot-cell skew
-   * @param edgeIndexBands >0 runs the exact-PIP refinement through a
-   *        y-banded edge interval index built once per polygon (the north
-   *        rule's "ray-casting with interval-tree edge index"): per
-   *        candidate pair the ray cast visits ~E/bands edges instead of E
-   *        and reads ring+index straight from ArrayData (no per-row
-   *        copy). Worth it for many-edge rings (coastlines); for tiny
-   *        rings the default plain cast avoids carrying the index through
-   *        the join. Decision-identical either way (GeometrySpec).
    * @return points × polygons pairs where the point is strictly inside;
    *         all point and polygon columns preserved.
    */
@@ -65,16 +60,12 @@ object SpatialJoin {
       lonCol: Column,
       ringCol: Column,
       res: Int,
-      saltBuckets: Int = 1,
-      edgeIndexBands: Int = 0): DataFrame = {
+      saltBuckets: Int = 1): DataFrame = {
     require(saltBuckets >= 1, "saltBuckets must be >= 1")
     val pts = points.withColumn("__cell", cell_id(latCol, lonCol, res))
-    val polySide =
-      if (edgeIndexBands > 0)
-        polygons.withColumn("__pidx", polygon_y_index(ringCol, edgeIndexBands))
-      else polygons
     // generator output column is named cover_cell by the expression schema
-    val cover = polySide.select(col("*"), cell_cover(ringCol, res).as("__cover_cell"))
+    val cover = polygons.withColumn("__pidx", edge_index(ringCol))
+      .select(col("*"), cell_cover(ringCol, res).as("__cover_cell"))
     val joined =
       if (saltBuckets == 1) {
         pts.join(cover, pts("__cell") === cover("__cover_cell"), "inner")
@@ -94,11 +85,7 @@ object SpatialJoin {
           ptsS("__cell") === coverS("__cover_cell") && ptsS("__salt") === coverS("__salt"),
           "inner")
       }
-    val refined =
-      if (edgeIndexBands > 0)
-        joined.where(point_in_polygon_indexed(lonCol, latCol, ringCol, col("__pidx")))
-      else
-        joined.where(point_in_polygon(lonCol, latCol, ringCol))
-    refined.drop("__cell", "__cover_cell", "__salt", "__pidx")
+    joined.where(point_in_polygon_indexed(lonCol, latCol, ringCol, col("__pidx")))
+      .drop("__cell", "__cover_cell", "__salt", "__pidx")
   }
 }

@@ -143,7 +143,7 @@ object SpatialLayout {
   def joinPolygons(
       spark: SparkSession, path: String,
       polygons: DataFrame, ringCol: org.apache.spark.sql.Column,
-      saltBuckets: Int = 1, edgeIndexBands: Int = 0): DataFrame = {
+      saltBuckets: Int = 1): DataFrame = {
     val m = readMeta(spark, path)
     val cover = polygons.select(ringCol.as("__ring")).collect()
       .iterator
@@ -152,7 +152,7 @@ object SpatialLayout {
       .toSeq
     val pts = readCells(spark, path, cover)
     SpatialJoin(pts, polygons, col(m.latCol), col(m.lonCol), ringCol, m.res,
-      saltBuckets = saltBuckets, edgeIndexBands = edgeIndexBands)
+      saltBuckets = saltBuckets)
   }
 
   // ---- metadata (tiny key=value file, Hadoop FS so any scheme works) ----

@@ -7,8 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.LongType
 
-import graft.functions.{CellCoverExpr, CellIdExpr, PointInPolygonExpr,
-  PointInPolygonIndexedExpr, PolygonYIndexExpr}
+import graft.functions.{CellCoverExpr, CellIdExpr, PipRt, PointInPolygonExpr}
 
 /**
  * Optimizer rule (the SURVEY §7.3 "sugar Rule" stretch goal): rewrites a
@@ -20,8 +19,8 @@ import graft.functions.{CellCoverExpr, CellIdExpr, PointInPolygonExpr,
  * join (O(points × polygons) PIP evaluations) — into the two-phase form:
  *
  *   (points + cell_id(y, x, res))
- *     JOIN (polygons ⋈ generate cell_cover(ring, res))
- *     ON cell = cover_cell AND point_in_polygon(x, y, ring)
+ *     JOIN (polygons + the ring's edge index ⋈ generate cell_cover(ring, res))
+ *     ON cell = cover_cell AND point_in_polygon(x, y, ring, edge index)
  *
  * i.e. an equi-join on the 8-byte cell key with the exact PIP as a
  * residual — the same plan `operators.SpatialJoin` builds explicitly
@@ -29,10 +28,10 @@ import graft.functions.{CellCoverExpr, CellIdExpr, PointInPolygonExpr,
  * the fact that a point lies in exactly one cell, see SpatialJoin docs).
  *
  * The blocking resolution comes from the session conf
- * `spark.graft.spatialJoin.res` (default 7). Fires only when the PIP is
- * the WHOLE join condition (or the only non-equi conjunct is the PIP
- * itself it leaves composite conditions alone) and its point/ring sides
- * resolve to opposite join children.
+ * `spark.graft.spatialJoin.res` (default 7). Fires only when the PIP,
+ * without an index argument, is the WHOLE join condition (it leaves
+ * composite conditions alone) and its point/ring sides resolve to
+ * opposite join children.
  *
  * Registered via [[GraftExtensions]]
  * (`SparkSession.builder.withExtensions(new GraftExtensions)`) or
@@ -42,34 +41,22 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
 
   val ResConfKey = "spark.graft.spatialJoin.res"
 
-  /** >0 ⇒ the rewrite's exact-PIP residual runs through the y-banded edge
-   * interval index (built once per polygon row before the cover explode)
-   * — the knob for many-edge polygon layers; see SpatialJoin scaladoc. */
-  val EdgeIndexBandsConfKey = "spark.graft.spatialJoin.edgeIndexBands"
-
   private def res: Int =
     try conf.getConfString(ResConfKey, "7").toInt
     catch { case _: NumberFormatException => 7 }
 
-  private def edgeIndexBands: Int =
-    try conf.getConfString(EdgeIndexBandsConfKey, "0").toInt
-    catch { case _: NumberFormatException => 0 }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case j @ Join(left, right, joinType @ (Inner | Cross),
-        Some(pip @ PointInPolygonExpr(x, y, ring)), hint)
+        Some(pip @ PointInPolygonExpr(x, y, ring, Literal(null, _))), hint)
         if pip.references.nonEmpty && x.deterministic && y.deterministic &&
           ring.deterministic && sidesResolve(x, y, ring, left, right) =>
       val r = res
-      val bands = edgeIndexBands
       // left + cell id of the point at the blocking resolution
       val cellAlias = Alias(CellIdExpr(y, x, Literal(r)), "__graft_cell")()
       val newLeft = Project(left.output :+ cellAlias, left)
-      // right (+ optional per-polygon edge index) ⋈ generate cover cells
-      val idxAlias =
-        if (bands > 0) Some(Alias(PolygonYIndexExpr(ring, Literal(bands)), "__graft_pidx")())
-        else None
-      val rightBase = idxAlias.fold(right)(a => Project(right.output :+ a, right))
+      // right + the ring's edge index ⋈ generate cover cells
+      val idxAlias = Alias(PipRt.edgeIndex(ring), "__graft_pidx")()
+      val rightBase = Project(right.output :+ idxAlias, right)
       val coverAttr = AttributeReference("__graft_cover", LongType, nullable = false)()
       val newRight = Generate(
         CellCoverExpr(ring, Literal(r)),
@@ -78,8 +65,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
         qualifier = None,
         generatorOutput = Seq(coverAttr),
         child = rightBase)
-      val residual = idxAlias.fold(pip: Expression)(a =>
-        PointInPolygonIndexedExpr(x, y, ring, a.toAttribute))
+      val residual = pip.copy(idx = idxAlias.toAttribute)
       val cond = And(EqualTo(cellAlias.toAttribute, coverAttr), residual)
       Project(j.output, Join(newLeft, newRight, Inner, Some(cond), hint))
   }

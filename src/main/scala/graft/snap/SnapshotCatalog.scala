@@ -468,18 +468,24 @@ object SnapshotCatalog {
     CompactStats(m.dataDirs.size, filesBefore, parquetFiles(target).size, rows)
   }
 
-  /**
-   * Resumable wave-partitioned run — the north rule's checkpoint/resume.
-   *
-   * The input is split into `waves` deterministic buckets by
-   * pmod(xxhash64(key), waves). Each wave: transform → write an immutable
-   * data dir → commit a new snapshot whose manifest marks the wave
-   * completed and carries per-partition lineage. A re-run (after a crash
-   * or a kill) skips every wave already in the CURRENT manifest — the
-   * anti-join of SURVEY §2.7 done on metadata, not data.
-   *
-   * @return the number of waves actually executed this run
-   */
+  /** Writes snapshot `snapId`'s lineage sidecar and returns the manifest
+   * that commits `wave` on top of `prev` (None = the first snapshot): the
+   * one place each chain field (waves, data dirs, rows per wave, lineage
+   * sidecars) grows. `dataDir` is None for a wave that wrote no rows. */
+  private def successor(root: String, table: String, prev: Option[Manifest],
+      snapId: Long, wave: Int, dataDir: Option[String],
+      perPart: Seq[LineageRow]): Manifest =
+    Manifest(
+      table = table,
+      snapshotId = snapId,
+      parentId = prev.map(_.snapshotId).getOrElse(-1L),
+      completedWaves = (prev.map(_.completedWaves).getOrElse(Nil) :+ wave).sorted,
+      dataDirs = prev.map(_.dataDirs).getOrElse(Nil) ++ dataDir,
+      rowsPerWave = prev.map(_.rowsPerWave).getOrElse(Map.empty) +
+        (wave -> perPart.map(_.outputRows).sum),
+      lineageFiles = prev.map(_.lineageFiles).getOrElse(Nil) ++
+        writeLineageSidecar(root, table, snapId, perPart))
+
   /**
    * Transform + write + commit ONE wave idempotently; returns false (and
    * does nothing) when the wave is already in the CURRENT manifest.
@@ -511,20 +517,23 @@ object SnapshotCatalog {
     val inRows = obs.get("in_rows").asInstanceOf[Long]
     val perPart = fileRows(spark, target)
       .map { case (pid, n) => LineageRow(wave, pid, inRows, n, wallMs) }
-    val outRows = perPart.map(_.outputRows).sum
-    val linFile = writeLineageSidecar(root, table, snapId, perPart.toSeq)
-    val m = Manifest(
-      table = table,
-      snapshotId = snapId,
-      parentId = prev.map(_.snapshotId).getOrElse(-1L),
-      completedWaves = (prev.map(_.completedWaves).getOrElse(Nil) :+ wave).sorted,
-      dataDirs = prev.map(_.dataDirs).getOrElse(Nil) :+ dataDir,
-      rowsPerWave = prev.map(_.rowsPerWave).getOrElse(Map.empty) + (wave -> outRows),
-      lineageFiles = prev.map(_.lineageFiles).getOrElse(Nil) ++ linFile)
-    commitManifest(root, table, m)
+    commitManifest(root, table,
+      successor(root, table, prev, snapId, wave, Some(dataDir), perPart))
     true
   }
 
+  /**
+   * Resumable wave-partitioned run — the north rule's checkpoint/resume.
+   *
+   * The input is split into `waves` deterministic buckets by
+   * pmod(xxhash64(key), waves). Each wave: transform → write an immutable
+   * data dir → commit a new snapshot whose manifest marks the wave
+   * completed and carries per-partition lineage. A re-run (after a crash
+   * or a kill) skips every wave already in the CURRENT manifest — the
+   * anti-join of SURVEY §2.7 done on metadata, not data.
+   *
+   * @return the number of waves actually executed this run
+   */
   def resumableRun(
       spark: SparkSession,
       input: DataFrame,
@@ -606,27 +615,16 @@ object SnapshotCatalog {
     // commit each wave's directory in wave order (same manifest chain
     // shape as the per-wave path; lineage from the written files)
     (0 until waves).foreach { w =>
-      val dataDir = s"$stage/__wave=$w"
       val waveDirPath = stageDir.resolve(s"__wave=$w")
+      val written = Files.exists(waveDirPath) // an empty wave writes no dir
       val perPart =
-        if (!Files.exists(waveDirPath)) Seq.empty[LineageRow] // empty wave
+        if (!written) Seq.empty[LineageRow]
         else fileRows(spark, waveDirPath).map { case (pid, n) =>
           LineageRow(w, pid, inRows(s"in_$w").asInstanceOf[Long], n, wallMs) }
       val prev = currentManifest(root, table)
       val snapId = prev.map(_.snapshotId + 1).getOrElse(0L)
-      val linFile = writeLineageSidecar(root, table, snapId, perPart.toSeq)
-      val m = Manifest(
-        table = table,
-        snapshotId = snapId,
-        parentId = prev.map(_.snapshotId).getOrElse(-1L),
-        completedWaves = (prev.map(_.completedWaves).getOrElse(Nil) :+ w).sorted,
-        dataDirs =
-          if (Files.exists(waveDirPath)) prev.map(_.dataDirs).getOrElse(Nil) :+ dataDir
-          else prev.map(_.dataDirs).getOrElse(Nil),
-        rowsPerWave = prev.map(_.rowsPerWave).getOrElse(Map.empty) +
-          (w -> perPart.map(_.outputRows).sum),
-        lineageFiles = prev.map(_.lineageFiles).getOrElse(Nil) ++ linFile)
-      commitManifest(root, table, m)
+      commitManifest(root, table, successor(root, table, prev, snapId, w,
+        Some(s"$stage/__wave=$w").filter(_ => written), perPart))
     }
     waves
   }

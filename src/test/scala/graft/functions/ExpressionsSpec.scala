@@ -68,6 +68,18 @@ class ExpressionsSpec extends AnyFunSuite {
       .withColumn("ring", typedLit(diamond))
       .withColumn("in", point_in_polygon($"x", $"y", $"ring"))
     assert(df.select("in").as[Boolean].collect().toSeq == Seq(true, false))
+    // generated code (an RDD-backed frame is not folded into a local
+    // relation): a NULL index scans every edge, an index only its band,
+    // and only a NULL point or ring makes the result NULL
+    val noIdx = lit(null).cast("array<double>")
+    val got = spark.sparkContext.parallelize(Seq((5.0, 5.0), (8.5, 8.5)), 2).toDF("x", "y")
+      .withColumn("ring", typedLit(diamond))
+      .select(
+        point_in_polygon_indexed($"x", $"y", $"ring", noIdx),
+        point_in_polygon_indexed($"x", $"y", $"ring", polygon_y_index($"ring", 2)),
+        point_in_polygon($"x", $"y", noIdx).isNull)
+      .as[(Boolean, Boolean, Boolean)].collect().toSeq
+    assert(got == Seq((true, true, true), (false, false, true)))
   }
 
   test("extract_text byte identity through Catalyst (invalid UTF-8 survives)") {
@@ -140,7 +152,13 @@ class ExpressionsSpec extends AnyFunSuite {
       .select(cell_ring($"cell", lit(1)).as("rc"))
       .as[Long].collect().toSeq
     assert(rings.length == 8)
-    assert(rings.toSet == CellIndex.ring(c, 1).toSet)
+    assert(rings == CellIndex.ring(c, 1).toSeq)
+    // SQL form: built-in explode over the band [k, k], column `col`
+    Seq(Tuple1(c)).toDF("cell").createOrReplaceTempView("ring_src")
+    graft.functions.registerAll(spark)
+    val sqlRings = spark.sql("SELECT cell_ring(cell, 2) FROM ring_src")
+    assert(sqlRings.columns.toSeq == Seq("col"))
+    assert(sqlRings.as[Long].collect().toSeq == CellIndex.ring(c, 2).toSeq)
   }
 
   test("null inputs produce null/empty, not crashes") {

@@ -1,6 +1,7 @@
 package graft.geo
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.PipKernel
 
 class GeometrySpec extends AnyFunSuite {
   // unit square
@@ -38,44 +39,39 @@ class GeometrySpec extends AnyFunSuite {
   }
 
   test("indexed PIP decision-identical to plain ray casting (property)") {
-    // random closed polylines (validity not required — the even-odd parity
-    // rule is well-defined for ANY ring and both kernels must agree),
-    // probed on a grid hitting band boundaries, vertex y-levels, and
-    // points outside the y-extent
+    // the engine kernel on random closed polylines (validity not required
+    // — the even-odd parity rule is well-defined for ANY ring), with a
+    // NULL index, the derived one and forced band counts, probed on a grid
+    // hitting band boundaries, vertex y-levels and points outside the
+    // y-extent; the reference is the pure-array ray cast
     val rnd = new scala.util.Random(4242)
     for (trial <- 0 until 200) {
-      val n = 3 + rnd.nextInt(30)
+      val n = 3 + rnd.nextInt(40)
       val ring = Array.fill(2 * n)(rnd.nextDouble() * 20 - 5)
-      for (bands <- Seq(1, 2, 7, 32)) {
-        val idx = Geometry.yBandIndex(ring, bands)
-        val ys = (0 until 32).map(k => -6.0 + 0.7 * k) ++
-          (0 until n).map(i => ring(2 * i + 1)) // exact vertex y-levels
-        val xs = (0 until 17).map(k => -6.0 + 1.3 * k)
-        for (y <- ys; x <- xs) {
-          val plain = Geometry.pointInPolygon(x, y, ring)
-          val indexed = Geometry.pointInPolygonIndexed(x, y, ring, idx)
-          assert(plain == indexed, s"trial=$trial bands=$bands p=($x,$y)")
-        }
+      val ys = (0 until 32).map(k => -6.0 + 0.7 * k) ++
+        (0 until n).map(i => ring(2 * i + 1)) // exact vertex y-levels
+      val xs = (0 until 17).map(k => -6.0 + 1.3 * k)
+      for (bands <- PipKernel.bandChoices(ring, Seq(1, 2, 7, 32)); y <- ys; x <- xs) {
+        assert(PipKernel.decide(x, y, ring, bands) == Geometry.pointInPolygon(x, y, ring),
+          s"trial=$trial bands=$bands p=($x,$y)")
       }
     }
   }
 
   test("indexed PIP decision-identical on many-edge coastline rings") {
-    // the E >> bands regime the index exists for (BASELINE.md measures
-    // the probe at 512-2048 vertices) — same identity contract on the
-    // bench fixture's own ring generator, probed on a dense grid plus
+    // the regime the derived index is for (BASELINE.md §edge-index
+    // measures the probe at 8-2048 vertices) — same identity contract on
+    // the bench fixture's own ring generator, probed on a dense grid plus
     // every vertex y-level
-    for (vertices <- Seq(64, 256, 1024); bands <- Seq(4, 16, 64)) {
+    for (vertices <- Seq(8, 64, 256, 1024)) {
       val ring = graft.sources.Fixtures.coastRing(10.0, -20.0, 2.0, vertices)
-      val idx = Geometry.yBandIndex(ring, bands)
       val n = ring.length / 2
       val ys = (0 until 60).map(k => -23.5 + 0.12 * k) ++
         (0 until n by math.max(1, n / 64)).map(i => ring(2 * i + 1))
       val xs = (0 until 30).map(k => 6.5 + 0.24 * k)
-      for (y <- ys; x <- xs) {
-        val plain = Geometry.pointInPolygon(x, y, ring)
-        val indexed = Geometry.pointInPolygonIndexed(x, y, ring, idx)
-        assert(plain == indexed, s"v=$vertices bands=$bands p=($x,$y)")
+      for (bands <- PipKernel.bandChoices(ring, Seq(4, 64)); y <- ys; x <- xs) {
+        assert(PipKernel.decide(x, y, ring, bands) == Geometry.pointInPolygon(x, y, ring),
+          s"v=$vertices bands=$bands p=($x,$y)")
       }
     }
   }

@@ -31,10 +31,12 @@ class FuzzSafetySpec extends AnyFunSuite {
     out
   }
 
-  test("yBandIndex/pointInPolygonIndexed total and plain-identical on adversarial rings") {
-    // rings with NaN / ±Inf / denormal coordinates: the indexed ray cast
-    // must neither throw nor diverge from the plain one (both skip
-    // non-finite edges through the same NaN-propagating crossing test)
+  test("PIP kernel total and reference-identical on adversarial rings") {
+    // rings with NaN / ±Inf / denormal coordinates: the engine kernel, with
+    // a NULL index and with band indexes, must neither throw nor diverge
+    // from the reference ray cast (both skip non-finite edges through the
+    // same NaN-propagating crossing test)
+    import graft.functions.PipKernel
     import graft.geo.Geometry
     def coord(seed: Long): Double = (mix(seed) % 13).toInt match {
       case 0 => Double.NaN
@@ -46,17 +48,14 @@ class FuzzSafetySpec extends AnyFunSuite {
       case _ => (mix(seed * 7 + 1) % 4001).toInt / 100.0 - 20.0
     }
     for (trial <- 0 until 300) {
-      val n = 3 + ((mix(trial) & 0x7fffffff) % 12).toInt
+      // up to 40 vertices, so the longer rings also get a derived index
+      val n = 3 + ((mix(trial) & 0x7fffffff) % 38).toInt
       val ring = Array.tabulate(2 * n)(i => coord(trial * 10007L + i))
-      for (bands <- Seq(1, 3, 16)) {
-        val idx = Geometry.yBandIndex(ring, bands)
-        for (p <- 0 until 40) {
-          val x = coord(trial * 65537L + p * 2)
-          val y = coord(trial * 65537L + p * 2 + 1)
-          val plain = Geometry.pointInPolygon(x, y, ring)
-          val indexed = Geometry.pointInPolygonIndexed(x, y, ring, idx)
-          assert(plain == indexed, s"trial=$trial bands=$bands p=($x,$y) ring=${ring.toSeq}")
-        }
+      for (bands <- PipKernel.bandChoices(ring, Seq(1, 3, 16)); p <- 0 until 40) {
+        val x = coord(trial * 65537L + p * 2)
+        val y = coord(trial * 65537L + p * 2 + 1)
+        assert(PipKernel.decide(x, y, ring, bands) == Geometry.pointInPolygon(x, y, ring),
+          s"trial=$trial bands=$bands p=($x,$y) ring=${ring.toSeq}")
       }
     }
   }

@@ -21,8 +21,10 @@ class SpatialOpsSpec extends AnyFunSuite {
   private lazy val polys = Fixtures.polygons(nPolys)
 
   private lazy val ptsDf = pts.toDF("page_id", "entity_idx", "lat", "lon")
-  private lazy val polysDf = spark.createDataFrame(
-    spark.sparkContext.parallelize(polys.map(p => org.apache.spark.sql.Row(p.polygon_id, p.ring, p.name)), 4),
+  private lazy val polysDf = ringsDf(polys)
+  // RDD-backed, not a LocalRelation, so plans keep the per-row projections
+  private def ringsDf(ps: Seq[Fixtures.Polygon]) = spark.createDataFrame(
+    spark.sparkContext.parallelize(ps.map(p => org.apache.spark.sql.Row(p.polygon_id, p.ring, p.name)), 4),
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("polygon_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("ring",
@@ -52,18 +54,28 @@ class SpatialOpsSpec extends AnyFunSuite {
   }
 
   test("spatial join with the edge interval index gives identical rows") {
-    // the indexed refinement (ArrayData-native y-banded ray cast) must be
-    // decision-identical to the plain PIP over the whole fixture, in both
-    // the broadcast and salted regimes
+    // 256-vertex coastline rings carry their derived edge index (16 bands
+    // of 16 edges), the 4-edge diamonds carry none; the coastline join
+    // equals brute force, broadcast and salted
+    val coast = Fixtures.coastPolygons(nPolys)
+    val coastDf = ringsDf(coast)
+    val want = (for {
+      (pid, e, lat, lon) <- pts
+      poly <- coast
+      if Geometry.pointInPolygon(lon, lat, poly.ring)
+    } yield (pid, e, poly.polygon_id)).toSet
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Long)] =
       df.select("page_id", "entity_idx", "polygon_id")
         .as[(Long, Int, Long)].collect().toSet
-    val plain = rows(SpatialJoin(ptsDf, polysDf, $"lat", $"lon", $"ring", res = 7))
-    val indexed = rows(SpatialJoin(ptsDf, polysDf, $"lat", $"lon", $"ring", res = 7,
-      edgeIndexBands = 8))
-    val indexedSalted = rows(SpatialJoin(ptsDf, polysDf, $"lat", $"lon", $"ring", res = 7,
-      saltBuckets = 4, edgeIndexBands = 3))
-    assert(indexed == plain && indexedSalted == plain)
+    val joined = SpatialJoin(ptsDf, coastDf, $"lat", $"lon", $"ring", res = 7)
+    assert(want.nonEmpty && rows(joined) == want)
+    assert(rows(SpatialJoin(ptsDf, coastDf, $"lat", $"lon", $"ring", res = 7,
+      saltBuckets = 4)) == want)
+    val plan = joined.queryExecution.optimizedPlan.toString
+    assert(plan.contains("polygon_y_index"), plan)
+    // the index is the ring's: built for every coastline, for no diamond
+    assert(coastDf.where(graft.functions.edge_index($"ring").isNull).isEmpty)
+    assert(polysDf.where(graft.functions.edge_index($"ring").isNotNull).isEmpty)
   }
 
   test("spatial join at a different res gives the same rows (res-invariance)") {

@@ -17,8 +17,9 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
   }
   private lazy val polys = Fixtures.polygons(30)
   private lazy val ptsDf = pts.toDF("page_id", "entity_idx", "lat", "lon")
-  private lazy val polysDf = spark.createDataFrame(
-    spark.sparkContext.parallelize(polys.map(p => org.apache.spark.sql.Row(p.polygon_id, p.ring)), 2),
+  private lazy val polysDf = ringsDf(polys)
+  private def ringsDf(ps: Seq[Fixtures.Polygon]) = spark.createDataFrame(
+    spark.sparkContext.parallelize(ps.map(p => org.apache.spark.sql.Row(p.polygon_id, p.ring)), 2),
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("polygon_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("ring",
@@ -47,18 +48,24 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
     }
   }
 
-  test("edgeIndexBands conf routes the rewrite's residual through the indexed PIP") {
+  test("rewrite refines coastline rings through their own edge index") {
+    // 256-vertex rings: the rewrite attaches the derived index on the
+    // polygon side and the residual PIP reads it; rows equal brute force
+    val coast = Fixtures.coastPolygons(30)
+    val coastWant = (for {
+      (pid, e, lat, lon) <- pts
+      poly <- coast
+      if Geometry.pointInPolygon(lon, lat, poly.ring)
+    } yield (pid, e, poly.polygon_id)).toSet
     SpatialJoinRule.install(spark)
-    spark.conf.set(SpatialJoinRule.EdgeIndexBandsConfKey, "4")
     try {
-      val naive = ptsDf.join(polysDf, point_in_polygon($"lon", $"lat", $"ring"))
+      val naive = ptsDf.join(ringsDf(coast), point_in_polygon($"lon", $"lat", $"ring"))
       val plan = naive.queryExecution.optimizedPlan.toString
-      assert(plan.contains("pointinpolygonindexedexpr") && plan.contains("__graft_pidx"), plan)
+      assert(plan.contains("polygon_y_index") && plan.contains("__graft_pidx"), plan)
       val got = naive.select("page_id", "entity_idx", "polygon_id")
         .as[(Long, Int, Long)].collect().toSet
-      assert(got == want)
+      assert(coastWant.nonEmpty && got == coastWant)
     } finally {
-      spark.conf.unset(SpatialJoinRule.EdgeIndexBandsConfKey)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == SpatialJoinRule)
     }
