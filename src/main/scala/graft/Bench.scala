@@ -26,6 +26,10 @@ import org.apache.spark.sql.functions._
  * the line always fits the driver's 2000-char stdout tail;
  * BENCH_LAST.json gets the complete full-name 4 dp form.
  * scaling_knn3 exercises the declarative general-k TopKSlots path.
+ * On a host with fewer than 16 cpus no scaling child starts (`taskset -c
+ * 0-15` would succeed there and run the "16-core" child on the cores that
+ * exist): each scaling block reads {"status":"unmeasured","reason":…,
+ * "host_cpus":n} instead.
  */
 object Bench {
 
@@ -56,6 +60,8 @@ object Bench {
     val benchN = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "6000000").toLong
     val tmp = java.nio.file.Files.createTempDirectory("graft_bench").toString
     val pagesPath = s"$tmp/pages"; val polysPath = s"$tmp/polys"
+    val hostCpus = Runtime.getRuntime.availableProcessors
+    val measured = hostCpus >= 16
 
     // ---- scaling: same input, N vs 4N cores --------------------------------
     // Each measurement runs in a FORKED child JVM: same-JVM session reuse
@@ -129,18 +135,18 @@ object Bench {
     // ±0.5% 4-core floor — and the r5 gate miss (0.773) came from a t16
     // floor that never sampled clean, so the extra ~40 s/round goes
     // exactly where the estimator is noise-limited.
-    val knnRounds = (1 to 3).map { _ =>
+    val knnRounds = if (!measured) Nil else (1 to 3).map { _ =>
       val a = measure(4, "knn")
       val b = Seq(measure(16, "knn"), measure(16, "knn"),
         measure(16, "knn"), measure(16, "knn")).min
       (a, b, a / (b * 4.0))
     }
-    val kT4 = knnRounds.map(_._1).min
-    val kT16 = knnRounds.map(_._2).min
-    val kEff = kT4 / (kT16 * 4.0)
+    lazy val kT4 = knnRounds.map(_._1).min
+    lazy val kT16 = knnRounds.map(_._2).min
+    lazy val kEff = kT4 / (kT16 * 4.0)
 
     // ---- setup: write the flagship scaling-bench input once (untimed) ----
-    locally {
+    if (measured) {
       val s = session(cpus)
       graft.sources.Fixtures.pages(s, benchN, partitions = 64)
         .write.mode("overwrite").parquet(pagesPath)
@@ -156,16 +162,16 @@ object Bench {
 
     // flagship spatial pipeline: same asymmetric protocol, three 16-core
     // draws per round
-    val rounds = (1 to 3).map { _ =>
+    val rounds = if (!measured) Nil else (1 to 3).map { _ =>
       val a = measure(4)
       val b = Seq(measure(16), measure(16), measure(16)).min
       (a, b, (benchN / b) / (benchN / a) / 4.0)
     }
-    val t4 = rounds.map(_._1).min
-    val t16 = rounds.map(_._2).min
-    val eff = t4 / (t16 * 4.0)
-    val tp4 = benchN / t4
-    val tp16 = benchN / t16
+    lazy val t4 = rounds.map(_._1).min
+    lazy val t16 = rounds.map(_._2).min
+    lazy val eff = t4 / (t16 * 4.0)
+    lazy val tp4 = benchN / t4
+    lazy val tp16 = benchN / t16
 
     // third regime: general-k kNN (k = 3) through the DECLARATIVE TopKSlots
     // aggregate — the measurement evidencing that the ObjectHashAggregate
@@ -180,14 +186,14 @@ object Bench {
       // BenchPipeline runs k >= 2 through Knn.applyDeclK itself: this
       // regime MEASURES TopKSlots, not a routing heuristic
       "SPARK_GRAFT_TIMED_RUNS" -> "1")
-    val knn3Rounds = (1 to 2).map { _ =>
+    val knn3Rounds = if (!measured) Nil else (1 to 2).map { _ =>
       val a = measure(4, "knn", knn3Env)
       val b = math.min(measure(16, "knn", knn3Env), measure(16, "knn", knn3Env))
       (a, b, a / (b * 4.0))
     }
-    val k3T4 = knn3Rounds.map(_._1).min
-    val k3T16 = knn3Rounds.map(_._2).min
-    val k3Eff = k3T4 / (k3T16 * 4.0)
+    lazy val k3T4 = knn3Rounds.map(_._1).min
+    lazy val k3T16 = knn3Rounds.map(_._2).min
+    lazy val k3Eff = k3T4 / (k3T16 * 4.0)
 
     // ---- per-query timings: min of 2 INTERLEAVED full passes -------------
     // single draws are polluted by bursty host interference (r2 recorded
@@ -234,14 +240,16 @@ object Bench {
     def roundsJson(rs: Seq[(Double, Double, Double)], fmt: Double => String) =
       rs.map { case (a, b, e) =>
         s"""{"tN":${fmt(a)},"t4N":${fmt(b)},"eff":${fmt(e)}}""" }.mkString("[", ",", "]")
-    def scalingJson(fmt: Double => String) =
+    val unmeasured = s"""{"status":"unmeasured","reason":"BASELINE.json >=0.8 N->4N """ +
+      s"""gate needs 16 cpus, host has $hostCpus","host_cpus":$hostCpus}"""
+    def scalingJson(fmt: Double => String) = if (!measured) unmeasured else
       s"""{"n_cores":4,"n4_cores":16,"pN_pages_per_sec":${fmt(tp4)},"p4N_pages_per_sec":${fmt(tp16)},""" +
         s""""efficiency":${fmt(eff)},"bench_pages":$benchN,"tN_sec":${fmt(t4)},"t4N_sec":${fmt(t16)},""" +
         s""""rounds":${roundsJson(rounds, fmt)}}"""
-    def scalingKnnJson(fmt: Double => String) =
+    def scalingKnnJson(fmt: Double => String) = if (!measured) unmeasured else
       s"""{"n_cores":4,"n4_cores":16,"pipeline":"knn_iterative","k":1,""" +
         s""""efficiency":${fmt(kEff)},"tN_sec":${fmt(kT4)},"t4N_sec":${fmt(kT16)},"rounds":${roundsJson(knnRounds, fmt)}}"""
-    def scalingKnn3Json(fmt: Double => String) =
+    def scalingKnn3Json(fmt: Double => String) = if (!measured) unmeasured else
       s"""{"n_cores":4,"n4_cores":16,"pipeline":"knn_declarative_topk","k":3,""" +
         s""""efficiency":${fmt(k3Eff)},"tN_sec":${fmt(k3T4)},"t4N_sec":${fmt(k3T16)},"rounds":${roundsJson(knn3Rounds, fmt)}}"""
     // FULL line (long query names, 4 dp) — durable copy for BASELINE.md

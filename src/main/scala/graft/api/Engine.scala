@@ -102,11 +102,6 @@ object Engine {
         expr("substring(html, start_byte + 1, end_byte - start_byte)")))
       .drop("html")
 
-  /** Byte-identical extracted text per url (the north-rule invariant). */
-  def extractText(pages: DataFrame): DataFrame =
-    pages.select(col("url"), extract_text_bytes(col("html")).as("text_bytes"),
-      extract_text(col("html")).as("text"))
-
   /**
    * Sitemap URL discovery — the other crawl front-door input besides
    * robots.txt: parse sitemap XML documents and emit one row per
@@ -446,44 +441,6 @@ object Engine {
     pages.select(col("url"), extract_geo(col("html")).as(Seq("entity_idx", "source", "lat", "lon")))
       .withColumn("cell_id", cell_id(col("lat"), col("lon"), res))
 
-  def spatialJoin(points: DataFrame, polygons: DataFrame,
-      latCol: String, lonCol: String, ringCol: String,
-      res: Int, saltBuckets: Int = 1): DataFrame =
-    SpatialJoin(points, polygons, col(latCol), col(lonCol), col(ringCol), res, saltBuckets)
-
-  def knn(queries: DataFrame, qKey: String, qLat: String, qLon: String,
-      targets: DataFrame, tKey: String, tLat: String, tLon: String,
-      k: Int, res: Int): DataFrame =
-    Knn(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, k, res)
-
-  def rasterTiles(points: DataFrame, lat: String, lon: String, zoom: Int): DataFrame =
-    Tiler.raster(points, lat, lon, zoom)
-
-  def vectorTiles(entities: DataFrame, key: String, entityIdx: String,
-      lat: String, lon: String, zoom: Int): DataFrame =
-    Tiler.vector(entities, key, entityIdx, lat, lon, zoom)
-
-  // ---- training-data ops --------------------------------------------------
-
-  def dedupExact(df: DataFrame, key: String, text: String): DataFrame =
-    Dedup.exact(df, key, text)
-  def dedupMinhash(df: DataFrame, key: String, text: String,
-      bands: Int = 4, rowsPerBand: Int = 2, threshold: Double = 0.5): DataFrame =
-    Dedup.minhashLsh(df, key, text, bands, rowsPerBand, threshold)
-  def dedupSimhash(df: DataFrame, key: String, text: String, maxHamming: Int = 3): DataFrame =
-    Dedup.simhashPairs(df, key, text, maxHamming)
-  /** Corpus-scale 64-bit simhash near-dup pairs (WWW'07 configuration). */
-  def dedupSimhash64(df: DataFrame, key: String, text: String, maxHamming: Int = 3): DataFrame =
-    Dedup.simhashPairs64(df, key, text, maxHamming)
-  def annTopK(queries: DataFrame, qKey: String, qVec: String,
-      corpus: DataFrame, cKey: String, cVec: String, k: Int): DataFrame =
-    Similarity.bruteTopK(queries, qKey, qVec, corpus, cKey, cVec, k)
-  /** IVF ANN with a self-trained (Lloyd) coarse quantizer + multi-probe. */
-  def annKmeansIvf(queries: DataFrame, qKey: String, qVec: String,
-      corpus: DataFrame, cKey: String, cVec: String, k: Int,
-      kClusters: Int = 16, iters: Int = 3, nprobe: Int = 2): DataFrame =
-    Similarity.kmeansIvfTopK(queries, qKey, qVec, corpus, cKey, cVec, k, kClusters, iters, nprobe)
-
   /**
    * Embedding-cosine near-duplicate decision (driver instructions'
    * "embedding-cosine near-dup"): sign-LSH bucketed candidate pairs
@@ -583,8 +540,4 @@ object Engine {
   /** check_language_available analogue: does a REAL kernel back `dialect`? */
   def dialectAvailable(dialect: String): Boolean =
     payloadDialects.exists(p => p._1 == dialect && p._3)
-  def langId(df: DataFrame, key: String, text: String): DataFrame =
-    TextAnalysis.langId(df, key, text)
-  def quality(df: DataFrame, key: String, text: String): DataFrame =
-    TextAnalysis.quality(df, key, text)
 }

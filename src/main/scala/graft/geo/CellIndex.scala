@@ -121,9 +121,6 @@ object CellIndex {
       (x + 1) / n * 360.0 - 180.0, (y + 1) / n * 180.0 - 90.0)
   }
 
-  /** Cell center (lat, lon). */
-  def center(cell: Long): (Double, Double) = (centerLat(cell), centerLon(cell))
-
   /** Scalar center accessors (separate statics so codegen emits one flat
    * call with no tuple boxing). */
   def centerLat(cell: Long): Double = {

@@ -171,10 +171,10 @@ object Knn {
   /** Upper radius of the band after `lo`. Geometric radius growth: bands
    * [0,1], [2,4], [5,10], [11,22], … — log(maxRings) driver rounds instead
    * of one per ring. The first band is the full disk-1 (not the lone [0,0]
-   * cell): res is sized so a disk-1 holds ≳k targets (suggestRes), and a
-   * query near a cell corner can have its NN in a diagonal neighbour — so
-   * [0,0] almost never passes the edge-distance bound and just costs one
-   * extra global sync. */
+   * cell): callers pick res so that an average disk-1 (9 cells) holds
+   * ≳k targets, and a query near a cell corner can have its NN in a
+   * diagonal neighbour — so [0,0] almost never passes the edge-distance
+   * bound and just costs one extra global sync. */
   private def bandEnd(lo: Int, maxRings: Int): Int =
     if (lo == 0) math.min(1, maxRings) else math.min(lo * 2, maxRings)
 
@@ -518,13 +518,5 @@ object Knn {
         .withColumnRenamed("__qkey", qKey)
         .withColumnRenamed("__tkey", tKey)
     }
-  }
-
-  /** Smallest resolution whose cells are coarse enough that an average
-   * ring-1 disk holds ≳ k targets — a sizing helper for callers. */
-  def suggestRes(targetCount: Long, k: Int): Int = {
-    var res = CellIndex.MaxRes
-    while (res > 0 && (1L << (2 * res)) * (k.toLong max 1) > targetCount * 9) res -= 1
-    res
   }
 }

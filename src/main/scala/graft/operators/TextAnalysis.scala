@@ -18,22 +18,21 @@ object TextAnalysis {
   /** Whitespace tokens. Mirrors DuckDB string_split(text, ' '). */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Sorted distinct word 3-gram shingles (the dedup/similarity unit).
+  /** Sorted distinct word 3-gram shingles (the dedup/similarity unit)
+   * over a MATERIALIZED token column.
    * Guard: Spark's sequence(1,0) DESCENDS, so short docs get array().
    * DuckDB mirror: list_sort(list_distinct(list_transform(
    *   generate_series(1, greatest(len(ts)-2,0)), i -> …))).
    *
-   * PERF: call shinglesOf over a MATERIALIZED token column. Higher-order
-   * functions are interpreted (no codegen, no subexpression elimination),
-   * so element_at(split(text), i) inside the lambda re-splits the text per
+   * PERF: never pass `tokens(text)` inline. Higher-order functions are
+   * interpreted (no codegen, no subexpression elimination), so
+   * element_at(split(text), i) inside the lambda re-splits the text per
    * element — O(n²) splits per row (measured 10× slowdown on dedup ops).
    * A column reference makes it O(1) per element. */
-  def shingles(text: Column): Column = shinglesOf(tokens(text))
-
   def shinglesOf(ts: Column): Column = ngramsOf(ts, 3)
 
   /** Sorted distinct word n-grams over a MATERIALIZED token column (see
-   * the perf note on [[shingles]] — never pass `tokens(text)` inline).
+   * the perf note on [[shinglesOf]] — never pass `tokens(text)` inline).
    * Same guards as the 3-gram form: `sequence(1, 0)` DESCENDS in Spark,
    * so rows shorter than n tokens take the explicit empty branch. */
   def ngramsOf(ts: Column, n: Int): Column = {
@@ -206,12 +205,6 @@ object TextAnalysis {
         org.apache.spark.sql.expressions.Window.partitionBy(key).orderBy("line")))
       .where(col("__rn") <= maxPerKey).drop("__rn")
   }
-
-  /** Count of matching lines per doc — the aggregate flavour used when the
-   * per-line fan-out isn't wanted. DuckDB mirror: len(list_filter(...)). */
-  def matchLineCount(df: DataFrame, key: String, text: String, term: String): DataFrame =
-    df.select(col(key),
-      size(filter(split(col(text), "\n"), l => l.contains(term))).cast("long").as("n_match"))
 
   /** Lines [start, start+n) re-joined (reference get_file slicing). */
   def sliceLines(df: DataFrame, key: String, text: String, start: Int, n: Int): DataFrame =

@@ -128,8 +128,6 @@ object HtmlParser {
 
   final case class ParseResult(nodes: IndexedSeq[HtmlNode], source: Array[Byte],
       parentIdx: Array[Int]) {
-    def textBytes(n: HtmlNode): Array[Byte] =
-      java.util.Arrays.copyOfRange(source, n.startByte, n.endByte)
     def text(n: HtmlNode): String = Utf8.decodeReplace(source, n.startByte, n.endByte)
 
     /** Root→node paths (self inclusive; element name, kind otherwise),

@@ -490,7 +490,7 @@ object SnapshotCatalog {
    * Transform + write + commit ONE wave idempotently; returns false (and
    * does nothing) when the wave is already in the CURRENT manifest.
    * Shared by [[resumableRun]] (wave = deterministic hash bucket) and the
-   * streaming sink (`streaming/Ingest.snapshotSink`, wave = micro-batch
+   * streaming sink (`SnapshotSink.snapshotSink`, wave = micro-batch
    * id — Structured Streaming replays a failed batch with the SAME id,
    * so this idempotence makes the sink commit exactly-once).
    */

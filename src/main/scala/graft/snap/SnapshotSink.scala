@@ -1,60 +1,13 @@
-package graft.streaming
+package graft.snap
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupStateTimeout
-import org.apache.spark.sql.types._
-import graft.functions.{cell_id, cell_parent, extract_geo}
 
 /**
- * Structured-Streaming ingestion (SURVEY §2.12 — optional sugar, not on
- * the correctness-critical path: the reference is a batch
- * request/response server; its ROADMAP lists streaming as HOLD).
- *
- * The same extraction expressions run unchanged under `readStream`:
- * pages land in a directory, geo entities are extracted, cell-encoded,
- * and aggregated into per-tile counts under an event-time watermark.
- * Stateful pieces: exact dedup within a watermark (state-store-backed,
- * bounded by the watermark horizon) and per-user running totals via
- * `mapGroupsWithState` (the custom-state slot).
+ * The streaming face of [[SnapshotCatalog]]: a Structured-Streaming sink
+ * that commits each micro-batch as one snapshot wave, exactly once, so a
+ * stream lands in the same resumable snapshot sets a batch run writes.
  */
-object Ingest {
-
-  final case class UserTotal(user_id: Long, n_events: Long, cents: Long)
-
-  val PagesSchema: StructType = StructType(Seq(
-    StructField("url", StringType),
-    StructField("warc_ts", TimestampType),
-    StructField("html", BinaryType),
-    StructField("text", StringType),
-    StructField("lang", StringType)))
-
-  /** Streaming tile counts: pages dir → watermarked windowed per-tile agg. */
-  def tileCounts(spark: SparkSession, pagesDir: String, zoom: Int): DataFrame =
-    spark.readStream
-      .schema(PagesSchema)
-      .parquet(pagesDir)
-      .select(col("url"), col("warc_ts"),
-        extract_geo(col("html")).as(Seq("entity_idx", "source", "lat", "lon")))
-      .withColumn("tile", cell_parent(cell_id(col("lat"), col("lon"), zoom + 4), zoom))
-      .withWatermark("warc_ts", "1 hour")
-      .groupBy(window(col("warc_ts"), "10 minutes"), col("tile"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("tile"), col("n"))
-
-  /** Streaming exact dedup: first page per content digest within the
-   * watermark horizon passes, later duplicates are dropped. State is the
-   * digest set, evicted as the watermark advances — the streaming face of
-   * `Dedup.exact`, bounded-state by construction. */
-  def dedupedPages(spark: SparkSession, pagesDir: String,
-      watermark: String = "1 hour"): DataFrame =
-    spark.readStream
-      .schema(PagesSchema)
-      .parquet(pagesDir)
-      .withColumn("digest", md5(col("html")))
-      .withWatermark("warc_ts", watermark)
-      .dropDuplicatesWithinWatermark("digest")
-      .select("url", "warc_ts", "digest")
+object SnapshotSink {
 
   /** The streaming checkpoint's durable query id: StreamExecution writes
    * `<ckpt>/metadata` = {"id": "<uuid>"} when a query FIRST starts on a
@@ -94,7 +47,7 @@ object Ingest {
    * Caller starts it (the sink sets checkpointLocation itself — the
    * identity guard needs to know where the checkpoint lives):
    * {{{
-   * Ingest.snapshotSink(df, root, "pages_clean", ckpt)(_.select(...))
+   * SnapshotSink.snapshotSink(df, root, "pages_clean", ckpt)(_.select(...))
    *   .trigger(Trigger.AvailableNow()).start()
    * }}}
    */
@@ -105,7 +58,6 @@ object Ingest {
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         require(batchId <= Int.MaxValue, s"batch id $batchId exceeds wave id range")
-        import graft.snap.SnapshotCatalog
         val queryId = checkpointQueryId(batch.sparkSession, checkpointLocation)
         // a table previously written by a BATCH run would alias its wave ids
         // with our batch ids — committing would silently drop micro-batches
@@ -151,30 +103,4 @@ object Ingest {
         }
         ()
       }
-
-  /** Per-user running totals via `mapGroupsWithState` (custom keyed state;
-   * Update output mode). Cents are exact integers, mirroring the batch
-   * discipline, so the final state equals the batch groupBy exactly. */
-  def runningUserTotals(spark: SparkSession, eventsDir: String): Dataset[UserTotal] = {
-    import spark.implicits._
-    val EventsSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    spark.readStream
-      .schema(EventsSchema)
-      .parquet(eventsDir)
-      .select(col("user_id"), round(col("value") * 100).cast("long").as("cents"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[UserTotal, UserTotal](GroupStateTimeout.NoTimeout) {
-        case (user, rows, state) =>
-          var n = 0L; var c = 0L
-          state.getOption.foreach { s => n = s.n_events; c = s.cents }
-          rows.foreach { r => n += 1; c += r._2 }
-          val s = UserTotal(user, n, c)
-          state.update(s)
-          s
-      }
-  }
 }

@@ -146,7 +146,7 @@ object Warc {
    * takes: thousands of independent .warc.gz files appearing over time),
    * Structured Streaming discovers each exactly once via the file
    * source's checkpointed log, and the same record walk runs per
-   * segment. Compose with [[graft.streaming.Ingest.snapshotSink]] for an
+   * segment. Compose with [[graft.snap.SnapshotSink.snapshotSink]] for an
    * end-to-end exactly-once "crawl segments → snapshot table" pipeline
    * (micro-batch replays are absorbed by wave idempotence + the
    * checkpoint-ownership marker). `maxFilesPerTrigger` bounds per-batch

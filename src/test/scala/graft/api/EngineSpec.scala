@@ -180,6 +180,10 @@ class EngineSpec extends AnyFunSuite {
     assert(Engine.queryTemplates("links") == Seq("link.href", "link.text"))
     assert(Engine.nodeTypes.keySet ==
       Set("document", "element", "text", "comment", "doctype"))
+    // a dialect is available only when a real kernel backs it
+    assert(Engine.dialectAvailable("html") && Engine.dialectAvailable("wav"))
+    assert(!Engine.dialectAvailable("jpeg")) // stub
+    assert(!Engine.dialectAvailable("cobol")) // unknown
     // every spec's fixed captures actually appear on the fixture corpus
     val caps = Engine.query(pages, "links").select("capture").distinct()
       .collect().map(_.getString(0)).toSet

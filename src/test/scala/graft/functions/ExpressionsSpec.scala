@@ -60,6 +60,11 @@ class ExpressionsSpec extends AnyFunSuite {
       .collect().head
     assert(row.getLong(0) == CellIndex.latLonToCell(52.52, 13.405, 5))
     assert(math.abs(row.getDouble(1) - 52.52) < 0.05)
+    val cell = CellIndex.latLonToCell(52.52, 13.405, 12)
+    val centers = Seq(cell).toDF("c")
+      .select(cell_center_lat($"c"), cell_center_lon($"c")).as[(Double, Double)].head()
+    assert(centers == ((CellIndex.centerLat(cell), CellIndex.centerLon(cell))))
+    assert(math.abs(centers._2 - 13.405) < 0.05)
   }
 
   test("point_in_polygon over array<double> rings") {

@@ -40,7 +40,7 @@ class WarcSpec extends AnyFunSuite {
       df.select(col("url"), md5(col("html")).as("html_md5"),
         length(col("html")).cast("long").as("html_len"))
     // one file per batch exercises multi-wave commits
-    val q = graft.streaming.Ingest.snapshotSink(
+    val q = graft.snap.SnapshotSink.snapshotSink(
         Warc.readPagesStream(spark, dir, maxFilesPerTrigger = 1), root, "cc_pages", ckpt)(transform)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -52,7 +52,7 @@ class WarcSpec extends AnyFunSuite {
     val waves = graft.snap.SnapshotCatalog.currentManifest(root, "cc_pages").get.completedWaves
     assert(waves.size > 1, s"expected one wave per segment file, got $waves")
     // restart over the same checkpoint: no new data, no new waves
-    val q2 = graft.streaming.Ingest.snapshotSink(
+    val q2 = graft.snap.SnapshotSink.snapshotSink(
         Warc.readPagesStream(spark, dir, maxFilesPerTrigger = 1), root, "cc_pages", ckpt)(transform)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q2.awaitTermination()

@@ -6,34 +6,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
 import graft.operators.Multimodal
+import graft.snap.SnapshotSink
 import graft.sources.Fixtures
 
 class StreamingAndMultimodalSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
-
-  test("streaming tile counts over a pages directory (AvailableNow semantics)") {
-    val dir = Files.createTempDirectory("graft_stream").toString
-    Fixtures.pages(spark, 300, partitions = 4).toDF()
-      .write.mode("overwrite").parquet(dir)
-    val q = Ingest.tileCounts(spark, dir, zoom = 4)
-      .writeStream.outputMode("append").format("memory").queryName("tiles_stream")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    // append mode emits only watermark-closed windows; with a bounded
-    // input the final window stays open, so compare against the batch
-    // equivalent of the CLOSED windows instead of a bare count
-    val got = spark.sql("SELECT sum(n) FROM tiles_stream").collect().head
-    val batch = Fixtures.pages(spark, 300, partitions = 4).toDF()
-      .select(col("warc_ts"), graft.functions.extract_geo(col("html"))
-        .as(Seq("entity_idx", "source", "lat", "lon")))
-    val total = batch.count()
-    val lastWindowStart = batch.agg(max(col("warc_ts"))).collect().head.getTimestamp(0)
-    assert(total > 0)
-    // all emitted rows are complete windows; emitted total ≤ entity total
-    if (!got.isNullAt(0)) assert(got.getLong(0) <= total)
-  }
 
   test("curation mixing is a stateless streaming filter: stream == batch subset") {
     // deterministic hash sampling has no state, no watermark, no window —
@@ -158,10 +136,11 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft_sink_ck").toString
     Fixtures.pages(spark, 200, partitions = 4).toDF()
       .write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream.schema(Ingest.PagesSchema).parquet(dir)
+    val schema = spark.read.parquet(dir).schema
+    val stream = spark.readStream.schema(schema).parquet(dir)
     def transform(df: org.apache.spark.sql.DataFrame) =
       df.select(col("url"), length(col("html")).cast("long").as("html_len"))
-    val q = Ingest.snapshotSink(stream, root, "pages_len", ckpt)(transform)
+    val q = SnapshotSink.snapshotSink(stream, root, "pages_len", ckpt)(transform)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination()
     // the committed snapshot table equals the batch equivalent
@@ -179,8 +158,8 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
     assert(!replayed)
     assert(graft.snap.SnapshotCatalog.read(spark, root, "pages_len").count() == 200)
     // restarting the stream over the same checkpoint finds no new data
-    val q2 = Ingest.snapshotSink(
-        spark.readStream.schema(Ingest.PagesSchema).parquet(dir), root, "pages_len", ckpt)(transform)
+    val q2 = SnapshotSink.snapshotSink(
+        spark.readStream.schema(schema).parquet(dir), root, "pages_len", ckpt)(transform)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q2.awaitTermination()
     assert(graft.snap.SnapshotCatalog.currentManifest(root, "pages_len").get
@@ -197,18 +176,19 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_sink_tbl3").toString
     Fixtures.pages(spark, 40, partitions = 1).toDF() // 1 input file → 1 batch
       .write.mode("overwrite").parquet(dir)
+    val schema = spark.read.parquet(dir).schema
     def transform(df: org.apache.spark.sql.DataFrame) =
       df.select(col("url"), length(col("html")).cast("long").as("html_len"))
     val ckpt1 = Files.createTempDirectory("graft_sink_ck3a").toString
-    val q1 = Ingest.snapshotSink(
-        spark.readStream.schema(Ingest.PagesSchema).parquet(dir), root, "t_own", ckpt1)(transform)
+    val q1 = SnapshotSink.snapshotSink(
+        spark.readStream.schema(schema).parquet(dir), root, "t_own", ckpt1)(transform)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q1.awaitTermination()
     val waves = graft.snap.SnapshotCatalog.currentManifest(root, "t_own").get.completedWaves
     // a DIFFERENT (fresh) checkpoint over the same table must fail loudly
     val ckpt2 = Files.createTempDirectory("graft_sink_ck3b").toString
-    val q2 = Ingest.snapshotSink(
-        spark.readStream.schema(Ingest.PagesSchema).parquet(dir), root, "t_own", ckpt2)(transform)
+    val q2 = SnapshotSink.snapshotSink(
+        spark.readStream.schema(schema).parquet(dir), root, "t_own", ckpt2)(transform)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q2.awaitTermination())
     def msg(t: Throwable): String =
@@ -229,50 +209,15 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
     // table pre-populated by a BATCH run: wave ids 0..1 already committed
     graft.snap.SnapshotCatalog.resumableRun(
       spark, spark.read.parquet(dir), "url", waves = 2, root, "t_batch")(identity)
-    val q = Ingest.snapshotSink(
-        spark.readStream.schema(Ingest.PagesSchema).parquet(dir), root, "t_batch", ckpt)(identity)
+    val q = SnapshotSink.snapshotSink(
+        spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir),
+        root, "t_batch", ckpt)(identity)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
     assert(e.getMessage.contains("snapshotSink") ||
       Option(e.getCause).exists(_.getMessage.contains("snapshotSink")), e.getMessage)
     // the pre-existing batch table is untouched
     assert(graft.snap.SnapshotCatalog.read(spark, root, "t_batch").count() == 50)
-  }
-
-  test("streaming dedup drops within-watermark duplicates") {
-    val dir = Files.createTempDirectory("graft_sdedup").toString
-    val base = Fixtures.pages(spark, 50, partitions = 2).toDF()
-    // duplicate every page once (same html → same digest, same warc_ts)
-    base.union(base).write.mode("overwrite").parquet(dir)
-    val q = Ingest.dedupedPages(spark, dir)
-      .writeStream.outputMode("append").format("memory").queryName("dedup_stream")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.sql("SELECT count(*) AS n, count(DISTINCT digest) AS d FROM dedup_stream")
-      .collect().head
-    assert(got.getLong(0) == 50 && got.getLong(1) == 50)
-  }
-
-  test("mapGroupsWithState running totals converge to the batch aggregate") {
-    val dir = Files.createTempDirectory("graft_sstate").toString
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events.write.mode("overwrite").parquet(dir)
-    val q = Ingest.runningUserTotals(spark, dir)
-      .writeStream.outputMode("update").format("memory").queryName("totals_stream")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    // last update per user = the final state
-    val got = spark.sql(
-      """SELECT user_id, max(n_events) AS n, max(cents) AS c
-        |FROM totals_stream GROUP BY user_id""".stripMargin)
-      .as[(Long, Long, Long)].collect().toSet
-    val want = events
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("c"))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got == want)
   }
 
   test("multimodal: image meta, frame sampling, embeddings (stub kernels, real plumbing)") {
