@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 import graft.core.Checkpoints.{materialize, persist, scope}
 import graft.functions.{cell_disk_band, cell_disk_bound, cell_id}
 import graft.geo.CellIndex
@@ -25,31 +24,34 @@ import graft.geo.CellIndex
  *   property-tested bound guaranteeing nothing outside ring r can beat the
  *   current top-k (CellIndexSpec "kNN bound").
  *
- * One loop, per-path folds: for integral target keys every path runs
- * through the shared [[ringExpand]] loop, which owns the target layer,
- * the band schedule, the per-round checkpoint (its `Observation` counts
- * the open set — the loop's only convergence signal) and the union of the
- * finished rows. A path supplies only its per-query state columns, its
- * round fold (open, candidates, r) → state + `__done`, and its emit
+ * One loop, per-path folds: every path runs through the shared
+ * [[ringExpand]] loop, which owns the target layer, the band schedule,
+ * the per-round checkpoint (its `Observation` counts the open set — the
+ * loop's only convergence signal) and the union of the finished rows. A
+ * path supplies only its target-key column, its per-query state columns,
+ * its round fold (open, candidates, r) → state + `__done`, and its emit
  * projection:
  *   - k = 1 ([[applyNearest]]): the declarative [[MaxScoreMinKey]] best
  *     pair, merged with the carried best by a narrow join;
  *   - 2 ≤ k ≤ [[TopKSlots.JitK]] at scale ([[applyDeclK]]): declarative
  *     [[TopKSlots]] buffers, merged by explode-and-reaggregate;
  *   - other k ([[applyAgg]]): the imperative [[TopKByScore]]
- *     ObjectHashAggregate over carried + fresh + sentinel rows.
- * Each ships at most k (score, key) pairs per query into the round's
- * exchange — O(open-queries) state instead of every candidate row, and no
- * full-candidate sort (a `row_number` window sorted candidate-cells ×
- * target-density rows per round: measured 2× wall time and 0.49 N→4N
- * scaling on the bench fixture — the sort spilled; the aggregates don't).
- * The same aggregate row carries the ring-bound resolution test, so each
- * round is one checkpoint job. Non-integral keys fall back to the
- * windowed form ([[applyWindowed]], same ordering contract), whose state
- * is up to k rows per query and which keeps its own round body. Rounds
- * needed ≈ target density, typically 1-3 when `res` is sized so a ring-1
- * disk holds ≳k targets. Carried state is capped at top-k per query per
- * round (correct: dropped candidates can never re-enter the top-k).
+ *     ObjectHashAggregate over carried + fresh + sentinel rows;
+ *   - non-integral target keys ([[applyAnyKey]]): a sorted
+ *     array<struct<d, t>> of the best k so far, merged with the round's
+ *     `sort_array(collect_list)` by a narrow join.
+ * The three integral paths cast the key to BIGINT and ship at most k
+ * (score, key) pairs per query into the round's exchange — O(open-queries)
+ * state instead of every candidate row, and no full-candidate sort (a
+ * `row_number` window sorted candidate-cells × target-density rows per
+ * round: measured 2× wall time and 0.49 N→4N scaling on the bench fixture
+ * — the sort spilled; the aggregates don't). [[applyAnyKey]] keeps the key
+ * in its own type and ships every candidate through `collect_list`. In
+ * every path the fold's row carries the ring-bound resolution test, so
+ * each round is one checkpoint job. Rounds needed ≈ target density,
+ * typically 1-3 when `res` is sized so a ring-1 disk holds ≳k targets.
+ * Carried state is capped at top-k per query per round (correct: dropped
+ * candidates can never re-enter the top-k).
  */
 object Knn {
 
@@ -93,8 +95,8 @@ object Knn {
    *        tests and benches keep the cheap default.
    * @return (qKey, tKey, dist_sq, rank) — exactly k rows per query (fewer
    *         iff the whole target table has < k rows). Candidates whose
-   *         distance is non-finite (NaN coordinates) are excluded — both
-   *         code paths share this semantic.
+   *         distance is non-finite (NaN coordinates) are excluded — every
+   *         path shares this semantic.
    */
   def apply(
       queries: DataFrame,
@@ -103,44 +105,37 @@ object Knn {
       tKey: String, tLat: String, tLon: String,
       k: Int, res: Int, reliableCheckpoint: Boolean = false): DataFrame = {
     require(k >= 1)
-    val integralKey = TopK.integralKey(targets.schema(tKey).dataType)
     // General-k routing is SIZE-AWARE: applyDeclK's explode-and-reaggregate
     // state fold pays a per-round fixed cost (2k-slot buffer exprs through
-    // an extra exchange) that dominates small jobs — measured 3.2 s decl vs
-    // 1.5 s agg on the 15k-query sf0.1 oracle fixture — while at bench
-    // scale (4M queries, 1.1G candidates) decl is ~1.5× faster and removes
-    // the ObjectHashAggregate span-boundary GC ceiling (SCALE.md). The
-    // routing signal is the optimizer's sizeInBytes estimate of both
-    // inputs: computed at plan time (no job, no collect), and frames with
-    // UNKNOWN stats default to spark.sql.defaultSizeInBytes = Long.Max,
-    // which routes to decl — the path whose shape survives 100×. Both
-    // paths are result-identical (KnnSpec path-equality property), so the
+    // an extra exchange) that dominates small jobs — on 4 vCPU, q24's
+    // inputs at sf0.1 (15k queries, k = 3) took a median 1.75 s decl vs
+    // 1.33 s agg over 12 alternating pairs, agg winning all 12, and decl
+    // ran 17 jobs per call to agg's 14 — while at bench scale (4M queries,
+    // 1.1G candidates) decl is ~1.5× faster and removes the
+    // ObjectHashAggregate span-boundary GC ceiling (SCALE.md). The routing
+    // signal is the optimizer's sizeInBytes estimate of both inputs:
+    // computed at plan time (no job, no collect), and frames with UNKNOWN
+    // stats default to spark.sql.defaultSizeInBytes = Long.Max, which
+    // routes to decl — the path whose shape survives 100×. Both paths are
+    // result-identical (SpatialOpsSpec's path-equality tests), so the
     // estimate only steers the constant factor, never correctness.
     def estBytes(df: DataFrame): BigInt =
       df.queryExecution.optimizedPlan.stats.sizeInBytes
     lazy val smallJob =
       estBytes(queries) + estBytes(targets) < BigInt(DeclRouteMinBytes)
-    val path =
-      if (!integralKey) "window"
-      else if (k == 1) "nearest"
-      // JitK, not MaxK: at k ≥ 5 TopKSlots' generated update method
-      // exceeds the JVM's 8000-byte JIT limit and the whole span runs
-      // interpreted — measured 6–10× slower than the imperative path
-      // (TopKSlots.JitK scaladoc) — so the decl fusion win only exists
-      // while the method JIT-compiles
-      else if (k > TopKSlots.JitK) "agg"
-      else if (smallJob) "agg"
-      else "decl"
-    path match {
-      case "nearest" =>
-        applyNearest(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, res, reliableCheckpoint)
-      case "decl" =>
-        applyDeclK(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, k, res, reliableCheckpoint)
-      case "agg" =>
-        applyAgg(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, k, res, reliableCheckpoint)
-      case "window" =>
-        applyWindowed(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, k, res, reliableCheckpoint)
-    }
+    if (!TopK.integralKey(targets.schema(tKey).dataType))
+      applyAnyKey(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, k, res, reliableCheckpoint)
+    else if (k == 1)
+      applyNearest(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, res, reliableCheckpoint)
+    // JitK, not MaxK: at k ≥ 5 TopKSlots' generated update method exceeds
+    // the JVM's 8000-byte JIT limit and the whole span runs interpreted —
+    // measured 6–10× slower than the imperative path (TopKSlots.JitK
+    // scaladoc) — so the decl fusion win only exists while the method
+    // JIT-compiles
+    else if (k > TopKSlots.JitK || smallJob)
+      applyAgg(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, k, res, reliableCheckpoint)
+    else
+      applyDeclK(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, k, res, reliableCheckpoint)
   }
 
   /** Sentinel candidate seeded per open query each round so queries whose
@@ -184,17 +179,18 @@ object Knn {
       lit(null).cast(targets.schema(tKey).dataType).as(tKey), lit(0.0).as("dist_sq"), lit(0).as("rank"))
 
   /**
-   * The ring-expansion loop shared by the integral-key paths. The open set
-   * is one row per unresolved query: (__qkey, __qlat, __qlon) plus the
-   * path's own `state` columns (its top-k-so-far). Each round the loop
-   * joins the open queries' band cells against the target layer into
-   * candidates (__qkey, __qlat, __qlon, __score = −d², __tk64), and
-   * `fold(open, candidates, r)` ranks them into one row per open query
-   * carrying the updated state and `__done` (the ring-r bound test). The
+   * The ring-expansion loop every path runs. The open set is one row per
+   * unresolved query: (__qkey, __qlat, __qlon) plus the path's own `state`
+   * columns (its top-k-so-far). Each round the loop joins the open
+   * queries' band cells against the target layer into candidates
+   * (__qkey, __qlat, __qlon, __score = −d², __tkey = the path's `key`
+   * column over the targets), and `fold(open, candidates, r)` ranks them
+   * into one row per open query carrying the updated state and `__done`
+   * (the ring-r bound test). The
    * fold's frame is checkpointed — the plan would otherwise grow by one
    * join+agg per round and blow up the optimizer (observed: explainString
    * OOM); its open rows, minus `__done`, are the next round's open set.
-   * `emit` projects a round's rows to (__qkey, __tk64, dist_sq, rank).
+   * `emit` projects a round's rows to (__qkey, __tkey, dist_sq, rank).
    */
   private def ringExpand(
       queries: DataFrame,
@@ -202,14 +198,15 @@ object Knn {
       targets: DataFrame,
       tKey: String, tLat: String, tLon: String,
       res: Int, reliableCheckpoint: Boolean)(
+      key: Column,
       state: Seq[Column],
       fold: (DataFrame, DataFrame, Int) => DataFrame,
       emit: DataFrame => DataFrame): DataFrame = scope {
     val maxRings = (1L << res).toInt // ring > grid size is impossible
-    val tgt = targetLayer(targets, col(tKey).cast(LongType).as("__tk64"), tLat, tLon, res)
+    val tgt = targetLayer(targets, key.as("__tkey"), tLat, tLon, res)
 
     // score = −d² so the folds' (score desc, key asc) order is
-    // (dist asc, key asc) — the windowed path's ordering
+    // (dist asc, key asc)
     val negD2 = {
       val dx = col("__tlon") - col("__qlon")
       val dy = col("__tlat") - col("__qlat")
@@ -238,15 +235,15 @@ object Knn {
     while (lo <= maxRings && openCount > 0) {
       val r = bandEnd(lo, maxRings)
       // NaN-coordinate rows would sort as the BEST score in TopKByScore
-      // (Double.compare total order) but WORST in the windowed fallback's
-      // sort, and a +Inf distance would collide with the sentinel —
+      // (Double.compare total order) but WORST in sort_array, and a +Inf
+      // distance would collide with the sentinel —
       // exclude every non-finite distance outright so all paths share
       // one defined semantic: such candidates never rank
       val cand = open
         .select(col("__qkey"), col("__qlat"), col("__qlon"),
           cell_disk_band(cell_id(col("__qlat"), col("__qlon"), res), lit(lo), lit(r)).as("__cell"))
         .join(tgt, col("__cell") === col("__tcell"))
-        .select(col("__qkey"), col("__qlat"), col("__qlon"), negD2, col("__tk64"))
+        .select(col("__qkey"), col("__qlat"), col("__qlon"), negD2, col("__tkey"))
         .where(!isnan(col("__score")) && col("__score") =!= lit(SentinelScore))
       val obs = org.apache.spark.sql.Observation(s"__knn_open_${r}_${System.nanoTime()}")
       val aggd = materialize(fold(open, cand, r)
@@ -262,11 +259,12 @@ object Knn {
     else {
       // every round's finished queries, plus whatever the final round left
       // open (target table smaller than k, or grid exhausted — emit of the
-      // WHOLE last frame covers both its done and its open rows)
+      // WHOLE last frame covers both its done and its open rows); the
+      // cast is the identity for a key the path kept in its own type
       val result0 = (rounds.init.map(a => emit(a.where(col("__done"))))
         :+ emit(rounds.last)).reduce(_.union(_))
       result0.select(
-        col("__qkey").as(qKey), col("__tk64").cast(targets.schema(tKey).dataType).as(tKey),
+        col("__qkey").as(qKey), col("__tkey").cast(targets.schema(tKey).dataType).as(tKey),
         col("dist_sq"), col("rank"))
     }
   }
@@ -274,8 +272,8 @@ object Knn {
   /** Sorted k-slot buffer `__tk` (scores desc, keys) → one row per real
    * slot, rank = slot position (sentinel slots are dropped). */
   private def emitSlots(df: DataFrame): DataFrame =
-    TopK.explodeSlots(df, Seq("__qkey"), "__tk", "__tk64", "__score", dropSentinels = true)
-      .select(col("__qkey"), col("__tk64"), (-col("__score")).as("dist_sq"), col("rank"))
+    TopK.explodeSlots(df, Seq("__qkey"), "__tk", "__tkey", "__score", dropSentinels = true)
+      .select(col("__qkey"), col("__tkey"), (-col("__score")).as("dist_sq"), col("rank"))
 
   /**
    * k = 1 (nearest-neighbor join, the most common call) — the fully
@@ -301,30 +299,31 @@ object Knn {
       tKey: String, tLat: String, tLon: String,
       res: Int, reliableCheckpoint: Boolean): DataFrame =
     ringExpand(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, res, reliableCheckpoint)(
+      key = col(tKey).cast(LongType),
       // open carries the best-so-far candidate inline; sentinel = no real
       // candidate yet (real scores are finite: NaN/±Inf filtered)
-      state = Seq(lit(SentinelScore).as("__score"), lit(Long.MinValue).as("__tk64")),
+      state = Seq(lit(SentinelScore).as("__score"), lit(Long.MinValue).as("__tkey")),
       fold = (open, cand, r) => {
         // ONE fused span up to the partial aggregate: no union, no sentinel
         val roundBest = cand.groupBy("__qkey")
-          .agg(TopKByScore.best(col("__score"), col("__tk64")).as("__new"))
+          .agg(TopKByScore.best(col("__score"), col("__tkey")).as("__new"))
         val newS = col("__new.best_score")
         val newK = col("__new.best_key")
         val bs2 = when(col("__new").isNull, col("__score"))
           .when(newS > col("__score"), newS)
           .otherwise(col("__score"))
-        val bk2 = when(col("__new").isNull, col("__tk64"))
+        val bk2 = when(col("__new").isNull, col("__tkey"))
           .when(newS > col("__score"), newK)
-          .when(newS === col("__score"), least(col("__tk64"), newK))
-          .otherwise(col("__tk64"))
+          .when(newS === col("__score"), least(col("__tkey"), newK))
+          .otherwise(col("__tkey"))
         open
           .join(roundBest, Seq("__qkey"), "left_outer")
           .select(col("__qkey"), col("__qlat"), col("__qlon"),
-            bs2.as("__score"), bk2.as("__tk64"))
+            bs2.as("__score"), bk2.as("__tkey"))
           .withColumn("__done", col("__score") =!= lit(SentinelScore) &&
             -col("__score") <= cell_disk_bound(col("__qlat"), col("__qlon"), res, lit(r)))
       },
-      emit = _.select(col("__qkey"), col("__tk64"),
+      emit = _.select(col("__qkey"), col("__tkey"),
           (-col("__score")).as("dist_sq"), lit(1).as("rank"))
         .where(col("dist_sq") =!= lit(Double.PositiveInfinity)))
 
@@ -363,6 +362,7 @@ object Knn {
       tKey: String, tLat: String, tLon: String,
       k: Int, res: Int, reliableCheckpoint: Boolean): DataFrame =
     ringExpand(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, res, reliableCheckpoint)(
+      key = col(tKey).cast(LongType),
       // open carries the sorted top-k-so-far as a struct of two k-arrays
       // (scores desc, keys); all-sentinel = no real candidates yet
       state = Seq(struct(
@@ -371,7 +371,7 @@ object Knn {
       fold = (open, cand, r) => {
         // ONE fused span up to the partial aggregate: no union, no sentinel
         val roundK = cand.groupBy("__qkey")
-          .agg(TopKByScore.topKSlots(k)(col("__score"), col("__tk64")).as("__new"))
+          .agg(TopKByScore.topKSlots(k)(col("__score"), col("__tkey")).as("__new"))
         // narrow fold: explode carried + fresh buffers to ≤ 2k rows/query,
         // re-aggregate; max() recovers the coordinates (unique per qkey,
         // present exactly once — on the carried side)
@@ -383,12 +383,12 @@ object Knn {
             explode(arrays_zip(
               col(s"$buf.scores").as("s"), col(s"$buf.keys").as("t"))).as("__p"))
             .select(col("__qkey"), col("__qlat"), col("__qlon"),
-              col("__p.s").as("__score"), col("__p.t").as("__tk64"))
+              col("__p.s").as("__score"), col("__p.t").as("__tkey"))
         val merged = slotRows(open, "__tk", withCoords = true)
           .union(slotRows(roundK, "__new", withCoords = false))
           .groupBy("__qkey")
           .agg(
-            TopKByScore.topKSlots(k)(col("__score"), col("__tk64")).as("__tk"),
+            TopKByScore.topKSlots(k)(col("__score"), col("__tkey")).as("__tk"),
             max(col("__qlat")).as("__qlat"), max(col("__qlon")).as("__qlon"))
         // done ⇔ buffer full (kth slot non-sentinel) and the kth distance
         // beats the ring-r bound — nothing outside ring r can improve it
@@ -410,6 +410,7 @@ object Knn {
       tKey: String, tLat: String, tLon: String,
       k: Int, res: Int, reliableCheckpoint: Boolean): DataFrame =
     ringExpand(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, res, reliableCheckpoint)(
+      key = col(tKey).cast(LongType),
       // round 0's open set carries no buffer; later rounds carry the
       // aggregate's `__tk` of their still-open queries
       state = Nil,
@@ -418,16 +419,16 @@ object Knn {
         val carried =
           if (!open.columns.contains("__tk")) cand
           else TopK.explodeSlots(open, Seq("__qkey", "__qlat", "__qlon"), "__tk",
-              "__tk64", "__score", dropSentinels = true)
-            .select("__qkey", "__qlat", "__qlon", "__score", "__tk64")
+              "__tkey", "__score", dropSentinels = true)
+            .select("__qkey", "__qlat", "__qlon", "__score", "__tkey")
             .union(cand)
         val seed = open.select(col("__qkey"), col("__qlat"), col("__qlon"),
-          lit(SentinelScore).as("__score"), lit(Long.MinValue).as("__tk64"))
+          lit(SentinelScore).as("__score"), lit(Long.MinValue).as("__tkey"))
         // the aggregate row carries everything the round needs: the top-k
         // buffer, the kth distance, and the ring-bound done-test
         carried.union(seed)
           .groupBy("__qkey", "__qlat", "__qlon")
-          .agg(TopKByScore.topK(k)(col("__score"), col("__tk64")).as("__tk"))
+          .agg(TopKByScore.topK(k)(col("__score"), col("__tkey")).as("__tk"))
           .withColumn("__done",
             col("__tk.n") === k &&
               -element_at(col("__tk.scores"), col("__tk.n")) <=
@@ -435,88 +436,42 @@ object Knn {
       },
       emit = emitSlots)
 
-  /** Windowed fallback for non-integral target keys (TopKBuf carries long
-   * keys). Same ordering contract; shuffles every candidate row. Its state
-   * is up to k candidate rows per query rather than one row, so it keeps
-   * its own round body over the shared target layer and band schedule. */
-  private[operators] def applyWindowed(
+  /**
+   * Any target-key type — the path for non-integral keys, which the
+   * BIGINT-keyed aggregates cannot carry. The key keeps its own type; the
+   * per-query state `__best` is the sorted array<struct<d, t>> of the best
+   * k so far, empty at the start. Each round ranks the fresh candidates
+   * per query with `sort_array(collect_list)` and merges them into the
+   * carried array by a left-outer join against the open set, which also
+   * carries queries whose band held no targets. `sort_array` over (d, t)
+   * is the (dist asc, key asc) order of every other path.
+   */
+  private[operators] def applyAnyKey(
       queries: DataFrame,
       qKey: String, qLat: String, qLon: String,
       targets: DataFrame,
       tKey: String, tLat: String, tLon: String,
-      k: Int, res: Int, reliableCheckpoint: Boolean): DataFrame = scope {
-    val maxRings = (1L << res).toInt // ring > grid size is impossible
-    val tgt = targetLayer(targets, col(tKey).as("__tkey"), tLat, tLon, res)
-
-    var unresolved = materialize(queries.select(
-      col(qKey).as("__qkey"), col(qLat).as("__qlat"), col(qLon).as("__qlon"))
-      .withColumn("__qcell", cell_id(col("__qlat"), col("__qlon"), res)),
-      reliable = reliableCheckpoint)
-
-    val d2 = {
-      val dx = col("__tlon") - col("__qlon")
-      val dy = col("__tlat") - col("__qlat")
-      (dx * dx + dy * dy).as("dist_sq")
-    }
-    val wTopK = Window.partitionBy("__qkey").orderBy(col("dist_sq"), col("__tkey"))
-
-    var acc: DataFrame = null // accumulated top-k candidates of unresolved queries
-    // per-round finished rows stay LAZY projections over that round's
-    // checkpointed topk (matching ringExpand's rounds discipline) —
-    // re-checkpointing out.union(finished) every round would rewrite
-    // O(rounds × finished) rows for nothing. The blocks back the result
-    // (graft.core.Checkpoints).
-    val finishedRounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var lo = 0
-    while (lo <= maxRings && !unresolved.isEmpty) {
-      val r = bandEnd(lo, maxRings) // band upper radius (inclusive), used in the bound
-      val ringCells = unresolved.select(
-        col("__qkey"), col("__qlat"), col("__qlon"),
-        cell_disk_band(col("__qcell"), lit(lo), lit(r)).as("__cell"))
-      val cand = ringCells.join(tgt, col("__cell") === col("__tcell"))
-        .select(col("__qkey"), col("__qlat"), col("__qlon"), col("__tkey"), d2)
-        .where(!isnan(col("dist_sq")) && // same exclusion as the aggregate paths
-          col("dist_sq") =!= lit(Double.PositiveInfinity))
-      val all = if (acc == null) cand else acc.union(cand)
-      // keep only top-k per query (bounded state; disjoint rings → no dups)
-      val topk = materialize(all
-        .withColumn("rank", row_number().over(wTopK))
-        .where(col("rank") <= k), reliable = reliableCheckpoint)
-
-      // a query is done when it has k candidates and the kth beats the
-      // ring-r bound (nothing beyond ring r can improve the top-k)
-      val kth = topk.groupBy("__qkey", "__qlat", "__qlon")
-        .agg(count(lit(1)).as("__n"), max("dist_sq").as("__kth"))
-        .withColumn("__bound", cell_disk_bound(col("__qlat"), col("__qlon"), res, lit(r)))
-      val doneKeys = kth
-        .where(col("__n") === k && col("__kth") <= col("__bound"))
-        .select("__qkey")
-      finishedRounds += topk.join(doneKeys, "__qkey")
-        .select(col("__qkey"), col("__tkey"), col("dist_sq"), col("rank"))
-      val stillOpen = materialize(unresolved.join(doneKeys, Seq("__qkey"), "left_anti"),
-        reliable = reliableCheckpoint)
-      // the superseded open set is referenced by nothing lazy (finished and
-      // acc derive from topk; stillOpen is eager) — release its blocks now
-      org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(unresolved)
-      unresolved = stillOpen
-      acc = topk.join(doneKeys, Seq("__qkey"), "left_anti")
-        .select("__qkey", "__qlat", "__qlon", "__tkey", "dist_sq")
-      lo = r + 1
-    }
-    if (finishedRounds.isEmpty && acc == null) // zero rounds: empty query set
-      emptyResult(queries, qKey, targets, tKey)
-    else {
-      // queries never resolved (target table smaller than k, or grid
-      // exhausted): emit what they have
-      val tail =
-        if (acc == null) Nil
-        else List(acc
-          .withColumn("rank", row_number().over(wTopK))
-          .select(col("__qkey"), col("__tkey"), col("dist_sq"), col("rank")))
-      val result0 = (finishedRounds.toList ++ tail).reduce(_.union(_))
-      result0
-        .withColumnRenamed("__qkey", qKey)
-        .withColumnRenamed("__tkey", tKey)
-    }
+      k: Int, res: Int, reliableCheckpoint: Boolean): DataFrame = {
+    def firstK(pairs: Column): Column = slice(sort_array(pairs), 1, k)
+    val best = ArrayType(StructType(Seq(
+      StructField("d", DoubleType), StructField("t", targets.schema(tKey).dataType))))
+    ringExpand(queries, qKey, qLat, qLon, targets, tKey, tLat, tLon, res, reliableCheckpoint)(
+      key = col(tKey),
+      state = Seq(array().cast(best).as("__best")),
+      fold = (open, cand, r) => {
+        val fresh = cand.groupBy("__qkey").agg(firstK(collect_list(
+          struct((-col("__score")).as("d"), col("__tkey").as("t")))).as("__new"))
+        open
+          .join(fresh, Seq("__qkey"), "left_outer")
+          .select(col("__qkey"), col("__qlat"), col("__qlon"),
+            when(col("__new").isNull, col("__best"))
+              .otherwise(firstK(concat(col("__best"), col("__new")))).as("__best"))
+          .withColumn("__done", size(col("__best")) === k &&
+            element_at(col("__best"), k).getField("d") <=
+              cell_disk_bound(col("__qlat"), col("__qlon"), res, lit(r)))
+      },
+      emit = _.select(col("__qkey"), posexplode(col("__best")).as(Seq("__pos", "__b")))
+        .select(col("__qkey"), col("__b.t").as("__tkey"), col("__b.d").as("dist_sq"),
+          (col("__pos") + 1).as("rank")))
   }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
 import graft.sources.Fixtures
 
-class EngineSpec extends AnyFunSuite {
+class EngineSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
@@ -149,7 +149,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("EngineConfig YAML layer: conf > explicit > yaml > defaults") {
-    val yaml = java.nio.file.Files.createTempFile("graft_cfg", ".yaml")
+    val yaml = java.nio.file.Paths.get(tempDir("graft_cfg"), "engine.yaml")
     java.nio.file.Files.write(yaml,
       """# engine config
         |security:
@@ -189,7 +189,7 @@ class EngineSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSet
     assert(caps == Set("link.href", "link.text"))
 
-    val root = java.nio.file.Files.createTempDirectory("graft_cat").toString
+    val root = tempDir("graft_cat")
     graft.snap.SnapshotCatalog.resumableRun(spark,
       pages.select("url", "lang"), "url", 2, root, "tA")(identity)
     graft.snap.SnapshotCatalog.resumableRun(spark,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
 
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
@@ -183,7 +183,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("incremental screen: first wave self-dedups, later waves match the committed corpus only") {
     import graft.snap.SnapshotCatalog
-    val root = java.nio.file.Files.createTempDirectory("graft_inc").toString
+    val root = tempDir("graft_inc")
     val textA = "the quick brown fox jumps over the lazy dog again and again"
     val textB = "completely different content about spark shuffles and parquet files"
     // wave 0 (corpus bootstrap): 20 dups 10 (identical), 30 unique
@@ -208,7 +208,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("incremental screen: near-dup (not identical) text crosses the agreement threshold") {
-    val root = java.nio.file.Files.createTempDirectory("graft_inc2").toString
+    val root = tempDir("graft_inc2")
     val base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
     decide(Seq(100L -> base), root, wave = 0)
     // one word changed at the tail: most shingles (and so most minhashes)
@@ -228,7 +228,7 @@ class DedupSpec extends AnyFunSuite {
     // read the agreement as 2m >= minAgree and falsely flag a dup that the
     // original run kept. m is measured from the deterministic signatures,
     // so the threshold placement is exact, not probabilistic.
-    val root = java.nio.file.Files.createTempDirectory("graft_inc4").toString
+    val root = tempDir("graft_inc4")
     val tA = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     val tB = "alpha bravo charlie delta echo november oscar papa quebec romeo"
     val sigs = Dedup.minhashLong(
@@ -253,7 +253,7 @@ class DedupSpec extends AnyFunSuite {
     // with an empty prior table, the screen's keep set must equal
     // dropKeys over minhash pairs at the same effective setting when all
     // matches are exact duplicates (agreement = 8/8 ⇔ jaccard 1.0)
-    val root = java.nio.file.Files.createTempDirectory("graft_inc3").toString
+    val root = tempDir("graft_inc3")
     // per-group texts are fully disjoint (no shared shingles), so the
     // 8/8-agreement estimate and jaccard-1.0 verification coincide
     val rows = (0L until 40L).map(i =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
 
-class GraphSpec extends AnyFunSuite {
+class GraphSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
@@ -80,7 +80,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("resumable equals in-memory, resumes a shorter run, reruns commit nothing") {
     import graft.snap.SnapshotCatalog
-    val root = java.nio.file.Files.createTempDirectory("graft_pr").toString
+    val root = tempDir("graft_pr")
     // a "crashed" run that only got through iteration 2
     assert(runResumable(web, 2, root) == run(web, 2))
     val after2 = SnapshotCatalog.currentManifest(root, "ranks").get
@@ -104,7 +104,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("resumable carries per-iteration lineage counters") {
     import graft.snap.SnapshotCatalog
-    val root = java.nio.file.Files.createTempDirectory("graft_pr2").toString
+    val root = tempDir("graft_pr2")
     runResumable(triangle, 2, root)
     val lin = SnapshotCatalog.lineage(spark, root, "ranks")
     // 3 waves (iterations 0-2), each with >= 1 partition row and 3 output rows

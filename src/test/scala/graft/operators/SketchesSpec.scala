@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
 
-class SketchesSpec extends AnyFunSuite {
+class SketchesSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
@@ -114,7 +114,7 @@ class SketchesSpec extends AnyFunSuite {
    * rows, each with arbitrary bytes as a binary column — written to
    * parquet so the projection runs in a scan stage, not folded on the
    * driver. */
-  private lazy val kernelInput: org.apache.spark.sql.DataFrame = {
+  private def kernelInput(): org.apache.spark.sql.DataFrame = {
     val rnd = new scala.util.Random(20260)
     val points = "abcXYZ019 -_:/?&éüßø€✓中文🙂".codePoints().toArray
     def str(): String = {
@@ -126,7 +126,7 @@ class SketchesSpec extends AnyFunSuite {
       (Some("ünïcode ✓"), Some(Array[Byte](-1, 0, 127, -128))),
       (Some("x" * 64), Some(Array.fill[Byte](64)(7))), (Some("y" * 65), Some(Array.fill[Byte](200)(-3)))) ++
       (0 until 2000).map(_ => (Some(str()), Some(Array.fill(rnd.nextInt(150))(rnd.nextInt(256).toByte))))
-    val path = java.nio.file.Files.createTempDirectory("graft_md5").resolve("in").toString
+    val path = s"${tempDir("graft_md5")}/in"
     rows.toDF("s", "b").write.parquet(path)
     spark.read.parquet(path)
   }
@@ -141,7 +141,7 @@ class SketchesSpec extends AnyFunSuite {
     }
   }
 
-  private def assertKernelMatchesSpark(): Unit = {
+  private def assertKernelMatchesSpark(kernelInput: org.apache.spark.sql.DataFrame): Unit = {
     for (hexChars <- Seq(8, 13); c <- Seq("s", "b")) {
       val mismatches = kernelInput.select(
           graft.functions.md5_prefix(col(c), hexChars * 4).as("got"),
@@ -153,10 +153,11 @@ class SketchesSpec extends AnyFunSuite {
   }
 
   test("md5_prefix equals Spark's md5 -> substring -> conv, codegen and interpreted") {
-    assertKernelMatchesSpark()
+    val input = kernelInput()
+    assertKernelMatchesSpark(input)
     withConfs("spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
-      assertKernelMatchesSpark()
+      assertKernelMatchesSpark(input)
     }
   }
 

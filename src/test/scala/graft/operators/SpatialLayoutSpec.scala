@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
 import graft.geo.CellIndex
 
-class SpatialLayoutSpec extends AnyFunSuite {
+class SpatialLayoutSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
@@ -18,7 +18,7 @@ class SpatialLayoutSpec extends AnyFunSuite {
     ((pmod(col("id") * 104729, lit(36000)) - 18000).cast("double") / 100.0).as("lon"))
 
   private def freshLayout(): String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val root = tempDir("graft_layout")
     SpatialLayout.writeClustered(points, "lat", "lon", res, root, partitions = 8)
     root
   }

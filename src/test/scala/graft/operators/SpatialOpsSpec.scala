@@ -7,7 +7,7 @@ import graft.functions.SparkTestSession
 import graft.geo.{CellIndex, Geometry}
 import graft.sources.Fixtures
 
-class SpatialOpsSpec extends AnyFunSuite {
+class SpatialOpsSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
@@ -30,6 +30,11 @@ class SpatialOpsSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructField("ring",
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)),
       org.apache.spark.sql.types.StructField("name", org.apache.spark.sql.types.StringType))))
+
+  /** `targets` with its integral `tid` as a `%06d` string: lexical order
+   * equals numeric order, so ties break alike on either key type. */
+  private def zeroPadded(targets: org.apache.spark.sql.DataFrame) =
+    targets.withColumn("tid", format_string("%06d", col("tid")))
 
   private lazy val bruteForcePairs: Set[(Long, Int, Long)] =
     (for {
@@ -136,20 +141,24 @@ class SpatialOpsSpec extends AnyFunSuite {
       val (cx, cy) = Geometry.vertexCentroid(p.ring)
       (p.polygon_id, cy, cx)
     }.toDF("tid", "tlat", "tlon")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_ckpt")
     spark.sparkContext.setCheckpointDir(dir)
-    val local = Knn(queries, "qid", "lat", "lon", centroids, "tid", "tlat", "tlon", 3, res = 4)
-      .select("qid", "tid", "rank").as[(Long, Long, Int)].collect().toSet
-    val reliable = Knn(queries, "qid", "lat", "lon", centroids, "tid", "tlat", "tlon", 3, res = 4,
-      reliableCheckpoint = true)
-      .select("qid", "tid", "rank").as[(Long, Long, Int)].collect().toSet
-    assert(local == reliable)
+    // the same targets under zero-padded string keys take the any-key fold
+    for (targets <- Seq(centroids, zeroPadded(centroids))) {
+      def rows(reliable: Boolean) =
+        Knn(queries, "qid", "lat", "lon", targets, "tid", "tlat", "tlon", 3, res = 4,
+          reliableCheckpoint = reliable)
+          .select(col("qid"), col("tid").cast("long"), col("dist_sq"), col("rank"))
+          .as[(Long, Long, Double, Int)].collect().toSet
+      val local = rows(reliable = false)
+      assert(local.size == 3 * 40 && rows(reliable = true) == local)
+    }
   }
 
   test("kNN k=1 declarative path equals brute force and the windowed path") {
     // k = 1 takes the MaxScoreMinKey declarative-aggregate branch (the
     // fully-codegen'd nearest-neighbor join); its row set must equal both
-    // the brute-force oracle and the string-key windowed fallback
+    // the brute-force oracle and the string-key any-key fold
     val queries = pts.take(150).map { case (pid, e, lat, lon) => (pid * 10 + e, lat, lon) }
       .toDF("qid", "lat", "lon")
     val centroids = polys.map { p =>
@@ -203,17 +212,18 @@ class SpatialOpsSpec extends AnyFunSuite {
   }
 
   test("kNN NaN-coordinate queries agree across k paths (emit nothing)") {
-    // a NaN coordinate makes every candidate distance NaN; all three
-    // integral-key paths filter non-finite distances identically, so the
-    // dirty query yields zero rows at every k while clean queries are
-    // unaffected (the ADVICE divergence concern, pinned as a spec)
+    // a NaN coordinate makes every candidate distance NaN; every path
+    // filters non-finite distances identically, so the dirty query yields
+    // zero rows at every k while clean queries are unaffected (the ADVICE
+    // divergence concern, pinned as a spec)
     val queries = Seq((1L, 0.0, 0.0), (2L, Double.NaN, 5.0)).toDF("qid", "lat", "lon")
     val targets = (0L until 12L).map(i => (i, (i % 4).toDouble, (i / 4).toDouble))
       .toDF("tid", "tlat", "tlon")
-    for (k <- Seq(1, 2, 3)) {
-      val rows = Knn(queries, "qid", "lat", "lon", targets, "tid", "tlat", "tlon",
+    for (tgts <- Seq(targets, zeroPadded(targets)); k <- Seq(1, 2, 3)) {
+      val rows = Knn(queries, "qid", "lat", "lon", tgts, "tid", "tlat", "tlon",
         k = k, res = 3)
-        .select("qid", "tid", "rank").as[(Long, Long, Int)].collect()
+        .select(col("qid"), col("tid").cast("long"), col("rank"))
+        .as[(Long, Long, Int)].collect()
       assert(rows.forall(_._1 == 1L), s"k=$k: NaN query must emit nothing")
       assert(rows.count(_._1 == 1L) == k, s"k=$k: clean query emits k rows")
     }
@@ -240,13 +250,12 @@ class SpatialOpsSpec extends AnyFunSuite {
 
   test("kNN query in a target-empty region survives candidate-less rounds") {
     // targets cluster near the origin; the far query's first disk bands
-    // hold no targets at res 5 (cells span ~5.6°), so its early aggregate
-    // rounds see only the sentinel — it must still resolve exactly
+    // hold no targets at res 5 (cells span ~5.6°), so its early rounds see
+    // no candidate (the aggregate paths only the sentinel) — it must still
+    // resolve exactly, under integral and string keys alike
     val queries = Seq((1L, 0.0, 0.0), (2L, 84.0, 179.0)).toDF("qid", "lat", "lon")
     val targets = (0L until 20L).map(i => (i, (i % 5).toDouble - 2.0, (i / 5).toDouble - 2.0))
       .toDF("tid", "tlat", "tlon")
-    val got = Knn(queries, "qid", "lat", "lon", targets, "tid", "tlat", "tlon", k = 3, res = 5)
-      .select("qid", "tid", "rank").as[(Long, Long, Int)].collect().toSet
     val tgtSeq = (0L until 20L).map(i => (i, (i % 5).toDouble - 2.0, (i / 5).toDouble - 2.0))
     val want = Seq((1L, 0.0, 0.0), (2L, 84.0, 179.0)).flatMap { case (qid, qlat, qlon) =>
       tgtSeq.map { case (tid, tlat, tlon) =>
@@ -255,7 +264,12 @@ class SpatialOpsSpec extends AnyFunSuite {
       }.sortBy(t => (t._2, t._1)).take(3).zipWithIndex
         .map { case ((tid, _), r) => (qid, tid, r + 1) }
     }.toSet
-    assert(got == want)
+    for (tgts <- Seq(targets, zeroPadded(targets))) {
+      val got = Knn(queries, "qid", "lat", "lon", tgts, "tid", "tlat", "tlon", k = 3, res = 5)
+        .select(col("qid"), col("tid").cast("long"), col("rank"))
+        .as[(Long, Long, Int)].collect().toSet
+      assert(got == want)
+    }
   }
 
   test("kNN with k larger than target count returns all targets") {
@@ -297,7 +311,8 @@ class SpatialOpsSpec extends AnyFunSuite {
     type Path = (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
       org.apache.spark.sql.DataFrame
     val k = 3 // more than the two targets
-    // nearest serves only k = 1; the others run at k = 3
+    // nearest serves only k = 1; the others run at k = 3; anyKey, the
+    // fold for non-integral keys, runs here on the BIGINT keys as they are
     val paths: Seq[(String, Path)] = Seq(
       "nearest" -> ((q, t) => Knn.applyNearest(q, "qid", "lat", "lon", t, "tid", "tlat", "tlon",
         res = 2, reliableCheckpoint = false)),
@@ -305,7 +320,7 @@ class SpatialOpsSpec extends AnyFunSuite {
         k, res = 2, reliableCheckpoint = false)),
       "agg" -> ((q, t) => Knn.applyAgg(q, "qid", "lat", "lon", t, "tid", "tlat", "tlon",
         k, res = 2, reliableCheckpoint = false)),
-      "windowed" -> ((q, t) => Knn.applyWindowed(q, "qid", "lat", "lon", t, "tid", "tlat", "tlon",
+      "anyKey" -> ((q, t) => Knn.applyAnyKey(q, "qid", "lat", "lon", t, "tid", "tlat", "tlon",
         k, res = 2, reliableCheckpoint = false)))
     for ((input, (q, t)) <- inputs) {
       val got = paths.map { case (name, path) =>
@@ -327,7 +342,7 @@ class SpatialOpsSpec extends AnyFunSuite {
       }.toSet
       assert(got("decl") == want, input)
       assert(got("agg") == want, input)
-      assert(got("windowed") == want, input)
+      assert(got("anyKey") == want, input)
       assert(got("nearest") == want.filter(_._4 == 1), input)
     }
   }

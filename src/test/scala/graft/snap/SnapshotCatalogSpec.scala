@@ -7,12 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
 import graft.operators.JobCount
 
-class SnapshotCatalogSpec extends AnyFunSuite {
+class SnapshotCatalogSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_snap").toString
+    tempDir("graft_snap")
 
   private def input = (0L until 1000L).map(i => (i, s"u$i", i % 7)).toDF("id", "url", "v")
 

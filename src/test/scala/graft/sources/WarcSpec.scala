@@ -7,12 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
 import graft.sources.Fixtures.mix
 
-class WarcSpec extends AnyFunSuite {
+class WarcSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
   test("WARC round-trip: byte-identical html through write → segment files → read") {
-    val dir = Files.createTempDirectory("graft_warc").toString
+    val dir = tempDir("graft_warc")
     val pages = Fixtures.pages(spark, 300, partitions = 4).toDF()
       .select("url", "warc_ts", "html")
     Warc.writePages(pages, dir)
@@ -30,9 +30,9 @@ class WarcSpec extends AnyFunSuite {
     // the CC front door: gzip segments land in a dir; the file-source
     // checkpoint discovers each once, pages flow through the same record
     // walk, and snapshotSink commits micro-batches as idempotent waves
-    val dir = Files.createTempDirectory("graft_warcs_in").toString
-    val root = Files.createTempDirectory("graft_warcs_tbl").toString
-    val ckpt = Files.createTempDirectory("graft_warcs_ck").toString
+    val dir = tempDir("graft_warcs_in")
+    val root = tempDir("graft_warcs_tbl")
+    val ckpt = tempDir("graft_warcs_ck")
     val pages = Fixtures.pages(spark, 120, partitions = 3).toDF()
       .select("url", "warc_ts", "html")
     Warc.writePages(pages, dir, gzip = true)
@@ -61,7 +61,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("gzipped segments (per-record members, CC layout) round-trip identically") {
-    val dir = Files.createTempDirectory("graft_warcgz").toString
+    val dir = tempDir("graft_warcgz")
     val pages = Fixtures.pages(spark, 150, partitions = 3).toDF()
       .select("url", "warc_ts", "html")
     Warc.writePages(pages, dir, gzip = true)
@@ -78,7 +78,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("extraction over WARC-read pages equals extraction over the original table") {
-    val dir = Files.createTempDirectory("graft_warc2").toString
+    val dir = tempDir("graft_warc2")
     val pages = Fixtures.pages(spark, 120, partitions = 2).toDF()
     Warc.writePages(pages.select("url", "warc_ts", "html"), dir)
     def ents(df: org.apache.spark.sql.DataFrame) = df
@@ -149,7 +149,7 @@ class WarcSpec extends AnyFunSuite {
 
   test("indexPages + readRecordsAt: seek round-trip on plain and inflate round-trip on gz") {
     for (gz <- Seq(false, true)) {
-      val dir = Files.createTempDirectory(s"graft_cdx_$gz").toString
+      val dir = tempDir(s"graft_cdx_$gz")
       val pages = Fixtures.pages(spark, 120, partitions = 3).toDF()
         .select("url", "warc_ts", "html")
       Warc.writePages(pages, dir, gzip = gz)

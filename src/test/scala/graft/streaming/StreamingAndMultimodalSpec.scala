@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,7 +8,7 @@ import graft.operators.Multimodal
 import graft.snap.SnapshotSink
 import graft.sources.Fixtures
 
-class StreamingAndMultimodalSpec extends AnyFunSuite {
+class StreamingAndMultimodalSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
@@ -18,7 +17,7 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
     // it composes with readStream as a plain filter, and the streamed
     // subset is EXACTLY the batch subset (the decision is a pure function
     // of (key, salt), so micro-batch boundaries cannot change it)
-    val dir = Files.createTempDirectory("graft_mix_stream").toString
+    val dir = tempDir("graft_mix_stream")
     spark.range(0, 2000).select(
       col("id").as("doc_id"),
       concat(lit("src"), pmod(col("id"), lit(4)).cast("string")).as("source"))
@@ -48,7 +47,7 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
     // is a stateless CASE. Stages needing corpus-wide state (exact/near
     // dedup, caps) belong to the batch/wave path — incrementalMinhash is
     // their streaming-adjacent form.
-    val dir = Files.createTempDirectory("graft_curate_stream").toString
+    val dir = tempDir("graft_curate_stream")
     // en text with an id-bearing token in EVERY 4-gram window (positions
     // 1/5/8/12 of 15), so only a doc's own benchmark copy contaminates
     // it — a fully shared prefix would contaminate the whole corpus
@@ -102,7 +101,7 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
     // both ops are scan-side projections/filters (no state, no watermark),
     // so they compose with readStream directly and micro-batch boundaries
     // cannot change a single row
-    val dir = Files.createTempDirectory("graft_scrub_stream").toString
+    val dir = tempDir("graft_scrub_stream")
     spark.range(0, 500).select(
       col("id").as("doc_id"),
       concat(
@@ -131,9 +130,9 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
   }
 
   test("snapshotSink commits micro-batches as snapshot waves, exactly once") {
-    val dir = Files.createTempDirectory("graft_sink_in").toString
-    val root = Files.createTempDirectory("graft_sink_tbl").toString
-    val ckpt = Files.createTempDirectory("graft_sink_ck").toString
+    val dir = tempDir("graft_sink_in")
+    val root = tempDir("graft_sink_tbl")
+    val ckpt = tempDir("graft_sink_ck")
     Fixtures.pages(spark, 200, partitions = 4).toDF()
       .write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
@@ -172,21 +171,21 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
     // ownership guard — even when wave 0 is also the table's LATEST wave
     // (the single-batch AvailableNow case the old latest-wave heuristic
     // accepted as a replay)
-    val dir = Files.createTempDirectory("graft_sink_in3").toString
-    val root = Files.createTempDirectory("graft_sink_tbl3").toString
+    val dir = tempDir("graft_sink_in3")
+    val root = tempDir("graft_sink_tbl3")
     Fixtures.pages(spark, 40, partitions = 1).toDF() // 1 input file → 1 batch
       .write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     def transform(df: org.apache.spark.sql.DataFrame) =
       df.select(col("url"), length(col("html")).cast("long").as("html_len"))
-    val ckpt1 = Files.createTempDirectory("graft_sink_ck3a").toString
+    val ckpt1 = tempDir("graft_sink_ck3a")
     val q1 = SnapshotSink.snapshotSink(
         spark.readStream.schema(schema).parquet(dir), root, "t_own", ckpt1)(transform)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q1.awaitTermination()
     val waves = graft.snap.SnapshotCatalog.currentManifest(root, "t_own").get.completedWaves
     // a DIFFERENT (fresh) checkpoint over the same table must fail loudly
-    val ckpt2 = Files.createTempDirectory("graft_sink_ck3b").toString
+    val ckpt2 = tempDir("graft_sink_ck3b")
     val q2 = SnapshotSink.snapshotSink(
         spark.readStream.schema(schema).parquet(dir), root, "t_own", ckpt2)(transform)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
@@ -201,9 +200,9 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
   }
 
   test("snapshotSink refuses a table whose waves were written by a batch run") {
-    val dir = Files.createTempDirectory("graft_sink_in2").toString
-    val root = Files.createTempDirectory("graft_sink_tbl2").toString
-    val ckpt = Files.createTempDirectory("graft_sink_ck2").toString
+    val dir = tempDir("graft_sink_in2")
+    val root = tempDir("graft_sink_tbl2")
+    val ckpt = tempDir("graft_sink_ck2")
     Fixtures.pages(spark, 50, partitions = 2).toDF()
       .write.mode("overwrite").parquet(dir)
     // table pre-populated by a BATCH run: wave ids 0..1 already committed
