@@ -95,10 +95,9 @@ object BenchPipeline {
       val ents = pages.select(col("url"),
         graft.functions.extract_geo(col("html")).as(Seq("entity_idx", "source", "lat", "lon")))
         .persist()
-      // saltBuckets = 1: the polygon side broadcasts (no shuffle), so
-      // hot-cell skew cannot concentrate a partition — salting would only
-      // multiply the broadcast. Salt belongs to the shuffle-join regime
-      // (huge polygon layers); see SpatialJoin scaladoc.
+      // the polygon side broadcasts (no shuffle), so hot-cell skew cannot
+      // concentrate a partition; in the shuffle regime (huge polygon
+      // layers) AQE's skew split handles it, see SpatialJoin scaladoc.
       val joined = graft.operators.SpatialJoin(
         ents, polys, col("lat"), col("lon"), col("ring"), res = 8)
       val tiles = graft.operators.Tiler.raster(ents, "lat", "lon", zoom = 6)

@@ -1007,7 +1007,7 @@ object SparkEntry {
     // ("batch batch batch" contains "batch batch" twice)
     "q93_phrase_search" -> ((s, d) =>
       Retrieval.phraseCount(tbl(s, d, "documents"), "doc_id", "text",
-        Seq("batch", "batch"), positional = true)),
+        Seq("batch", "batch"))),
 
     // tokenizer-prep vocabulary: top-25 terms, deterministic under ties
     // (freq desc, term asc is a total order ⇒ the cut is reproducible)
@@ -1545,9 +1545,9 @@ object SparkEntry {
     }),
 
     "q44_spatial_join_salted" -> ((s, d) =>
-      // the shuffle/salt code path as a query (row set equals q23)
+      // q23's join under its own key (the same row set as q23)
       SpatialJoin(customerPoints(s, d), nationPolygons(s, d),
-        col("lat"), col("lon"), col("ring"), res = 6, saltBuckets = 4)
+        col("lat"), col("lon"), col("ring"), res = 6)
         .select("c_custkey", "n_nationkey")),
 
     "q45_json_extract" -> ((s, d) =>

@@ -57,9 +57,8 @@ object Engine {
       "path", "children_count")))
 
   /** Depth-capped node table with a `truncated` marker (get_ast max_depth
-   * + truncated flag, models/ast_cursor.py:123-126; default depth from
-   * EngineConfig.maxDepth ← reference language.default_max_depth,
-   * config.py:50). Reference parity: EVERY node sitting at the cap is
+   * + truncated flag, models/ast_cursor.py:123-126; the caller passes
+   * the cap). Reference parity: EVERY node sitting at the cap is
    * marked truncated — leaf or not — exactly as the reference flags any
    * max_depth node when children are requested. One pass, no self-join,
    * no second parse of the corpus. */

@@ -14,17 +14,13 @@ import org.apache.spark.sql.SparkSession
 final case class EngineConfig(
     /** reference security.max_file_size_mb = 5 (config.py:39) */
     maxFileSizeBytes: Long = 5L * 1024 * 1024,
-    /** reference max_results_default = 100 (config.py:61) */
-    maxResults: Int = 100,
-    /** reference language.default_max_depth = 5 (config.py:50) */
-    maxDepth: Int = 5,
     /** reference security.excluded_dirs analogue: url prefixes allowed in
      * (empty = everything) */
     allowedPrefixes: Seq[String] = Nil)
 
 object EngineConfig {
 
-  /** Conf-key prefix; e.g. `spark.graft.maxResults=50`. */
+  /** Conf-key prefix; e.g. `spark.graft.maxFileSizeBytes=1048576`. */
   val ConfPrefix = "spark.graft."
 
   /** Resolve the effective config: session conf overrides `explicit`
@@ -33,8 +29,6 @@ object EngineConfig {
     def get(k: String): Option[String] = spark.conf.getOption(ConfPrefix + k)
     EngineConfig(
       maxFileSizeBytes = get("maxFileSizeBytes").map(_.toLong).getOrElse(explicit.maxFileSizeBytes),
-      maxResults = get("maxResults").map(_.toInt).getOrElse(explicit.maxResults),
-      maxDepth = get("maxDepth").map(_.toInt).getOrElse(explicit.maxDepth),
       allowedPrefixes = get("allowedPrefixes")
         .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
         .getOrElse(explicit.allowedPrefixes))
@@ -49,8 +43,7 @@ object EngineConfig {
    * Unknown keys are ignored, like pydantic's default.
    *
    * Recognized keys (reference names): security.max_file_size_mb,
-   * max_results, language.default_max_depth, security.allowed_prefixes
-   * (comma-separated).
+   * security.allowed_prefixes (comma-separated).
    */
   def fromYaml(path: String, base: EngineConfig = EngineConfig()): EngineConfig = {
     val lines = new String(java.nio.file.Files.readAllBytes(
@@ -83,8 +76,6 @@ object EngineConfig {
       // size may be fractional ("5.0", "0.5") — parse as double, then bytes
       maxFileSizeBytes = kv.get("security.max_file_size_mb")
         .map(v => (v.toDouble * 1024 * 1024).toLong).getOrElse(base.maxFileSizeBytes),
-      maxResults = kv.get("max_results").map(_.toInt).getOrElse(base.maxResults),
-      maxDepth = kv.get("language.default_max_depth").map(_.toInt).getOrElse(base.maxDepth),
       allowedPrefixes = kv.get("security.allowed_prefixes")
         .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
         .getOrElse(base.allowedPrefixes))
@@ -103,8 +94,6 @@ object EngineConfig {
     }
     Map(
       "maxFileSizeBytes" -> layer("maxFileSizeBytes", r.maxFileSizeBytes, explicit.maxFileSizeBytes, d.maxFileSizeBytes),
-      "maxResults" -> layer("maxResults", r.maxResults, explicit.maxResults, d.maxResults),
-      "maxDepth" -> layer("maxDepth", r.maxDepth, explicit.maxDepth, d.maxDepth),
       "allowedPrefixes" -> layer("allowedPrefixes", r.allowedPrefixes.mkString(","), explicit.allowedPrefixes, d.allowedPrefixes))
   }
 }

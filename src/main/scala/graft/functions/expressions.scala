@@ -35,12 +35,28 @@ case class CellIdExpr(lat: Expression, lon: Expression, res: Expression)
   override def third: Expression = res
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = CellRes.check("cell_id", res)
   override protected def nullSafeEval(la: Any, lo: Any, r: Any): Any =
     CellIndex.latLonToCell(la.asInstanceOf[Double], lo.asInstanceOf[Double], r.asInstanceOf[Int])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (la, lo, r) => s"graft.geo.CellIndex.latLonToCell($la, $lo, $r)")
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
     copy(lat = f, lon = s, res = t)
+}
+
+/** Analysis-time check of a literal cell resolution: the cell layout
+ * holds `res` ∈ [0, CellIndex.MaxRes] (outside it the encoded id is
+ * garbage — res 30 spills into the res field, res 64 shifts to 0). A
+ * non-literal `res` is the caller's contract. */
+private[functions] object CellRes {
+  def check(fn: String, res: Expression): TypeCheckResult =
+    if (!res.foldable) TypeCheckResult.TypeCheckSuccess
+    else res.eval() match {
+      case r: Int if r < 0 || r > CellIndex.MaxRes =>
+        TypeCheckResult.TypeCheckFailure(
+          s"$fn res must be in [0, ${CellIndex.MaxRes}], got $r")
+      case _ => TypeCheckResult.TypeCheckSuccess
+    }
 }
 
 case class CellParentExpr(cell: Expression, parentRes: Expression) extends BinaryExpression {
@@ -469,6 +485,7 @@ case class CellCoverExpr(ring: Expression, res: Expression)
     extends BinaryExpression with Generator with CodegenFallback {
   override def left: Expression = ring
   override def right: Expression = res
+  override def checkInputDataTypes(): TypeCheckResult = CellRes.check("cell_cover", res)
   override def elementSchema: StructType =
     StructType(Seq(StructField("cover_cell", LongType, nullable = false)))
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {

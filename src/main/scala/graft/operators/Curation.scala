@@ -200,9 +200,9 @@ object Curation {
    * hash probe → partial-aggregated count, one corpus scan and one
    * narrow `(key, count)` shuffle, no corpus-side gram shuffle. The
    * broadcast hash set plays the role a Bloom filter would at this
-   * size (exact, and the probe side is already a hash lookup). For a
-   * benchmark too large to broadcast set `broadcastBenchmark = false`:
-   * both sides shuffle on the gram (plain hash join) — same rows.
+   * size (exact, and the probe side is already a hash lookup). The
+   * benchmark side is always broadcast: an eval set is config-sized by
+   * contract, the same precondition [[decontaminateFilter]] states.
    *
    * Grams are distinct per document on BOTH sides ([[TextAnalysis.ngramsOf]]),
    * so `count(*)` after the join is exactly "distinct shared grams", and a
@@ -213,15 +213,12 @@ object Curation {
       benchmark: DataFrame,
       keyCol: String,
       textCol: String,
-      n: Int,
-      broadcastBenchmark: Boolean = true): DataFrame = {
+      n: Int): DataFrame = {
     def grams(df: DataFrame, cols: Column*): DataFrame =
       df.withColumn("__ts", TextAnalysis.tokens(col(textCol)))
         .select(cols :+ explode(TextAnalysis.ngramsOf(col("__ts"), n)).as("__gram"): _*)
-    val bench = grams(benchmark).distinct()
-    val benchSide = if (broadcastBenchmark) broadcast(bench) else bench
     grams(corpus, col(keyCol))
-      .join(benchSide, "__gram")
+      .join(broadcast(grams(benchmark).distinct()), "__gram")
       .groupBy(keyCol)
       .agg(count(lit(1)).as("n_hits"))
   }

@@ -11,7 +11,7 @@ import graft.core.Checkpoints.{materialize, scope}
  * a first-class batch operator.
  *
  * Arithmetic contract — EXACT 64-bit integers end to end: ranks are
- * fixed-point (2^scaleBits = 1.0 mass), contributions divide by
+ * fixed-point (2^40 = 1.0 mass), contributions divide by
  * out-degree with integer division, the damping factor is the rational
  * 85/100 applied as `(85 · sum) div 100`. Long addition is associative
  * and commutative, so the per-node sums are bit-identical under ANY
@@ -36,22 +36,23 @@ import graft.core.Checkpoints.{materialize, scope}
  * iterative plans otherwise grow until the optimizer chokes (CLAUDE.md
  * gotcha), and the previous round's blocks release deterministically.
  *
- * Overflow headroom: total mass ≤ 2^scaleBits, so any per-node sum is
- * < 2^scaleBits and `85 · sum` needs scaleBits + 7 bits — scaleBits ≤ 40
- * leaves 16 spare bits.
+ * Overflow headroom: total mass ≤ 2^40, so any per-node sum is < 2^40
+ * and `85 · sum` needs 47 bits — 16 spare bits.
  */
 object Graph {
+
+  /** Fixed-point 1.0: total rank mass (see the overflow headroom above). */
+  private val Scale = 1L << 40
 
   /**
    * @param edges distinct directed edges are derived from (src, dst) —
    *              duplicates collapse (a page linking twice votes once,
    *              the Brin–Page convention)
    * @return (node, rank) for every node appearing as src or dst;
-   *         ranks in fixed-point 2^scaleBits units, BIGINT-exact
+   *         ranks in fixed-point 2^40 units, BIGINT-exact
    */
-  def pageRank(edges: DataFrame, src: String, dst: String, iterations: Int,
-      scaleBits: Int = 40): DataFrame = scope {
-    val (eWithDeg, nodes, base, r0) = prep(edges, src, dst, iterations, scaleBits)
+  def pageRank(edges: DataFrame, src: String, dst: String, iterations: Int): DataFrame = scope {
+    val (eWithDeg, nodes, base, r0) = prep(edges, src, dst, iterations)
     var rank = r0
     for (i <- 1 to iterations) {
       val next = materialize(step(rank, eWithDeg, nodes, base))
@@ -67,10 +68,8 @@ object Graph {
   /** Shared setup: distinct long edges carrying out-degree, the node set,
    * the per-iteration base mass and the uniform initial ranks. */
   private def prep(edges: DataFrame, src: String, dst: String,
-      iterations: Int, scaleBits: Int): (DataFrame, DataFrame, Long, DataFrame) = {
+      iterations: Int): (DataFrame, DataFrame, Long, DataFrame) = {
     require(iterations >= 0 && iterations <= 64, s"iterations in [0,64] (got $iterations)")
-    require(scaleBits >= 10 && scaleBits <= 40, s"scaleBits in [10,40] (got $scaleBits)")
-    val scale = 1L << scaleBits
     val e = materialize(edges
       .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
@@ -84,8 +83,8 @@ object Graph {
       .distinct())
     val n = nodes.count() // metadata-sized driver scalar (node count)
     require(n > 0, "pageRank needs at least one edge")
-    val base = (scale * 15L / 100L) / n
-    (eWithDeg, nodes, base, nodes.select(col("node"), lit(scale / n).as("rank")))
+    val base = (Scale * 15L / 100L) / n
+    (eWithDeg, nodes, base, nodes.select(col("node"), lit(Scale / n).as("rank")))
   }
 
   /** One exact power iteration: rank ⋈ edges on src, long-sum by dst,
@@ -127,11 +126,10 @@ object Graph {
    *         table (already durable — no caller-side checkpointing needed)
    */
   def pageRankResumable(edges: DataFrame, src: String, dst: String,
-      iterations: Int, root: String, table: String,
-      scaleBits: Int = 40): DataFrame = scope {
+      iterations: Int, root: String, table: String): DataFrame = scope {
     import graft.snap.SnapshotCatalog
     val spark = edges.sparkSession
-    val (eWithDeg, nodes, base, r0) = prep(edges, src, dst, iterations, scaleBits)
+    val (eWithDeg, nodes, base, r0) = prep(edges, src, dst, iterations)
     val done = SnapshotCatalog.currentManifest(root, table)
       .map(_.completedWaves.toSet).getOrElse(Set.empty)
     require(done.forall(_ <= iterations),

@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
  * linearly, not quadratically — the operator never plans a nested loop
  * (IntervalJoinSpec pins the plan shape). Hot bands (many points AND
  * many long intervals at one value range) are ordinary shuffle-join
- * skew: AQE's skew-join split handles it, exactly like the salted
- * spatial path.
+ * skew: AQE's skew-join split handles it, exactly as it does for the
+ * spatial join's hot cells.
  *
  * Nulls never match (dropped at source); `lo > hi` intervals are empty
  * by definition and dropped by the empty `sequence` guard (`sequence(a,

@@ -70,43 +70,28 @@ object Retrieval {
    * document containing the phrase (consecutive tokens, overlapping
    * occurrences counted — "b b b" contains "b b" twice).
    *
-   * `positional = true` is the index plan: postings are filtered to the
-   * phrase's terms AT THE SCAN (a literal IN — at web scale this probes
-   * Σ df(tᵢ) narrow rows out of the index, never the corpus), each term's
-   * positions align on `(doc, pos − offset)` via equi-joins, and the
-   * aligned starts count per doc. `(doc, start)` is unique per side (a
-   * term has one position row per occurrence), so the joins cannot
-   * amplify. `positional = false` is the one-off-query plan: count
-   * matching n-grams per row — zero shuffle beyond the final count, one
-   * corpus scan, no index required. Both return identical rows.
+   * Index plan: postings are filtered to the phrase's terms AT THE SCAN
+   * (a literal IN — at web scale this probes Σ df(tᵢ) narrow rows out of
+   * the index, never the corpus), each term's positions align on
+   * `(doc, pos − offset)` via equi-joins, and the aligned starts count
+   * per doc. `(doc, start)` is unique per side (a term has one position
+   * row per occurrence), so the joins cannot amplify.
    */
   def phraseCount(
       docs: DataFrame,
       keyCol: String,
       textCol: String,
-      phrase: Seq[String],
-      positional: Boolean = true): DataFrame = {
+      phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "phrase must have at least one term")
     require(phrase.forall(t => t.nonEmpty && !t.contains(" ")),
       s"phrase terms must be non-empty single tokens (got $phrase)")
-    if (positional) {
-      val posts = positionalPostings(docs, keyCol, textCol)
-        .where(col("term").isInCollection(phrase.distinct))
-      phrase.zipWithIndex.map { case (t, i) =>
-        posts.where(col("term") === t)
-          .select(col("doc_id"), (col("pos") - i).as("__start"))
-      }.reduce((a, b) => a.join(b, Seq("doc_id", "__start")))
-        .groupBy("doc_id").agg(count(lit(1)).as("n_occur"))
-    } else {
-      val m = phrase.length
-      // materialize tokens before the gram HOF (interpreted, no CSE —
-      // an inline split would re-split per element, the measured 10× trap)
-      val n = size(filter(TextAnalysis.gramsAllOf(col("__ts"), m),
-        g => g === lit(phrase.mkString(" ")))).cast("long")
-      docs.select(col(keyCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__ts"))
-        .select(col("doc_id"), n.as("n_occur"))
-        .where(col("n_occur") > 0)
-    }
+    val posts = positionalPostings(docs, keyCol, textCol)
+      .where(col("term").isInCollection(phrase.distinct))
+    phrase.zipWithIndex.map { case (t, i) =>
+      posts.where(col("term") === t)
+        .select(col("doc_id"), (col("pos") - i).as("__start"))
+    }.reduce((a, b) => a.join(b, Seq("doc_id", "__start")))
+      .groupBy("doc_id").agg(count(lit(1)).as("n_occur"))
   }
 
   /**

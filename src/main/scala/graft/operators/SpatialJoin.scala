@@ -26,20 +26,15 @@ import graft.functions.{cell_cover, cell_id, edge_index, point_in_polygon_indexe
  *
  * Scale design (10^12 points, SURVEY §7.4-2):
  *  - polygon layers are typically ≪ points: Spark's planner broadcasts the
- *    exploded cover automatically under the broadcast threshold; at larger
- *    covers AQE picks shuffle-hash and splits skewed partitions.
- *  - hot cells (capital-city skew): `saltBuckets > 1` appends a salt key:
- *    points get pmod(xxhash64(lat, lon), S), the cover side explodes
- *    0..S-1. The join key becomes (cell, salt) — a hot cell's points
- *    spread over S partitions at the cost of S× the (small) cover side.
- *    AQE skew-join handles residual imbalance. The salt is DETERMINISTIC
- *    in the row's coordinates (SURVEY §7.4-3): a nondeterministic source
- *    (row id, rand) feeding a shuffle key breaks under stage retry — the
- *    recomputed map task re-salts rows differently and the resubmitted
- *    shuffle can duplicate or drop them. Coordinate-identical rows share
- *    a salt (they spread S-fold only across distinct coordinates) — the
- *    price of retry safety; a genuinely single-coordinate hot spot needs
- *    a finer `res`, which separates it by construction.
+ *    exploded cover automatically under the broadcast threshold, and a
+ *    hot cell then costs nothing extra (no shuffle on the point side).
+ *  - hot cells (capital-city skew) in the shuffle regime: AQE's skew-join
+ *    split is the policy. It measures each shuffle partition and splits
+ *    one above the skew threshold across several tasks by its map
+ *    outputs, replicating the cover side for that partition only — the
+ *    partitioning follows the data it observes, so no caller-set salt
+ *    key is needed (SpatialOpsSpec pins `SortMergeJoin(skew=true)` and
+ *    the brute-force row set on the skewed fixture).
  *  - `res` trades cover size (4^res cells/polygon) against join
  *    selectivity (finer cells → fewer false pairs for the PIP to reject).
  */
@@ -49,7 +44,6 @@ object SpatialJoin {
    * @param points   any DataFrame with `latCol`/`lonCol` double columns
    * @param polygons any DataFrame with `ringCol`: array<double> [x,y,…]
    * @param res      blocking-cell resolution
-   * @param saltBuckets >1 enables salting for hot-cell skew
    * @return points × polygons pairs where the point is strictly inside;
    *         all point and polygon columns preserved.
    */
@@ -59,33 +53,13 @@ object SpatialJoin {
       latCol: Column,
       lonCol: Column,
       ringCol: Column,
-      res: Int,
-      saltBuckets: Int = 1): DataFrame = {
-    require(saltBuckets >= 1, "saltBuckets must be >= 1")
+      res: Int): DataFrame = {
     val pts = points.withColumn("__cell", cell_id(latCol, lonCol, res))
     // generator output column is named cover_cell by the expression schema
     val cover = polygons.withColumn("__pidx", edge_index(ringCol))
       .select(col("*"), cell_cover(ringCol, res).as("__cover_cell"))
-    val joined =
-      if (saltBuckets == 1) {
-        pts.join(cover, pts("__cell") === cover("__cover_cell"), "inner")
-      } else {
-        // salt = hash of the COORDINATES only (the columns the join key
-        // derives from): still content-deterministic and retry-safe, but
-        // a wide points frame doesn't pay to hash its payload columns per
-        // row, and payload types xxhash64 can't digest (MAP) don't fail
-        // the analysis. Identical coordinates share a salt — acceptable:
-        // they land in the same cell anyway, and true full-row duplicates
-        // were never spread either (the retry-safety trade-off).
-        val ptsS = pts.withColumn("__salt",
-          pmod(xxhash64(latCol, lonCol), lit(saltBuckets)).cast("int"))
-        val coverS = cover.withColumn("__salt",
-          explode(sequence(lit(0), lit(saltBuckets - 1))))
-        ptsS.join(coverS,
-          ptsS("__cell") === coverS("__cover_cell") && ptsS("__salt") === coverS("__salt"),
-          "inner")
-      }
-    joined.where(point_in_polygon_indexed(lonCol, latCol, ringCol, col("__pidx")))
-      .drop("__cell", "__cover_cell", "__salt", "__pidx")
+    pts.join(cover, pts("__cell") === cover("__cover_cell"), "inner")
+      .where(point_in_polygon_indexed(lonCol, latCol, ringCol, col("__pidx")))
+      .drop("__cell", "__cover_cell", "__pidx")
   }
 }

@@ -142,8 +142,7 @@ object SpatialLayout {
    */
   def joinPolygons(
       spark: SparkSession, path: String,
-      polygons: DataFrame, ringCol: org.apache.spark.sql.Column,
-      saltBuckets: Int = 1): DataFrame = {
+      polygons: DataFrame, ringCol: org.apache.spark.sql.Column): DataFrame = {
     val m = readMeta(spark, path)
     val cover = polygons.select(ringCol.as("__ring")).collect()
       .iterator
@@ -151,8 +150,7 @@ object SpatialLayout {
         r.getSeq[Double](0).toArray, m.res))
       .toSeq
     val pts = readCells(spark, path, cover)
-    SpatialJoin(pts, polygons, col(m.latCol), col(m.lonCol), ringCol, m.res,
-      saltBuckets = saltBuckets)
+    SpatialJoin(pts, polygons, col(m.latCol), col(m.lonCol), ringCol, m.res)
   }
 
   // ---- metadata (tiny key=value file, Hadoop FS so any scheme works) ----

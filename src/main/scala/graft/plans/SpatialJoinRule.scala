@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.LongType
 
 import graft.functions.{CellCoverExpr, CellIdExpr, PipRt, PointInPolygonExpr}
+import graft.geo.CellIndex
 
 /**
  * Optimizer rule (the SURVEY §7.3 "sugar Rule" stretch goal): rewrites a
@@ -41,9 +42,14 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
 
   val ResConfKey = "spark.graft.spatialJoin.res"
 
-  private def res: Int =
-    try conf.getConfString(ResConfKey, "7").toInt
-    catch { case _: NumberFormatException => 7 }
+  /** The conf's resolution; a value that is not an integer in
+   * [0, CellIndex.MaxRes] fails the query, naming the key. */
+  private def res: Int = {
+    val v = conf.getConfString(ResConfKey, "7")
+    v.trim.toIntOption.filter(r => r >= 0 && r <= CellIndex.MaxRes).getOrElse(
+      throw new IllegalArgumentException(
+        s"$ResConfKey must be an integer in [0, ${CellIndex.MaxRes}], got '$v'"))
+  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case j @ Join(left, right, joinType @ (Inner | Cross),

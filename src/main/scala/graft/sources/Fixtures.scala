@@ -11,8 +11,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
  * (reference: tests/test_symbol_extraction.py:24-120).
  *
  * Skew is designed in: `SkewFraction` of pages draw their first geo entity
- * from one capital-city cluster (FIXTURES.md F1) to exercise salting + AQE
- * skew handling (SURVEY §7.4-2).
+ * from one capital-city cluster (FIXTURES.md F1) to exercise AQE's skew
+ * handling (SURVEY §7.4-2).
  */
 object Fixtures {
   val Seed = 42L

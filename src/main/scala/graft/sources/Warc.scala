@@ -239,13 +239,9 @@ object Warc {
         val seg = if (path.endsWith(".gz")) gunzip(raw).getOrElse(Array.empty[Byte]) else raw
         parseSegmentEntries(seg).iterator
           .filter(_.record.header("WARC-Type").contains("response"))
-          .flatMap { e =>
-            for {
-              uri <- e.record.header("WARC-Target-URI")
-              ts <- e.record.header("WARC-Date").flatMap(d =>
-                scala.util.Try(java.sql.Timestamp.from(java.time.Instant.parse(d))).toOption)
-            } yield (uri, ts, path, e.offset, e.length, md5Hex(e.record.payload))
-          }
+          .flatMap(e => page(e.record).map { case (uri, ts, payload) =>
+            (uri, ts, path, e.offset, e.length, md5Hex(payload))
+          })
       }
       .toDF("url", "warc_ts", "segment", "offset", "length", "payload_md5")
   }
@@ -314,13 +310,7 @@ object Warc {
               stream.readFully(buf, 0, len.toInt)
               Some(buf)
             }
-          slice.toSeq.flatMap(parseSegment(_).headOption).flatMap { r =>
-            for {
-              uri <- r.header("WARC-Target-URI")
-              ts <- r.header("WARC-Date").flatMap(d =>
-                scala.util.Try(java.sql.Timestamp.from(java.time.Instant.parse(d))).toOption)
-            } yield (uri, ts, r.payload)
-          }
+          slice.flatMap(parseSegment(_).headOption).flatMap(page)
         }
         // close the final segment's stream once the iterator drains
         new Iterator[(String, java.sql.Timestamp, Array[Byte])] {
@@ -339,14 +329,19 @@ object Warc {
       else raw
     parseSegment(seg).iterator
       .filter(r => r.header("WARC-Type").contains("response"))
-      .flatMap { r =>
-        for {
-          uri <- r.header("WARC-Target-URI")
-          ts <- r.header("WARC-Date").flatMap(d =>
-            scala.util.Try(java.sql.Timestamp.from(java.time.Instant.parse(d))).toOption)
-        } yield (uri, ts, r.payload)
-      }
+      .flatMap(page)
   }
+
+  /** A record as one page row `(url, capture time, payload)`: its
+   * `WARC-Target-URI`, its `WARC-Date` parsed as an ISO-8601 instant, its
+   * payload bytes. None when either header is missing or the date does
+   * not parse — the record is skipped, like any malformed record. */
+  private def page(r: Record): Option[(String, java.sql.Timestamp, Array[Byte])] =
+    for {
+      uri <- r.header("WARC-Target-URI")
+      ts <- r.header("WARC-Date").flatMap(d =>
+        scala.util.Try(java.sql.Timestamp.from(java.time.Instant.parse(d))).toOption)
+    } yield (uri, ts, r.payload)
 
   /** Close-shield: lets a per-record GZIPOutputStream be close()d — the
    * only public way to release its native Deflater eagerly — without

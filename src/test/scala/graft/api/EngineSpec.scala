@@ -114,21 +114,22 @@ class EngineSpec extends AnyFunSuite with graft.TempDirs {
     assert(p == Seq("document", "html", "body", "h1"))
 
     // config precedence: session conf > explicit > defaults
-    val explicit = EngineConfig(maxResults = 7)
-    assert(EngineConfig.resolve(spark, explicit).maxResults == 7)
+    val explicit = EngineConfig(maxFileSizeBytes = 7L << 20)
+    assert(EngineConfig.resolve(spark, explicit).maxFileSizeBytes == 7L << 20)
     assert(EngineConfig.resolve(spark).maxFileSizeBytes == 5L * 1024 * 1024)
-    spark.conf.set("spark.graft.maxResults", "3")
+    assert(EngineConfig.resolve(spark).allowedPrefixes.isEmpty)
+    spark.conf.set("spark.graft.maxFileSizeBytes", (3L << 20).toString)
     spark.conf.set("spark.graft.allowedPrefixes", "https://site1.example/,https://site2.example/")
     try {
       val r = EngineConfig.resolve(spark, explicit)
-      assert(r.maxResults == 3 && r.maxDepth == 5)
+      assert(r.maxFileSizeBytes == 3L << 20)
       assert(r.allowedPrefixes == Seq("https://site1.example/", "https://site2.example/"))
       val gated = Engine.securityGate(pages, EngineConfig())
       assert(gated.count() ==
         pages.where(col("url").startsWith("https://site1.example/") ||
           col("url").startsWith("https://site2.example/")).count())
     } finally {
-      spark.conf.unset("spark.graft.maxResults")
+      spark.conf.unset("spark.graft.maxFileSizeBytes")
       spark.conf.unset("spark.graft.allowedPrefixes")
     }
   }
@@ -153,11 +154,9 @@ class EngineSpec extends AnyFunSuite with graft.TempDirs {
     java.nio.file.Files.write(yaml,
       """# engine config
         |security:
-        |  max_file_size_mb: 2.5
+        |  max_file_size_mb: 2.5   # trailing comment
         |  allowed_prefixes: "https://a.example/#frag, https://b.example/"
-        |max_results: 42   # trailing comment
-        |language:
-        |  default_max_depth: 7
+        |max_results: 42   # not a config key: ignored
         |cache:
         |  enabled: true   # unknown section key: ignored
         |""".stripMargin.getBytes("UTF-8"))
@@ -165,14 +164,23 @@ class EngineSpec extends AnyFunSuite with graft.TempDirs {
     // fractional mb parses; '#' inside a value is literal (only
     // whitespace-preceded '#' starts a comment)
     assert(fromY.maxFileSizeBytes == (2.5 * 1024 * 1024).toLong)
-    assert(fromY.maxResults == 42 && fromY.maxDepth == 7)
     assert(fromY.allowedPrefixes == Seq("https://a.example/#frag", "https://b.example/"))
+    // yaml overrides the `base` defaults it is layered on
+    val base = EngineConfig(maxFileSizeBytes = 1L, allowedPrefixes = Seq("https://base.example/"))
+    assert(EngineConfig.fromYaml(yaml.toString, base) == fromY)
     // explicit overrides yaml; session conf overrides both
-    val explicit = fromY.copy(maxResults = 5)
-    assert(EngineConfig.resolve(spark, explicit).maxResults == 5)
-    spark.conf.set("spark.graft.maxResults", "99")
-    try assert(EngineConfig.resolve(spark, explicit).maxResults == 99)
-    finally spark.conf.unset("spark.graft.maxResults")
+    val explicit = fromY.copy(maxFileSizeBytes = 5L)
+    assert(EngineConfig.resolve(spark, explicit).maxFileSizeBytes == 5L)
+    assert(EngineConfig.resolve(spark, explicit).allowedPrefixes == fromY.allowedPrefixes)
+    spark.conf.set("spark.graft.maxFileSizeBytes", "99")
+    spark.conf.set("spark.graft.allowedPrefixes", "https://c.example/")
+    try {
+      val r = EngineConfig.resolve(spark, explicit)
+      assert(r.maxFileSizeBytes == 99L && r.allowedPrefixes == Seq("https://c.example/"))
+    } finally {
+      spark.conf.unset("spark.graft.maxFileSizeBytes")
+      spark.conf.unset("spark.graft.allowedPrefixes")
+    }
   }
 
   test("metadata surface: templates, node types, table catalog, config report") {
@@ -198,12 +206,13 @@ class EngineSpec extends AnyFunSuite with graft.TempDirs {
     graft.snap.SnapshotCatalog.dropTable(root, "tA")
     assert(graft.snap.SnapshotCatalog.listTables(root) == Seq("tB"))
 
-    val rep = EngineConfig.describe(spark, EngineConfig(maxResults = 7))
-    assert(rep("maxResults") == ("7", "explicit"))
-    assert(rep("maxDepth") == ("5", "default"))
-    spark.conf.set("spark.graft.maxDepth", "9")
-    try assert(EngineConfig.describe(spark)("maxDepth") == ("9", "session-conf"))
-    finally spark.conf.unset("spark.graft.maxDepth")
+    val rep = EngineConfig.describe(spark, EngineConfig(maxFileSizeBytes = 7L))
+    assert(rep.keySet == Set("maxFileSizeBytes", "allowedPrefixes"))
+    assert(rep("maxFileSizeBytes") == ("7", "explicit"))
+    assert(rep("allowedPrefixes") == ("", "default"))
+    spark.conf.set("spark.graft.allowedPrefixes", "https://d.example/")
+    try assert(EngineConfig.describe(spark)("allowedPrefixes") == ("https://d.example/", "session-conf"))
+    finally spark.conf.unset("spark.graft.allowedPrefixes")
   }
 
   test("findSimilar containment top-k") {

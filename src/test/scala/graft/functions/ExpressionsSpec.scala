@@ -50,6 +50,25 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(plan.contains("*(1) Project") && plan.contains("cellidexpr"), plan)
     val sample = rangeDf.where($"id" === 999).select("cell").as[Long].head()
     assert(sample == CellIndex.latLonToCell(999 % 170 - 85.0, 999 % 360 - 180.0, 12))
+    // the resolution bounds: 0 and MaxRes encode; a literal res outside
+    // them fails analysis, for cell_id and cell_cover, Column and SQL form
+    // alike (encoded, res 30 spills into the res field, 64 maps every
+    // point to cell 0 and -1 to -1)
+    for (r <- Seq(0, CellIndex.MaxRes))
+      assert(df.select(cell_id($"lat", $"lon", r)).as[Long].head() ==
+        CellIndex.latLonToCell(52.52, 13.405, r))
+    graft.functions.registerAll(spark)
+    val ring = Seq(Seq(10.0, 10.0, 10.1, 10.0, 10.1, 10.1)).toDF("ring")
+    for (r <- Seq(30, 64, -1)) {
+      val errs = Seq(
+        intercept[org.apache.spark.sql.AnalysisException] {
+          df.select(cell_id($"lat", $"lon", r)).collect() },
+        intercept[org.apache.spark.sql.AnalysisException] {
+          spark.sql(s"SELECT cell_id(CAST(10 AS DOUBLE), CAST(179.99 AS DOUBLE), $r)").collect() },
+        intercept[org.apache.spark.sql.AnalysisException] {
+          ring.select(cell_cover($"ring", r)).collect() })
+      errs.foreach(e => assert(e.getMessage.contains(s"res must be in [0, ${CellIndex.MaxRes}], got $r"), e))
+    }
   }
 
   test("cell_parent/cell_center round trip in SQL and Column form") {

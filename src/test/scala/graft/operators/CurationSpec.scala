@@ -120,12 +120,9 @@ class CurationSpec extends AnyFunSuite {
     val corpusDf = corpus.toDF("doc_id", "text")
     val benchDf = bench.toDF("text")
     val want = bruteHits(corpus, bench, 3)
-    for (bcast <- Seq(true, false)) {
-      val got = Curation.decontaminate(corpusDf, benchDf, "doc_id", "text", 3,
-          broadcastBenchmark = bcast)
-        .as[(Long, Long)].collect().toMap
-      assert(got == want, s"broadcastBenchmark=$bcast")
-    }
+    val got = Curation.decontaminate(corpusDf, benchDf, "doc_id", "text", 3)
+      .as[(Long, Long)].collect().toMap
+    assert(got == want)
     assert(!want.contains(3L) && !want.contains(5L))
     assert(want(2L) == 1L) // distinct, not occurrences
   }

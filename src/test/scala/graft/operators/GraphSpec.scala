@@ -10,12 +10,11 @@ class GraphSpec extends AnyFunSuite with graft.TempDirs {
   import spark.implicits._
 
   /** Driver-side mirror of the exact integer contract. */
-  private def refPageRank(edges: Seq[(Long, Long)], iters: Int,
-      scaleBits: Int = 40): Map[Long, Long] = {
+  private def refPageRank(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
     val e = edges.distinct
     val nodes = (e.map(_._1) ++ e.map(_._2)).distinct.sorted
     val outdeg = e.groupBy(_._1).map { case (s, xs) => s -> xs.size.toLong }
-    val scale = 1L << scaleBits
+    val scale = 1L << 40
     val n = nodes.size.toLong
     val base = (scale * 15L / 100L) / n
     var rank = nodes.map(_ -> scale / n).toMap

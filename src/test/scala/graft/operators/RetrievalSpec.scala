@@ -86,7 +86,7 @@ class RetrievalSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("phraseCount: positional and scan paths match brute force, overlaps counted") {
+  test("phraseCount matches brute force, overlaps counted") {
     val corpus = Seq(
       0L -> "b b b b",             // "b b" occurs 3× (overlapping)
       1L -> "a b c a b c",         // "a b c" twice, "b c" twice
@@ -99,13 +99,9 @@ class RetrievalSpec extends AnyFunSuite {
           .count(_.sameElements(phrase)).toLong
       }.filter(_._2 > 0).toMap
     for (phrase <- Seq(Seq("b", "b"), Seq("a", "b", "c"), Seq("a", "b"), Seq("zz"))) {
-      val want = bruteP(phrase)
-      for (positional <- Seq(true, false)) {
-        val got = Retrieval.phraseCount(corpus.toDF("doc_id", "text"), "doc_id", "text",
-            phrase, positional)
-          .as[(Long, Long)].collect().toMap
-        assert(got == want, s"phrase=$phrase positional=$positional")
-      }
+      val got = Retrieval.phraseCount(corpus.toDF("doc_id", "text"), "doc_id", "text", phrase)
+        .as[(Long, Long)].collect().toMap
+      assert(got == bruteP(phrase), s"phrase=$phrase")
     }
     assert(bruteP(Seq("b", "b"))(0L) == 3L) // the overlap contract itself
   }

@@ -51,17 +51,10 @@ class SpatialOpsSpec extends AnyFunSuite with graft.TempDirs {
     assert(got == bruteForcePairs)
   }
 
-  test("spatial join row set equals brute-force oracle (salted, skewed input)") {
-    val got = SpatialJoin(ptsDf, polysDf, $"lat", $"lon", $"ring", res = 7, saltBuckets = 8)
-      .select("page_id", "entity_idx", "polygon_id")
-      .as[(Long, Int, Long)].collect().toSet
-    assert(got == bruteForcePairs)
-  }
-
   test("spatial join with the edge interval index gives identical rows") {
     // 256-vertex coastline rings carry their derived edge index (16 bands
     // of 16 edges), the 4-edge diamonds carry none; the coastline join
-    // equals brute force, broadcast and salted
+    // equals brute force
     val coast = Fixtures.coastPolygons(nPolys)
     val coastDf = ringsDf(coast)
     val want = (for {
@@ -74,8 +67,6 @@ class SpatialOpsSpec extends AnyFunSuite with graft.TempDirs {
         .as[(Long, Int, Long)].collect().toSet
     val joined = SpatialJoin(ptsDf, coastDf, $"lat", $"lon", $"ring", res = 7)
     assert(want.nonEmpty && rows(joined) == want)
-    assert(rows(SpatialJoin(ptsDf, coastDf, $"lat", $"lon", $"ring", res = 7,
-      saltBuckets = 4)) == want)
     val plan = joined.queryExecution.optimizedPlan.toString
     assert(plan.contains("polygon_y_index"), plan)
     // the index is the ring's: built for every coastline, for no diamond
@@ -90,20 +81,37 @@ class SpatialOpsSpec extends AnyFunSuite with graft.TempDirs {
     assert(got == bruteForcePairs)
   }
 
-  test("spatial join row set identical in the SHUFFLE-join regime (broadcast off, salted)") {
+  test("AQE skew split in the shuffle-join regime, brute-force rows") {
     // at 100 TB the polygon side can exceed the broadcast threshold; force
-    // the shuffle path and prove salting preserves the exact row set
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // the shuffle path and lower AQE's skew thresholds to this fixture's
+    // size, so the capital-city cell's partition counts as skewed
+    val confs = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1k",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
+      "spark.sql.shuffle.partitions" -> "16")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val got = SpatialJoin(ptsDf, polysDf, $"lat", $"lon", $"ring", res = 7, saltBuckets = 8)
+      // RDD-backed points: several map outputs for the split to cut along
+      val mapped = spark.createDataFrame(spark.sparkContext.parallelize(pts, 8))
+        .toDF("page_id", "entity_idx", "lat", "lon")
+      val joined = SpatialJoin(mapped, polysDf, $"lat", $"lon", $"ring", res = 7)
         .select("page_id", "entity_idx", "polygon_id")
-        .as[(Long, Int, Long)].collect().toSet
+      // collect THIS Dataset: its adaptive plan is the one that finalizes
+      val got = joined.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       assert(got == bruteForcePairs)
-      val plan = SpatialJoin(ptsDf, polysDf, $"lat", $"lon", $"ring", res = 7, saltBuckets = 8)
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin"), "expected a shuffle join in this regime")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastHashJoin"), plan)
+      assert(plan.contains("SortMergeJoin(skew=true)"), plan)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("skew cluster actually hits the skew polygon (fixture sanity)") {

@@ -145,6 +145,16 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
         .select("page_id", "entity_idx", "polygon_id")
         .as[(Long, Int, Long)].collect().toSet
       assert(got == want)
+      // a value that is not a resolution fails the query, naming the key
+      for (bad <- Seq("abc", "30")) {
+        spark.conf.set(SpatialJoinRule.ResConfKey, bad)
+        val e = intercept[Exception] {
+          ptsDf.join(polysDf, point_in_polygon($"lon", $"lat", $"ring")).collect()
+        }
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(msgs.exists(m => m != null && m.contains(SpatialJoinRule.ResConfKey) &&
+          m.contains(s"'$bad'")), e)
+      }
     } finally {
       spark.conf.unset(SpatialJoinRule.ResConfKey)
       spark.experimental.extraOptimizations =
