@@ -44,15 +44,13 @@ case class CellIdExpr(lat: Expression, lon: Expression, res: Expression)
     copy(lat = f, lon = s, res = t)
 }
 
-/** Analysis-time check of a literal cell resolution: the cell layout
- * holds `res` ∈ [0, CellIndex.MaxRes] (outside it the encoded id is
- * garbage — res 30 spills into the res field, res 64 shifts to 0). A
- * non-literal `res` is the caller's contract. */
+/** Analysis-time check of a literal cell resolution
+ * ([[CellIndex.validRes]]); a non-literal `res` is the caller's contract. */
 private[functions] object CellRes {
   def check(fn: String, res: Expression): TypeCheckResult =
     if (!res.foldable) TypeCheckResult.TypeCheckSuccess
     else res.eval() match {
-      case r: Int if r < 0 || r > CellIndex.MaxRes =>
+      case r: Int if !CellIndex.validRes(r) =>
         TypeCheckResult.TypeCheckFailure(
           s"$fn res must be in [0, ${CellIndex.MaxRes}], got $r")
       case _ => TypeCheckResult.TypeCheckSuccess

@@ -31,6 +31,10 @@ object CellIndex {
   private final val IxShift = 29
   private final val Mask29 = (1L << 29) - 1
 
+  /** The resolutions the layout holds: outside [0, MaxRes] an encoded id
+   * is garbage (res 30 spills into the res field, res 64 shifts to 0). */
+  def validRes(res: Int): Boolean = res >= 0 && res <= MaxRes
+
   /** Encode a point at `res`. Hot path — called per row per entity. */
   def latLonToCell(lat: Double, lon: Double, res: Int): Long = {
     val n = 1L << res

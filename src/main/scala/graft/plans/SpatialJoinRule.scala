@@ -46,7 +46,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
    * [0, CellIndex.MaxRes] fails the query, naming the key. */
   private def res: Int = {
     val v = conf.getConfString(ResConfKey, "7")
-    v.trim.toIntOption.filter(r => r >= 0 && r <= CellIndex.MaxRes).getOrElse(
+    v.trim.toIntOption.filter(CellIndex.validRes).getOrElse(
       throw new IllegalArgumentException(
         s"$ResConfKey must be an integer in [0, ${CellIndex.MaxRes}], got '$v'"))
   }
