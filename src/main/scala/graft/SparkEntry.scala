@@ -1034,8 +1034,8 @@ object SparkEntry {
           md5(col("clean_text")).as("clean_md5"))
     }),
 
-    // bloom-filter runtime join pruning: the broadcast bloom prefilters
-    // the big side BEFORE its shuffle; the exact semi-join kills false
+    // bloom-filter runtime join pruning: a scalar-subquery bloom filter
+    // prefilters the big side BEFORE its shuffle; the exact semi-join kills false
     // positives, so the result is bit-identical to the plain semi-join
     // (which IS the oracle)
     "q97_bloom_join" -> ((s, d) => {

@@ -1,5 +1,7 @@
 package graft.api
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -36,47 +38,23 @@ object EngineConfig {
 
   /**
    * Load the YAML layer (reference: load_config YAML files,
-   * config.py:64-96 — flat `section.key: value` semantics). Supported
-   * subset (hand-rolled; the offline sandbox has no YAML dependency,
-   * and the reference's config files are exactly this shape):
-   * two-level `section:` blocks with `key: value` scalars, `#` comments.
-   * Unknown keys are ignored, like pydantic's default.
+   * config.py:64-96 — flat `section.key: value` semantics), parsed with
+   * Jackson's YAML tree reader. Unknown keys are ignored, like pydantic's
+   * default.
    *
    * Recognized keys (reference names): security.max_file_size_mb,
    * security.allowed_prefixes (comma-separated).
    */
   def fromYaml(path: String, base: EngineConfig = EngineConfig()): EngineConfig = {
-    val lines = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8").linesIterator.toSeq
-    var section = ""
-    val kv = scala.collection.mutable.Map[String, String]()
-    // '#' starts a comment only at line start or after whitespace — a '#'
-    // inside a value (e.g. a url fragment in an allowed prefix) is literal
-    def stripComment(raw: String): String = {
-      var i = 0
-      while (i < raw.length) {
-        if (raw.charAt(i) == '#' && (i == 0 || raw.charAt(i - 1).isWhitespace))
-          return raw.substring(0, i)
-        i += 1
-      }
-      raw
-    }
-    lines.foreach { raw =>
-      val noComment = stripComment(raw)
-      val indented = noComment.startsWith(" ") || noComment.startsWith("\t")
-      val line = noComment.trim
-      if (line.nonEmpty && line.contains(':')) {
-        val (k, v0) = line.splitAt(line.indexOf(':'))
-        val v = v0.drop(1).trim.stripPrefix("\"").stripSuffix("\"")
-        if (v.isEmpty && !indented) section = k.trim
-        else kv(((if (indented && section.nonEmpty) section + "." else "") + k.trim)) = v
-      }
-    }
+    val security = new ObjectMapper(new YAMLFactory()).readTree(new java.io.File(path))
+      .path("security")
+    def scalar(key: String): Option[String] =
+      Option(security.get(key)).filterNot(_.isNull).map(_.asText)
     EngineConfig(
       // size may be fractional ("5.0", "0.5") — parse as double, then bytes
-      maxFileSizeBytes = kv.get("security.max_file_size_mb")
+      maxFileSizeBytes = scalar("max_file_size_mb")
         .map(v => (v.toDouble * 1024 * 1024).toLong).getOrElse(base.maxFileSizeBytes),
-      allowedPrefixes = kv.get("security.allowed_prefixes")
+      allowedPrefixes = scalar("allowed_prefixes")
         .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
         .getOrElse(base.allowedPrefixes))
   }

@@ -34,12 +34,19 @@ case class CellIdExpr(lat: Expression, lon: Expression, res: Expression)
   override def second: Expression = lon
   override def third: Expression = res
   override def dataType: DataType = LongType
+  // a NaN coordinate has no cell: NULL, where the kernel's cast would put
+  // it in row or column 0 (±Inf clamps to the edge like any out-of-range value)
+  override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override def checkInputDataTypes(): TypeCheckResult = CellRes.check("cell_id", res)
-  override protected def nullSafeEval(la: Any, lo: Any, r: Any): Any =
-    CellIndex.latLonToCell(la.asInstanceOf[Double], lo.asInstanceOf[Double], r.asInstanceOf[Int])
+  override protected def nullSafeEval(la: Any, lo: Any, r: Any): Any = {
+    val lat = la.asInstanceOf[Double]; val lon = lo.asInstanceOf[Double]
+    if (lat.isNaN || lon.isNaN) null else CellIndex.latLonToCell(lat, lon, r.asInstanceOf[Int])
+  }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (la, lo, r) => s"graft.geo.CellIndex.latLonToCell($la, $lo, $r)")
+    nullSafeCodeGen(ctx, ev, (la, lo, r) =>
+      s"""if (Double.isNaN($la) || Double.isNaN($lo)) { ${ev.isNull} = true; }
+         |else { ${ev.value} = graft.geo.CellIndex.latLonToCell($la, $lo, $r); }""".stripMargin)
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
     copy(lat = f, lon = s, res = t)
 }

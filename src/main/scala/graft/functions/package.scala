@@ -121,12 +121,7 @@ package object functions {
     "cell_ring" -> (es => org.apache.spark.sql.catalyst.expressions.Explode(
       CellDiskBandExpr(es(0), es(1), es(1)))),
     "cell_cover" -> (es => CellCoverExpr(es(0), es(1))),
-    "dot_product" -> (es => DotProductExpr(es(0), es(1))),
-    // bloom probe for SQL callers (the builder aggregate stays on the
-    // Column API — Bloom.bloomAgg — since a bare AggregateFunction can't
-    // ride createOrReplaceTempFunction)
-    "bloom_might_contain" -> (es =>
-      graft.operators.BloomMightContainExpr(es(0), es(1))))
+    "dot_product" -> (es => DotProductExpr(es(0), es(1))))
 
   /** Register SQL names so spark.sql can call the engine functions. */
   def registerAll(spark: SparkSession): Unit = {

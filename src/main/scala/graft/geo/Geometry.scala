@@ -127,6 +127,18 @@ object Geometry {
   }
 
   /**
+   * Most cells [[cellCover]] scans for one polygon: 2^20. A cover is one
+   * array value in one row, built by one task, and the scan tests every
+   * bbox cell against every edge; the cover grows 4× per resolution level,
+   * so a polygon past this cap wants a coarser `res` (the exact PIP after
+   * the equi-join keeps any res correct). 2^20 cells is 8 MiB of cell ids
+   * and ~0.15 s of scanning for a 4-edge ring (one core of a 4 vCPU host);
+   * a 2°×2° diamond stays under it up to res 16 (266k bbox cells, 133,956
+   * kept), and at res 17 its bbox holds 1,064,340.
+   */
+  final val MaxCoverCells: Long = 1L << 20
+
+  /**
    * Cover of a polygon at `res`: every cell that could contain an interior
    * point (superset guarantee — join correctness needs cover ⊇ truth; the
    * exact PIP after the equi-join removes false positives).
@@ -134,6 +146,9 @@ object Geometry {
    * edge intersects the cell box, or the cell contains a vertex. Cells
    * strictly interior are detected by the center test since interior cells
    * of a simple polygon with no crossing edge have all corners inside.
+   *
+   * Fails, before allocating, when the bbox holds more than
+   * [[MaxCoverCells]] cells at `res`.
    */
   def cellCover(ring: Array[Double], res: Int): Array[Long] = {
     val (xmin, ymin, xmax, ymax) = bbox(ring)
@@ -141,6 +156,10 @@ object Geometry {
     val c1 = CellIndex.latLonToCell(ymax, xmax, res)
     val ix0 = CellIndex.ix(c0); val ix1 = CellIndex.ix(c1)
     val iy0 = CellIndex.iy(c0); val iy1 = CellIndex.iy(c1)
+    val bboxCells = (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
+    require(bboxCells <= MaxCoverCells,
+      s"cell_cover at res $res: bbox lon [$xmin, $xmax] lat [$ymin, $ymax] holds " +
+        s"$bboxCells cells, over the cap of $MaxCoverCells; use a coarser res")
     val out = new scala.collection.mutable.ArrayBuffer[Long](16)
     var x = ix0
     while (x <= ix1) {

@@ -1,197 +1,52 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BoundReference, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
-import graft.core.BloomOps
 
 /**
  * Bloom-filter runtime join pruning — the shuffle-reduction move for
- * selective joins at 100 TB (Spark's own InjectRuntimeFilter plays this
- * trick inside the optimizer; here it is a first-class, composable
- * operator the pipeline can apply where the optimizer's heuristics
- * don't reach, e.g. across a checkpoint or a non-equi pre-filter).
- *
- * Shape: build ONE small bloom filter over the dimension side's join
- * keys (mergeable partial aggregation — map tasks OR their local
- * bitsets, the exchange carries bitset bytes, not keys), broadcast the
- * single-row result, and pre-filter the big side BEFORE its shuffle.
- * False positives survive the probe, so an exact semi-join follows —
- * the RESULT is bit-identical to the plain semi-join (that equality is
- * the oracle); only the bytes entering the big side's exchange change:
- * |big| · selectivity · (1 + ε) rows instead of |big|.
- *
- * Both sides hash with Spark's codegen'd xxhash64; probe positions come
- * from Kirsch–Mitzenmacher double hashing in [[graft.core.BloomOps]].
+ * selective joins at 100 TB, built from the pair Spark's own
+ * InjectRuntimeFilter uses (`BloomFilterAggregate` builds,
+ * `BloomFilterMightContain` probes), applied where the optimizer's
+ * heuristics don't reach (e.g. across a checkpoint or a non-equi
+ * pre-filter).
  */
 object Bloom {
 
-  /** Aggregate column: bloom filter (BinaryType) over xxhash64 values.
-   * `numBits` must be a power of two (use [[BloomOps.sizeBits]]). */
-  def bloomAgg(hash64: Column, numBits: Int, numHashes: Int = 7): Column =
-    GraftBridge.column(
-      BloomAggExpr(GraftBridge.expression(hash64), numBits, numHashes)
-        .toAggregateExpression())
-
-  /** Membership probe (codegen'd): false ⇒ definitely absent. */
-  def mightContain(bloom: Column, hash64: Column): Column =
-    GraftBridge.column(BloomMightContainExpr(
-      GraftBridge.expression(bloom), GraftBridge.expression(hash64)))
-
   /**
    * `big` rows whose `bigKey` appears in `small`'s `smallKey` — a plain
-   * left-semi join, pre-pruned by a broadcast bloom filter so the big
-   * side's exchange only carries probable matches. Result is EXACTLY the
-   * semi-join's (false positives die in the exact join; false negatives
-   * are impossible).
+   * left-semi join, pre-pruned by a bloom filter over the xxhash64'd
+   * small keys so the big side's exchange carries |big| · selectivity ·
+   * (1 + ε) rows instead of |big|. Result is EXACTLY the semi-join's:
+   * false positives die in the exact join, false negatives are impossible.
    *
-   * `expectedKeys` sizes the filter (default 10 bits/key ≈ 0.8% FPR at
-   * 7 hashes); pass the dimension side's approximate cardinality — an
-   * over-estimate only wastes filter bytes, never correctness.
+   * `expectedKeys` sizes the filter at 10 bits per key (≈ 1% FPR); pass
+   * the dimension side's approximate cardinality — an over-estimate only
+   * wastes filter bytes. Spark caps both numbers with
+   * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` and
+   * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` (defaults 4M
+   * items, 64M bits = 8 MiB).
+   *
+   * The filter reaches the probe as a scalar subquery, evaluated once, so
+   * the probe is a `Filter` in the big side's scan stage, below the semi
+   * join. A cross-joined broadcast column instead lets the optimizer push
+   * the semi join below the cross join, and the probe then prunes nothing.
    */
   def prunedSemiJoin(
       big: DataFrame,
       bigKey: String,
       small: DataFrame,
       smallKey: String,
-      expectedKeys: Long,
-      bitsPerKey: Int = 10,
-      numHashes: Int = 7): DataFrame = {
-    val numBits = BloomOps.sizeBits(expectedKeys, bitsPerKey)
-    val bf = small.agg(
-      bloomAgg(xxhash64(col(smallKey)), numBits, numHashes).as("__bf"))
-    // single-row broadcast: the filter rides the closure of every big-side
-    // task; mightContain runs map-side, INSIDE the scan's codegen span,
-    // before any exchange sees the row
-    val pruned = big.join(broadcast(bf))
-      .where(mightContain(col("__bf"), xxhash64(col(bigKey))))
-      .drop("__bf")
+      expectedKeys: Long): DataFrame = {
+    val build = new BloomFilterAggregate(
+      GraftBridge.expression(xxhash64(col(smallKey))),
+      Literal(expectedKeys), Literal(expectedKeys * 10))
+    val filter = small.select(GraftBridge.column(build.toAggregateExpression())).scalar()
+    val pruned = big.where(GraftBridge.column(BloomFilterMightContain(
+      GraftBridge.expression(filter), GraftBridge.expression(xxhash64(col(bigKey))))))
     pruned.join(small, pruned(bigKey) === small(smallKey), "left_semi")
   }
-}
-
-/** Mutable builder state: one word array, OR-mergeable. */
-final class BloomState(val numBits: Int, val numHashes: Int) {
-  val words: Array[Long] = new Array[Long](numBits >>> 6)
-
-  def add(hash: Long): Unit = BloomOps.add(words, numBits, numHashes, hash)
-
-  def orFrom(other: BloomState): Unit = {
-    var i = 0
-    while (i < words.length) { words(i) |= other.words(i); i += 1 }
-  }
-}
-
-/**
- * bloom_agg(hash64) → BinaryType filter. TypedImperativeAggregate: the
- * buffer is a primitive word array, update is allocation-free (reads the
- * long straight off the BoundReference ordinal), merge is a word-wise OR
- * — associative and commutative, so map-side partial aggregation ships
- * one bitset per task, never the keys.
- *
- * numBits/numHashes ride the expression (query plan), not the state, so
- * serialize/deserialize move exactly the probe-layout bytes.
- */
-case class BloomAggExpr(
-    hash: Expression,
-    numBits: Int,
-    numHashes: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomState] {
-  require(numBits >= 64 && (numBits & (numBits - 1)) == 0,
-    s"numBits must be a power of two >= 64 (got $numBits)")
-  require(numHashes >= 1 && numHashes <= 16, s"numHashes in [1,16] (got $numHashes)")
-
-  override def children: Seq[Expression] = Seq(hash)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (hash.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_agg requires a BIGINT hash (xxhash64(key)), got ${hash.dataType.sql}")
-
-  override def createAggregationBuffer(): BloomState = new BloomState(numBits, numHashes)
-
-  @transient private lazy val updateFn: (BloomState, InternalRow) => Unit =
-    hash match {
-      case hb: BoundReference =>
-        (b, row) => if (!row.isNullAt(hb.ordinal)) b.add(row.getLong(hb.ordinal))
-      case _ =>
-        (b, row) => {
-          val h = hash.eval(row)
-          if (h != null) b.add(h.asInstanceOf[Long])
-        }
-    }
-
-  override def update(b: BloomState, input: InternalRow): BloomState = {
-    updateFn(b, input)
-    b
-  }
-
-  override def merge(x: BloomState, y: BloomState): BloomState = {
-    x.orFrom(y)
-    x
-  }
-
-  override def eval(b: BloomState): Any =
-    BloomOps.toBytes(b.words, numBits, numHashes)
-
-  override def serialize(b: BloomState): Array[Byte] =
-    BloomOps.toBytes(b.words, numBits, numHashes)
-
-  override def deserialize(bytes: Array[Byte]): BloomState = {
-    val (words, nb, nh) = BloomOps.fromBytes(bytes)
-    val st = new BloomState(nb, nh)
-    System.arraycopy(words, 0, st.words, 0, words.length)
-    st
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BloomAggExpr =
-    copy(hash = newChildren(0))
-  override def prettyName: String = "bloom_agg"
-}
-
-/**
- * bloom_might_contain(filter BINARY, hash64 BIGINT) → BOOLEAN, codegen'd
- * (a static kernel call — stays inside the big side's whole-stage span;
- * an interpreted probe here would sever the scan's codegen exactly where
- * the row volume peaks).
- */
-case class BloomMightContainExpr(bloom: Expression, hash: Expression)
-    extends BinaryExpression {
-  override def left: Expression = bloom
-  override def right: Expression = hash
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (bloom.dataType == BinaryType && hash.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain requires (BINARY, BIGINT), got " +
-        s"(${bloom.dataType.sql}, ${hash.dataType.sql})")
-
-  override protected def nullSafeEval(b: Any, h: Any): Any =
-    BloomOps.mightContain(b.asInstanceOf[Array[Byte]], h.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, h) => s"graft.core.BloomOps.mightContain($b, $h)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(bloom = l, hash = r)
-  override def prettyName: String = "bloom_might_contain"
 }

@@ -41,6 +41,7 @@ object Tiler {
     // select is one analysis where a withColumn per column would be one each
     points
       .select(cell_id(col(lat), col(lon), rP).as("__pcell"))
+      .where(col("__pcell").isNotNull) // a NULL or NaN coordinate has no cell
       .select(cell_parent(col("__pcell"), rT).as("tile_id"),
         // pixel coordinates within the tile: low SubGridBits of ix / iy
         (shiftright(col("__pcell"), 29) % SubGridSize).cast("int").as("pix_x"),
@@ -176,6 +177,7 @@ object Tiler {
     val rT = tileRes(zoom); val rP = payloadRes(zoom)
     entities
       .withColumn("cell_id", cell_id(col(lat), col(lon), rP))
+      .where(col("cell_id").isNotNull) // a NULL or NaN coordinate has no cell
       .withColumn("tile_id", cell_parent(col("cell_id"), rT))
       .repartitionByRange(col("tile_id"))
       .groupBy("tile_id")

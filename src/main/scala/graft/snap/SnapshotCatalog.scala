@@ -2,6 +2,7 @@ package graft.snap
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,60 +47,49 @@ object SnapshotCatalog {
       rowsPerWave: Map[Int, Long],
       lineageFiles: Seq[String])
 
-  // ---- JSON (hand-rolled; no JSON dep in the offline sandbox) ------------
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  } + "\""
+  // ---- JSON (Jackson's tree model; field names are the on-disk format) ---
+  // Tree nodes, not case-class binding: bound through jackson-module-scala
+  // a Map[Int, Long] value comes back boxed as Integer (type erasure).
+  private val json = new ObjectMapper()
 
-  private def renderLineage(rows: Seq[LineageRow]): String =
-    rows.map(l =>
-      s"""{"wave":${l.wave},"partition_id":${l.partitionId},"input_rows":${l.inputRows},""" +
-        s""""output_rows":${l.outputRows},"wall_ms":${l.wallMs}}""").mkString("[", ",", "]")
-
-  private def parseLineage(s: String): Seq[LineageRow] =
-    ("""\{"wave":(\d+),"partition_id":(\d+),"input_rows":(\d+),""" +
-      """"output_rows":(\d+),"wall_ms":(\d+)\}""").r.findAllMatchIn(s)
-      .map(m => LineageRow(m.group(1).toInt, m.group(2).toInt,
-        m.group(3).toLong, m.group(4).toLong, m.group(5).toLong)).toSeq
-
-  private def render(m: Manifest): String = {
-    val rows = m.rowsPerWave.toSeq.sortBy(_._1)
-      .map { case (w, n) => s"${q(w.toString)}: $n" }.mkString("{", ",", "}")
-    s"""{"table":${q(m.table)},"snapshot_id":${m.snapshotId},"parent_id":${m.parentId},
-       |"completed_waves":${m.completedWaves.sorted.mkString("[", ",", "]")},
-       |"data_dirs":${m.dataDirs.map(q).mkString("[", ",", "]")},
-       |"rows_per_wave":$rows,
-       |"lineage_files":${m.lineageFiles.map(q).mkString("[", ",", "]")}}""".stripMargin
+  private def renderLineage(rows: Seq[LineageRow]): Array[Byte] = {
+    val arr = json.createArrayNode()
+    rows.foreach(l => arr.addObject().put("wave", l.wave).put("partition_id", l.partitionId)
+      .put("input_rows", l.inputRows).put("output_rows", l.outputRows).put("wall_ms", l.wallMs))
+    json.writeValueAsBytes(arr)
   }
 
-  // minimal parser for the fields we wrote (flat, no nested strings with
-  // brackets — safe for our own output)
-  private def parse(s: String): Manifest = {
-    def longField(name: String): Long =
-      s""""$name":\\s*(-?\\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(-1L)
-    def strField(name: String): String =
-      ("\"" + name + "\":\\s*\"([^\"]*)\"").r.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-    def intList(name: String): Seq[Int] = {
-      val body = ("\"" + name + "\":\\s*\\[([^\\]]*)\\]").r
-        .findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-      body.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-    }
-    def strList(name: String): Seq[String] = {
-      val body = ("\"" + name + "\":\\s*\\[([^\\]]*)\\]").r
-        .findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-      "\"([^\"]*)\"".r.findAllMatchIn(body).map(_.group(1)).toSeq
-    }
-    def rowsMap: Map[Int, Long] = {
-      val body = "\"rows_per_wave\":\\s*\\{([^}]*)\\}".r
-        .findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-      "\"(\\d+)\":\\s*(\\d+)".r.findAllMatchIn(body)
-        .map(m => m.group(1).toInt -> m.group(2).toLong).toMap
-    }
-    Manifest(strField("table"), longField("snapshot_id"), longField("parent_id"),
-      intList("completed_waves"), strList("data_dirs"), rowsMap,
-      strList("lineage_files"))
+  private def parseLineage(bytes: Array[Byte]): Seq[LineageRow] =
+    json.readTree(bytes).asScala.map(n => LineageRow(n.path("wave").asInt,
+      n.path("partition_id").asInt, n.path("input_rows").asLong,
+      n.path("output_rows").asLong, n.path("wall_ms").asLong)).toSeq
+
+  private def render(m: Manifest): Array[Byte] = {
+    val o = json.createObjectNode()
+      .put("table", m.table).put("snapshot_id", m.snapshotId).put("parent_id", m.parentId)
+    val waves = o.putArray("completed_waves")
+    m.completedWaves.sorted.foreach(w => waves.add(w))
+    val dirs = o.putArray("data_dirs")
+    m.dataDirs.foreach(dirs.add)
+    val rows = o.putObject("rows_per_wave")
+    m.rowsPerWave.toSeq.sortBy(_._1).foreach { case (w, n) => rows.put(w.toString, n) }
+    val lineage = o.putArray("lineage_files")
+    m.lineageFiles.foreach(lineage.add)
+    json.writeValueAsBytes(o)
   }
+
+  private def parse(bytes: Array[Byte]): Manifest = {
+    val n = json.readTree(bytes)
+    def strs(field: String): Seq[String] = n.path(field).asScala.map(_.asText).toSeq
+    Manifest(n.path("table").asText, n.path("snapshot_id").asLong(-1L),
+      n.path("parent_id").asLong(-1L), n.path("completed_waves").asScala.map(_.asInt).toSeq,
+      strs("data_dirs"),
+      n.path("rows_per_wave").properties.asScala.map(e => e.getKey.toInt -> e.getValue.asLong).toMap,
+      strs("lineage_files"))
+  }
+
+  private def readManifestFile(dir: Path, snapshotId: Long): Manifest =
+    parse(Files.readAllBytes(dir.resolve(s"manifest-$snapshotId.json")))
 
   // ---- catalog ops --------------------------------------------------------
 
@@ -140,15 +130,14 @@ object SnapshotCatalog {
 
   def currentManifest(root: String, table: String): Option[Manifest] =
     currentSnapshotId(root, table).map { id =>
-      parse(new String(Files.readAllBytes(tableDir(root, table).resolve(s"manifest-$id.json"))))
+      readManifestFile(tableDir(root, table), id)
     }
 
   /** Atomically commit a new manifest (data dirs must already be written). */
   def commitManifest(root: String, table: String, m: Manifest): Unit = {
     val dir = tableDir(root, table)
     Files.createDirectories(dir)
-    Files.write(dir.resolve(s"manifest-${m.snapshotId}.json"),
-      render(m).getBytes("UTF-8"))
+    Files.write(dir.resolve(s"manifest-${m.snapshotId}.json"), render(m))
     val tmp = dir.resolve("CURRENT.tmp")
     Files.write(tmp, m.snapshotId.toString.getBytes("UTF-8"))
     Files.move(tmp, dir.resolve("CURRENT"),
@@ -169,9 +158,10 @@ object SnapshotCatalog {
     readManifest(spark, root, manifestAt(root, table, snapshotId))
 
   private def manifestAt(root: String, table: String, snapshotId: Long): Manifest = {
-    val p = tableDir(root, table).resolve(s"manifest-$snapshotId.json")
-    require(Files.exists(p), s"no snapshot $snapshotId for $table")
-    parse(new String(Files.readAllBytes(p)))
+    val dir = tableDir(root, table)
+    require(Files.exists(dir.resolve(s"manifest-$snapshotId.json")),
+      s"no snapshot $snapshotId for $table")
+    readManifestFile(dir, snapshotId)
   }
 
   /** Reads a manifest's data dirs with the schema Spark wrote into the
@@ -182,7 +172,9 @@ object SnapshotCatalog {
     val dirs = m.dataDirs.map(d => tableDir(root, m.table).resolve(d))
     if (dirs.isEmpty) spark.emptyDataFrame
     else {
-      val paths = dirs.map(_.toString)
+      // spark.read globs its paths: escape the pattern characters so a
+      // table name holding `\`, `*`, `?`, `[` or `{` reads its own directory
+      val paths = dirs.map(_.toString.replaceAll("""([\\*?\[\]{}])""", """\\$1"""))
       val conf = spark.sessionState.newHadoopConf()
       dirs.iterator.flatMap(parquetFiles).nextOption().flatMap(footerSchema(conf, _)) match {
         case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
@@ -259,7 +251,7 @@ object SnapshotCatalog {
    * immutable, so any historical snapshot's lineage stays readable). */
   def lineageRows(root: String, m: Manifest): Seq[LineageRow] =
     m.lineageFiles.flatMap { f =>
-      parseLineage(new String(Files.readAllBytes(tableDir(root, m.table).resolve(f)), "UTF-8"))
+      parseLineage(Files.readAllBytes(tableDir(root, m.table).resolve(f)))
     }
 
   /** Lineage rows of the CURRENT snapshot as a DataFrame. */
@@ -276,7 +268,7 @@ object SnapshotCatalog {
     val name = s"lineage-$snapId.json"
     val dir = tableDir(root, table)
     Files.createDirectories(dir)
-    Files.write(dir.resolve(name), renderLineage(rows).getBytes("UTF-8"))
+    Files.write(dir.resolve(name), renderLineage(rows))
     Some(name)
   }
 
@@ -314,8 +306,7 @@ object SnapshotCatalog {
       finally stream.close()
     }
     val keptIds = (allIds.takeRight(keepLast) :+ current).distinct.toSet
-    val kept = keptIds.toSeq.map(id =>
-      parse(new String(Files.readAllBytes(dir.resolve(s"manifest-$id.json")), "UTF-8")))
+    val kept = keptIds.toSeq.map(readManifestFile(dir, _))
     val keptData = kept.flatMap(_.dataDirs).toSet
     val keptLineage = kept.flatMap(_.lineageFiles).toSet
 

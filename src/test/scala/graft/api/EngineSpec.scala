@@ -165,6 +165,14 @@ class EngineSpec extends AnyFunSuite with graft.TempDirs {
     // whitespace-preceded '#' starts a comment)
     assert(fromY.maxFileSizeBytes == (2.5 * 1024 * 1024).toLong)
     assert(fromY.allowedPrefixes == Seq("https://a.example/#frag", "https://b.example/"))
+    // a double-quoted scalar's escapes decode: \" is a quote, no backslash kept
+    val escaped = java.nio.file.Paths.get(tempDir("graft_cfg"), "escaped.yaml")
+    java.nio.file.Files.write(escaped,
+      """security:
+        |  allowed_prefixes: "https://q.example/?s=\"a b\", https://r.example/\"x\""
+        |""".stripMargin.getBytes("UTF-8"))
+    assert(EngineConfig.fromYaml(escaped.toString).allowedPrefixes ==
+      Seq("https://q.example/?s=\"a b\"", "https://r.example/\"x\""))
     // yaml overrides the `base` defaults it is layered on
     val base = EngineConfig(maxFileSizeBytes = 1L, allowedPrefixes = Seq("https://base.example/"))
     assert(EngineConfig.fromYaml(yaml.toString, base) == fromY)

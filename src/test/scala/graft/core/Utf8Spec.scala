@@ -2,6 +2,8 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.Base64
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 
 /**
  * Byte-identity parity of Utf8.decodeReplace with CPython's
@@ -13,13 +15,10 @@ import java.util.Base64
 class Utf8Spec extends AnyFunSuite {
 
   test("matches CPython errors=replace on 323 fixture cases") {
-    val raw = new String(
-      getClass.getResourceAsStream("/byteid/utf8_replace_cases.json").readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-    // fixture is a flat JSON array of {"b": base64, "s": base64} — parse
-    // with a tiny regex (no JSON lib available offline)
-    val pat = """\{"b": "([^"]*)", "s": "([^"]*)"\}""".r
-    val cases = pat.findAllMatchIn(raw).map(m => (m.group(1), m.group(2))).toSeq
+    // fixture is a flat JSON array of {"b": base64, "s": base64}
+    val cases = new ObjectMapper()
+      .readTree(getClass.getResourceAsStream("/byteid/utf8_replace_cases.json"))
+      .asScala.map(n => (n.get("b").asText, n.get("s").asText)).toSeq
     assert(cases.length == 323)
     cases.zipWithIndex.foreach { case ((b64, s64), i) =>
       val bytes = Base64.getDecoder.decode(b64)

@@ -71,6 +71,27 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("cell_id of a NaN coordinate is NULL; infinities clamp, in SQL and Column form") {
+    graft.functions.registerAll(spark)
+    val nan = Double.NaN; val inf = Double.PositiveInfinity
+    val inputs = Seq((nan, 10.0), (10.0, nan), (nan, nan), (inf, 10.0), (10.0, -inf), (10.0, 20.0))
+    val want: Seq[Option[Long]] = Seq(None, None, None,
+      Some(CellIndex.latLonToCell(90.0, 10.0, 12)), Some(CellIndex.latLonToCell(10.0, -180.0, 12)),
+      Some(CellIndex.latLonToCell(10.0, 20.0, 12)))
+    val df = inputs.toDF("lat", "lon")
+    // RDD-backed so the projection runs in generated code, not folded
+    val viaRdd = spark.createDataFrame(df.rdd, df.schema)
+    val col = viaRdd.select(cell_id($"lat", $"lon", 12).as("c"))
+    assert(col.queryExecution.executedPlan.toString.contains("*(1) Project"))
+    assert(col.as[Option[Long]].collect().toSeq == want)
+    viaRdd.createOrReplaceTempView("nan_points")
+    assert(spark.sql("SELECT cell_id(lat, lon, 12) AS c FROM nan_points")
+      .as[Option[Long]].collect().toSeq == want)
+    // folded literals and the interpreted path agree
+    assert(spark.sql("SELECT cell_id(CAST('NaN' AS DOUBLE), CAST(1 AS DOUBLE), 12)")
+      .head().isNullAt(0))
+  }
+
   test("cell_parent/cell_center round trip in SQL and Column form") {
     graft.functions.registerAll(spark)
     val row = spark.sql(

@@ -106,6 +106,19 @@ class GeometrySpec extends AnyFunSuite {
     assert(cover.length < bboxCells * 0.8, s"${cover.length} vs bbox $bboxCells")
   }
 
+  test("cellCover fails before allocating when the bbox holds too many cells") {
+    // a 2°×2° diamond: ~134k cells at res 16 (~265k bbox cells), ~550M at res 22
+    val small = Array(1.0, 0.0, 0.0, 1.0, -1.0, 0.0, 0.0, -1.0)
+    val at16 = Geometry.cellCover(small, 16).length
+    assert(at16 > 130000 && at16 < 140000, at16)
+    val e = intercept[IllegalArgumentException](Geometry.cellCover(small, 22))
+    // (2 / 360 · 2^22 + 1) × (2 / 180 · 2^22 + 1) bbox cells
+    val want = ((2.0 / 360 * (1L << 22)).toLong + 1) * ((2.0 / 180 * (1L << 22)).toLong + 1)
+    assert(want > Geometry.MaxCoverCells)
+    assert(e.getMessage.contains("res 22") && e.getMessage.contains(s"$want cells") &&
+      e.getMessage.contains("lon [-1.0, 1.0] lat [-1.0, 1.0]"), e.getMessage)
+  }
+
   test("segment-box intersection") {
     assert(Geometry.segmentIntersectsBox(-1, 5, 11, 5, 0, 0, 10, 10)) // crosses through
     assert(Geometry.segmentIntersectsBox(5, 5, 6, 6, 0, 0, 10, 10))   // inside

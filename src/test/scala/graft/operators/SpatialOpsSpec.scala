@@ -398,7 +398,14 @@ class SpatialOpsSpec extends AnyFunSuite with graft.TempDirs {
     assert(Tiler.raster(ptsDf.withColumn("__pcell", lit(0L)), "lat", "lon", zoom)
       .select("tile_id", "pix_x", "pix_y", "n")
       .as[(Long, Int, Int, Long)].collect().toSet == want)
+    // rows with a NaN coordinate have no cell: the raster of the finite rows
+    assert(Tiler.raster(ptsDf.union(nanPts), "lat", "lon", zoom)
+      .select("tile_id", "pix_x", "pix_y", "n")
+      .as[(Long, Int, Int, Long)].collect().toSet == want)
   }
+
+  private def nanPts = Seq((-1L, 0, Double.NaN, 10.0), (-2L, 0, 10.0, Double.NaN),
+    (-3L, 0, Double.NaN, Double.NaN)).toDF("page_id", "entity_idx", "lat", "lon")
 
   test("pyramid: every rolled-up level equals the direct raster at that zoom") {
     val zoom = 4
@@ -447,6 +454,10 @@ class SpatialOpsSpec extends AnyFunSuite with graft.TempDirs {
       .select($"tile_id", $"features").collect()
     val total = rows.map(_.getSeq[org.apache.spark.sql.Row](1).size).sum
     assert(total == pts.length)
+    // rows with a NaN coordinate have no cell and join no tile
+    assert(Tiler.vector(ptsDf.union(nanPts).withColumn("key", concat(lit("p"), $"page_id")),
+      "key", "entity_idx", "lat", "lon", zoom).select($"tile_id", $"features").collect().toSet
+      == rows.toSet)
     rows.foreach { r =>
       val fs = r.getSeq[org.apache.spark.sql.Row](1)
         .map(f => (f.getString(0), f.getInt(1), f.getLong(2)))

@@ -471,6 +471,57 @@ class SnapshotCatalogSpec extends AnyFunSuite with graft.TempDirs {
     assert(back.as[(Long, String)].collect().sorted.toSeq == (0 until 5).map(i => (i.toLong, s"v$i")))
   }
 
+  test("table names with a quote, a backslash or a tab round-trip through the manifest") {
+    val root = freshRoot()
+    Seq("quo\"te", "back\\slash", "tab\there", "plain").foreach { table =>
+      SnapshotCatalog.resumableRun(spark, input, "url", waves = 2, root, table)(df => df)
+      val m = SnapshotCatalog.currentManifest(root, table).get
+      assert(m.table == table)
+      assert(SnapshotCatalog.read(spark, root, table).count() == 1000)
+      assert(SnapshotCatalog.readAt(spark, root, table, 0L).count() == m.rowsPerWave(0))
+      assert(SnapshotCatalog.lineageRows(root, m).map(_.outputRows).sum == 1000)
+      SnapshotCatalog.compact(spark, root, table, targetFiles = 1)
+      assert(SnapshotCatalog.currentManifest(root, table).get ==
+        m.copy(snapshotId = 2L, parentId = 1L, dataDirs = Seq("data/snap-2")))
+      assert(SnapshotCatalog.read(spark, root, table).count() == 1000)
+    }
+    assert(SnapshotCatalog.listTables(root) ==
+      Seq("back\\slash", "plain", "quo\"te", "tab\there").sorted)
+  }
+
+  test("a manifest and lineage sidecar in the earlier hand-rendered layout still read") {
+    val root = freshRoot()
+    val table = "old\"lay\\out\tname"
+    val dir = java.nio.file.Paths.get(root, table)
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "url").write.parquet(dir.resolve("data/snap-0").toString)
+    Seq((4L, "d")).toDF("id", "url").write.parquet(dir.resolve("data/snap-1").toString)
+    // the bytes the earlier renderer wrote: newline-separated fields,
+    // `"key": n` rows, a control character as a four-hex-digit escape
+    Files.write(dir.resolve("manifest-1.json"),
+      ("{\"table\":\"old\\\"lay\\\\out\\u0009name\",\"snapshot_id\":1,\"parent_id\":0,\n" +
+        "\"completed_waves\":[0,1],\n" +
+        "\"data_dirs\":[\"data/snap-0\",\"data/snap-1\"],\n" +
+        "\"rows_per_wave\":{\"0\": 3,\"1\": 1},\n" +
+        "\"lineage_files\":[\"lineage-1.json\"]}").getBytes("UTF-8"))
+    Files.write(dir.resolve("lineage-1.json"),
+      ("[{\"wave\":0,\"partition_id\":0,\"input_rows\":3,\"output_rows\":3,\"wall_ms\":7}," +
+        "{\"wave\":1,\"partition_id\":2,\"input_rows\":1,\"output_rows\":1,\"wall_ms\":4}]")
+        .getBytes("UTF-8"))
+    Files.write(dir.resolve("CURRENT"), "1".getBytes("UTF-8"))
+    val m = SnapshotCatalog.currentManifest(root, table).get
+    assert(m == SnapshotCatalog.Manifest(table, 1L, 0L, Seq(0, 1),
+      Seq("data/snap-0", "data/snap-1"), Map(0 -> 3L, 1 -> 1L), Seq("lineage-1.json")))
+    assert(SnapshotCatalog.lineageRows(root, m) == Seq(
+      SnapshotCatalog.LineageRow(0, 0, 3L, 3L, 7L), SnapshotCatalog.LineageRow(1, 2, 1L, 1L, 4L)))
+    assert(SnapshotCatalog.read(spark, root, table).as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
+    // the next commit writes the new layout on top of the old chain
+    SnapshotCatalog.compact(spark, root, table, targetFiles = 1)
+    assert(SnapshotCatalog.currentManifest(root, table).get ==
+      m.copy(snapshotId = 2L, parentId = 1L, dataDirs = Seq("data/snap-2")))
+    assert(SnapshotCatalog.readAt(spark, root, table, 1L).count() == 4)
+  }
+
   test("compact aborts with CURRENT untouched when rows would be lost") {
     val root = freshRoot()
     SnapshotCatalog.resumableRun(spark, input, "url", waves = 2, root, "tbad")(
