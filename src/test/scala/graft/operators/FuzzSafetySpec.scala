@@ -14,11 +14,7 @@ import graft.sources.Fixtures.mix
  * scalatestplus bridge in the offline cache.
  */
 class FuzzSafetySpec extends AnyFunSuite {
-
-  private def randomBytes(seed: Long, maxLen: Int): Array[Byte] = {
-    val len = (mix(seed) & 0x7fffffff).toInt % (maxLen + 1)
-    Array.tabulate(len)(i => (mix(seed * 1000003L + i) & 0xff).toByte)
-  }
+  import FuzzSafetySpec._
 
   /** Flip `flips` random bytes of a valid payload — the "slightly
    * corrupted real file" shape that pure-random fuzz rarely reaches. */
@@ -107,13 +103,8 @@ class FuzzSafetySpec extends AnyFunSuite {
   }
 
   test("HtmlParser.parse is total and structurally sane on byte soup") {
-    // random bytes, plus soups biased toward markup metacharacters
-    val meta = "<>/=\"' abc&#;!-".getBytes("US-ASCII")
     (0 until 2000).foreach { s =>
-      val raw =
-        if (s % 2 == 0) randomBytes(s, 300)
-        else Array.tabulate(((mix(s) & 0xff) + 1).toInt)(i =>
-          meta(((mix(s * 131L + i) & 0x7fffffff) % meta.length).toInt))
+      val raw = htmlSoup(s)
       val res = HtmlParser.parse(raw)
       res.nodes.foreach { n =>
         assert(n.startByte >= 0 && n.startByte <= n.endByte && n.endByte <= raw.length,
@@ -127,4 +118,20 @@ class FuzzSafetySpec extends AnyFunSuite {
       }
     }
   }
+}
+
+object FuzzSafetySpec {
+  def randomBytes(seed: Long, maxLen: Int): Array[Byte] = {
+    val len = (mix(seed) & 0x7fffffff).toInt % (maxLen + 1)
+    Array.tabulate(len)(i => (mix(seed * 1000003L + i) & 0xff).toByte)
+  }
+
+  private val Meta = "<>/=\"' abc&#;!-".getBytes("US-ASCII")
+
+  /** Parser fuzz input `s`: random bytes on even seeds, a soup biased
+   * toward markup metacharacters on odd ones. */
+  def htmlSoup(s: Int): Array[Byte] =
+    if (s % 2 == 0) randomBytes(s, 300)
+    else Array.tabulate(((mix(s) & 0xff) + 1).toInt)(i =>
+      Meta(((mix(s * 131L + i) & 0x7fffffff) % Meta.length).toInt))
 }
