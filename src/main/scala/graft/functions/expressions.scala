@@ -281,6 +281,16 @@ object PointInPolygonExpr {
 // Scalar: extraction kernels (eval-only; parser not codegen-able)
 // ---------------------------------------------------------------------------
 
+/** Analysis-time check of a page-side function's html argument: the
+ * kernels read raw bytes, so a STRING column fails analysis instead of
+ * the first task. */
+private[functions] object HtmlArg {
+  def check(fn: String, html: Expression): TypeCheckResult =
+    if (html.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$fn needs a BINARY html argument, got ${html.dataType.sql}")
+}
+
 /** Byte-identity text extraction: BINARY html → BINARY extracted text
  * (reference kernel: utils/tree_sitter_helpers.py:239-261; the per-url
  * invariant of BASELINE.json input_hint). */
@@ -288,6 +298,7 @@ case class ExtractedTextExpr(html: Expression) extends UnaryExpression {
   override def child: Expression = html
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = HtmlArg.check("extract_text", html)
   override protected def nullSafeEval(h: Any): Any =
     Extractor.extractTextBytes(h.asInstanceOf[Array[Byte]])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -377,28 +388,45 @@ case class Md5PrefixExpr(child: Expression, bits: Int) extends UnaryExpression {
 
 /** Flattened node table of one document (reference: get_ast →
  * node_to_dict_cursor, tools/ast_operations.py:17-66 + models/
- * ast_cursor.py:12-183 — relational encoding per SURVEY §2.9 T1). */
-case class ParseHtmlNodesExpr(html: Expression) extends UnaryExpression with Generator with CodegenFallback {
+ * ast_cursor.py:12-183 — relational encoding per SURVEY §2.9 T1). The
+ * node id (`HtmlParser.nodeId` of the node's byte range and name or
+ * kind), parent id, children count and root→node path are derived here,
+ * the one consumer that emits them; parents precede children in the
+ * parser's table, so one forward pass builds ids and paths. */
+case class ParseNodeTableExpr(html: Expression) extends UnaryExpression with Generator with CodegenFallback {
   override def child: Expression = html
-  override def elementSchema: StructType = ParseHtmlNodesExpr.schema
+  override def elementSchema: StructType = ParseNodeTableExpr.schema
+  override def checkInputDataTypes(): TypeCheckResult = HtmlArg.check("parse_html_nodes", html)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val h = html.eval(input)
     if (h == null) return Nil
     val res = HtmlParser.parse(h.asInstanceOf[Array[Byte]])
-    res.nodes.iterator.zipWithIndex.map { case (n, i) =>
-      val keys = new GenericArrayData(n.attrs.map(a => UTF8String.fromString(a._1)).toArray[Any])
-      val vals = new GenericArrayData(n.attrs.map(a => UTF8String.fromString(a._2)).toArray[Any])
-      val path = new GenericArrayData(res.paths(i).map(UTF8String.fromString).toArray[Any])
-      InternalRow(n.id, n.parentId, n.depth,
-        UTF8String.fromString(n.kind), UTF8String.fromString(n.name),
+    val t = res.nodes
+    val ids = new Array[Long](t.length)
+    val children = new Array[Int](t.length)
+    val paths = new Array[Array[Any]](t.length)
+    for (i <- 0 until t.length) {
+      val key = if (t.kind(i) == HtmlParser.Element) t.name(i) else HtmlParser.KindNames(t.kind(i))
+      ids(i) = HtmlParser.nodeId(t.startByte(i), t.endByte(i), key)
+      val p = t.parent(i)
+      val k = UTF8String.fromString(key)
+      paths(i) = if (p < 0) Array[Any](k) else { children(p) += 1; paths(p) :+ k }
+    }
+    (0 until t.length).map { i =>
+      val p = t.parent(i)
+      val keys = new GenericArrayData(t.attrs(i).map(a => UTF8String.fromString(a._1)).toArray[Any])
+      val vals = new GenericArrayData(t.attrs(i).map(a => UTF8String.fromString(a._2)).toArray[Any])
+      val s = t.startByte(i); val e = t.endByte(i)
+      InternalRow(ids(i), if (p < 0) -1L else ids(p), t.depth(i),
+        UTF8String.fromString(HtmlParser.KindNames(t.kind(i))), UTF8String.fromString(t.name(i)),
         new ArrayBasedMapData(keys, vals),
-        n.startByte, n.endByte, n.startRow, n.startCol, n.endRow, n.endCol,
-        path, n.childrenCount)
-    }.toSeq
+        s, e, res.row(s), res.col(s), res.row(e), res.col(e),
+        new GenericArrayData(paths(i)), children(i))
+    }
   }
   override protected def withNewChildInternal(c: Expression) = copy(html = c)
 }
-object ParseHtmlNodesExpr {
+object ParseNodeTableExpr {
   val schema: StructType = StructType(Seq(
     StructField("node_id", LongType, nullable = false),
     StructField("parent_id", LongType, nullable = false),
@@ -428,14 +456,26 @@ case class ExtractCapturesExpr(html: Expression, spec: Expression)
     extends BinaryExpression with Generator with CodegenFallback {
   override def left: Expression = html
   override def right: Expression = spec
-  private lazy val specNames: Seq[String] = {
-    require(spec.foldable, "extraction spec must be a literal (plan-time compiled)")
-    val s = spec.eval(InternalRow.empty).asInstanceOf[UTF8String].toString
-    val names = s.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-    require(names.nonEmpty, "extraction spec list must name at least one spec")
-    names.foreach(n => require(Extractor.SpecNames.contains(n),
-      s"unknown extraction spec '$n' (known: ${Extractor.SpecNames.mkString(", ")})"))
-    names
+  // the spec list is a constant (checkInputDataTypes), read once per task
+  private lazy val specNames: Seq[String] =
+    ExtractCapturesExpr.specList(spec.eval(InternalRow.empty))
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def known = Extractor.SpecNames.mkString(", ")
+    val htmlCheck = HtmlArg.check("extract_captures", html)
+    if (htmlCheck.isFailure) htmlCheck
+    else if (!spec.foldable || !spec.dataType.isInstanceOf[StringType])
+      TypeCheckResult.TypeCheckFailure(
+        s"extract_captures spec must be a constant STRING naming specs from: $known")
+    else {
+      val names = ExtractCapturesExpr.specList(spec.eval(InternalRow.empty))
+      if (names.isEmpty) TypeCheckResult.TypeCheckFailure(
+        s"extract_captures spec list names no spec (known: $known)")
+      else names.find(n => !Extractor.SpecNames.contains(n)) match {
+        case Some(n) => TypeCheckResult.TypeCheckFailure(
+          s"unknown extraction spec '$n' (known: $known)")
+        case None => TypeCheckResult.TypeCheckSuccess
+      }
+    }
   }
   override def elementSchema: StructType = ExtractCapturesExpr.schema
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
@@ -451,6 +491,10 @@ case class ExtractCapturesExpr(html: Expression, spec: Expression)
     copy(html = l, spec = r)
 }
 object ExtractCapturesExpr {
+  /** The names of a comma-separated spec list; none for NULL. */
+  private def specList(v: Any): Seq[String] =
+    if (v == null) Nil else v.toString.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+
   val schema: StructType = StructType(Seq(
     StructField("capture", StringType, nullable = false),
     StructField("text", StringType, nullable = false),
@@ -466,6 +510,7 @@ object ExtractCapturesExpr {
 case class ExtractGeoEntitiesExpr(html: Expression) extends UnaryExpression with Generator with CodegenFallback {
   override def child: Expression = html
   override def elementSchema: StructType = ExtractGeoEntitiesExpr.schema
+  override def checkInputDataTypes(): TypeCheckResult = HtmlArg.check("extract_geo", html)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val h = html.eval(input)
     if (h == null) return Nil

@@ -67,7 +67,7 @@ package object functions {
   /** Generator: flattened HTML node table (use inside select with explode
    * semantics: df.select($"url", parse_html_nodes($"html"))). */
   def parse_html_nodes(html: Column): Column =
-    column(ParseHtmlNodesExpr(expression(html)))
+    column(ParseNodeTableExpr(expression(html)))
 
   /** Generator: capture rows for a named extraction spec. */
   def extract_captures(html: Column, spec: String): Column =
@@ -115,7 +115,7 @@ package object functions {
     "extract_text_bytes" -> (es => ExtractedTextExpr(es.head)),
     "extract_text" -> (es => Utf8ReplaceDecodeExpr(ExtractedTextExpr(es.head))),
     "utf8_decode_replace" -> (es => Utf8ReplaceDecodeExpr(es.head)),
-    "parse_html_nodes" -> (es => ParseHtmlNodesExpr(es.head)),
+    "parse_html_nodes" -> (es => ParseNodeTableExpr(es.head)),
     "extract_captures" -> (es => ExtractCapturesExpr(es(0), es(1))),
     "extract_geo" -> (es => ExtractGeoEntitiesExpr(es.head)),
     "cell_ring" -> (es => org.apache.spark.sql.catalyst.expressions.Explode(

@@ -14,7 +14,7 @@ import graft.core.Utf8
  *    node-text projection `source_bytes[start:end]` + late UTF-8 decode
  *    (reference: utils/tree_sitter_helpers.py:239-261); the per-url output
  *    must be byte-identical (BASELINE.json input_hint).
- *  - `captures(spec)` mirrors named query templates (reference:
+ *  - `capturesMulti(specs)` mirrors named query templates (reference:
  *    language/templates/&lt;lang&gt;.py, lookup language/query_templates.py:8-23):
  *    each spec yields capture rows `(capture, text, byte/point range)`
  *    exactly like reference tools/search.py:233-249 rows.
@@ -32,14 +32,12 @@ object Extractor {
 
   final case class GeoEntity(entityIdx: Int, source: String, lat: Double, lon: Double)
 
-  val SpecNames: Seq[String] = Seq(
-    "links", "images", "headings", "title", "meta", "geo_meta", "geo_uri", "microdata")
-
-  /** Capture names each spec can emit — the query-template metadata
-   * surface (reference: get_query_template / list_query_templates,
-   * tools/registration.py:374-409). `heading.hN` / `meta.<name>` are
-   * families (suffix varies with the document). */
-  val SpecCaptures: Map[String, Seq[String]] = Map(
+  /** Capture names each spec can emit, in spec order — the
+   * query-template metadata surface (reference: get_query_template /
+   * list_query_templates, tools/registration.py:374-409). `heading.hN` /
+   * `meta.<name>` are families (suffix varies with the document). */
+  val SpecCaptures: scala.collection.immutable.ListMap[String, Seq[String]] =
+    scala.collection.immutable.ListMap(
     "links" -> Seq("link.href", "link.text"),
     "images" -> Seq("image.src"),
     "headings" -> Seq("heading.h1", "heading.h2", "heading.h3",
@@ -49,6 +47,8 @@ object Extractor {
     "geo_meta" -> Seq("geo.geo.position", "geo.ICBM"),
     "geo_uri" -> Seq("geo.uri"),
     "microdata" -> Seq("geo.latitude", "geo.longitude"))
+
+  val SpecNames: Seq[String] = SpecCaptures.keys.toSeq
 
   // ---------------------------------------------------------------------
   // Entity decoding (byte level: entity -> UTF-8 bytes of the codepoint)
@@ -164,19 +164,14 @@ object Extractor {
     extractTextBytes(res)
   }
 
-  /** Node ids of raw-text containers (script/style) — their text children
-   * are code, not content, and are excluded from every text projection. */
-  private def rawTextIds(res: HtmlParser.ParseResult): Set[Long] =
-    res.nodes.iterator
-      .filter(n => n.kind == "element" && HtmlParser.RawTextElements.contains(n.name))
-      .map(_.id).toSet
-
   def extractTextBytes(res: HtmlParser.ParseResult): Array[Byte] = {
     val out = new ByteArrayOutputStream(res.source.length / 2 + 16)
-    val rawIds = rawTextIds(res)
-    res.nodes.foreach { nd =>
-      if (nd.kind == "text" && !rawIds.contains(nd.parentId))
-        decodeEntitiesInto(res.source, nd.startByte, nd.endByte, out)
+    val t = res.nodes
+    var i = 0
+    while (i < t.length) {
+      if (t.kind(i) == HtmlParser.Text && !t.isRawText(i))
+        decodeEntitiesInto(res.source, t.startByte(i), t.endByte(i), out)
+      i += 1
     }
     out.toByteArray
   }
@@ -187,101 +182,92 @@ object Extractor {
   // Capture specs (reference query-template analogue, SURVEY §2.8 Q3)
   // ---------------------------------------------------------------------
 
-  def captures(html: Array[Byte], spec: String): Seq[Capture] = {
-    val res = HtmlParser.parse(html)
-    captures(res, spec)
-  }
-
   /** Multi-spec extraction over ONE parse — the corpus hot path for
    * symbol/dependency pipelines that need several templates per page
    * (parse dominates their cost; a union of per-spec calls re-parses the
-   * page once per spec). The element filter and script/style id set are
-   * also built ONCE and shared across specs (each is an O(nodes) pass).
-   * Capture rows come out in spec order. */
+   * page once per spec). The element list is also built ONCE and shared
+   * across specs. Capture rows come out in spec order. */
   def capturesMulti(res: HtmlParser.ParseResult, specs: Seq[String]): Seq[Capture] = {
     val out = new ArrayBuffer[Capture]
-    lazy val rawIds = rawTextIds(res) // memoized; built only if a spec needs innerText
-    val els = res.nodes.filter(_.kind == "element")
-    specs.foreach(sp => capturesInto(res, sp, els, () => rawIds, out))
+    val t = res.nodes
+    val els = (0 until t.length).filter(t.kind(_) == HtmlParser.Element)
+    specs.foreach(sp => capturesInto(res, sp, els, out))
     out.toSeq
   }
 
-  private def cap(res: HtmlParser.ParseResult, n: HtmlNode, name: String, text: String) =
-    Capture(name, text, n.startByte, n.endByte, n.startRow, n.startCol, n.endRow, n.endCol)
+  private def cap(res: HtmlParser.ParseResult, i: Int, name: String, text: String) = {
+    val s = res.nodes.startByte(i); val e = res.nodes.endByte(i)
+    Capture(name, text, s, e, res.row(s), res.col(s), res.row(e), res.col(e))
+  }
 
   /** Concatenated, entity-decoded text of a container element's direct and
    * nested text nodes (bounded by its byte range), excluding script/style
    * raw text — the same exclusion extractTextBytes applies (a nested
    * <script> inside a captured element is code, not its text).
    *
-   * SUBTREE-LOCAL: nodes are emitted in document order (start bytes
+   * SUBTREE-LOCAL: nodes are in document order (start bytes
    * non-decreasing), so a binary search finds the element's position and
    * the walk stops at its end byte — O(log n + subtree) per element, not
    * O(n). The old full-scan form was quadratic on element-heavy pages
    * (the links spec calls this once per `<a>`). */
-  private def innerText(res: HtmlParser.ParseResult, el: HtmlNode,
-      rawIds: Set[Long]): String = {
-    val nodes = res.nodes
-    var lo = 0; var hi = nodes.length
+  private def innerText(res: HtmlParser.ParseResult, el: Int): String = {
+    val t = res.nodes
+    val elStart = t.startByte(el); val elEnd = t.endByte(el)
+    var lo = 0; var hi = t.length
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
-      if (nodes(mid).startByte < el.startByte) lo = mid + 1 else hi = mid
+      if (t.startByte(mid) < elStart) lo = mid + 1 else hi = mid
     }
     val out = new ByteArrayOutputStream(32)
     var i = lo
-    while (i < nodes.length && nodes(i).startByte < el.endByte) {
-      val nd = nodes(i)
-      if (nd.kind == "text" && nd.endByte <= el.endByte && !rawIds.contains(nd.parentId))
-        decodeEntitiesInto(res.source, nd.startByte, nd.endByte, out)
+    while (i < t.length && t.startByte(i) < elEnd) {
+      if (t.kind(i) == HtmlParser.Text && t.endByte(i) <= elEnd && !t.isRawText(i))
+        decodeEntitiesInto(res.source, t.startByte(i), t.endByte(i), out)
       i += 1
     }
     Utf8.decodeReplace(out.toByteArray)
   }
 
-  def captures(res: HtmlParser.ParseResult, spec: String): Seq[Capture] =
-    capturesMulti(res, Seq(spec))
-
   private def capturesInto(res: HtmlParser.ParseResult, spec: String,
-      els: IndexedSeq[HtmlNode], rawIds: () => Set[Long], out: ArrayBuffer[Capture]): Unit = {
-    def innerText(res2: HtmlParser.ParseResult, el: HtmlNode): String =
-      Extractor.innerText(res2, el, rawIds())
+      els: IndexedSeq[Int], out: ArrayBuffer[Capture]): Unit = {
+    val t = res.nodes
     spec match {
       case "links" =>
-        els.filter(_.name == "a").foreach { a =>
-          a.attr("href").foreach(h => out += cap(res, a, "link.href", decodeEntities(h)))
+        els.filter(t.name(_) == "a").foreach { a =>
+          t.attr(a, "href").foreach(h => out += cap(res, a, "link.href", decodeEntities(h)))
           out += cap(res, a, "link.text", innerText(res, a))
         }
       case "images" =>
-        els.filter(_.name == "img").foreach { im =>
-          im.attr("src").foreach(s => out += cap(res, im, "image.src", decodeEntities(s)))
+        els.filter(t.name(_) == "img").foreach { im =>
+          t.attr(im, "src").foreach(s => out += cap(res, im, "image.src", decodeEntities(s)))
         }
       case "headings" =>
-        els.filter(e => e.name.length == 2 && e.name.charAt(0) == 'h' &&
-            e.name.charAt(1) >= '1' && e.name.charAt(1) <= '6').foreach { h =>
-          out += cap(res, h, "heading." + h.name, innerText(res, h))
-        }
+        els.filter { e =>
+          val nm = t.name(e)
+          nm.length == 2 && nm.charAt(0) == 'h' && nm.charAt(1) >= '1' && nm.charAt(1) <= '6'
+        }.foreach(h => out += cap(res, h, "heading." + t.name(h), innerText(res, h)))
       case "title" =>
-        els.filter(_.name == "title").foreach(t => out += cap(res, t, "title", innerText(res, t)))
+        els.filter(t.name(_) == "title").foreach(e => out += cap(res, e, "title", innerText(res, e)))
       case "meta" =>
-        els.filter(_.name == "meta").foreach { m =>
-          for (nm <- m.attr("name"); cv <- m.attr("content"))
+        els.filter(t.name(_) == "meta").foreach { m =>
+          for (nm <- t.attr(m, "name"); cv <- t.attr(m, "content"))
             out += cap(res, m, "meta." + nm, decodeEntities(cv))
         }
       case "geo_meta" =>
-        els.filter(_.name == "meta").foreach { m =>
-          val nm = m.attr("name").getOrElse("")
+        els.filter(t.name(_) == "meta").foreach { m =>
+          val nm = t.attr(m, "name").getOrElse("")
           if (nm == "geo.position" || nm == "ICBM")
-            m.attr("content").foreach(cv => out += cap(res, m, "geo." + nm, decodeEntities(cv)))
+            t.attr(m, "content").foreach(cv => out += cap(res, m, "geo." + nm, decodeEntities(cv)))
         }
       case "geo_uri" =>
-        els.filter(_.name == "a").foreach { a =>
-          a.attr("href").foreach { h =>
+        els.filter(t.name(_) == "a").foreach { a =>
+          t.attr(a, "href").foreach { h =>
             if (h.startsWith("geo:")) out += cap(res, a, "geo.uri", decodeEntities(h))
           }
         }
       case "microdata" =>
         els.foreach { e =>
-          e.attr("itemprop").foreach { p =>
+          t.attr(e, "itemprop").foreach { p =>
             if (p == "latitude" || p == "longitude")
               out += cap(res, e, "geo." + p, innerText(res, e))
           }
@@ -305,15 +291,17 @@ object Extractor {
    * scaling). */
   def geoEntities(html: Array[Byte]): Seq[GeoEntity] = {
     val res = HtmlParser.parse(html)
+    val nodes = res.nodes
     val metas = new ArrayBuffer[(String, String)](2)
     val uris = new ArrayBuffer[(String, String)](2)
-    val latSpans = new ArrayBuffer[HtmlNode](1)
-    val lonSpans = new ArrayBuffer[HtmlNode](1)
-    res.nodes.foreach { n =>
-      if (n.kind == "element") {
-        if (n.name == "meta") {
-          val nm = n.attr("name").getOrElse("")
-          if (nm == "geo.position" || nm == "ICBM") n.attr("content").foreach { cv =>
+    val latSpans = new ArrayBuffer[Int](1)
+    val lonSpans = new ArrayBuffer[Int](1)
+    var n = 0
+    while (n < nodes.length) {
+      if (nodes.kind(n) == HtmlParser.Element) {
+        if (nodes.name(n) == "meta") {
+          val nm = nodes.attr(n, "name").getOrElse("")
+          if (nm == "geo.position" || nm == "ICBM") nodes.attr(n, "content").foreach { cv =>
             val t = decodeEntities(cv)
             val sep = { val a = t.indexOf(';'); if (a >= 0) a else t.indexOf(',') }
             val more = sep >= 0 && { // exactly one separator (two fields)
@@ -322,8 +310,8 @@ object Extractor {
             }
             if (more) metas += ((t.substring(0, sep).trim, t.substring(sep + 1).trim))
           }
-        } else if (n.name == "a") {
-          n.attr("href").foreach { h =>
+        } else if (nodes.name(n) == "a") {
+          nodes.attr(n, "href").foreach { h =>
             if (h.startsWith("geo:")) {
               val t = decodeEntities(h)
               val body = t.substring(4).takeWhile(ch => ch != ';' && ch != '?')
@@ -332,13 +320,14 @@ object Extractor {
             }
           }
         } else {
-          n.attr("itemprop") match {
+          nodes.attr(n, "itemprop") match {
             case Some("latitude")  => latSpans += n
             case Some("longitude") => lonSpans += n
             case _ =>
           }
         }
       }
+      n += 1
     }
     val out = new ArrayBuffer[GeoEntity](metas.length + uris.length + latSpans.length)
     var idx = 0
@@ -351,9 +340,8 @@ object Extractor {
     }
     metas.foreach { case (a, b) => add("meta", a, b) }
     uris.foreach { case (a, b) => add("uri", a, b) }
-    lazy val rawIds = rawTextIds(res)
     latSpans.zip(lonSpans).foreach { case (la, lo) =>
-      add("microdata", innerText(res, la, rawIds).trim, innerText(res, lo, rawIds).trim)
+      add("microdata", innerText(res, la).trim, innerText(res, lo).trim)
     }
     out.toSeq
   }

@@ -4,40 +4,6 @@ import scala.collection.mutable.ArrayBuffer
 import graft.core.Utf8
 
 /**
- * A node of the parsed HTML document, flattened (relational encoding:
- * parent_id + depth instead of nesting), mirroring the reference's AST
- * node shape (reference: models/ast_cursor.py:45-58 — {id, type,
- * start_point{row,column}, end_point, start_byte, end_byte, named}).
- *
- * - `id` is deterministic: hash of (startByte, endByte, kind/name) like the
- *   reference's `hash((start_byte, end_byte, type))` (ast_cursor.py:41-42),
- *   but with a stable 64-bit mix (Python's hash is process-salted; SURVEY §2.11).
- * - positions are tree-sitter points: row = newline count, col = BYTE offset
- *   within the line.
- * - byte ranges are half-open [startByte, endByte).
- * Root→node name paths (the reference's extract_node_path,
- * models/ast.py:112-155) live on [[HtmlParser.ParseResult.paths]] — LAZY,
- * so the flagship extract-geo hot path (which never asks for paths) pays
- * nothing for them (SURVEY §2.9 T3).
- */
-final case class HtmlNode(
-    id: Long,
-    parentId: Long,
-    depth: Int,
-    kind: String, // document | element | text | comment | doctype
-    name: String, // tag name (lowercased) for elements, "" otherwise
-    attrs: Seq[(String, String)],
-    startByte: Int,
-    endByte: Int,
-    startRow: Int,
-    startCol: Int,
-    endRow: Int,
-    endCol: Int,
-    childrenCount: Int) { // reference node field (ast_cursor.py:58)
-  def attr(key: String): Option[String] = attrs.collectFirst { case (k, v) if k == key => v }
-}
-
-/**
  * Pure, stack-safe (explicit stack, zero recursion — the reference walks
  * iteratively too, models/ast_cursor.py:12-183), byte-offset-exact HTML
  * parser. Bytes-first discipline: tag/attr scanning is ASCII-safe over raw
@@ -55,6 +21,14 @@ final case class HtmlNode(
  *   - `<script>`/`<style>` content is raw text until the matching close tag
  *     (ASCII case-insensitive), matching tree-sitter-html's raw_text
  *   - anything else after `<` is literal text
+ *
+ * The output is one flat node table ([[HtmlParser.NodeTable]]): the
+ * relational encoding of the reference's AST node (models/
+ * ast_cursor.py:45-58) with a parent index and depth in place of nesting
+ * and half-open byte ranges [startByte, endByte). Node ids, children
+ * counts and paths are derived by the one consumer that emits them
+ * (`ParseNodeTableExpr`); row/col points come from
+ * [[HtmlParser.ParseResult.row]]/[[HtmlParser.ParseResult.col]].
  */
 object HtmlParser {
 
@@ -73,6 +47,15 @@ object HtmlParser {
     "link", "meta", "param", "source", "track", "wbr")
 
   val RawTextElements: Set[String] = Set("script", "style")
+
+  /** Kind codes of [[NodeTable.kind]]; `KindNames(code)` is the kind's
+   * emitted name. */
+  final val Document = 0
+  final val Element = 1
+  final val Text = 2
+  final val Comment = 3
+  final val Doctype = 4
+  val KindNames: IndexedSeq[String] = Vector("document", "element", "text", "comment", "doctype")
 
   /** Deterministic 64-bit node id (stand-in for the reference's salted
    * Python hash; SURVEY §2.11 standardizes on a stable mix). */
@@ -126,61 +109,97 @@ object HtmlParser {
     cand
   }
 
-  final case class ParseResult(nodes: IndexedSeq[HtmlNode], source: Array[Byte],
-      parentIdx: Array[Int]) {
-    def text(n: HtmlNode): String = Utf8.decodeReplace(source, n.startByte, n.endByte)
+  /**
+   * The nodes of one parse as columns, in document order: start bytes
+   * never decrease and a parent precedes its children. Node 0 is the
+   * document (parent -1, depth 0).
+   */
+  final class NodeTable private[HtmlParser] () {
+    private var kinds = new Array[Byte](64)
+    private var names = new Array[String](64)
+    private var attrLists = new Array[Seq[(String, String)]](64)
+    private var parents = new Array[Int](64)
+    private var depths = new Array[Int](64)
+    private var starts = new Array[Int](64)
+    private var ends = new Array[Int](64)
+    private var n = 0
 
-    /** Root→node paths (self inclusive; element name, kind otherwise),
-     * aligned with `nodes` by index. Lazy: only callers that ask for
-     * paths (ParseHtmlNodesExpr) pay for them — parents precede children
-     * in emit order, so one forward pass suffices. */
-    lazy val paths: Array[Vector[String]] = {
-      val out = new Array[Vector[String]](nodes.length)
-      var i = 0
-      while (i < nodes.length) {
-        val n = nodes(i)
-        val key = if (n.kind == "element") n.name else n.kind
-        out(i) = if (parentIdx(i) < 0) Vector(key) else out(parentIdx(i)) :+ key
-        i += 1
-      }
-      out
+    def length: Int = n
+    def kind(i: Int): Int = kinds(i)
+    /** Tag name (lowercased) for elements, "" otherwise. */
+    def name(i: Int): String = names(i)
+    /** Attributes in source order, duplicates kept; values raw (entities
+     * undecoded). */
+    def attrs(i: Int): Seq[(String, String)] = attrLists(i)
+    def attr(i: Int, key: String): Option[String] =
+      attrLists(i).collectFirst { case (k, v) if k == key => v }
+    /** Index of the parent node, -1 for the document. */
+    def parent(i: Int): Int = parents(i)
+    def depth(i: Int): Int = depths(i)
+    def startByte(i: Int): Int = starts(i)
+    def endByte(i: Int): Int = ends(i)
+    /** A text node inside a script/style element: code, not content, so
+     * every text projection skips it. */
+    def isRawText(i: Int): Boolean = kinds(i) == Text && {
+      val p = parents(i)
+      kinds(p) == Element && RawTextElements.contains(names(p))
     }
+
+    private[HtmlParser] def add(kind: Int, name: String, attrs: Seq[(String, String)],
+        parent: Int, depth: Int, start: Int, end: Int): Int = {
+      if (n == kinds.length) {
+        val cap = 2 * n
+        kinds = java.util.Arrays.copyOf(kinds, cap)
+        names = java.util.Arrays.copyOf(names, cap)
+        attrLists = java.util.Arrays.copyOf(attrLists, cap)
+        parents = java.util.Arrays.copyOf(parents, cap)
+        depths = java.util.Arrays.copyOf(depths, cap)
+        starts = java.util.Arrays.copyOf(starts, cap)
+        ends = java.util.Arrays.copyOf(ends, cap)
+      }
+      kinds(n) = kind.toByte; names(n) = name; attrLists(n) = attrs
+      parents(n) = parent; depths(n) = depth; starts(n) = start; ends(n) = end
+      n += 1
+      n - 1
+    }
+    private[HtmlParser] def setEnd(i: Int, end: Int): Unit = ends(i) = end
   }
 
-  // ---- internal open-element bookkeeping --------------------------------
-  private final class Open(
-      val name: String,
-      val attrs: Seq[(String, String)],
-      val startByte: Int,
-      val nodeIdx: Int) // index in `out` to patch endByte later
+  final class ParseResult(val nodes: NodeTable, val source: Array[Byte]) {
+    def text(i: Int): String = Utf8.decodeReplace(source, nodes.startByte(i), nodes.endByte(i))
 
-  // mutable node under construction (endByte patched on close)
-  private final class Pending(
-      var id: Long,
-      var parentId: Long,
-      var depth: Int,
-      var kind: String,
-      var name: String,
-      var attrs: Seq[(String, String)],
-      var startByte: Int,
-      var endByte: Int)
+    private lazy val lineStarts: Array[Int] = {
+      val ls = new ArrayBuffer[Int](16)
+      ls += 0
+      var p = 0
+      while (p < source.length) { if (source(p) == '\n') ls += p + 1; p += 1 }
+      ls.toArray
+    }
+
+    /** Tree-sitter point row of byte offset `off`: the newlines before it. */
+    def row(off: Int): Int = {
+      val ls = lineStarts
+      var lo = 0; var hi = ls.length - 1
+      while (lo < hi) { val mid = (lo + hi + 1) >>> 1; if (ls(mid) <= off) lo = mid else hi = mid - 1 }
+      lo
+    }
+
+    /** Tree-sitter point column of byte offset `off`: BYTES since its
+     * line's start. */
+    def col(off: Int): Int = off - lineStarts(row(off))
+  }
 
   def parse(src: Array[Byte]): ParseResult = {
     val n = src.length
-    val out = new ArrayBuffer[Pending](64)
-    val stack = new ArrayBuffer[Open](16)
+    val out = new NodeTable
+    // open elements, as node indices; the document is never on it
+    var stack = new Array[Int](16)
+    var sp = 0
 
-    val rootIdx = out.length
-    out += new Pending(0L, -1L, 0, "document", "", Nil, 0, n)
+    out.add(Document, "", Nil, -1, 0, 0, n)
 
-    def curParentIdx: Int = if (stack.isEmpty) rootIdx else stack.last.nodeIdx
-    def curDepth: Int = stack.length + 1
-
-    def emit(kind: String, name: String, attrs: Seq[(String, String)], s: Int, e: Int): Int = {
-      val idx = out.length
-      out += new Pending(0L, curParentIdx.toLong, curDepth, kind, name, attrs, s, e)
-      idx
-    }
+    def emit(kind: Int, name: String, attrs: Seq[(String, String)], s: Int, e: Int): Int =
+      out.add(kind, name, attrs, if (sp == 0) 0 else stack(sp - 1), sp + 1, s, e)
 
     @inline def at(i: Int): Int = src(i) & 0xff
     @inline def isAsciiAlpha(c: Int): Boolean = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
@@ -214,7 +233,7 @@ object HtmlParser {
     var textStart = -1
 
     def flushText(endExcl: Int): Unit = {
-      if (textStart >= 0 && endExcl > textStart) emit("text", "", Nil, textStart, endExcl)
+      if (textStart >= 0 && endExcl > textStart) emit(Text, "", Nil, textStart, endExcl)
       textStart = -1
     }
 
@@ -233,14 +252,14 @@ object HtmlParser {
             if (at(j) == '-' && matches(j, "-->")) end = j + 3 else j += 1
           }
           val e = if (end < 0) n else end
-          emit("comment", "", Nil, i, e)
+          emit(Comment, "", Nil, i, e)
           i = e
         } else if (i + 1 < n && at(i + 1) == '!') {
           flushText(i)
           var j = i + 2
           while (j < n && at(j) != '>') j += 1
           val e = if (j < n) j + 1 else n
-          emit("doctype", "", Nil, i, e)
+          emit(Doctype, "", Nil, i, e)
           i = e
         } else if (i + 2 < n && at(i + 1) == '/' && isAsciiAlpha(at(i + 2))) {
           // end tag (must start with a letter — "</3" is literal text, HTML5-style)
@@ -253,14 +272,13 @@ object HtmlParser {
             while (j < n && at(j) != '>') j += 1
             val e = if (j < n) j + 1 else n
             // find matching open element (scan from top)
-            var k = stack.length - 1
-            while (k >= 0 && stack(k).name != name) k -= 1
+            var k = sp - 1
+            while (k >= 0 && out.name(stack(k)) != name) k -= 1
             if (k >= 0) {
               // implicitly close everything above, then the match
-              while (stack.length > k) {
-                val o = stack.remove(stack.length - 1)
-                val endB = if (stack.length == k) e else i
-                out(o.nodeIdx).endByte = endB
+              while (sp > k) {
+                sp -= 1
+                out.setEnd(stack(sp), if (sp == k) e else i)
               }
             } // else: stray close tag — ignored (reference grammar tolerance)
             i = e
@@ -310,7 +328,7 @@ object HtmlParser {
             }
           }
           val tagEnd = j
-          val idx = emit("element", name, attrs.toSeq, i, tagEnd) // endByte patched if pushed
+          val idx = emit(Element, name, attrs.toSeq, i, tagEnd) // endByte patched if pushed
           if (RawTextElements.contains(name) && !selfClose) {
             // raw text until matching close tag
             var k = tagEnd
@@ -321,7 +339,7 @@ object HtmlParser {
             }
             val rawEnd = if (close < 0) n else close
             if (rawEnd > tagEnd) {
-              out += new Pending(0L, idx.toLong, curDepth + 1, "text", "", Nil, tagEnd, rawEnd)
+              out.add(Text, "", Nil, idx, out.depth(idx) + 1, tagEnd, rawEnd)
             }
             var e = rawEnd
             if (close >= 0) {
@@ -329,12 +347,14 @@ object HtmlParser {
               while (m < n && at(m) != '>') m += 1
               e = if (m < n) m + 1 else n
             }
-            out(idx).endByte = e
+            out.setEnd(idx, e)
             i = e
           } else if (selfClose || VoidElements.contains(name)) {
             i = tagEnd // leaf element; endByte already = tagEnd
           } else {
-            stack += new Open(name, attrs.toSeq, i, idx)
+            if (sp == stack.length) stack = java.util.Arrays.copyOf(stack, 2 * sp)
+            stack(sp) = idx
+            sp += 1
             i = tagEnd
           }
         } else {
@@ -346,62 +366,8 @@ object HtmlParser {
     }
     flushText(n)
     // close any still-open elements at EOF
-    while (stack.nonEmpty) {
-      val o = stack.remove(stack.length - 1)
-      out(o.nodeIdx).endByte = n
-    }
-
-    // position index: line start offsets
-    val lineStarts = new ArrayBuffer[Int](16)
-    lineStarts += 0
-    var p = 0
-    while (p < n) { if (src(p) == '\n') lineStarts += (p + 1); p += 1 }
-    val ls = lineStarts.toArray
-
-    // parentId currently holds the parent's INDEX; resolve to hashes
-    // (the index chain is kept on ParseResult for lazy path building).
-    val ids = new Array[Long](out.length)
-    val parentIdx = new Array[Int](out.length)
-    val childCount = new Array[Int](out.length)
-    var q = 0
-    while (q < out.length) {
-      val nd = out(q)
-      val key = if (nd.kind == "element") nd.name else nd.kind
-      ids(q) = nodeId(nd.startByte, nd.endByte, key)
-      parentIdx(q) = nd.parentId.toInt
-      if (parentIdx(q) >= 0) childCount(parentIdx(q)) += 1
-      q += 1
-    }
-    val nodes = new Array[HtmlNode](out.length)
-    q = 0
-    while (q < out.length) {
-      val nd = out(q)
-      // end point is the position of the (exclusive) end offset itself,
-      // matching tree-sitter point semantics
-      val endRowOff = if (nd.endByte > nd.startByte) nd.endByte else nd.startByte
-      val endRow = rowOfOffset(ls, endRowOff)
-      nodes(q) = HtmlNode(
-        id = ids(q),
-        parentId = if (nd.parentId < 0) -1L else ids(nd.parentId.toInt),
-        depth = nd.depth,
-        kind = nd.kind,
-        name = nd.name,
-        attrs = nd.attrs,
-        startByte = nd.startByte,
-        endByte = nd.endByte,
-        startRow = rowOfOffset(ls, nd.startByte),
-        startCol = nd.startByte - ls(rowOfOffset(ls, nd.startByte)),
-        endRow = endRow,
-        endCol = endRowOff - ls(rowOfOffset(ls, endRowOff)),
-        childrenCount = childCount(q))
-      q += 1
-    }
-    ParseResult(scala.collection.immutable.ArraySeq.unsafeWrapArray(nodes), src, parentIdx)
-  }
-
-  private def rowOfOffset(ls: Array[Int], off: Int): Int = {
-    var lo = 0; var hi = ls.length - 1
-    while (lo < hi) { val mid = (lo + hi + 1) >>> 1; if (ls(mid) <= off) lo = mid else hi = mid - 1 }
-    lo
+    while (sp > 0) { sp -= 1; out.setEnd(stack(sp), n) }
+    new ParseResult(out, src)
   }
 }
+

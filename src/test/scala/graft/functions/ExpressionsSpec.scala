@@ -184,6 +184,40 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(err.getMessage.contains("bogus") || err.getCause != null)
   }
 
+  test("page-side functions over a STRING html column fail analysis, not the task") {
+    graft.functions.registerAll(spark)
+    Seq(("<p>x</p>", page1)).toDF("s", "b").createOrReplaceTempView("html_src")
+    for (fn <- Seq("extract_text(s)", "extract_text_bytes(s)", "extract_geo(s)",
+        "parse_html_nodes(s)", "extract_captures(s, 'links')")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $fn FROM html_src"))
+      assert(e.getMessage.contains("needs a BINARY html argument, got STRING"), s"$fn: $e")
+    }
+    // the BINARY column passes
+    assert(spark.sql("SELECT extract_geo(b) FROM html_src").count() == 2)
+  }
+
+  test("an unknown extraction spec fails analysis, even over an empty input") {
+    graft.functions.registerAll(spark)
+    val empty = Seq.empty[Array[Byte]].toDF("html")
+    for (spec <- Seq("nope", "links,nope", " , ")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        empty.select(extract_captures($"html", spec)))
+      assert(e.getMessage.contains(Extractor.SpecNames.mkString(", ")), s"$spec: $e")
+    }
+    empty.createOrReplaceTempView("empty_html")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT extract_captures(html, 'nope') FROM empty_html"))
+    assert(e.getMessage.contains("unknown extraction spec 'nope'"), e)
+  }
+
+  test("a column-valued extraction spec fails analysis") {
+    graft.functions.registerAll(spark)
+    Seq((page1, "links")).toDF("html", "spec").createOrReplaceTempView("spec_src")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT extract_captures(html, spec) FROM spec_src"))
+    assert(e.getMessage.contains("spec must be a constant STRING"), e)
+  }
+
   test("extract_geo generator") {
     val rows = Seq(Tuple1(page1)).toDF("html")
       .select(extract_geo($"html").as(Seq("entity_idx", "source", "lat", "lon")))

@@ -103,18 +103,32 @@ class FuzzSafetySpec extends AnyFunSuite {
   }
 
   test("HtmlParser.parse is total and structurally sane on byte soup") {
+    import HtmlParser.{Document, Element, Text}
     (0 until 2000).foreach { s =>
       val raw = htmlSoup(s)
-      val res = HtmlParser.parse(raw)
-      res.nodes.foreach { n =>
-        assert(n.startByte >= 0 && n.startByte <= n.endByte && n.endByte <= raw.length,
-          s"node span out of bounds for seed $s: $n")
-        assert(n.depth >= 0)
-      }
-      // ids resolve: every non-root parentId is a node id in the result
-      val ids = res.nodes.map(_.id).toSet
-      res.nodes.filter(_.kind != "document").foreach { n =>
-        assert(ids.contains(n.parentId), s"dangling parent for seed $s")
+      val t = HtmlParser.parse(raw).nodes
+      assert(t.kind(0) == Document && t.parent(0) == -1 && t.depth(0) == 0 &&
+        t.startByte(0) == 0 && t.endByte(0) == raw.length, s"document node, seed $s")
+      val rawTextChildren = new Array[Int](t.length)
+      (1 until t.length).foreach { i =>
+        val p = t.parent(i)
+        val clue = s"seed $s node $i parent $p"
+        assert(t.startByte(i) <= t.endByte(i) && t.endByte(i) <= raw.length, clue)
+        assert(t.startByte(i - 1) <= t.startByte(i), s"document order, $clue")
+        assert(p >= 0 && p < i, s"parent precedes child, $clue")
+        assert(t.kind(p) == Document || t.kind(p) == Element, s"only elements own children, $clue")
+        assert(t.startByte(p) <= t.startByte(i) && t.endByte(i) <= t.endByte(p),
+          s"child span inside parent span, $clue")
+        assert(t.depth(i) == t.depth(p) + 1, clue)
+        // script/style own exactly their raw text, and it is the only
+        // text a projection skips
+        val rawParent = t.kind(p) == Element && HtmlParser.RawTextElements.contains(t.name(p))
+        if (rawParent) {
+          assert(t.kind(i) == Text, s"raw-text element owns a non-text node, $clue")
+          rawTextChildren(p) += 1
+          assert(rawTextChildren(p) == 1, s"two raw-text runs in one element, $clue")
+        }
+        assert(t.isRawText(i) == rawParent, clue)
       }
     }
   }

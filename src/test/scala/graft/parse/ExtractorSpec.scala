@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ExtractorSpec extends AnyFunSuite {
   private def b(s: String) = s.getBytes("UTF-8")
+  private def captures(html: String, spec: String) =
+    Extractor.capturesMulti(HtmlParser.parse(b(html)), Seq(spec))
 
   test("extractText: text nodes in order, script/style excluded") {
     val html = "<html><head><title>T</title><style>p{color:red}</style></head>" +
@@ -25,7 +27,7 @@ class ExtractorSpec extends AnyFunSuite {
   }
 
   test("captures: links with entity-decoded hrefs and inner text") {
-    val caps = Extractor.captures(b("""<a href="x?a=1&amp;b=2">first <b>link</b></a><a>no href</a>"""), "links")
+    val caps = captures("""<a href="x?a=1&amp;b=2">first <b>link</b></a><a>no href</a>""", "links")
     assert(caps.map(_.capture) == Seq("link.href", "link.text", "link.text"))
     assert(caps(0).text == "x?a=1&b=2")
     assert(caps(1).text == "first link")
@@ -33,10 +35,10 @@ class ExtractorSpec extends AnyFunSuite {
 
   test("captures: headings, title, meta") {
     val html = """<title>t</title><h1>one</h1><h2>two</h2><meta name="k" content="v">"""
-    assert(Extractor.captures(b(html), "headings").map(c => (c.capture, c.text)) ==
+    assert(captures(html, "headings").map(c => (c.capture, c.text)) ==
       Seq(("heading.h1", "one"), ("heading.h2", "two")))
-    assert(Extractor.captures(b(html), "title").head.text == "t")
-    assert(Extractor.captures(b(html), "meta").head.capture == "meta.k")
+    assert(captures(html, "title").head.text == "t")
+    assert(captures(html, "meta").head.capture == "meta.k")
   }
 
   test("geoEntities: all three sources, document order, range-validated") {
@@ -56,13 +58,13 @@ class ExtractorSpec extends AnyFunSuite {
 
   test("capture positions match node byte ranges") {
     val html = "<h1>H</h1>"
-    val c = Extractor.captures(b(html), "headings").head
+    val c = captures(html, "headings").head
     assert(html.substring(c.startByte, c.endByte) == html)
     assert(c.startRow == 0 && c.startCol == 0)
   }
 
   test("unknown spec throws with known-spec list") {
-    val e = intercept[IllegalArgumentException](Extractor.captures(b("<p>x</p>"), "nope"))
+    val e = intercept[IllegalArgumentException](captures("<p>x</p>", "nope"))
     assert(e.getMessage.contains("links"))
   }
 
@@ -71,7 +73,7 @@ class ExtractorSpec extends AnyFunSuite {
     val res = HtmlParser.parse(html)
     val multi = Extractor.capturesMulti(res, Seq("headings", "links", "title", "images"))
     val singles = Seq("headings", "links", "title", "images")
-      .flatMap(sp => Extractor.captures(res, sp))
+      .flatMap(sp => Extractor.capturesMulti(res, Seq(sp)))
     assert(multi == singles)
     assert(multi.map(_.capture) ==
       Seq("heading.h1", "link.href", "link.text", "title", "image.src"))
@@ -85,7 +87,7 @@ class ExtractorSpec extends AnyFunSuite {
       case 200 => "<a href=\"h\"><b>mid<i>dle</i></b></a>"
       case i   => s"<a>t$i</a>"
     }.mkString
-    val caps = Extractor.captures(b(s"<body>$many</body>"), "links")
+    val caps = captures(s"<body>$many</body>", "links")
     val texts = caps.filter(_.capture == "link.text").map(_.text)
     assert(texts.length == 401)
     assert(texts(200) == "middle")

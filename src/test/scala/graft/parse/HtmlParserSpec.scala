@@ -1,102 +1,115 @@
 package graft.parse
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.ParseNodeTableExpr
+import HtmlParser.Text
 
 class HtmlParserSpec extends AnyFunSuite {
   private def parse(s: String) = HtmlParser.parse(s.getBytes("UTF-8"))
 
+  /** Indices of the nodes that satisfy `p`, in document order. */
+  private def where(r: HtmlParser.ParseResult)(p: Int => Boolean): IndexedSeq[Int] =
+    (0 until r.nodes.length).filter(p)
+  private def elements(r: HtmlParser.ParseResult, tag: String) =
+    where(r)(i => r.nodes.kind(i) == HtmlParser.Element && r.nodes.name(i) == tag)
+  private def texts(r: HtmlParser.ParseResult) = where(r)(r.nodes.kind(_) == Text).map(r.text)
+
   test("simple document structure with byte offsets") {
     val html = "<html><body><p>hi</p></body></html>"
     val r = parse(html)
-    val kinds = r.nodes.map(n => (n.kind, n.name))
+    val t = r.nodes
+    val kinds = where(r)(_ => true).map(i => (HtmlParser.KindNames(t.kind(i)), t.name(i)))
     assert(kinds.contains(("document", "")))
     assert(kinds.contains(("element", "html")))
     assert(kinds.contains(("element", "p")))
-    val p = r.nodes.find(_.name == "p").get
-    assert(html.substring(p.startByte, p.endByte) == "<p>hi</p>")
-    val txt = r.nodes.find(_.kind == "text").get
-    assert(html.substring(txt.startByte, txt.endByte) == "hi")
-    assert(txt.parentId == p.id)
-    assert(txt.depth == p.depth + 1)
+    val p = elements(r, "p").head
+    assert(html.substring(t.startByte(p), t.endByte(p)) == "<p>hi</p>")
+    val txt = where(r)(t.kind(_) == Text).head
+    assert(html.substring(t.startByte(txt), t.endByte(txt)) == "hi")
+    assert(t.parent(txt) == p)
+    assert(t.depth(txt) == t.depth(p) + 1)
   }
 
   test("attributes: quoted, unquoted, valueless, entities in values") {
     val r = parse("""<a href="x.html" id=main disabled title='t &amp; u'>z</a>""")
-    val a = r.nodes.find(_.name == "a").get
-    assert(a.attr("href").contains("x.html"))
-    assert(a.attr("id").contains("main"))
-    assert(a.attr("disabled").contains(""))
-    assert(a.attr("title").contains("t &amp; u")) // raw; decode is the extractor's job
+    val a = elements(r, "a").head
+    assert(r.nodes.attr(a, "href").contains("x.html"))
+    assert(r.nodes.attr(a, "id").contains("main"))
+    assert(r.nodes.attr(a, "disabled").contains(""))
+    assert(r.nodes.attr(a, "title").contains("t &amp; u")) // raw; decode is the extractor's job
   }
 
   test("void and self-closing elements do not swallow siblings") {
     val r = parse("<p>a<br>b<img src=i.png/>c</p>")
-    val texts = r.nodes.filter(_.kind == "text").map(n => r.text(n))
-    assert(texts == Seq("a", "b", "c"))
-    assert(r.nodes.count(_.name == "br") == 1)
-    assert(r.nodes.count(_.name == "img") == 1)
+    assert(texts(r) == Seq("a", "b", "c"))
+    assert(elements(r, "br").length == 1)
+    assert(elements(r, "img").length == 1)
   }
 
   test("script/style content is raw text, not parsed") {
     val html = "<body><script>if (a<b) { x('<p>') }</script><p>real</p></body>"
     val r = parse(html)
-    assert(r.nodes.count(_.name == "p") == 1)
-    val sc = r.nodes.find(_.name == "script").get
-    val raw = r.nodes.find(n => n.kind == "text" && n.parentId == sc.id).get
+    assert(elements(r, "p").length == 1)
+    val sc = elements(r, "script").head
+    val raw = where(r)(i => r.nodes.kind(i) == Text && r.nodes.parent(i) == sc).head
     assert(r.text(raw) == "if (a<b) { x('<p>') }")
+    assert(r.nodes.isRawText(raw))
   }
 
   test("comments and doctype") {
     val r = parse("<!doctype html><!-- a <p> inside --><p>x</p>")
-    assert(r.nodes.count(_.kind == "doctype") == 1)
-    assert(r.nodes.count(_.kind == "comment") == 1)
-    assert(r.nodes.count(_.name == "p") == 1)
+    assert(where(r)(r.nodes.kind(_) == HtmlParser.Doctype).length == 1)
+    assert(where(r)(r.nodes.kind(_) == HtmlParser.Comment).length == 1)
+    assert(elements(r, "p").length == 1)
   }
 
   test("mismatched close tags implicitly close children; strays ignored") {
     val r = parse("<div><p>a</div>b</p>")
-    val div = r.nodes.find(_.name == "div").get
-    val p = r.nodes.find(_.name == "p").get
-    assert(p.endByte <= div.endByte)
-    val texts = r.nodes.filter(_.kind == "text").map(n => r.text(n))
-    assert(texts == Seq("a", "b"))
+    val div = elements(r, "div").head
+    val p = elements(r, "p").head
+    assert(r.nodes.endByte(p) <= r.nodes.endByte(div))
+    assert(texts(r) == Seq("a", "b"))
   }
 
   test("unclosed elements run to EOF") {
     val html = "<div><p>tail"
     val r = parse(html)
-    assert(r.nodes.find(_.name == "div").get.endByte == html.length)
-    assert(r.nodes.find(_.name == "p").get.endByte == html.length)
+    assert(r.nodes.endByte(elements(r, "div").head) == html.length)
+    assert(r.nodes.endByte(elements(r, "p").head) == html.length)
   }
 
   test("stack-safe on 50k-deep nesting") {
     val depth = 50000
     val html = "<div>" * depth + "x" + "</div>" * depth
     val r = HtmlParser.parse(html.getBytes("UTF-8"))
-    assert(r.nodes.count(_.name == "div") == depth)
-    val t = r.nodes.find(_.kind == "text").get
-    assert(t.depth == depth + 1)
+    assert(elements(r, "div").length == depth)
+    val t = where(r)(r.nodes.kind(_) == Text).head
+    assert(r.nodes.depth(t) == depth + 1)
   }
 
   test("rows/cols are tree-sitter points (row = newlines, col = bytes)") {
     val html = "<p>a</p>\n<p>bé</p>"
     val r = parse(html)
-    val ps = r.nodes.filter(_.name == "p")
-    assert(ps(0).startRow == 0 && ps(0).startCol == 0)
-    assert(ps(1).startRow == 1 && ps(1).startCol == 0)
-    assert(ps(1).endRow == 1 && ps(1).endCol == 10) // 'bé' is 3 bytes
+    val Seq(p0, p1) = elements(r, "p").map(i => (r.nodes.startByte(i), r.nodes.endByte(i)))
+    assert(r.row(p0._1) == 0 && r.col(p0._1) == 0)
+    assert(r.row(p1._1) == 1 && r.col(p1._1) == 0)
+    assert(r.row(p1._2) == 1 && r.col(p1._2) == 10) // 'bé' is 3 bytes
   }
 
   test("node ids deterministic and distinct per (range, type)") {
-    val r1 = parse("<p>a</p><p>b</p>")
-    val r2 = parse("<p>a</p><p>b</p>")
-    assert(r1.nodes.map(_.id) == r2.nodes.map(_.id))
-    assert(r1.nodes.map(_.id).distinct.length == r1.nodes.length)
+    // ids are derived where they are emitted: the node_id column
+    def ids(html: String): Seq[Long] =
+      ParseNodeTableExpr(Literal(html.getBytes("UTF-8"))).eval(InternalRow.empty)
+        .iterator.map(_.getLong(0)).toSeq
+    val id1 = ids("<p>a</p><p>b</p>")
+    assert(id1 == ids("<p>a</p><p>b</p>"))
+    assert(id1.distinct.length == parse("<p>a</p><p>b</p>").nodes.length)
   }
 
   test("lone '<' and '</3' are literal text") {
     val r = parse("a < b </3 c")
-    val texts = r.nodes.filter(_.kind == "text").map(n => r.text(n)).mkString
-    assert(texts == "a < b </3 c")
+    assert(texts(r).mkString == "a < b </3 c")
   }
 }
