@@ -390,9 +390,10 @@ case class Md5PrefixExpr(child: Expression, bits: Int) extends UnaryExpression {
  * node_to_dict_cursor, tools/ast_operations.py:17-66 + models/
  * ast_cursor.py:12-183 — relational encoding per SURVEY §2.9 T1). The
  * node id (`HtmlParser.nodeId` of the node's byte range and name or
- * kind), parent id, children count and root→node path are derived here,
- * the one consumer that emits them; parents precede children in the
- * parser's table, so one forward pass builds ids and paths. */
+ * kind), parent id, children count and root→node path (the reference's
+ * extract_node_path, models/ast.py:112-155) are derived here, the one
+ * consumer that emits them; parents precede children in the parser's
+ * table, so one forward pass builds ids and paths. */
 case class ParseNodeTableExpr(html: Expression) extends UnaryExpression with Generator with CodegenFallback {
   override def child: Expression = html
   override def elementSchema: StructType = ParseNodeTableExpr.schema
