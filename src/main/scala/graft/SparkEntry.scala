@@ -54,9 +54,9 @@ object SparkEntry {
    * target tracks spark.sql.shuffle.partitions (SPARK_GRAFT_CPUS in the
    * mains), never a hard-coded core count.
    */
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
+  private[graft] def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val df = s.read.parquet(path)
+    val df = tblRaw(s, dir, name)
     val target = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val key = (path,
       s.conf.getOption("spark.sql.files.maxPartitionBytes").getOrElse(""),
@@ -70,9 +70,11 @@ object SparkEntry {
   /** Un-fanned read for queries whose per-row work is too light to repay
    * the fan-out exchange (measured: the cheap relational queries lose
    * 0.1-0.3 s to the extra shuffle while gaining nothing — their
-   * scan-fused stages are trivial). Heavy-projection queries use [[tbl]]. */
-  private def tblRaw(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+   * scan-fused stages are trivial). Heavy-projection queries use [[tbl]].
+   * The schema comes from the table's first footer, so building the read
+   * starts no job (`SnapshotCatalog.readParquet`). */
+  private[graft] def tblRaw(s: SparkSession, dir: String, name: String): DataFrame =
+    graft.snap.SnapshotCatalog.readParquet(s, java.nio.file.Paths.get(s"$dir/$name.parquet"))
 
   /** Scratch root for the snapshot-writing queries (q43/q104/q105/q107/
    * q124), under the session's spark.local.dir — tmpfs in the bench and
@@ -681,8 +683,10 @@ object SparkEntry {
     "q124_snapshot_diff" -> ((s, d) => {
       val root = scratch(s, "graft_q124")
       val wave = pmod(md5_prefix(col("o_orderkey").cast("string"), 32), lit(2))
-      graft.snap.SnapshotCatalog.resumableRunBy(s, tblRaw(s, d, "orders"), wave, 2, root, "ords") {
-        df => df.select(col("o_orderkey"), col("o_custkey").cast("string").as("content"))
+      graft.snap.SnapshotCatalog.resumableRunSinglePass(s, tblRaw(s, d, "orders"), wave, 2, root,
+        "ords") {
+        df => df.select(col("o_orderkey"), col("o_custkey").cast("string").as("content"),
+          col("__wave"))
       }
       val cur = graft.snap.SnapshotCatalog.currentManifest(root, "ords").get
       graft.snap.SnapshotCatalog.diffSnapshots(
@@ -1124,8 +1128,9 @@ object SparkEntry {
     "q105_snapshot_compact" -> ((s, d) => {
       val root = scratch(s, "graft_q105")
       val wave = pmod(md5_prefix(col("o_orderkey").cast("string"), 32), lit(4))
-      graft.snap.SnapshotCatalog.resumableRunBy(s, tblRaw(s, d, "orders"), wave, 4, root, "ords") {
-        df => df.select(col("o_orderkey"), col("o_custkey"))
+      graft.snap.SnapshotCatalog.resumableRunSinglePass(s, tblRaw(s, d, "orders"), wave, 4, root,
+        "ords") {
+        df => df.select(col("o_orderkey"), col("o_custkey"), col("__wave"))
       }
       graft.snap.SnapshotCatalog.compact(s, root, "ords",
         targetFiles = 2, sortBy = Seq("o_orderkey"))
@@ -1536,8 +1541,9 @@ object SparkEntry {
       // max, not sum; outputRows are per-partition → sum.
       val root = scratch(s, "graft_q43")
       val wave = pmod(md5_prefix(col("doc_id").cast("string"), 32), lit(4))
-      graft.snap.SnapshotCatalog.resumableRunBy(s, tblRaw(s, d, "documents"), wave, 4, root, "docs") {
-        df => df.select(col("doc_id"), length(col("text")).cast("long").as("len"))
+      graft.snap.SnapshotCatalog.resumableRunSinglePass(s, tblRaw(s, d, "documents"), wave, 4,
+        root, "docs") {
+        df => df.select(col("doc_id"), length(col("text")).cast("long").as("len"), col("__wave"))
       }
       graft.snap.SnapshotCatalog.lineage(s, root, "docs")
         .groupBy(col("wave").cast("long").as("wave"))

@@ -281,14 +281,14 @@ object PointInPolygonExpr {
 // Scalar: extraction kernels (eval-only; parser not codegen-able)
 // ---------------------------------------------------------------------------
 
-/** Analysis-time check of a page-side function's html argument: the
- * kernels read raw bytes, so a STRING column fails analysis instead of
- * the first task. */
-private[functions] object HtmlArg {
-  def check(fn: String, html: Expression): TypeCheckResult =
-    if (html.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+/** Analysis-time check of a BINARY argument (a page-side function's
+ * html, `utf8_decode_replace`'s bytes): the kernels read raw bytes, so a
+ * STRING column fails analysis instead of the first task. */
+private[functions] object BinaryArg {
+  def check(fn: String, arg: Expression, what: String = "html argument"): TypeCheckResult =
+    if (arg.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$fn needs a BINARY html argument, got ${html.dataType.sql}")
+      s"$fn needs a BINARY $what, got ${arg.dataType.sql}")
 }
 
 /** Byte-identity text extraction: BINARY html → BINARY extracted text
@@ -298,7 +298,7 @@ case class ExtractedTextExpr(html: Expression) extends UnaryExpression {
   override def child: Expression = html
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = HtmlArg.check("extract_text", html)
+  override def checkInputDataTypes(): TypeCheckResult = BinaryArg.check("extract_text", html)
   override protected def nullSafeEval(h: Any): Any =
     Extractor.extractTextBytes(h.asInstanceOf[Array[Byte]])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -311,6 +311,8 @@ case class Utf8ReplaceDecodeExpr(bin: Expression) extends UnaryExpression {
   override def child: Expression = bin
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult =
+    BinaryArg.check("utf8_decode_replace", bin, "argument")
   override protected def nullSafeEval(b: Any): Any =
     UTF8String.fromString(Utf8.decodeReplace(b.asInstanceOf[Array[Byte]]))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -397,7 +399,7 @@ case class Md5PrefixExpr(child: Expression, bits: Int) extends UnaryExpression {
 case class ParseNodeTableExpr(html: Expression) extends UnaryExpression with Generator with CodegenFallback {
   override def child: Expression = html
   override def elementSchema: StructType = ParseNodeTableExpr.schema
-  override def checkInputDataTypes(): TypeCheckResult = HtmlArg.check("parse_html_nodes", html)
+  override def checkInputDataTypes(): TypeCheckResult = BinaryArg.check("parse_html_nodes", html)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val h = html.eval(input)
     if (h == null) return Nil
@@ -462,7 +464,7 @@ case class ExtractCapturesExpr(html: Expression, spec: Expression)
     ExtractCapturesExpr.specList(spec.eval(InternalRow.empty))
   override def checkInputDataTypes(): TypeCheckResult = {
     def known = Extractor.SpecNames.mkString(", ")
-    val htmlCheck = HtmlArg.check("extract_captures", html)
+    val htmlCheck = BinaryArg.check("extract_captures", html)
     if (htmlCheck.isFailure) htmlCheck
     else if (!spec.foldable || !spec.dataType.isInstanceOf[StringType])
       TypeCheckResult.TypeCheckFailure(
@@ -511,7 +513,7 @@ object ExtractCapturesExpr {
 case class ExtractGeoEntitiesExpr(html: Expression) extends UnaryExpression with Generator with CodegenFallback {
   override def child: Expression = html
   override def elementSchema: StructType = ExtractGeoEntitiesExpr.schema
-  override def checkInputDataTypes(): TypeCheckResult = HtmlArg.check("extract_geo", html)
+  override def checkInputDataTypes(): TypeCheckResult = BinaryArg.check("extract_geo", html)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val h = html.eval(input)
     if (h == null) return Nil

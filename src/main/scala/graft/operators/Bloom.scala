@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Liter
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
+
 /**
  * Bloom-filter runtime join pruning — the shuffle-reduction move for
  * selective joins at 100 TB, built from the pair Spark's own
@@ -34,19 +36,25 @@ object Bloom {
    * the probe is a `Filter` in the big side's scan stage, below the semi
    * join. A cross-joined broadcast column instead lets the optimizer push
    * the semi join below the cross join, and the probe then prunes nothing.
+   *
+   * `small`'s keys are materialized once (one checkpoint job), and both
+   * the filter's subquery and the semi join's build side read those
+   * blocks: over `small` itself each evaluates its plan again. The result
+   * reads the blocks, so the caller releases them ([[graft.core.Checkpoints]]).
    */
   def prunedSemiJoin(
       big: DataFrame,
       bigKey: String,
       small: DataFrame,
       smallKey: String,
-      expectedKeys: Long): DataFrame = {
+      expectedKeys: Long): DataFrame = Checkpoints.scope {
+    val keys = Checkpoints.materialize(small.select(col(smallKey)))
     val build = new BloomFilterAggregate(
       GraftBridge.expression(xxhash64(col(smallKey))),
       Literal(expectedKeys), Literal(expectedKeys * 10))
-    val filter = small.select(GraftBridge.column(build.toAggregateExpression())).scalar()
+    val filter = keys.select(GraftBridge.column(build.toAggregateExpression())).scalar()
     val pruned = big.where(GraftBridge.column(BloomFilterMightContain(
       GraftBridge.expression(filter), GraftBridge.expression(xxhash64(col(bigKey))))))
-    pruned.join(small, pruned(bigKey) === small(smallKey), "left_semi")
+    pruned.join(keys, pruned(bigKey) === keys(smallKey), "left_semi")
   }
 }

@@ -3,7 +3,12 @@ package graft.snap
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /**
@@ -164,23 +169,29 @@ object SnapshotCatalog {
     readManifestFile(dir, snapshotId)
   }
 
-  /** Reads a manifest's data dirs with the schema Spark wrote into the
-   * first data file's footer, so building the read launches no
-   * schema-inference job; files without that footer entry (written by
-   * another writer) fall back to inference. */
-  private def readManifest(spark: SparkSession, root: String, m: Manifest): DataFrame = {
-    val dirs = m.dataDirs.map(d => tableDir(root, m.table).resolve(d))
-    if (dirs.isEmpty) spark.emptyDataFrame
-    else {
-      // spark.read globs its paths: escape the pattern characters so a
-      // table name holding `\`, `*`, `?`, `[` or `{` reads its own directory
-      val paths = dirs.map(_.toString.replaceAll("""([\\*?\[\]{}])""", """\\$1"""))
-      val conf = spark.sessionState.newHadoopConf()
-      dirs.iterator.flatMap(parquetFiles).nextOption().flatMap(footerSchema(conf, _)) match {
-        case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
-      }
-    }
+  private def readManifest(spark: SparkSession, root: String, m: Manifest): DataFrame =
+    if (m.dataDirs.isEmpty) spark.emptyDataFrame
+    else readParquet(spark, m.dataDirs.map(d => tableDir(root, m.table).resolve(d)): _*)
+
+  /**
+   * Reads parquet `paths` (data files, or directories of them) with the
+   * schema of the first data file's footer in path order, so building the
+   * read starts no job: `spark.read.parquet` without a schema runs a
+   * one-task inference job over that same footer. The schema is the one
+   * that inference derives: the Spark schema the footer stores, else the
+   * parquet schema converted under the session's SQL conf (files another
+   * writer made, e.g. DuckDB).
+   */
+  private[graft] def readParquet(spark: SparkSession, paths: Path*): DataFrame = {
+    val first = paths.iterator.flatMap(parquetFiles).nextOption().getOrElse(
+      throw new IllegalArgumentException(s"no parquet data file under ${paths.mkString(", ")}"))
+    val schema = withFooter(spark.sessionState.newHadoopConf(), first)(r =>
+      ParquetFileFormat.readSchemaFromFooter(new Footer(hadoopPath(first), r.getFooter),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    // spark.read globs its paths: escape the pattern characters so a
+    // name holding `\`, `*`, `?`, `[` or `{` reads its own file or directory
+    spark.read.schema(schema)
+      .parquet(paths.map(_.toString.replaceAll("""([\\*?\[\]{}])""", """\\$1""")): _*)
   }
 
   /**
@@ -354,27 +365,20 @@ object SnapshotCatalog {
   /** What [[compact]] did. */
   final case class CompactStats(dirsBefore: Int, filesBefore: Int, filesAfter: Int, rows: Long)
 
+  private def hadoopPath(p: Path) = new org.apache.hadoop.fs.Path(p.toUri)
+
   /** Applies `f` to one parquet file's footer reader — a driver-side
-   * metadata read (no Spark job, no data pages). */
-  private def withFooter[A](conf: org.apache.hadoop.conf.Configuration, p: Path)(
-      f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri), conf))
+   * metadata read (no Spark job, no data pages). The read options carry
+   * `conf`: opened without read options, a reader builds a fresh Hadoop
+   * `Configuration`, which re-parses the XML defaults on every file. */
+  private def withFooter[A](conf: Configuration, p: Path)(f: ParquetFileReader => A): A = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(hadoopPath(p), conf),
+      HadoopReadOptions.builder(conf).build())
     try f(r) finally r.close()
   }
 
-  private def footerRows(conf: org.apache.hadoop.conf.Configuration, p: Path): Long =
+  private def footerRows(conf: Configuration, p: Path): Long =
     withFooter(conf, p)(_.getRecordCount)
-
-  /** The Spark schema one parquet file's footer records under
-   * `org.apache.spark.sql.parquet.row.metadata`, if its writer was Spark. */
-  private def footerSchema(conf: org.apache.hadoop.conf.Configuration,
-      p: Path): Option[org.apache.spark.sql.types.StructType] =
-    withFooter(conf, p)(r => Option(r.getFooter.getFileMetaData.getKeyValueMetaData
-      .get("org.apache.spark.sql.parquet.row.metadata")))
-      .map(org.apache.spark.sql.types.DataType.fromJson)
-      .collect { case st: org.apache.spark.sql.types.StructType => st }
 
   /** Per-file (pid, rows) for a just-written data dir, zero-row files
    * skipped (lineage rows exist exactly for partitions that hold data —
@@ -384,17 +388,24 @@ object SnapshotCatalog {
    * footer metadata reads. */
   private def fileRows(spark: SparkSession, dir: Path): Seq[(Int, Long)] = {
     val conf = spark.sessionState.newHadoopConf()
-    parquetFiles(dir).sortBy(_.getFileName.toString)
-      .map(f => footerRows(conf, f))
+    parquetFiles(dir).map(f => footerRows(conf, f))
       .zipWithIndex.collect { case (n, i) if n > 0 => (i, n) }
   }
 
-  private[snap] def parquetFiles(dir: Path): Seq[Path] =
-    if (!Files.isDirectory(dir)) Nil
+  /** The parquet data files at `p` (a file, or a directory walked
+   * recursively), sorted by path. Like Spark's file listing, it skips
+   * names starting with `_` (unless they hold `=`, a partition directory)
+   * or `.`, e.g. `_SUCCESS`, `_temporary/` and checksum files; a
+   * directory named `*.parquet` is walked, never returned. */
+  private[snap] def parquetFiles(p: Path): Seq[Path] =
+    if (!Files.exists(p)) Nil
     else {
-      val stream = Files.walk(dir)
+      def hidden(n: String) = n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+      val stream = Files.walk(p)
       try stream.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet")).toSeq
+        .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet") &&
+          !p.relativize(f).iterator().asScala.exists(n => hidden(n.toString)))
+        .toSeq.sortBy(_.toString)
       finally stream.close()
     }
 
@@ -549,7 +560,7 @@ object SnapshotCatalog {
   def resumableRunBy(
       spark: SparkSession,
       input: DataFrame,
-      waveCol: org.apache.spark.sql.Column,
+      waveCol: Column,
       waves: Int,
       root: String,
       table: String)(transform: DataFrame => DataFrame): Int =
@@ -558,42 +569,42 @@ object SnapshotCatalog {
     }
 
   /**
-   * Single-pass variant of [[resumableRun]] for ROW-LOCAL transforms: ONE
-   * scan of the input writes every wave at once via
+   * Single-pass variant of [[resumableRunBy]] for ROW-LOCAL transforms:
+   * ONE scan of the input writes every wave at once via
    * `partitionBy(__wave)`, then each wave's directory is committed as its
    * own snapshot (manifest chain identical to the per-wave path). At 64
-   * waves over 100 TB the per-wave path scans the input 64×; this scans
-   * once.
+   * waves over 100 TB the per-wave path scans the input 64×, in 64 write
+   * jobs; this is one scan and one job.
    *
-   * Contract: `transform` receives the input WITH a `__wave` column and
-   * must preserve it (it is consumed as the partition key and not written
-   * into data files). Trade-off vs the per-wave path: commit granularity
-   * here is the whole pass — a crash mid-write loses all in-flight waves
-   * (rerun redoes the single pass); once ANY wave is committed, the method
-   * falls back to the per-wave path for the remainder, so resume still
-   * works at wave granularity across runs.
+   * Contract: `waveCol` as in [[resumableRunBy]]; `transform` receives
+   * the input WITH a `__wave` column and must preserve it (it is consumed
+   * as the partition key and not written into data files). Trade-off vs
+   * the per-wave path: commit granularity here is the whole pass — a
+   * crash mid-write loses all in-flight waves (rerun redoes the single
+   * pass); once ANY wave is committed, the method falls back to
+   * [[resumableRunBy]] with the same wave column for the remainder, so
+   * resume still works at wave granularity across runs.
    *
    * @return number of waves committed this run
    */
   def resumableRunSinglePass(
       spark: SparkSession,
       input: DataFrame,
-      keyCol: String,
+      waveCol: Column,
       waves: Int,
       root: String,
       table: String)(transform: DataFrame => DataFrame): Int = {
     val done = currentManifest(root, table).map(_.completedWaves.toSet).getOrElse(Set.empty)
     if (done.nonEmpty)
-      return resumableRun(spark, input, keyCol, waves, root, table)(
-        df => transform(df.withColumn("__wave",
-          pmod(xxhash64(col(keyCol)), lit(waves)).cast("int"))).drop("__wave"))
+      return resumableRunBy(spark, input, waveCol, waves, root, table)(
+        df => transform(df.withColumn("__wave", waveCol.cast("int"))).drop("__wave"))
     val t0 = System.nanoTime()
     // per-wave input counts ride the one job (observe, no extra scans)
-    val obs = org.apache.spark.sql.Observation(s"${table}_singlepass")
+    val obs = org.apache.spark.sql.Observation(s"${table}_singlepass_$t0")
     val waveCounts = (0 until waves).map(w =>
       sum(when(col("__wave") === w, 1L).otherwise(0L)).as(s"in_$w"))
     val withWave = input
-      .withColumn("__wave", pmod(xxhash64(col(keyCol)), lit(waves)).cast("int"))
+      .withColumn("__wave", waveCol.cast("int"))
       .observe(obs, waveCounts.head, waveCounts.tail: _*)
     val out = transform(withWave)
     require(out.columns.contains("__wave"),
@@ -619,4 +630,16 @@ object SnapshotCatalog {
     }
     waves
   }
+
+  /** [[resumableRunSinglePass]] over [[resumableRun]]'s
+   * pmod(xxhash64(keyCol), waves) buckets. */
+  def resumableRunSinglePass(
+      spark: SparkSession,
+      input: DataFrame,
+      keyCol: String,
+      waves: Int,
+      root: String,
+      table: String)(transform: DataFrame => DataFrame): Int =
+    resumableRunSinglePass(spark, input, pmod(xxhash64(col(keyCol)), lit(waves)), waves,
+      root, table)(transform)
 }

@@ -196,6 +196,23 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(spark.sql("SELECT extract_geo(b) FROM html_src").count() == 2)
   }
 
+  test("utf8_decode_replace over a STRING column fails analysis and names the function") {
+    graft.functions.registerAll(spark)
+    val src = Seq(("caf\u00e9", "caf\u00e9".getBytes("UTF-8"))).toDF("s", "b")
+    src.createOrReplaceTempView("utf8_src")
+    // run, so an unchecked argument shows as the task's ClassCastException
+    val errs = Seq(
+      intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql("SELECT utf8_decode_replace(s) FROM utf8_src").collect()),
+      intercept[org.apache.spark.sql.AnalysisException](
+        src.select(utf8_decode_replace($"s")).collect()))
+    errs.foreach(e =>
+      assert(e.getMessage.contains("utf8_decode_replace needs a BINARY argument, got STRING"), e))
+    // the BINARY column passes
+    assert(spark.sql("SELECT utf8_decode_replace(b) FROM utf8_src").as[String].collect()
+      .toSeq == Seq("caf\u00e9"))
+  }
+
   test("an unknown extraction spec fails analysis, even over an empty input") {
     graft.functions.registerAll(spark)
     val empty = Seq.empty[Array[Byte]].toDF("html")

@@ -1,9 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
+import graft.operators.JobCount
 
 /**
  * Plan-shape audit: the properties the engine relies on for 100 TB —
@@ -12,7 +13,7 @@ import graft.functions.SparkTestSession
  * regression (e.g. a non-pushable expression creeping into a filter)
  * fails loudly instead of silently scanning everything.
  */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   private lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -159,6 +160,40 @@ class PlanAuditSpec extends AnyFunSuite {
     Seq("LogicalRDD", "Scan ExistingRDD", "InMemoryTableScan").foreach { node =>
       assert(!plan.contains(node) && !df.queryExecution.optimizedPlan.toString.contains(node),
         s"$node in the diff plan:\n$plan")
+    }
+  }
+
+  test("q124 snapshot diff: 3 jobs per call (one write for both waves)") {
+    // the single-pass write commits both waves; the diff is a shuffle
+    // stage and the sink; no read starts a schema-inference job
+    for (_ <- 0 until 2) {
+      val (_, jobs) = JobCount(spark) {
+        val df = graft.SparkEntry.queries("q124_snapshot_diff")(spark, "/root/testdata/sf0.001")
+        try df.write.format("noop").mode("overwrite").save()
+        finally org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(df)
+      }
+      assert(jobs == 3)
+    }
+  }
+
+  test("table reads start no job and take the schema inference gives") {
+    // the sf tables are DuckDB-written files; the copy is a Spark-written
+    // directory named *.parquet (several part files, _SUCCESS, .crc files)
+    val sf = "/root/testdata/sf0.001"
+    val sparkDir = tempDir("graft_tbl")
+    orders.repartition(3).write.parquet(s"$sparkDir/orders.parquet")
+    val tables = Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+      "events", "documents", "embeddings").map(sf -> _) :+ (sparkDir -> "orders")
+    for ((dir, name) <- tables) {
+      val path = s"$dir/$name.parquet"
+      val inferred = spark.read.parquet(path)
+      for ((read, f) <- Seq[(String, (SparkSession, String, String) => DataFrame)](
+          "tbl" -> (graft.SparkEntry.tbl _), "tblRaw" -> (graft.SparkEntry.tblRaw _))) {
+        val (df, jobs) = JobCount(spark)(f(spark, dir, name))
+        assert(jobs == 0, s"$read $path")
+        assert(df.schema == inferred.schema, s"$read $path")
+        assert(df.count() == inferred.count(), s"$read $path")
+      }
     }
   }
 

@@ -239,6 +239,64 @@ class SnapshotCatalogSpec extends AnyFunSuite with graft.TempDirs {
       df => df.withColumn("out", col("v") * 2)) == 0)
   }
 
+  test("single pass over an md5 wave column commits resumableRunBy's chain") {
+    val wave = pmod(conv(substring(md5(col("url")), 1, 8), 16, 10).cast("long"), lit(4))
+    val rootA = freshRoot(); val rootB = freshRoot(); val rootC = freshRoot()
+    assert(SnapshotCatalog.resumableRunBy(spark, input, wave, 4, rootA, "t")(
+      df => df.select(col("id"), (col("v") * 2).as("out"))) == 4)
+    assert(SnapshotCatalog.resumableRunSinglePass(spark, input, wave, 4, rootB, "t")(
+      df => df.select(col("id"), (col("v") * 2).as("out"), col("__wave"))) == 4)
+    // partly committed: wave 0 alone, then the single pass falls back to
+    // resumableRunBy over the same column for waves 1-3
+    assert(SnapshotCatalog.commitWave(spark, input.where(wave === 0), 0, rootC, "t")(
+      df => df.select(col("id"), (col("v") * 2).as("out"))))
+    assert(SnapshotCatalog.resumableRunSinglePass(spark, input, wave, 4, rootC, "t")(
+      df => df.select(col("id"), (col("v") * 2).as("out"), col("__wave"))) == 3)
+    val split = input.groupBy(wave.as("w")).count().collect()
+      .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    assert(split.size == 4)
+    def inByWave(root: String, m: SnapshotCatalog.Manifest) =
+      SnapshotCatalog.lineageRows(root, m).map(l => l.wave -> l.inputRows).distinct.toMap
+    val want = rowSet(SnapshotCatalog.read(spark, rootA, "t"))
+    assert(want == rowSet(input.select(col("id"), (col("v") * 2).as("out"))))
+    for (root <- Seq(rootA, rootB, rootC)) {
+      val m = SnapshotCatalog.currentManifest(root, "t").get
+      assert(rowSet(SnapshotCatalog.read(spark, root, "t")) == want, root)
+      assert(m.snapshotId == 3L && m.completedWaves == Seq(0, 1, 2, 3), root)
+      assert(m.rowsPerWave == split, root)
+      assert(inByWave(root, m) == split, root)
+      // each snapshot in the chain holds exactly the waves committed so far
+      for (id <- 0L to 3L)
+        assert(SnapshotCatalog.readAt(spark, root, "t", id).count() ==
+          (0 to id.toInt).map(split).sum, s"$root@$id")
+    }
+    // a rerun of either path is a no-op
+    assert(SnapshotCatalog.resumableRunSinglePass(spark, input, wave, 4, rootB, "t")(
+      df => df.select(col("id"), (col("v") * 2).as("out"), col("__wave"))) == 0)
+    assert(SnapshotCatalog.resumableRunSinglePass(spark, input, wave, 4, rootC, "t")(
+      df => df.select(col("id"), (col("v") * 2).as("out"), col("__wave"))) == 0)
+    assert(SnapshotCatalog.currentSnapshotId(rootB, "t").contains(3L))
+  }
+
+  test("parquetFiles lists data files only, sorted by path") {
+    val root = java.nio.file.Paths.get(freshRoot())
+    // a Spark-written table directory named *.parquet, with _SUCCESS and .crc files
+    input.repartition(3).write.parquet(root.resolve("t.parquet").toString)
+    Files.createDirectories(root.resolve("_temporary/0"))
+    Files.write(root.resolve("_temporary/0/part-x.parquet"), Array[Byte](1))
+    Files.createDirectories(root.resolve("__wave=0"))
+    Files.write(root.resolve("__wave=0/part-w.parquet"), Array[Byte](1))
+    val files = SnapshotCatalog.parquetFiles(root)
+    val names = files.map(root.relativize(_).toString)
+    assert(names.size == 4, names)
+    assert(names.head == "__wave=0/part-w.parquet", names)
+    assert(names.tail.forall(n => n.startsWith("t.parquet/part-") && n.endsWith(".parquet")), names)
+    assert(files == files.sortBy(_.toString))
+    assert(files.forall(Files.isRegularFile(_)))
+    // a single file lists as itself
+    assert(SnapshotCatalog.parquetFiles(files.last) == Seq(files.last))
+  }
+
   test("diffNew: only changed/new rows survive the content-hash anti-join") {
     val root = freshRoot()
     SnapshotCatalog.resumableRun(spark, input, "url", waves = 2, root, "t4")(identity[org.apache.spark.sql.DataFrame])
