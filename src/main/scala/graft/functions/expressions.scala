@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.GraftBridge.{anyOf, anyString}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,7 +22,8 @@ import graft.parse.{Extractor, HtmlParser}
  *    generated Java), exposed as scalar kernels + Generators (the UDTF
  *    slot, reference: tools/search.py:205-211 query-execute fan-out);
  *  - extraction output stays BinaryType until the last moment so invalid
- *    UTF-8 survives Catalyst boundaries byte-identically (SURVEY §7.4-1).
+ *    UTF-8 survives Catalyst boundaries byte-identically (SURVEY §7.4-1);
+ *  - argument types are declared (`ExpectsInputTypes`), checked at analysis.
  */
 
 // ---------------------------------------------------------------------------
@@ -29,16 +31,19 @@ import graft.parse.{Extractor, HtmlParser}
 // ---------------------------------------------------------------------------
 
 case class CellIdExpr(lat: Expression, lon: Expression, res: Expression)
-    extends TernaryExpression {
+    extends TernaryExpression with ExpectsInputTypes {
   override def first: Expression = lat
   override def second: Expression = lon
   override def third: Expression = res
+  override def inputTypes = Seq(DoubleType, DoubleType, IntegerType)
+  override def prettyName: String = "cell_id"
   override def dataType: DataType = LongType
   // a NaN coordinate has no cell: NULL, where the kernel's cast would put
   // it in row or column 0 (±Inf clamps to the edge like any out-of-range value)
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = CellRes.check("cell_id", res)
+  override def checkInputDataTypes(): TypeCheckResult =
+    LiteralInt.check(super.checkInputDataTypes(), "cell_id", "res", res)
   override protected def nullSafeEval(la: Any, lo: Any, r: Any): Any = {
     val lat = la.asInstanceOf[Double]; val lon = lo.asInstanceOf[Double]
     if (lat.isNaN || lon.isNaN) null else CellIndex.latLonToCell(lat, lon, r.asInstanceOf[Int])
@@ -51,24 +56,31 @@ case class CellIdExpr(lat: Expression, lon: Expression, res: Expression)
     copy(lat = f, lon = s, res = t)
 }
 
-/** Analysis-time check of a literal cell resolution
- * ([[CellIndex.validRes]]); a non-literal `res` is the caller's contract. */
-private[functions] object CellRes {
-  def check(fn: String, res: Expression): TypeCheckResult =
-    if (!res.foldable) TypeCheckResult.TypeCheckSuccess
-    else res.eval() match {
-      case r: Int if !CellIndex.validRes(r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$fn res must be in [0, ${CellIndex.MaxRes}], got $r")
-      case _ => TypeCheckResult.TypeCheckSuccess
+/** Analysis-time check of a literal INT argument's value (by default a
+ * cell resolution, [[CellIndex.validRes]]) once `typed`, the declared
+ * types' check, has passed. A non-literal argument is the caller's contract. */
+private[functions] object LiteralInt {
+  def check(typed: TypeCheckResult, fn: String, what: String, arg: Expression,
+      ok: Int => Boolean = CellIndex.validRes,
+      want: String = s"in [0, ${CellIndex.MaxRes}]"): TypeCheckResult =
+    if (typed.isFailure || !arg.foldable) typed
+    else arg.eval() match {
+      case v: Int if !ok(v) => TypeCheckResult.TypeCheckFailure(s"$fn $what must be $want, got $v")
+      case _ => typed
     }
 }
 
-case class CellParentExpr(cell: Expression, parentRes: Expression) extends BinaryExpression {
+case class CellParentExpr(cell: Expression, parentRes: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
   override def left: Expression = cell
   override def right: Expression = parentRes
+  override def inputTypes = Seq(LongType, IntegerType)
+  override def prettyName: String = "cell_parent"
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
+  // a parentRes above the cell's own res depends on the row: a task error
+  override def checkInputDataTypes(): TypeCheckResult =
+    LiteralInt.check(super.checkInputDataTypes(), "cell_parent", "parentRes", parentRes)
   override protected def nullSafeEval(c: Any, r: Any): Any =
     CellIndex.parent(c.asInstanceOf[Long], r.asInstanceOf[Int])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -77,8 +89,10 @@ case class CellParentExpr(cell: Expression, parentRes: Expression) extends Binar
     copy(cell = l, parentRes = r)
 }
 
-case class CellCenterLatExpr(cell: Expression) extends UnaryExpression {
+case class CellCenterLatExpr(cell: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def child: Expression = cell
+  override def inputTypes = Seq(LongType)
+  override def prettyName: String = "cell_center_lat"
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(c: Any): Any = CellIndex.centerLat(c.asInstanceOf[Long])
@@ -87,8 +101,10 @@ case class CellCenterLatExpr(cell: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression) = copy(cell = c)
 }
 
-case class CellCenterLonExpr(cell: Expression) extends UnaryExpression {
+case class CellCenterLonExpr(cell: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def child: Expression = cell
+  override def inputTypes = Seq(LongType)
+  override def prettyName: String = "cell_center_lon"
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(c: Any): Any = CellIndex.centerLon(c.asInstanceOf[Long])
@@ -102,17 +118,16 @@ case class CellCenterLonExpr(cell: Expression) extends UnaryExpression {
  * the ANN hot loop (bits×dim per row in sign-LSH bucketing). Replaces the
  * interpreted `aggregate(zip_with(...))` HOF pair (no codegen, per-element
  * lambda dispatch; CLAUDE.md gotcha). */
-case class DotProductExpr(a: Expression, b: Expression) extends BinaryExpression {
+case class DotProductExpr(a: Expression, b: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
   override def left: Expression = a
   override def right: Expression = b
+  override def inputTypes = Seq.fill(2)(anyOf(ArrayType(FloatType), ArrayType(DoubleType)))
+  override def prettyName: String = "dot_product"
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
-  private def isFloatArray(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case ArrayType(DoubleType, _) => false
-    case t => throw new IllegalArgumentException(
-      s"dot_product needs array<float> or array<double> inputs, got $t")
-  }
+  private def isFloatArray(e: Expression): Boolean =
+    PartialFunction.cond(e.dataType) { case ArrayType(FloatType, _) => true }
   private lazy val aF = isFloatArray(a)
   private lazy val bF = isFloatArray(b)
   override protected def nullSafeEval(av: Any, bv: Any): Any =
@@ -191,21 +206,15 @@ object PipRt {
  * argument) — built ONCE per polygon row (cold side), consumed per
  * candidate pair by [[PointInPolygonExpr]]. */
 case class PolygonYIndexExpr(ring: Expression, bands: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   override def left: Expression = ring
   override def right: Expression = bands
+  override def inputTypes = Seq(ArrayType(DoubleType), IntegerType)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "polygon_y_index"
-  // SQL-registered (functions.registerAll) → type-check at analysis, not
-  // as a runtime ClassCastException on the first row
   override def checkInputDataTypes(): TypeCheckResult =
-    if (PointInPolygonExpr.isDoubleArray(ring.dataType))
-      if (bands.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"polygon_y_index bands must be INT, got ${bands.dataType.sql}")
-    else TypeCheckResult.TypeCheckFailure(
-      s"polygon_y_index ring must be ARRAY<DOUBLE>, got ${ring.dataType.sql}")
+    LiteralInt.check(super.checkInputDataTypes(), "polygon_y_index", "bands", bands, _ >= 1, ">= 1")
   override protected def nullSafeEval(rv: Any, bv: Any): Any =
     new GenericArrayData(Geometry.yBandIndex(
       rv.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray(),
@@ -225,23 +234,15 @@ case class PolygonYIndexExpr(ring: Expression, bands: Expression)
 case class PointInPolygonExpr(
     x: Expression, y: Expression, ring: Expression,
     idx: Expression = PointInPolygonExpr.NoIndex)
-    extends QuaternaryExpression {
+    extends QuaternaryExpression with ExpectsInputTypes {
   override def first: Expression = x
   override def second: Expression = y
   override def third: Expression = ring
   override def fourth: Expression = idx
+  override def inputTypes = Seq(DoubleType, DoubleType, ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = x.nullable || y.nullable || ring.nullable
   override def prettyName: String = "point_in_polygon"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (x.dataType == DoubleType && y.dataType == DoubleType &&
-        PointInPolygonExpr.isDoubleArray(ring.dataType) &&
-        PointInPolygonExpr.isDoubleArray(idx.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "point_in_polygon requires (DOUBLE x, DOUBLE y, ARRAY<DOUBLE> ring[, " +
-        s"ARRAY<DOUBLE> idx]), got (${x.dataType.sql}, ${y.dataType.sql}, " +
-        s"${ring.dataType.sql}, ${idx.dataType.sql})")
   override def eval(input: InternalRow): Any = {
     val xv = x.eval(input)
     val yv = y.eval(input)
@@ -271,34 +272,21 @@ case class PointInPolygonExpr(
 
 object PointInPolygonExpr {
   val NoIndex: Expression = Literal(null, ArrayType(DoubleType, containsNull = false))
-  private[functions] def isDoubleArray(t: DataType): Boolean = t match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
 }
 
 // ---------------------------------------------------------------------------
 // Scalar: extraction kernels (eval-only; parser not codegen-able)
 // ---------------------------------------------------------------------------
 
-/** Analysis-time check of a BINARY argument (a page-side function's
- * html, `utf8_decode_replace`'s bytes): the kernels read raw bytes, so a
- * STRING column fails analysis instead of the first task. */
-private[functions] object BinaryArg {
-  def check(fn: String, arg: Expression, what: String = "html argument"): TypeCheckResult =
-    if (arg.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$fn needs a BINARY $what, got ${arg.dataType.sql}")
-}
-
 /** Byte-identity text extraction: BINARY html → BINARY extracted text
  * (reference kernel: utils/tree_sitter_helpers.py:239-261; the per-url
  * invariant of BASELINE.json input_hint). */
-case class ExtractedTextExpr(html: Expression) extends UnaryExpression {
+case class ExtractedTextExpr(html: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def child: Expression = html
+  override def inputTypes = Seq(BinaryType)
+  override def prettyName: String = "extract_text_bytes"
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = BinaryArg.check("extract_text", html)
   override protected def nullSafeEval(h: Any): Any =
     Extractor.extractTextBytes(h.asInstanceOf[Array[Byte]])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -307,12 +295,12 @@ case class ExtractedTextExpr(html: Expression) extends UnaryExpression {
 }
 
 /** UTF-8 decode with CPython errors="replace" parity (SURVEY §2.11). */
-case class Utf8ReplaceDecodeExpr(bin: Expression) extends UnaryExpression {
+case class Utf8ReplaceDecodeExpr(bin: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def child: Expression = bin
+  override def inputTypes = Seq(BinaryType)
+  override def prettyName: String = "utf8_decode_replace"
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    BinaryArg.check("utf8_decode_replace", bin, "argument")
   override protected def nullSafeEval(b: Any): Any =
     UTF8String.fromString(Utf8.decodeReplace(b.asInstanceOf[Array[Byte]]))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -362,18 +350,15 @@ object Md5PrefixRt {
  * or BINARY column; any other input type fails analysis — a numeric
  * column must be cast to string by the caller, never hashed as its
  * 8-byte binary form. */
-case class Md5PrefixExpr(child: Expression, bits: Int) extends UnaryExpression {
+case class Md5PrefixExpr(child: Expression, bits: Int) extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "md5_prefix"
+  override def inputTypes = Seq(anyOf(anyString, BinaryType))
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def checkInputDataTypes(): TypeCheckResult =
     if (bits < 1 || bits > 63)
       TypeCheckResult.TypeCheckFailure(s"md5_prefix bits must be in [1, 63], got $bits")
-    else child.dataType match {
-      case _: StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"md5_prefix needs a STRING or BINARY input, got ${t.sql}")
-    }
+    else super.checkInputDataTypes()
   private def kernel: String = if (child.dataType.isInstanceOf[StringType]) "ofUtf8" else "ofBytes"
   override protected def nullSafeEval(v: Any): Any = v match {
     case s: UTF8String => Md5PrefixRt.ofUtf8(s, bits)
@@ -396,10 +381,12 @@ case class Md5PrefixExpr(child: Expression, bits: Int) extends UnaryExpression {
  * extract_node_path, models/ast.py:112-155) are derived here, the one
  * consumer that emits them; parents precede children in the parser's
  * table, so one forward pass builds ids and paths. */
-case class ParseNodeTableExpr(html: Expression) extends UnaryExpression with Generator with CodegenFallback {
+case class ParseNodeTableExpr(html: Expression)
+    extends UnaryExpression with Generator with CodegenFallback with ExpectsInputTypes {
   override def child: Expression = html
+  override def inputTypes = Seq(BinaryType)
+  override def prettyName: String = "parse_html_nodes"
   override def elementSchema: StructType = ParseNodeTableExpr.schema
-  override def checkInputDataTypes(): TypeCheckResult = BinaryArg.check("parse_html_nodes", html)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val h = html.eval(input)
     if (h == null) return Nil
@@ -456,17 +443,19 @@ object ParseNodeTableExpr {
  * The spec list is compiled/validated ONCE at plan time (driver),
  * mirroring the reference's compile-before-loop discipline (SURVEY §4). */
 case class ExtractCapturesExpr(html: Expression, spec: Expression)
-    extends BinaryExpression with Generator with CodegenFallback {
+    extends BinaryExpression with Generator with CodegenFallback with ExpectsInputTypes {
   override def left: Expression = html
   override def right: Expression = spec
+  override def inputTypes = Seq(BinaryType, anyString)
+  override def prettyName: String = "extract_captures"
   // the spec list is a constant (checkInputDataTypes), read once per task
   private lazy val specNames: Seq[String] =
     ExtractCapturesExpr.specList(spec.eval(InternalRow.empty))
   override def checkInputDataTypes(): TypeCheckResult = {
     def known = Extractor.SpecNames.mkString(", ")
-    val htmlCheck = BinaryArg.check("extract_captures", html)
-    if (htmlCheck.isFailure) htmlCheck
-    else if (!spec.foldable || !spec.dataType.isInstanceOf[StringType])
+    val typed = super.checkInputDataTypes()
+    if (typed.isFailure) typed
+    else if (!spec.foldable)
       TypeCheckResult.TypeCheckFailure(
         s"extract_captures spec must be a constant STRING naming specs from: $known")
     else {
@@ -510,10 +499,12 @@ object ExtractCapturesExpr {
 }
 
 /** Geo entities of one page (SURVEY §7.2 — feeds cell encode + join). */
-case class ExtractGeoEntitiesExpr(html: Expression) extends UnaryExpression with Generator with CodegenFallback {
+case class ExtractGeoEntitiesExpr(html: Expression)
+    extends UnaryExpression with Generator with CodegenFallback with ExpectsInputTypes {
   override def child: Expression = html
+  override def inputTypes = Seq(BinaryType)
+  override def prettyName: String = "extract_geo"
   override def elementSchema: StructType = ExtractGeoEntitiesExpr.schema
-  override def checkInputDataTypes(): TypeCheckResult = BinaryArg.check("extract_geo", html)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val h = html.eval(input)
     if (h == null) return Nil
@@ -535,10 +526,13 @@ object ExtractGeoEntitiesExpr {
  * spatial join, SURVEY §2.3 J5). Superset-guaranteed cover (tested in
  * GeometrySpec); ring = ArrayType(DoubleType) interleaved [x,y,…]. */
 case class CellCoverExpr(ring: Expression, res: Expression)
-    extends BinaryExpression with Generator with CodegenFallback {
+    extends BinaryExpression with Generator with CodegenFallback with ExpectsInputTypes {
   override def left: Expression = ring
   override def right: Expression = res
-  override def checkInputDataTypes(): TypeCheckResult = CellRes.check("cell_cover", res)
+  override def inputTypes = Seq(ArrayType(DoubleType), IntegerType)
+  override def prettyName: String = "cell_cover"
+  override def checkInputDataTypes(): TypeCheckResult =
+    LiteralInt.check(super.checkInputDataTypes(), "cell_cover", "res", res)
   override def elementSchema: StructType =
     StructType(Seq(StructField("cover_cell", LongType, nullable = false)))
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
@@ -556,11 +550,13 @@ case class CellCoverExpr(ring: Expression, res: Expression)
  * OUTSIDE the Chebyshev disk of radius k around its cell — the kNN
  * ring-expansion termination criterion (SURVEY §7.4-4). Codegen'd. */
 case class CellDiskBoundExpr(lat: Expression, lon: Expression, res: Expression, k: Expression)
-    extends QuaternaryExpression {
+    extends QuaternaryExpression with ExpectsInputTypes {
   override def first: Expression = lat
   override def second: Expression = lon
   override def third: Expression = res
   override def fourth: Expression = k
+  override def inputTypes = Seq(DoubleType, DoubleType, IntegerType, IntegerType)
+  override def prettyName: String = "cell_disk_bound"
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(la: Any, lo: Any, r: Any, kk: Any): Any =
@@ -585,10 +581,12 @@ case class CellDiskBoundExpr(lat: Expression, lon: Expression, res: Expression, 
  * built-in explode keeps the chain in ONE WholeStageCodegen span and this
  * expression allocates one long[] per input row. */
 case class CellDiskBandExpr(cell: Expression, kFrom: Expression, kTo: Expression)
-    extends TernaryExpression {
+    extends TernaryExpression with ExpectsInputTypes {
   override def first: Expression = cell
   override def second: Expression = kFrom
   override def third: Expression = kTo
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
+  override def prettyName: String = "cell_ring"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(c: Any, f: Any, t: Any): Any =

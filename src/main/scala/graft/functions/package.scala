@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.GraftBridge.{column, expression}
+import org.apache.spark.sql.GraftBridge.{column, expression, wrongNumArgs}
+import org.apache.spark.sql.catalyst.expressions.{Explode, Expression}
 import org.apache.spark.sql.functions.lit
 
 /**
@@ -99,34 +100,37 @@ package object functions {
   def cell_cover(ring: Column, res: Int): Column =
     column(CellCoverExpr(expression(ring), expression(lit(res))))
 
-  /** SQL name → expression builder, the single source for both
-   * [[registerAll]] (live session) and `GraftExtensions.injectFunction`
-   * (builder-time registration for spark-submit deployments). */
-  private[graft] val sqlFunctionBuilders: Seq[
-      (String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression)] = Seq(
-    "cell_id" -> (es => CellIdExpr(es(0), es(1), es(2))),
-    "cell_parent" -> (es => CellParentExpr(es(0), es(1))),
-    "cell_center_lat" -> (es => CellCenterLatExpr(es.head)),
-    "cell_center_lon" -> (es => CellCenterLonExpr(es.head)),
-    "point_in_polygon" -> (es => PointInPolygonExpr(es(0), es(1), es(2))),
-    "polygon_y_index" -> (es => PolygonYIndexExpr(es(0), es(1))),
-    "point_in_polygon_indexed" -> (es => PointInPolygonExpr(es(0), es(1), es(2), es(3))),
-    "extract_text_bytes" -> (es => ExtractedTextExpr(es.head)),
-    "extract_text" -> (es => Utf8ReplaceDecodeExpr(ExtractedTextExpr(es.head))),
-    "utf8_decode_replace" -> (es => Utf8ReplaceDecodeExpr(es.head)),
-    "parse_html_nodes" -> (es => ParseNodeTableExpr(es.head)),
-    "extract_captures" -> (es => ExtractCapturesExpr(es(0), es(1))),
-    "extract_geo" -> (es => ExtractGeoEntitiesExpr(es.head)),
-    "cell_ring" -> (es => org.apache.spark.sql.catalyst.expressions.Explode(
-      CellDiskBandExpr(es(0), es(1), es(1)))),
-    "cell_cover" -> (es => CellCoverExpr(es(0), es(1))),
-    "dot_product" -> (es => DotProductExpr(es(0), es(1))))
+  /** SQL name → (argument count, expression builder), the single source
+   * for both [[registerAll]] (live session) and
+   * `GraftExtensions.injectFunction` (builder-time registration for
+   * spark-submit deployments). A call with another argument count fails
+   * analysis with Spark's wrong-number-of-arguments error. */
+  private[graft] val sqlFunctionBuilders: Seq[(String, Int, Seq[Expression] => Expression)] =
+    Seq[(String, Int, Seq[Expression] => Expression)](
+      ("cell_id", 3, es => CellIdExpr(es(0), es(1), es(2))),
+      ("cell_parent", 2, es => CellParentExpr(es(0), es(1))),
+      ("cell_center_lat", 1, es => CellCenterLatExpr(es(0))),
+      ("cell_center_lon", 1, es => CellCenterLonExpr(es(0))),
+      ("point_in_polygon", 3, es => PointInPolygonExpr(es(0), es(1), es(2))),
+      ("polygon_y_index", 2, es => PolygonYIndexExpr(es(0), es(1))),
+      ("point_in_polygon_indexed", 4, es => PointInPolygonExpr(es(0), es(1), es(2), es(3))),
+      ("extract_text_bytes", 1, es => ExtractedTextExpr(es(0))),
+      ("extract_text", 1, es => Utf8ReplaceDecodeExpr(ExtractedTextExpr(es(0)))),
+      ("utf8_decode_replace", 1, es => Utf8ReplaceDecodeExpr(es(0))),
+      ("parse_html_nodes", 1, es => ParseNodeTableExpr(es(0))),
+      ("extract_captures", 2, es => ExtractCapturesExpr(es(0), es(1))),
+      ("extract_geo", 1, es => ExtractGeoEntitiesExpr(es(0))),
+      ("cell_ring", 2, es => Explode(CellDiskBandExpr(es(0), es(1), es(1)))),
+      ("cell_cover", 2, es => CellCoverExpr(es(0), es(1))),
+      ("dot_product", 2, es => DotProductExpr(es(0), es(1)))
+    ).map { case (name, arity, build) => (name, arity, (es: Seq[Expression]) =>
+      if (es.length == arity) build(es) else throw wrongNumArgs(name, arity, es.length))
+    }
 
   /** Register SQL names so spark.sql can call the engine functions. */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    sqlFunctionBuilders.foreach { case (name, builder) =>
+    sqlFunctionBuilders.foreach { case (name, _, builder) =>
       reg.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
   }

@@ -54,7 +54,7 @@ object Geometry {
    * matching [[pointInPolygon]]'s loop orientation.
    */
   def yBandIndex(ring: Array[Double], bands: Int): Array[Double] = {
-    require(bands >= 1)
+    require(bands >= 1, s"bands must be >= 1, got $bands")
     val n = ring.length / 2
     var yMin = Double.MaxValue; var yMax = -Double.MaxValue
     var i = 0
@@ -101,11 +101,11 @@ object Geometry {
     var xmin = Double.MaxValue; var ymin = Double.MaxValue
     var xmax = -Double.MaxValue; var ymax = -Double.MaxValue
     var i = 0
-    while (i < ring.length) {
-      val x = ring(i); val y = ring(i + 1)
+    while (i < ring.length / 2) { // a trailing odd value is no vertex
+      val x = ring(2 * i); val y = ring(2 * i + 1)
       if (x < xmin) xmin = x; if (x > xmax) xmax = x
       if (y < ymin) ymin = y; if (y > ymax) ymax = y
-      i += 2
+      i += 1
     }
     (xmin, ymin, xmax, ymax)
   }
@@ -147,10 +147,11 @@ object Geometry {
    * strictly interior are detected by the center test since interior cells
    * of a simple polygon with no crossing edge have all corners inside.
    *
-   * Fails, before allocating, when the bbox holds more than
-   * [[MaxCoverCells]] cells at `res`.
+   * A ring of fewer than 3 vertices covers no cell. Fails, before
+   * allocating, when the bbox holds more than [[MaxCoverCells]] cells at `res`.
    */
   def cellCover(ring: Array[Double], res: Int): Array[Long] = {
+    if (ring.length / 2 < 3) return Array.emptyLongArray
     val (xmin, ymin, xmax, ymax) = bbox(ring)
     val c0 = CellIndex.latLonToCell(ymin, xmin, res)
     val c1 = CellIndex.latLonToCell(ymax, xmax, res)

@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{DeclarativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -80,7 +79,7 @@ case class TopKAggExpr(
     key: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKAggState] {
+  extends TypedImperativeAggregate[TopKAggState] with ExpectsInputTypes {
   require(k >= 1)
 
   override def children: Seq[Expression] = Seq(score, key)
@@ -90,11 +89,7 @@ case class TopKAggExpr(
     StructField("scores", ArrayType(DoubleType, containsNull = false)),
     StructField("keys", ArrayType(LongType, containsNull = false))))
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (score.dataType == DoubleType && key.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"topk requires (DOUBLE score, BIGINT key), got (${score.dataType.sql}, ${key.dataType.sql})")
+  override def inputTypes = Seq(DoubleType, LongType)
 
   override def createAggregationBuffer(): TopKAggState = new TopKAggState(k)
 
@@ -209,7 +204,7 @@ object TopKByScore {
 case class MaxScoreMinKey(
     score: Expression,
     key: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate {
+  extends DeclarativeAggregate with ExpectsInputTypes {
   import org.apache.spark.sql.catalyst.dsl.expressions._
   import org.apache.spark.sql.catalyst.expressions._
 
@@ -218,11 +213,7 @@ case class MaxScoreMinKey(
   override def dataType: DataType = StructType(Seq(
     StructField("best_score", DoubleType, nullable = false),
     StructField("best_key", LongType, nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (score.dataType == DoubleType && key.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"best requires (DOUBLE score, BIGINT key), got (${score.dataType.sql}, ${key.dataType.sql})")
+  override def inputTypes = Seq(DoubleType, LongType)
 
   private lazy val bs = AttributeReference("bs", DoubleType, nullable = false)()
   private lazy val bk = AttributeReference("bk", LongType, nullable = false)()
@@ -298,7 +289,7 @@ case class TopKSlots(
     k: Int,
     score: Expression,
     key: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate {
+  extends DeclarativeAggregate with ExpectsInputTypes {
   import org.apache.spark.sql.catalyst.expressions._
   require(k >= 1 && k <= TopKSlots.MaxK,
     s"TopKSlots supports 1 <= k <= ${TopKSlots.MaxK} (got $k); use TopKAggExpr beyond")
@@ -308,11 +299,7 @@ case class TopKSlots(
   override def dataType: DataType = StructType(Seq(
     StructField("scores", ArrayType(DoubleType, containsNull = false), nullable = false),
     StructField("keys", ArrayType(LongType, containsNull = false), nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (score.dataType == DoubleType && key.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"topk_slots requires (DOUBLE score, BIGINT key), got (${score.dataType.sql}, ${key.dataType.sql})")
+  override def inputTypes = Seq(DoubleType, LongType)
 
   private lazy val ss = (0 until k).map(i =>
     AttributeReference(s"ts$i", DoubleType, nullable = false)())

@@ -104,11 +104,9 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => SpatialJoinRule)
-    graft.functions.sqlFunctionBuilders.foreach { case (name, builder) =>
-      // probe the builder for the concrete Expression class so DESCRIBE
-      // FUNCTION reports it (builders are total in arity ≤ 3 nulls)
-      val cls = try builder(Seq.fill(3)(Literal(null))).getClass.getName
-        catch { case scala.util.control.NonFatal(_) => "graft.functions" }
+    graft.functions.sqlFunctionBuilders.foreach { case (name, arity, builder) =>
+      // the concrete Expression class, so DESCRIBE FUNCTION reports it
+      val cls = builder(Seq.fill(arity)(Literal(null))).getClass.getName
       e.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),
         new ExpressionInfo(cls, name),

@@ -12,6 +12,17 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** A declared input type (`ExpectsInputTypes.inputTypes`) accepting any of `ts`. */
+  def anyOf(ts: types.AbstractDataType*) = types.TypeCollection(ts: _*)
+
+  /** A declared STRING input of any collation: a bare `StringType` accepts
+   * only the default one. */
+  val anyString = internal.types.StringTypeWithCollation(supportsTrimCollation = true)
+
+  /** Spark's wrong-number-of-arguments `AnalysisException` for a SQL function. */
+  def wrongNumArgs(name: String, expected: Int, actual: Int): Throwable =
+    errors.QueryCompilationErrors.wrongNumArgsError(name, Seq(expected), actual)
+
   /**
    * Stored bytes per RDD id, over every RDD block the block manager
    * master tracks — the reading a leak check diffs before and after a

@@ -47,7 +47,7 @@ class ExpressionsSpec extends AnyFunSuite {
       .withColumn("cell", cell_id($"lat", $"lon", 12))
     // "*(1)" prefixes = operators fused into WholeStageCodegen stage 1
     val plan = rangeDf.queryExecution.executedPlan.toString
-    assert(plan.contains("*(1) Project") && plan.contains("cellidexpr"), plan)
+    assert(plan.contains("*(1) Project") && plan.contains("cell_id("), plan)
     val sample = rangeDf.where($"id" === 999).select("cell").as[Long].head()
     assert(sample == CellIndex.latLonToCell(999 % 170 - 85.0, 999 % 360 - 180.0, 12))
     // the resolution bounds: 0 and MaxRes encode; a literal res outside
@@ -182,35 +182,6 @@ class ExpressionsSpec extends AnyFunSuite {
       df.select(extract_captures($"html", "bogus")).collect()
     }
     assert(err.getMessage.contains("bogus") || err.getCause != null)
-  }
-
-  test("page-side functions over a STRING html column fail analysis, not the task") {
-    graft.functions.registerAll(spark)
-    Seq(("<p>x</p>", page1)).toDF("s", "b").createOrReplaceTempView("html_src")
-    for (fn <- Seq("extract_text(s)", "extract_text_bytes(s)", "extract_geo(s)",
-        "parse_html_nodes(s)", "extract_captures(s, 'links')")) {
-      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $fn FROM html_src"))
-      assert(e.getMessage.contains("needs a BINARY html argument, got STRING"), s"$fn: $e")
-    }
-    // the BINARY column passes
-    assert(spark.sql("SELECT extract_geo(b) FROM html_src").count() == 2)
-  }
-
-  test("utf8_decode_replace over a STRING column fails analysis and names the function") {
-    graft.functions.registerAll(spark)
-    val src = Seq(("caf\u00e9", "caf\u00e9".getBytes("UTF-8"))).toDF("s", "b")
-    src.createOrReplaceTempView("utf8_src")
-    // run, so an unchecked argument shows as the task's ClassCastException
-    val errs = Seq(
-      intercept[org.apache.spark.sql.AnalysisException](
-        spark.sql("SELECT utf8_decode_replace(s) FROM utf8_src").collect()),
-      intercept[org.apache.spark.sql.AnalysisException](
-        src.select(utf8_decode_replace($"s")).collect()))
-    errs.foreach(e =>
-      assert(e.getMessage.contains("utf8_decode_replace needs a BINARY argument, got STRING"), e))
-    // the BINARY column passes
-    assert(spark.sql("SELECT utf8_decode_replace(b) FROM utf8_src").as[String].collect()
-      .toSeq == Seq("caf\u00e9"))
   }
 
   test("an unknown extraction spec fails analysis, even over an empty input") {

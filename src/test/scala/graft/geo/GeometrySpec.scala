@@ -131,4 +131,16 @@ class GeometrySpec extends AnyFunSuite {
     assert(!Geometry.pointInPolygon(0, 0, Array(1.0, 1.0)))
     assert(!Geometry.pointInPolygon(0, 0, Array(1.0, 1.0, 2.0, 2.0)))
   }
+
+  test("cellCover reads the ring's vertices as pointInPolygon does: odd lengths, under 3 vertices") {
+    // a trailing odd value is no vertex: the odd ring covers what its
+    // three vertices cover, and bbox ignores the extra value
+    val odd = Array(0.0, 0.0, 1.0, 0.0, 1.0, 1.0, 7.0)
+    assert(Geometry.bbox(odd) == ((0.0, 0.0, 1.0, 1.0)))
+    assert(Geometry.cellCover(odd, 8).sameElements(Geometry.cellCover(odd.init, 8)))
+    // fewer than 3 vertices bound no interior point: no cell, as
+    // pointInPolygon is false everywhere for them
+    for (ring <- Seq(Array.emptyDoubleArray, Array(0.0, 0.0, 1.0), Array(0.0, 0.0, 1.0, 1.0, 2.0)))
+      assert(Geometry.cellCover(ring, 8).isEmpty, ring.mkString(","))
+  }
 }

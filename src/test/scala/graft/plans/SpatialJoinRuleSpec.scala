@@ -36,7 +36,7 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
     try {
       val naive = ptsDf.join(polysDf, point_in_polygon($"lon", $"lat", $"ring"))
       val plan = naive.queryExecution.optimizedPlan.toString
-      assert(plan.contains("cellcoverexpr") && plan.contains("__graft_cell"), plan)
+      assert(plan.contains("cell_cover(") && plan.contains("__graft_cell"), plan)
       val phys = naive.queryExecution.executedPlan.toString
       assert(!phys.contains("CartesianProduct") && !phys.contains("BroadcastNestedLoopJoin"), phys)
       val got = naive.select("page_id", "entity_idx", "polygon_id")
@@ -120,6 +120,12 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
     // function metadata carries the real expression class
     val desc = ext.sql("DESCRIBE FUNCTION cell_id").collect().map(_.getString(0)).mkString("\n")
     assert(desc.contains("CellIdExpr"), desc)
+    val descIdx = ext.sql("DESCRIBE FUNCTION point_in_polygon_indexed").collect()
+      .map(_.getString(0)).mkString("\n")
+    assert(descIdx.contains("PointInPolygonExpr"), descIdx)
+    // and the builders check the argument count
+    val arity = intercept[org.apache.spark.sql.AnalysisException](ext.sql("SELECT cell_id(1d, 2d)"))
+    assert(arity.getCondition.startsWith("WRONG_NUM_ARGS"), arity)
     // and the optimizer rule fires on a pure-SQL PIP theta-join (views
     // must live in ext's own catalog — temp views are per-session)
     ext.createDataFrame(ptsDf.collect().toSeq.asJava, ptsDf.schema)
