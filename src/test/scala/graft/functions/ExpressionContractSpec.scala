@@ -145,31 +145,6 @@ class ExpressionContractSpec extends AnyFunSuite {
     assert(ran == (0 until arity).toSet, s"$name: a position no typed input ran at")
   }
 
-  test("a STRING html or bytes argument fails analysis, named") {
-    // the message names the function, the parameter and both types
-    import spark.implicits._
-    registerAll(spark)
-    val src = Seq(("caf\u00e9", page)).toDF("s", "b")
-    src.createOrReplaceTempView("string_html")
-    // run, so an unchecked argument would show as the task's ClassCastException
-    val calls = Seq("extract_text", "extract_text_bytes", "extract_geo", "parse_html_nodes",
-      "extract_captures", "utf8_decode_replace").map { fn =>
-      val args = if (fn == "extract_captures") "s, 'links'" else "s"
-      fn -> (() => spark.sql(s"SELECT $fn($args) FROM string_html").collect())
-    } :+ ("utf8_decode_replace" -> (() => src.select(utf8_decode_replace($"s")).collect()))
-    for ((fn, call) <- calls) {
-      val e = intercept[AnalysisException](call())
-      // extract_text decodes extract_text_bytes, the expression that reads the html
-      Seq(s"${if (fn == "extract_text") "extract_text_bytes" else fn}(s",
-        """The first parameter requires the "BINARY" type, however "s" has the type "STRING""""
-      ).foreach(t => assert(e.getMessage.contains(t), s"$fn: '$t' in ${e.getMessage}"))
-    }
-    // the BINARY column passes
-    assert(spark.sql("SELECT extract_geo(b) FROM string_html").count() == 2)
-    assert(spark.sql("SELECT utf8_decode_replace(b) FROM string_html").as[String].collect()
-      .toSeq == Seq(new String(page, "UTF-8")))
-  }
-
   test("a SQL call with the wrong number of arguments fails analysis with WRONG_NUM_ARGS") {
     registerAll(spark)
     for ((name, arity, _) <- sqlFunctionBuilders; n <- Seq(arity - 1, arity + 1)) {

@@ -29,6 +29,10 @@ class ExpressionsSpec extends AnyFunSuite {
       |<body><h1>Hello</h1><a href="geo:48.85,2.35">p</a>
       |<a href="x.html">link</a><p>text &amp; more</p></body></html>""".stripMargin).getBytes("UTF-8")
 
+  /** Spark's UNEXPECTED_INPUT_TYPE text for a STRING column `s` given to a BINARY parameter. */
+  private val StringArgText =
+    """The first parameter requires the "BINARY" type, however "s" has the type "STRING""""
+
   test("cell_id matches the pure kernel and survives codegen") {
     val df = Seq((52.52, 13.405), (-33.86, 151.2), (0.0, 0.0))
       .toDF("lat", "lon")
@@ -182,6 +186,38 @@ class ExpressionsSpec extends AnyFunSuite {
       df.select(extract_captures($"html", "bogus")).collect()
     }
     assert(err.getMessage.contains("bogus") || err.getCause != null)
+  }
+
+  test("page-side functions over a STRING html column fail analysis, not the task") {
+    graft.functions.registerAll(spark)
+    Seq(("<p>x</p>", page1)).toDF("s", "b").createOrReplaceTempView("html_src")
+    // (call, the expression the message names): extract_text decodes
+    // extract_text_bytes, the expression that reads the html
+    for ((fn, named) <- Seq("extract_text(s)" -> "extract_text_bytes", "extract_text_bytes(s)" -> "extract_text_bytes",
+        "extract_geo(s)" -> "extract_geo", "parse_html_nodes(s)" -> "parse_html_nodes",
+        "extract_captures(s, 'links')" -> "extract_captures")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $fn FROM html_src"))
+      Seq(s"$named(s", StringArgText).foreach(t => assert(e.getMessage.contains(t), s"$fn: $e"))
+    }
+    // the BINARY column passes
+    assert(spark.sql("SELECT extract_geo(b) FROM html_src").count() == 2)
+  }
+
+  test("utf8_decode_replace over a STRING column fails analysis and names the function") {
+    graft.functions.registerAll(spark)
+    val src = Seq(("caf\u00e9", "caf\u00e9".getBytes("UTF-8"))).toDF("s", "b")
+    src.createOrReplaceTempView("utf8_src")
+    // run, so an unchecked argument shows as the task's ClassCastException
+    val errs = Seq(
+      intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql("SELECT utf8_decode_replace(s) FROM utf8_src").collect()),
+      intercept[org.apache.spark.sql.AnalysisException](
+        src.select(utf8_decode_replace($"s")).collect()))
+    errs.foreach(e => Seq("utf8_decode_replace(s", StringArgText)
+      .foreach(t => assert(e.getMessage.contains(t), e)))
+    // the BINARY column passes
+    assert(spark.sql("SELECT utf8_decode_replace(b) FROM utf8_src").as[String].collect()
+      .toSeq == Seq("caf\u00e9"))
   }
 
   test("an unknown extraction spec fails analysis, even over an empty input") {
